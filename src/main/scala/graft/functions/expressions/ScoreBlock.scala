@@ -11,20 +11,23 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** One corpus packed for fused in-bucket scoring (round 22, VERDICT r21
-  * #2): flat primitive arrays — ids, per-row offsets (vectors may be
-  * ragged; [[DotProduct]]'s common-prefix rule needs true lengths), the
-  * concatenated float elements, and per-row norms computed with exactly
-  * [[DotProduct]]'s accumulation (ascending index, double accumulator,
-  * then sqrt — bit-identical to the `nnorm` column it replaces).
+  * #2): flat primitive arrays — ids widened to BIGINT, per-row offsets
+  * (vectors may be ragged; [[DotProduct]]'s common-prefix rule needs
+  * true lengths), the concatenated elements in the corpus' own width
+  * (`floats` for ARRAY<FLOAT>, `doubles` for ARRAY<DOUBLE>; the other is
+  * null, so a FLOAT corpus broadcasts 4 B per element, not 8), and
+  * per-row norms computed with exactly [[DotProduct]]'s accumulation
+  * (ascending index, double accumulator, then sqrt — bit-identical to
+  * the `nnorm` column it replaces).
   *
-  * Shipped ONCE per query as an `sc.broadcast` (the fused tier's
-  * replacement for the corpus-by-id broadcast relation, same
-  * budget-gated bytes), and looked up per candidate through a lazily
-  * built open-addressing id→index table (one build per deserialized
-  * copy, i.e. once per executor). */
+  * Shipped ONCE per query as an `sc.broadcast` (the same budget-gated
+  * bytes a corpus-by-id broadcast relation would carry), and looked up
+  * per candidate through a lazily built open-addressing id→index table
+  * (one build per deserialized copy, i.e. once per executor). */
 final class PackedVectors(
     val ids: Array[Long], val offs: Array[Int],
-    val vecs: Array[Float], val norms: Array[Double]) extends Serializable {
+    val floats: Array[Float], val doubles: Array[Double],
+    val norms: Array[Double]) extends Serializable {
   def n: Int = ids.length
 
   // open-addressing id→index map: power-of-two capacity ≥ 2n, linear
@@ -57,6 +60,30 @@ final class PackedVectors(
     }
     -1
   }
+
+  /** Row `i` as doubles (float → double is exact). */
+  def row(i: Int): Array[Double] = {
+    val off = offs(i)
+    val a = new Array[Double](offs(i + 1) - off)
+    if (floats == null) System.arraycopy(doubles, off, a, 0, a.length)
+    else {
+      var j = 0
+      while (j < a.length) { a(j) = floats(off + j); j += 1 }
+    }
+    a
+  }
+
+  /** `a · row(i)` by [[DotProduct]]'s rule: common prefix, ascending
+    * index, double accumulator. */
+  def dot(a: Array[Double], i: Int): Double = {
+    val off = offs(i)
+    val n = math.min(a.length, offs(i + 1) - off)
+    var s = 0.0
+    var j = 0
+    if (floats == null) while (j < n) { s += a(j) * doubles(off + j); j += 1 }
+    else while (j < n) { s += a(j) * floats(off + j); j += 1 }
+    s
+  }
 }
 
 object PackedVectors {
@@ -68,38 +95,56 @@ object PackedVectors {
     (x ^ (x >>> 31)).toInt
   }
 
+  /** Element width in bytes of a packable vector column (4 for FLOAT, 8
+    * for DOUBLE) — what the caller's broadcast budget is sized from. */
+  def elemBytes(vecType: DataType): Long = vecType match {
+    case ArrayType(DoubleType, _) => 8L
+    case _ => 4L
+  }
+
   /** Collect and pack `(idCol, vecCol)` — the fused tier's broadcast
     * build, run at plan-construction time under the caller's byte
     * budget (the same driver-side collect a BroadcastHashJoin build
-    * would do at execution). Returns None when the corpus shape is
-    * outside the fused tier's contract — ids not LONG (the emitted
-    * doc_b would change the output schema), elements not FLOAT (packing
-    * doubles as floats would change bits), or duplicate ids (a by-id
-    * join matches every copy; the packed lookup could not) — so the
-    * caller falls back to the join-shaped tier. */
+    * would do at execution). Any integral id type packs (as BIGINT; the
+    * caller casts emitted ids back) and FLOAT or DOUBLE elements pack in
+    * their own width. Returns None when the packed lookup could not
+    * reproduce a by-id join — non-integral or null ids, or duplicate
+    * ids (a join matches every copy) — so the caller takes its
+    * composite-key tier, which is correct for any input. */
   def pack(df: DataFrame, idCol: String, vecCol: String): Option[PackedVectors] = {
-    val okShape = df.schema(idCol).dataType == LongType &&
-      (df.schema(vecCol).dataType match {
-        case ArrayType(FloatType, _) => true
-        case _ => false
-      })
+    val okShape = (df.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }) && (df.schema(vecCol).dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    })
     if (!okShape) return None
+    val isFloat = elemBytes(df.schema(vecCol).dataType) == 4L
     val rows = df.select(col(idCol), col(vecCol)).collect()
     val n = rows.length
-    val order = (0 until n).sortBy(rows(_).getLong(0)).toArray
+    val rawIds = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      val id = rows(i).get(0)
+      if (id == null) return None
+      rawIds(i) = id.asInstanceOf[Number].longValue
+      i += 1
+    }
+    val order = (0 until n).sortBy(rawIds(_)).toArray
     val ids = new Array[Long](n)
     val offs = new Array[Int](n + 1)
     var total = 0L
-    var i = 0
+    i = 0
     while (i < n) {
-      val r = rows(order(i))
-      ids(i) = r.getLong(0)
-      if (i > 0 && ids(i) == ids(i - 1)) return None // duplicate ids → join tier
-      total += r.getSeq[Any](1).length
+      ids(i) = rawIds(order(i))
+      if (i > 0 && ids(i) == ids(i - 1)) return None // duplicate ids → composite tier
+      total += rows(order(i)).getSeq[Any](1).length
       i += 1
     }
     if (total > Int.MaxValue) return None
-    val vecs = new Array[Float](total.toInt)
+    val floats = if (isFloat) new Array[Float](total.toInt) else null
+    val doubles = if (isFloat) null else new Array[Double](total.toInt)
     val norms = new Array[Double](n)
     i = 0
     var off = 0
@@ -112,10 +157,13 @@ object PackedVectors {
       while (j < len) {
         // null elements read as 0 — the [[DotProduct]] rule (dense by
         // contract, but the packed corpus must not diverge from it)
-        val x0 = v(j)
-        val x = if (x0 == null) 0.0f else x0.asInstanceOf[Float]
-        vecs(off + j) = x
-        s += x.toDouble * x.toDouble // DotProduct's accumulation
+        val x = v(j) match {
+          case null => 0.0
+          case f: java.lang.Float => f.doubleValue
+          case d => d.asInstanceOf[java.lang.Double].doubleValue
+        }
+        if (isFloat) floats(off + j) = x.toFloat else doubles(off + j) = x
+        s += x * x // DotProduct's accumulation
         j += 1
       }
       norms(i) = math.sqrt(s) // = nnorm = sqrt(graft_dot(v, v))
@@ -123,7 +171,7 @@ object PackedVectors {
       i += 1
     }
     offs(n) = off
-    Some(new PackedVectors(ids, offs, vecs, norms))
+    Some(new PackedVectors(ids, offs, floats, doubles, norms))
   }
 }
 
@@ -137,18 +185,20 @@ object PackedVectors {
   * [[PackedVectors]] broadcast.
   *
   * Bit-identity contract (equality-pinned in PipelineSpec against the
-  * join-shaped tier): the dot accumulates ascending-index into a double
-  * over the [[DotProduct]] common prefix, `cosine = dot / (an * bn)`
-  * with both norms packed as `sqrt(Σ x²)` (= the nnorm column), and the
-  * threshold is the same IEEE `>=`. Candidate membership is the bucket
-  * block itself — grouped from the identical signature expressions.
+  * per-table union tier): the dot accumulates ascending-index into a
+  * double over the [[DotProduct]] common prefix, `cosine = dot / (an *
+  * bn)` with both norms packed as `sqrt(Σ x²)` (= the nnorm column), and
+  * the threshold is the same IEEE `>=`. Candidate membership is the
+  * bucket block itself — grouped from the identical signature
+  * expressions.
   *
-  * Modes: SelfProbed (children `(aId, bids)`, probe vector looked up in
-  * the packed corpus, emits `doc_b != aId` — both orientations, the
-  * caller canonicalizes), SelfUnprobed (same children, emits only
+  * Modes: SelfProbed (children `(aId BIGINT, bids)`, probe vector looked
+  * up in the packed corpus, emits `doc_b != aId` — both orientations,
+  * the caller canonicalizes), SelfUnprobed (same children, emits only
   * `doc_b > aId` — the a<b contract with no canonicalize step), Cross
-  * (children `(av, an, bids)`, emits every passing block member —
-  * the decontamination shape, reference packed). */
+  * (children `(av, an, bids)` with `av` FLOAT or DOUBLE elements, emits
+  * every passing block member — the decontamination shape, reference
+  * packed). */
 case class ScoreBucketBlock(children: Seq[Expression],
     packed: Broadcast[PackedVectors], threshold: Double, mode: Int)
     extends Expression {
@@ -156,25 +206,21 @@ case class ScoreBucketBlock(children: Seq[Expression],
   import ScoreBucketBlock._
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = mode match {
+    val idBlock = children.last.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    val ok = idBlock && (mode match {
       case SelfProbed | SelfUnprobed =>
-        children.size == 2 && children(0).dataType == LongType &&
-          (children(1).dataType match {
-            case ArrayType(LongType, _) => true
-            case _ => false
-          })
+        children.size == 2 && children(0).dataType == LongType
       case Cross =>
-        children.size == 3 &&
+        children.size == 3 && children(1).dataType == DoubleType &&
           (children(0).dataType match {
-            case ArrayType(FloatType, _) => true
-            case _ => false
-          }) && children(1).dataType == DoubleType &&
-          (children(2).dataType match {
-            case ArrayType(LongType, _) => true
+            case ArrayType(FloatType | DoubleType, _) => true
             case _ => false
           })
       case _ => false
-    }
+    })
     if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
       s"graft_score_block mode $mode got ${children.map(_.dataType.catalogString)}")
@@ -202,33 +248,43 @@ case class ScoreBucketBlock(children: Seq[Expression],
   }
 
   /** Self-join scoring: the probe vector is the packed corpus row of
-    * `aId` (bit-identical floats/norm to the column values — packed
+    * `aId` (bit-identical elements/norm to the column values — packed
     * from the same relation). */
   def scoreSelf(aId: Long, bids: ArrayData): ArrayData = {
     val p = packed.value
     val ai = p.indexOf(aId)
     require(ai >= 0, s"graft_score_block: probe id $aId not in the packed corpus")
-    scoreLoop(p, p.vecs, p.offs(ai), p.offs(ai + 1) - p.offs(ai), p.norms(ai),
-      aId, bids)
+    scoreLoop(p, p.row(ai), p.norms(ai), aId, bids)
+  }
+
+  @transient private lazy val probeIsFloat = children(0).dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
   }
 
   /** Cross-corpus scoring: probe vector rides the row (the reference is
-    * the packed side). Copies the probe once per call so the inner loop
-    * reads primitive arrays on both sides. */
+    * the packed side). Copies the probe once per call, element by
+    * element as [[DotProduct]] reads it, so the inner loop reads
+    * primitive arrays on both sides. */
   def scoreCross(av: ArrayData, an: Double, bids: ArrayData): ArrayData = {
-    val a = av.toFloatArray()
-    scoreLoop(packed.value, a, 0, a.length, an, 0L, bids)
+    val a = new Array[Double](av.numElements())
+    val f = probeIsFloat
+    var j = 0
+    while (j < a.length) {
+      a(j) = if (f) av.getFloat(j).toDouble else av.getDouble(j)
+      j += 1
+    }
+    scoreLoop(packed.value, a, an, 0L, bids)
   }
 
-  /** The fused inner loop: for each block member, common-prefix dot
-    * (ascending index, double accumulator — [[DotProduct]]),
+  /** The fused inner loop: for each block member, [[PackedVectors.dot]],
     * `cosine = dot / (an * bn)`, emit when `cosine >= threshold`.
     * `aId` drives the mode's membership rule: SelfUnprobed keeps only
     * doc_b > aId (the a<b contract), SelfProbed skips doc_b == aId
     * (both orientations kept for the caller's canonicalize), Cross
     * keeps every member. */
-  private def scoreLoop(p: PackedVectors, a: Array[Float], aOff: Int, aLen: Int,
-      an: Double, aId: Long, bids: ArrayData): ArrayData = {
+  private def scoreLoop(p: PackedVectors, a: Array[Double], an: Double, aId: Long,
+      bids: ArrayData): ArrayData = {
     val m = bids.numElements()
     var out: Array[Any] = null
     var k = 0
@@ -242,15 +298,7 @@ case class ScoreBucketBlock(children: Seq[Expression],
       if (keep) {
         val bi = p.indexOf(bId)
         require(bi >= 0, s"graft_score_block: block id $bId not in the packed corpus")
-        val bOff = p.offs(bi)
-        val n = math.min(aLen, p.offs(bi + 1) - bOff)
-        var s = 0.0
-        var j = 0
-        while (j < n) {
-          s += a(aOff + j).toDouble * p.vecs(bOff + j).toDouble
-          j += 1
-        }
-        val c = s / (an * p.norms(bi))
+        val c = p.dot(a, bi) / (an * p.norms(bi))
         if (c >= threshold) {
           if (out == null) out = new Array[Any](m)
           out(k) = new GenericInternalRow(Array[Any](bId, c))

@@ -37,8 +37,9 @@ object D15ScaleProbe {
       if (planMode) Seq(1)
       else if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 100)
     // SPARK_GRAFT_CONF passthrough (round 22, the PlanDump mechanism):
-    // lets a plan capture force a guarded tier (e.g. fusedScoring=false
-    // for the before-shape) without recompiling — diagnostic only
+    // lets a plan capture force a guarded tier (e.g.
+    // spark.graft.lsh.broadcastBudgetBytes=0 for the composite-key tier)
+    // without recompiling — diagnostic only
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }

@@ -40,13 +40,11 @@ import org.apache.spark.sql.functions._
   */
 object D4ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val wideMode = args.headOption.contains("wide")
-    val factors =
-      if (wideMode) Seq.empty[Int]
-      else if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 100)
+    val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 100)
     // SPARK_GRAFT_CONF passthrough (round 22, the PlanDump mechanism):
-    // lets a probe run force a guarded tier (e.g. fusedScoring=false for
-    // the before-shape A/B) without recompiling — diagnostic only
+    // lets a probe run force a guarded tier (e.g.
+    // spark.graft.lsh.broadcastBudgetBytes=0 for the composite-key tier)
+    // without recompiling — diagnostic only
     val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
@@ -103,53 +101,8 @@ object D4ScaleProbe {
       }
     }
 
-    /** Wide-dim A/B for the composite-key tier (round 22, VERDICT r21
-      * #4): dim-512 corpus built by tiling the 64-dim embedding 8× —
-      * dots scale ×8 and each norm ×√8, so every cosine (and the
-      * true-pair structure) is IDENTICAL to the base corpus; only the
-      * bytes-per-vector change, which is exactly the variable the
-      * metadata-only shape's arithmetic turns on. The composite tier is
-      * forced (threshold + budget), then the vectors-riding and the
-      * metadata-only shapes run on the same corpus. Kept at small k:
-      * the metadata shape's verify attach shuffles one vector per
-      * DISTINCT candidate pair, which at 10×+ is a deliberate
-      * disk-exhaustion hazard (the r21 ENOSPC class). */
-    def runWide(k: Int): Unit = {
-      val path = s"/tmp/graft_d4scale/wide_$k"
-      if (!new java.io.File(path, "_SUCCESS").exists) {
-        copies(k, disjoint = true)
-          .withColumn("embedding",
-            expr("flatten(array_repeat(embedding, 8))"))
-          .repartition(32).write.mode("overwrite").parquet(path)
-      }
-      val d = spark.read.parquet(path)
-      d.queryExecution.toRdd.count() // warm the scan
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "1")
-      println(s"==== d4 wide dim-512 ${k}x (${2000L * k} vectors), composite tier forced ====")
-      for ((label, dimConf) <- Seq(
-          ("vectors-riding", Int.MaxValue.toString),
-          ("metadata-only", "384"))) {
-        spark.conf.set("spark.graft.lsh.metadataJoinDim", dimConf)
-        for (pass <- 1 to 2) {
-          h.timed(s"d4 wide ${k}x $label pass $pass") {
-            graft.functions.Similarity.cosineDuplicates(
-              d, threshold = 0.35, dim = 8 * dim, bits = -1, tables = -1,
-              probes = -1, probes2 = -1).count()
-          }
-        }
-      }
-      spark.conf.unset("spark.graft.lsh.metadataJoinDim")
-      spark.conf.unset("spark.graft.lsh.broadcastBudgetBytes")
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    }
-
-    if (wideMode) {
-      runWide(args.drop(1).headOption.map(_.toInt).getOrElse(1))
-    } else {
-      for (k <- factors) run(k, disjoint = true)
-      for (k <- factors.filter(f => f > 1 && f <= 10)) run(k, disjoint = false)
-    }
+    for (k <- factors) run(k, disjoint = true)
+    for (k <- factors.filter(f => f > 1 && f <= 10)) run(k, disjoint = false)
     spark.stop()
   }
 }

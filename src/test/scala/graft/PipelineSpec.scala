@@ -2220,35 +2220,17 @@ class PipelineSpec extends AnyFunSuite {
       assert(keyed(unprobedRun()) === smallUnprobed)
       // round 22: within the budget tier 2 is the FUSED scoring shape
       // (ScoreBucketBlock against the PackedVectors broadcast — the
-      // equalities above pin it bit-for-bit); the join-shaped fallback
-      // stays reachable via the kill-switch conf and must match too
+      // equalities above pin it bit-for-bit)
       assert(bigPlan.contains("scorebucketblock"),
         "within the broadcast budget the big path must fuse scoring into the bucket join")
-      spark.conf.set("spark.graft.lsh.fusedScoring", "false")
-      val fallbackPlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
-      assert(!fallbackPlan.contains("scorebucketblock"),
-        "fusedScoring=false must route to the join-shaped fallback")
-      assert(keyed(probedRun()) === smallProbed)
-      assert(keyed(unprobedRun()) === smallUnprobed)
-      spark.conf.unset("spark.graft.lsh.fusedScoring")
       // tier 3 (composite-key sort-merge): force by zeroing the budget —
       // same rows, bit for bit, with no broadcast in the candidate join
       spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "0")
       assert(keyed(probedRun()) === smallProbed)
       assert(keyed(unprobedRun()) === smallUnprobed)
-      // round 22 (VERDICT r21 #4): the metadata-only composite shape —
-      // candidate ids decided vector-free, deduped skinny, vectors
-      // re-attached by id — must emit the same rows bit for bit. It is
-      // default-OFF (the D4ScaleProbe `wide` A/B measured it losing);
-      // forcing dim ≥ metadataJoinDim pins the conf-reachable apparatus.
-      spark.conf.set("spark.graft.lsh.metadataJoinDim", "1")
-      assert(keyed(probedRun()) === smallProbed)
-      assert(keyed(unprobedRun()) === smallUnprobed)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.conf.unset("spark.graft.lsh.broadcastBudgetBytes")
-      spark.conf.unset("spark.graft.lsh.fusedScoring")
-      spark.conf.unset("spark.graft.lsh.metadataJoinDim")
     }
   }
 
@@ -2291,34 +2273,64 @@ class PipelineSpec extends AnyFunSuite {
       assert(smallUnprobed.nonEmpty)
       assert(keyed(unprobedRun()) === smallUnprobed)
       // round 22: within the budget tier 2 is the FUSED Cross-mode
-      // scoring shape; the join-shaped fallback stays reachable via the
-      // kill-switch conf and must match bit for bit too
+      // scoring shape (the equalities above pin it bit-for-bit)
       assert(bigPlan.contains("scorebucketblock"),
         "within the broadcast budget the big path must fuse scoring into the bucket join")
-      spark.conf.set("spark.graft.lsh.fusedScoring", "false")
-      val fallbackPlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
-      assert(!fallbackPlan.contains("scorebucketblock"),
-        "fusedScoring=false must route to the join-shaped fallback")
-      assert(keyed(probedRun()) === smallProbed)
-      assert(keyed(unprobedRun()) === smallUnprobed)
-      spark.conf.unset("spark.graft.lsh.fusedScoring")
       // tier 3 (composite-key sort-merge): force by zeroing the budget —
       // same rows, bit for bit
       spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "0")
       assert(keyed(probedRun()) === smallProbed)
       assert(keyed(unprobedRun()) === smallUnprobed)
-      // round 22 (VERDICT r21 #4): the metadata-only composite shape on
-      // the cross-corpus axis — same bit-for-bit contract, default-OFF
-      // (see the cosineDuplicates pin above)
-      spark.conf.set("spark.graft.lsh.metadataJoinDim", "1")
-      assert(keyed(probedRun()) === smallProbed)
-      assert(keyed(unprobedRun()) === smallUnprobed)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.conf.unset("spark.graft.lsh.broadcastBudgetBytes")
-      spark.conf.unset("spark.graft.lsh.fusedScoring")
-      spark.conf.unset("spark.graft.lsh.metadataJoinDim")
     }
+  }
+
+  test("fused LSH tier: DOUBLE vectors and INT ids take scorebucketblock ≡ per-table union; duplicate ids stay off it") {
+    // the packed broadcast takes any integral id (as BIGINT, cast back)
+    // and FLOAT or DOUBLE elements on both the packed and the Cross probe
+    // side, so these shapes score fused past the broadcast threshold and
+    // must equal the gate-scale per-table union row for row and in
+    // schema. Duplicate ids cannot pack (a by-id lookup sees one copy):
+    // they take the composite-key tier and keep the same pair set.
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val dbl = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    val intIds = emb.select(col("vec_id").cast("int").as("vec_id"), col("embedding"))
+    // ids 100..149 carry a second, different vector
+    val dupIds = emb.unionByName(emb.filter(col("vec_id") < 50)
+      .withColumn("vec_id", col("vec_id") + 100L))
+    def dups(df: org.apache.spark.sql.DataFrame) = Similarity.cosineDuplicates(df,
+      threshold = 0.35, dim = 64, bits = -1, tables = -1, probes = -1, probes2 = -1)
+    def decontam() = Similarity.semanticDecontam(emb.filter(col("vec_id") < 400),
+      dbl.filter(col("vec_id") >= 400), threshold = 0.35, dim = 64,
+      bits = -1, tables = -1, probes = -1, probes2 = -1)
+    val runs = Seq[() => org.apache.spark.sql.DataFrame](
+      () => dups(dbl), () => dups(intIds), () => decontam())
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSet
+    def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.get(0), r.get(1))).toSet
+    val small = runs.map(run => (rows(run()), fields(run())))
+    val smallDup = pairs(dups(dupIds))
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
+      for ((run, (smallRows, smallFields)) <- runs.zip(small)) {
+        val big = run()
+        assert(big.queryExecution.executedPlan.toString.toLowerCase.contains("scorebucketblock"),
+          "a packable past-broadcast corpus must take the fused tier")
+        assert(smallRows.nonEmpty)
+        assert(rows(big) === smallRows)
+        assert(fields(big) === smallFields)
+      }
+      val bigDup = dups(dupIds)
+      assert(!bigDup.queryExecution.executedPlan.toString.toLowerCase.contains("scorebucketblock"),
+        "duplicate ids must stay off the fused tier")
+      assert(smallDup.nonEmpty)
+      assert(pairs(bigDup) === smallDup)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
   test("graft_inter_sorted_int: upper bound on the 64-bit intersection, -1 only when provably below") {
@@ -2405,12 +2417,14 @@ class PipelineSpec extends AnyFunSuite {
 
   test("PackedVectors: packs only its contract shapes; norms bit-match the nnorm column") {
     // round 22 fused-scoring broadcast: the packed corpus must (a)
-    // decline shapes whose by-id join semantics it cannot reproduce —
-    // duplicate ids (a join matches every copy), non-LONG ids, non-FLOAT
-    // elements — so the join-shaped fallback takes them, and (b) pack
-    // norms with exactly the DotProduct accumulation, or the fused tier's
-    // cosines drift off the pinned bits. Ragged lengths exercise the
-    // offsets (DotProduct's common-prefix rule needs true lengths).
+    // decline ids whose by-id join semantics it cannot reproduce —
+    // duplicate ids (a join matches every copy), null or non-integral
+    // ids — so the composite-key tier takes them, while any integral id
+    // packs as BIGINT and DOUBLE elements pack in their own width, and
+    // (b) pack norms with exactly the DotProduct accumulation, or the
+    // fused tier's cosines drift off the pinned bits. Ragged lengths
+    // exercise the offsets (DotProduct's common-prefix rule needs true
+    // lengths).
     import spark.implicits._
     import graft.functions.expressions.PackedVectors
     graft.functions.expressions.GraftFunctions.init(spark)
@@ -2430,13 +2444,25 @@ class PipelineSpec extends AnyFunSuite {
       assert(java.lang.Double.doubleToLongBits(p.norms(i)) ===
         java.lang.Double.doubleToLongBits(norms(id)),
         s"packed norm of $id must bit-match sqrt(graft_dot(v, v))")
-    // contract declines: duplicate ids, non-LONG ids, non-FLOAT elements
+    // widened contract: INT ids pack as BIGINT; DOUBLE elements pack as
+    // doubles (FLOAT corpora stay 4 B/element), and since float → double
+    // is exact their norms are the FLOAT corpus' norms bit for bit
+    assert(p.floats != null && p.doubles == null)
+    val pInt = PackedVectors.pack(df.select(col("vec_id").cast("int").as("vec_id"),
+      col("embedding")), "vec_id", "embedding").get
+    assert(pInt.ids.toSeq === p.ids.toSeq)
+    val pDbl = PackedVectors.pack(df.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("embedding")), "vec_id", "embedding").get
+    assert(pDbl.floats == null && pDbl.doubles != null)
+    assert(pDbl.norms.map(java.lang.Double.doubleToLongBits).toSeq ===
+      p.norms.map(java.lang.Double.doubleToLongBits).toSeq)
+    // contract declines: duplicate, null and non-integral ids
     assert(PackedVectors.pack(df.union(df.limit(1)), "vec_id", "embedding").isEmpty)
-    assert(PackedVectors.pack(df.select(col("vec_id").cast("int").as("vec_id"),
+    assert(PackedVectors.pack(df.select(
+      when(col("vec_id") === 7L, lit(null)).otherwise(col("vec_id")).as("vec_id"),
       col("embedding")), "vec_id", "embedding").isEmpty)
-    assert(PackedVectors.pack(df.select(col("vec_id"),
-      col("embedding").cast("array<double>").as("embedding")),
-      "vec_id", "embedding").isEmpty)
+    assert(PackedVectors.pack(df.select(col("vec_id").cast("string").as("vec_id"),
+      col("embedding")), "vec_id", "embedding").isEmpty)
   }
 
   test("SessionCache.refresh: trainer always rebuilds and consumers read the refreshed entry") {
