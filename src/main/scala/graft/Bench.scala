@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query wall-clock seconds.
   *
@@ -30,18 +29,17 @@ object Bench {
     * pruned plans (rounds ≤12 wave 2): the appended count-Aggregate lets
     * Catalyst drop every unreferenced output — aggregate expressions AND
     * scan columns — so a distinct-count gate shuffled 0 B under count()
-    * vs 219 MiB evaluated fully (SketchScaleProbe, 20M-token corpus).
+    * vs 219 MiB evaluated fully (SCALING.md, "Round 12, wave 4 —
+    * measurement integrity: the bench timed PRUNED plans").
     * `queryExecution.toRdd` executes the query's own physical plan (no
     * parent to prune from) and the count action just drains it. */
   private def materialize(df: org.apache.spark.sql.DataFrame): Long =
     df.queryExecution.toRdd.count()
 
-  /** One bench observation of one query: pass-1 wall, per-query executor
-    * CPU seconds and shuffle-write MiB (task metrics, listener-bus-drained
-    * so the attribution is per-query, see
-    * [[org.apache.spark.graft.BusDrain]]). `wall = None` = the query
-    * failed. */
-  final case class QRun(name: String, wall: Option[Double], cpuSec: Double, shufMiB: Double)
+  /** One bench observation of one query: its wall and its
+    * [[graft.obs.Profile]] (executor CPU, shuffle, jobs, driver-only
+    * time…). `wall = None` = the query failed. */
+  final case class QRun(name: String, wall: Option[Double], prof: graft.obs.Profile)
 
   /** Adjudication WATCHLIST (round 20, VERDICT r19 #5/#6): gates that
     * always get a rerun rider in single-pass runs, independent of the
@@ -67,30 +65,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // experiment-only conf passthrough (semicolon-separated k=v pairs):
-    // lets A/B sweeps vary a session conf without recompiling — absent
-    // in driver runs, never a tuning surface (committed defaults are in
-    // code, measured results in SCALING.md)
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session("graft-bench")
 
     // dev-only subset runs (e.g. pipeline ops on a scaled corpus that has
     // no TPC tables): SPARK_GRAFT_ONLY=d1_…,t8_… — absent in driver runs.
     // SPARK_GRAFT_WARM=1 forces the shared-cache warmup even for a subset
     // (attribution runs need warm caches to time the query, not the build);
     // SPARK_GRAFT_REPEAT=n times the subset n times (extra passes to stderr)
-    // to separate first-touch cost from steady-state.
+    // to separate first-touch cost from steady-state. A subset run also
+    // prints every gate's profile to stderr, one `[prof]` line per gate
+    // and pass — with SPARK_GRAFT_CONF this is the A/B probe protocol.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     val warm = only.isEmpty || sys.env.get("SPARK_GRAFT_WARM").exists(_ == "1")
     val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1)
@@ -221,50 +205,39 @@ object Bench {
 
     def s3(d: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(d))
 
-    // Per-query task-metrics witness (round 15, VERDICT r14 #3/#4): the
-    // bracketing cal samples missed ~29 load-smeared lines in r14 — a
-    // 10 ms spin between queries can't see sustained contention INSIDE a
-    // query's window. Executor CPU time can: a smeared line shows wall ≫
-    // its rerun's wall while both runs burn the SAME executor CPU (the
-    // plan did identical work and waited), a real plan regression burns
-    // more. Both counters feed bench_detail.json, never the stdout line.
-    val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
-    val taskShufBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (te.taskMetrics != null) {
-          taskCpuNs.addAndGet(te.taskMetrics.executorCpuTime)
-          taskShufBytes.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        }
-    })
-    // (cpuNs, shuffleBytes) snapshot with the async listener bus drained —
-    // without the drain a query's tail tasks land on the NEXT query's tab
-    def metricSnap(): (Long, Long) = {
-      org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
-      (taskCpuNs.get, taskShufBytes.get)
+    // Per-query profile (round 15's task-metrics witness, grown into
+    // graft.obs): the bracketing cal samples missed ~29 load-smeared
+    // lines in r14 — a 10 ms spin between queries can't see sustained
+    // contention INSIDE a query's window. Executor CPU time can: a
+    // smeared line shows wall ≫ its rerun's wall while both runs burn
+    // the SAME executor CPU (the plan did identical work and waited), a
+    // real plan regression burns more. Profiles feed bench_detail.json
+    // (and stderr in subset runs), never the stdout line.
+    val profiler = graft.obs.GateProfiler.of(spark)
+    // pass 0 = an adjudication rerun
+    def runGate(name: String, pass: Int)(onError: Throwable => Unit): QRun = {
+      val (ok, p) = profiler.profile(name) {
+        try { materialize(SparkEntry.queries(name)(spark, sfDir)); true }
+        catch { case e: Throwable => onError(e); false }
+      }
+      if (only.nonEmpty)
+        System.err.println(s"""[prof] {"gate":"$name","pass":$pass,"prof":${p.json}}""")
+      QRun(name, if (ok) Some(p.wallS) else None, p)
     }
 
     // per-pass error buffer: only pass 1 feeds the reported JSON — an
     // extra-pass failure must not list a query in `errors` whose reported
     // (pass-1) timing is non-null and counted in the total
-    def runPass(errors: scala.collection.mutable.ArrayBuffer[String],
+    def runPass(pass: Int, errors: scala.collection.mutable.ArrayBuffer[String],
                 cal: Option[scala.collection.mutable.ArrayBuffer[Double]]): Seq[QRun] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .zipWithIndex.map { case ((name, fn), i) =>
+      SparkEntry.queries.keys.toSeq.sorted
+        .filter(name => only.forall(_.contains(name)))
+        .zipWithIndex.map { case (name, i) =>
         if (i > 0 && i % calEvery == 0) cal.foreach(_ += calibrate())
-        val (cpu0, shuf0) = metricSnap()
-        val t0 = System.nanoTime()
-        val ok =
-          try { materialize(fn(spark, sfDir)); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
-            errors += name; false
-          }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val (cpu1, shuf1) = metricSnap()
-        QRun(name, if (ok) Some(wall) else None,
-          (cpu1 - cpu0) / 1e9, (shuf1 - shuf0) / 1048576.0)
+        runGate(name, pass) { e =>
+          System.err.println(s"[bench] $name FAILED: ${e.getClass.getSimpleName}: ${e.getMessage}")
+          errors += name
+        }
       }
     // Second noise witness: process CPU seconds over the reported pass
     // (graft.util.CpuWitness — observed: a 100.7 s full-suite run with
@@ -272,7 +245,7 @@ object Bench {
     // 2.7-3.8 s; only a multi-core witness can see that class of noise).
     val cpuT0 = graft.util.CpuWitness.processCpuSec
     val errors = scala.collection.mutable.ArrayBuffer[String]()
-    val results = runPass(errors, Some(calSamples))
+    val results = runPass(1, errors, Some(calSamples))
     calSamples += calibrate()
     val cpuSec = graft.util.CpuWitness.delta(cpuT0, graft.util.CpuWitness.processCpuSec)
     // full names at full precision for forensics (stderr is not tail-
@@ -281,7 +254,7 @@ object Bench {
     System.err.println(s"[bench] pass 1: ${results.map(r => s"${r.name}=${r.wall.fold("err")(s3)}").mkString(" ")}")
     val extraPasses = (2 to repeat).map { i =>
       val extraErrors = scala.collection.mutable.ArrayBuffer[String]()
-      val extra = runPass(extraErrors, None)
+      val extra = runPass(i, extraErrors, None)
       System.err.println(s"[bench] pass $i: ${extra.map(r => s"${r.name}=${r.wall.fold("err")(s3)}").mkString(" ")}")
       extra
     }
@@ -432,7 +405,7 @@ object Bench {
         def overSteady(n: String, t: Double): Boolean =
           anchorSec.get(n).exists(s => t > anchorMult(n) * s)
         results.zipWithIndex.collect {
-          case (QRun(n, Some(t), _, _), i)
+          case (QRun(n, Some(t), _), i)
             if Bench.rerunWatchlist.contains(n) ||
               ((noisy(i) || overSteady(n, t)) && t > 0.5) => (n, t)
         }.sortBy { case (n, t) => (-ratioOf(n, t), -t) }
@@ -455,15 +428,9 @@ object Bench {
               s"exceeds remaining budget ${s3(budget)}")
             None
           } else {
-            val (cpu0, shuf0) = metricSnap()
-            val t0 = System.nanoTime()
-            val ok = try { materialize(SparkEntry.queries(n)(spark, sfDir)); true }
-              catch { case _: Throwable => false }
-            val r = (System.nanoTime() - t0) / 1e9
-            val (cpu1, shuf1) = metricSnap()
-            budget -= r
-            if (ok) Some(QRun(n, Some(r), (cpu1 - cpu0) / 1e9, (shuf1 - shuf0) / 1048576.0))
-            else None
+            val r = runGate(n, 0)(_ => ())
+            budget -= r.prof.wallS
+            r.wall.map(_ => r)
           }
         }
         if (out.nonEmpty) System.err.println(
@@ -498,7 +465,7 @@ object Bench {
     // performed, not just the entries surviving the char-budget shed, so
     // the scalar stays honest even on a failure-heavy line. Emitted only
     // when reruns happened (otherwise it duplicates `value`).
-    val pass1Of = results.collect { case QRun(n, Some(t), _, _) => n -> t }.toMap
+    val pass1Of = results.collect { case QRun(n, Some(t), _) => n -> t }.toMap
     val adjudicated = total - reruns.map { case (n, r) =>
       math.max(0.0, pass1Of.getOrElse(n, r) - math.min(pass1Of.getOrElse(n, r), r))
     }.sum
@@ -606,22 +573,23 @@ object Bench {
       def jarr(xs: Seq[Double]): String = xs.map(jnum).mkString("[", ",", "]")
       val rrByName = rerunDetails.groupBy(_.name)
       val extraByName: Map[String, Seq[Double]] =
-        extraPasses.flatten.collect { case QRun(n, Some(t), _, _) => n -> t }
+        extraPasses.flatten.collect { case QRun(n, Some(t), _) => n -> t }
           .groupBy(_._1).map { case (n, ts) => n -> ts.map(_._2) }
       val qObjs = results.map { r =>
         val anchor = anchorSec.get(r.name)
         val fields = Seq(
           Some("\"p1\":" + r.wall.fold("null")(jnum)),
-          Some("\"cpu\":" + jnum(r.cpuSec)),
-          Some("\"shuf_mib\":" + jnum(r.shufMiB)),
+          Some("\"cpu\":" + jnum(r.prof.taskCpuS)),
+          Some("\"shuf_mib\":" + jnum(r.prof.shuffleWriteMb)),
           anchor.map(a => "\"anchor\":" + jnum(a)),
           anchor.map(_ => "\"mult\":" + jnum(anchorMult(r.name))),
           anchor.flatMap(a => r.wall.map(t => "\"ratio\":" + jnum(t / a))),
           if (suspects.exists(_._1 == r.name)) Some("\"flagged\":true") else None,
           rrByName.get(r.name).map(rs => "\"rerun\":" + jarr(rs.flatMap(_.wall))),
-          rrByName.get(r.name).map(rs => "\"rerun_cpu\":" + jarr(rs.map(_.cpuSec))),
-          rrByName.get(r.name).map(rs => "\"rerun_shuf_mib\":" + jarr(rs.map(_.shufMiB))),
-          extraByName.get(r.name).map(ts => "\"passes\":" + jarr(ts))
+          rrByName.get(r.name).map(rs => "\"rerun_cpu\":" + jarr(rs.map(_.prof.taskCpuS))),
+          rrByName.get(r.name).map(rs => "\"rerun_shuf_mib\":" + jarr(rs.map(_.prof.shuffleWriteMb))),
+          extraByName.get(r.name).map(ts => "\"passes\":" + jarr(ts)),
+          Some("\"prof\":" + r.prof.json)
         ).flatten
         "\"" + r.name + "\":" + fields.mkString("{", ",", "}")
       }
@@ -634,7 +602,7 @@ object Bench {
       // it a first-class field stops round-over-round claims from mixing
       // steady against adjudicated (the r17 sidecars had to be
       // re-derived by hand to compare like for like).
-      val steadySec = results.collect { case QRun(n, Some(t), _, _) =>
+      val steadySec = results.collect { case QRun(n, Some(t), _) =>
         (t +: (rrByName.get(n).map(_.flatMap(_.wall)).getOrElse(Nil) ++
           extraByName.getOrElse(n, Nil))).min
       }.sum
@@ -645,7 +613,7 @@ object Bench {
       // (VERDICT r17 "what's wrong" #2).
       val canaryJson = """{"d9_vs_d6":"expected decay: pins the manual-width config as a scale canary; the public default is auto width (see d17_vs_d6)"}"""
       val detail =
-        s"""{"schema":1,"round_hint":"adjudicated_sec = sum over queries of min(p1, min(rerun)); steady_sec = sum of best wall over ALL passes (p1, repeat passes, reruns); cpu/shuf are executor task metrics for THIS query's jobs (load witness: wall diverges from rerun wall while cpu matches => machine noise, not plan cost)",
+        s"""{"schema":1,"round_hint":"adjudicated_sec = sum over queries of min(p1, min(rerun)); steady_sec = sum of best wall over ALL passes (p1, repeat passes, reruns); cpu/shuf are executor task metrics for THIS query's jobs (load witness: wall diverges from rerun wall while cpu matches => machine noise, not plan cost); prof is the pass-1 graft.obs profile (injob_s = union of job intervals, driver_s = wall - injob_s)",
            |"ts_ms":${System.currentTimeMillis},"sf":"$sfName","repeat":$repeat,
            |"build_sec":${jnum(buildSec)},"train_sec":${jnum(trainSec)},
            |"cal_ms":${calJsonOf(calSamples.toSeq)},"cpu_sec":${jnum(cpuSec)},

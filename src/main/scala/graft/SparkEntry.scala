@@ -21,4 +21,28 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] = GateQueries.oracles
+
+  /** The session [[graft.Bench]], PlanDump and the probe mains run on:
+    * `SPARK_GRAFT_CPUS` local cores (default 32) and as many shuffle
+    * partitions, UTC, AQE. `SPARK_GRAFT_CONF` (semicolon-separated k=v
+    * pairs) is an experiment-only passthrough for A/B runs without a
+    * rebuild — absent in driver runs, never a tuning surface (committed
+    * defaults are in code, measured results in SCALING.md). */
+  def session(appName: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
+      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
+    val spark = extraConf.foldLeft(SparkSession.builder()
+      .appName(appName)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

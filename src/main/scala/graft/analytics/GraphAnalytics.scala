@@ -179,11 +179,11 @@ object GraphAnalytics {
         // NOTE (round 13, negative result #4): replacing these two
         // distincts + inner join with ONE tagged-union max-aggregation
         // (groupBy(id).agg(max(out), max(in))) measured WORSE — 14.4 →
-        // 16.4 s steady on the gate cut (SccProbe): the union doubles the
-        // scanned rows and the wall here is sequential action latency,
-        // not exchange count. Kept the distinct/join form; see SCALING.md
-        // round-13 SCC note alongside the batching/AQE-off/lazy-acc
-        // dead-ends.
+        // 16.4 s steady on the gate cut: the union doubles the scanned
+        // rows and the wall here is sequential action latency, not
+        // exchange count. Kept the distinct/join form; see SCALING.md
+        // "Round 13: a23 trim-loop action diet" alongside the
+        // batching/AQE-off/lazy-acc dead-ends.
         val deg = e.select(col("src").as("id")).distinct()
           .join(e.select(col("dst").as("id")).distinct(), Seq("id"), "inner")
         val drop = verts.join(deg, Seq("id"), "left_anti").localCheckpoint(true)

@@ -25,7 +25,8 @@ object SteadyState {
   /** Per-query adjudication multiplier override (default 2.5 in
     * [[graft.Bench]]): a pass-1 line above `mult × anchor` is re-run.
     * Wide-variance queries need a tighter trigger — a22's wall is a
-    * smooth 7.7–10.4 s per-task-CPU/JIT band (A22ModeProbe, SCALING.md),
+    * smooth 7.7–10.4 s per-task-CPU/JIT band (SCALING.md "Round 15:
+    * a22 bimodality decomposed"),
     * so with the anchor at the 9.0 median the default 2.5× would only
     * fire at 22.5 s and let a 14.76 s load smear (the r14 line) ride;
     * 1.3× (trigger 11.7) adjudicates real smears while the JIT band
@@ -288,7 +289,7 @@ object SteadyState {
     "a1_reachable_orders" -> 1.85,
     "a20_clustering_coefficient" -> 1.0, // re-measured 2026-08-15 r14: free full-outer wrong-graph guard
     "a21_assortativity" -> 1.56,
-    // a22 re-anchored 2026-08-15 r15 after the A22ModeProbe decomposition
+    // a22 re-anchored 2026-08-15 r15 after the a22 decomposition
     // (SCALING.md "a22 bimodality decomposed"): 4 JVMs × 20 passes show
     // wall ≈ executor CPU 1:1 with task count constant (160), GC ≈ 0,
     // fetch-wait 0 — the "modes" are per-task CPU under JIT warmth, a

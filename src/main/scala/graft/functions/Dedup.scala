@@ -1336,7 +1336,7 @@ object Dedup {
     // d3/d13/d14 stay hash-identical by construction). Grams that
     // survive the valve carry df ≤ maxPostings + N/(k+1), so the window's
     // max partition is BOUNDED regardless of corpus skew (measured:
-    // SketchScaleProbe planted-gram witness, SCALING.md round 13). Cost
+    // SCALING.md "Round 13: gram-df window skew valve"). Cost
     // is one extra narrow pass over the postings stream (zero-shuffle
     // sketch; candidate merge is ≤ partitions·k rows, map-side combined)
     // — the full groupBy+anti-join alternative shuffles the whole

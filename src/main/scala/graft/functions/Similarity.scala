@@ -87,7 +87,8 @@ object Similarity {
     * 1 MB: bytes under-count QUADRATIC work — a 780 KB 2,000-vector
     * corpus is 4M scored-and-sorted pairs, measured as a single 3.7 s
     * task at sf0.1 (e16) and 2.5 s at 10× (e18's planted corpus) when
-    * the 1 MB floor skipped them (GateStageSweep, round 18). 64 KB
+    * the 1 MB floor skipped them (SCALING.md "Round 18: the … sweep,
+    * industrialized (all 157 gates)"). 64 KB
     * still excludes the unit-test fixtures (tens of rows, a few KB),
     * which is all the floor exists for. */
   private def widened(df: DataFrame): DataFrame =
@@ -177,7 +178,8 @@ object Similarity {
     * |corpus|²), then the same reversed-key mutuality semi-join. The
     * exact tier (e16) stays the verification anchor. Measured on
     * CLUSTERED geometry (the real-embedding corpus class —
-    * MutualKnnClusteredProbe on PlantedCorpus, round 12): 0.988 recall
+    * PlantedCorpus, SCALING.md "Round 12 — … mutual-kNN on clustered
+    * geometry"): 0.988 recall
     * at 0.17× the exact wall at n=10k with nProbe=2, nAssign=1, and the
     * gap widens with n; single assignment is the right default
     * (nAssign=2 doubles candidate volume for ~1% recall). On
@@ -432,7 +434,8 @@ object Similarity {
     * grows by Δ needs T ∝ c^−Δ; anchor = (8 tables @ 6 bits, the n=2000
     * sweet spot where recall measured 1.00).
     *
-    * autoH2 form (round 16, RecallProbes d4cost): with full Hamming-2
+    * autoH2 form (SCALING.md "Round 16: the crossover becomes
+    * executable — and d4's recall price halved"): with full Hamming-2
     * probing, H2 probes multiply PER-TABLE coverage far cheaper than
     * extra tables (each extra table costs a bucket join + union + dedup
     * input; a probe only widens one side's bucket list) — measured at
@@ -1755,8 +1758,8 @@ object Similarity {
     * re-rank never sees the members it dropped; admitting the group
     * whole costs only the group's size in re-scored rows.
     *
-    * What this does NOT fix (measured honestly — RecallProbes p100e8
-    * at 100×, n=50k with ~99-member NEAR-tie families): perturbed
+    * What this does NOT fix (measured at 100×, n=50k with ~99-member
+    * NEAR-tie families, SCALING.md "Round 17: third scale point"): perturbed
     * near-duplicates quantize to slightly DIFFERENT codes, so their
     * ADC scores differ by less than the quantization error and the
     * ordering among them is effectively random — no tie to admit.

@@ -1596,8 +1596,9 @@ object TextAnalysis {
     // estimates, the bench-scale planner inverted the join (tf under
     // the threshold → BuildLeft) and streamed the few-thousand-row lik
     // side as ONE partition, producing the entire |tf|·|classes| score
-    // stream in a single 18.8 s task (GateStageSweep's top sf1 find,
-    // round 18). Broadcasting the model and streaming tf is also the
+    // stream in a single 18.8 s task (the top sf1 find of SCALING.md
+    // "Round 18: the … sweep, industrialized (all 157 gates)").
+    // Broadcasting the model and streaming tf is also the
     // 100 TB shape: tf is corpus-sized and never broadcastable, the
     // model ships to workers — the fastText-classifier deployment
     // assumption. (A 2^20-vocab × 100-class model outgrows broadcast;

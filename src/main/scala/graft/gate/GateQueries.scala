@@ -426,7 +426,8 @@ object GateQueries {
     * 17 s a 4k corpus measured), and 10 clusters of 200 put the IVF
     * tier's recall at a DISCRIMINATING 0.964 (16 clusters saturate at
     * 1.000 — a rider pinned at 1.00 can't witness quality drift;
-    * MutualKnnClusteredProbe sweep). Generated by the fully
+    * SCALING.md "Round 12 — … mutual-kNN on clustered geometry").
+    * Generated by the fully
     * deterministic [[graft.tools.PlantedCorpus]] expressions and written
     * ONCE to a shared parquet path so the Spark gates and the DuckDB
     * oracle read the SAME file (the mail-CSV discipline —
@@ -1117,7 +1118,8 @@ object GateQueries {
       // contamination/redundancy audit (190 pairs at 20 sources,
       // zero-overlap pairs included); hash-checked twin of the t44
       // MinHash sketch tier. wideT (round 18): the shingle explode fuses
-      // into the 10-split scan (10-way on 32 cores, GateStageSweep);
+      // into the 10-split scan (10-way on 32 cores; SCALING.md "Round
+      // 18: the … sweep, industrialized (all 157 gates)");
       // measured 5.96 -> ~3.4 s at 10x. Per-gate, not blanket: the same
       // flip measured FLAT-TO-WORSE on d11/t26/e13 (join- and
       // explode-output-heavy pipelines where the exchange cost eats the
@@ -1391,7 +1393,8 @@ object GateQueries {
     // a gate there would ship a measured loss. But that is the corpus,
     // not the operator: on planted-cluster geometry (the real-embedding
     // corpus class) the tier holds 0.988 recall at 0.17× the exact wall
-    // at n=10k (MutualKnnClusteredProbe, round 12). So the gates run on
+    // at n=10k (SCALING.md "Round 12 — … mutual-kNN on clustered
+    // geometry"). So the gates run on
     // the deterministic planted corpus: e18 is the exact anchor with a
     // full DuckDB oracle over the SAME parquet file, e17 is the IVF
     // tier (no_oracle rows check + the e17-vs-e18 bench recall rider +
@@ -1578,7 +1581,8 @@ object GateQueries {
       // per-table hit rate by 1 − θ/π) and 0.99 back at the formula's
       // resolved count; identical to tables=8 at every driver sf (the
       // formula floors at 8 until the corpus outgrows the n=2000 anchor).
-      // probes2 = -1 (round 16, RecallProbes d4cost): auto Hamming-2
+      // probes2 = -1 (round 16, SCALING.md "Round 16: the crossover
+      // becomes executable — and d4's recall price halved"): auto Hamming-2
       // probing past the anchor — H2 probes buy per-table coverage far
       // cheaper than tables, so the H2-aware formula resolves 16 tables
       // at 10× instead of 58 for the SAME recall at less wall (probe

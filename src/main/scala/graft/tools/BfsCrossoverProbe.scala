@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Measure the BFS-family crossover (round 16, VERDICT r15 #3): the
@@ -22,14 +21,7 @@ import org.apache.spark.sql.functions._
   * One-off diagnostic, not a gate. */
 object BfsCrossoverProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("bfs-crossover-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("bfs-crossover-probe")
     val h = new ProbeHarness(spark, "bfsx")
     import graft.analytics.GraphAnalytics
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reference-side scaling probe for d15's `semanticDecontam` in its
@@ -36,22 +36,9 @@ object D15ScaleProbe {
     val factors =
       if (planMode) Seq(1)
       else if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 100)
-    // SPARK_GRAFT_CONF passthrough (round 22, the PlanDump mechanism):
-    // lets a plan capture force a guarded tier (e.g.
+    // SPARK_GRAFT_CONF can force a guarded tier (e.g.
     // spark.graft.lsh.broadcastBudgetBytes=0 for the composite-key tier)
-    // without recompiling — diagnostic only
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder().master("local[32]")
-      .appName("d15-scale-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("d15-scale-probe")
     graft.functions.expressions.GraftFunctions.init(spark)
     val h = new ProbeHarness(spark, "d15-scale")
     val base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Three-point (1×/10×/100×) scaling probe for d4's `cosineDuplicates`
@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * the stats-guarded metadata-candidate switch lands) or records the
   * probe-backed negative.
   *
-  * Two corpus constructions from sf0.1's 2,000 vectors (the
-  * DedupScaleProbe discipline):
+  * Two corpus constructions from sf0.1's 2,000 vectors (the d-suite
+  * three-point discipline, SCALING.md "Round 20: d-suite three-point
+  * scaling"):
   *
   *  - DISJOINT: copy c applies a copy-specific SIGNED PERMUTATION of
   *    the coordinates (an orthogonal map — within-copy cosines are
@@ -41,22 +42,9 @@ import org.apache.spark.sql.functions._
 object D4ScaleProbe {
   def main(args: Array[String]): Unit = {
     val factors = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 10, 100)
-    // SPARK_GRAFT_CONF passthrough (round 22, the PlanDump mechanism):
-    // lets a probe run force a guarded tier (e.g.
+    // SPARK_GRAFT_CONF can force a guarded tier (e.g.
     // spark.graft.lsh.broadcastBudgetBytes=0 for the composite-key tier)
-    // without recompiling — diagnostic only
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder().master("local[32]")
-      .appName("d4-scale-probe")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.session("d4-scale-probe")
     graft.functions.expressions.GraftFunctions.init(spark)
     val h = new ProbeHarness(spark, "d4-scale")
     val base = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")

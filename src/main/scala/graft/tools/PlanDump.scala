@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print a gate's optimized + final-adaptive physical plan at an
   * arbitrary sf dir — the quick diagnostic behind join-strategy
   * questions (which side built, which side streamed, where AQE coalesced
@@ -11,23 +9,11 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1_full")
-    // SPARK_GRAFT_CONF passthrough (round 21, mirrors Bench): lets a
-    // plan capture force a guarded path (e.g. a small broadcast
-    // threshold) without recompiling — diagnostic surface only
-    val extraConf = sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark = extraConf.foldLeft(SparkSession.builder().master("local[32]")
-      .appName("plan-dump")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC") // match the bench
-      // session — timestamp-sensitive gates (q7, s-series) must plan and
-      // execute here exactly as they do under the harness
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench's own session: timestamp-sensitive gates (q7, s-series)
+    // plan and execute here exactly as they do under the harness, and
+    // SPARK_GRAFT_CONF can force a guarded path (e.g. a small broadcast
+    // threshold)
+    val spark = graft.SparkEntry.session("plan-dump")
     args.foreach { gate =>
       val df = graft.gate.GateQueries.queries(gate)(spark, sfDir)
       println(s"==== $gate: pre-execution formatted plan ====")

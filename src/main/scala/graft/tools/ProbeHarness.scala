@@ -2,28 +2,20 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared measurement harness for the diagnostic probe tools: a
-  * process-wide shuffle-write-bytes listener plus the timed-block
-  * protocol (300 ms settle, wall + rows + MiB shuffled per labelled
-  * block — pass 2 of a REPEAT loop is the steady reading). One
-  * implementation so a protocol change (e.g. adding shuffle-read bytes)
-  * cannot silently diverge across probes; TrussProbe predates this
-  * object and carries the original inline copy its published numbers
-  * were measured with. */
+/** Shared timed-block protocol of the diagnostic probe tools: wall,
+  * rows and MiB shuffled per labelled block (pass 2 of a REPEAT loop is
+  * the steady reading), each block profiled by [[graft.obs.GateProfiler]]
+  * and its profile printed beside the line. One implementation so a
+  * protocol change cannot silently diverge across probes. Walls recorded
+  * with this protocol before the profiler replaced its settle sleeps
+  * include +0.30 s (SCALING.md, "One gate profiler"). */
 final class ProbeHarness(spark: SparkSession, tag: String) {
-  private val shuffled = new java.util.concurrent.atomic.AtomicLong
-  spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (te.taskMetrics != null)
-        shuffled.addAndGet(te.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  })
+  private val profiler = graft.obs.GateProfiler.of(spark)
 
   /** Time `f` (a block returning its row count), print wall + shuffle. */
   def timed(label: String)(f: => Long): Unit = {
-    Thread.sleep(300); shuffled.set(0)
-    val t0 = System.nanoTime(); val r = f
-    Thread.sleep(300)
-    println(f"[$tag] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-      f"($r rows, ${shuffled.get() / 1048576.0}%.1f MiB shuffled)")
+    val (r, p) = profiler.profile(label)(f)
+    println(f"[$tag] $label: ${p.wallS}%.2f s " +
+      f"($r rows, ${p.shuffleWriteMb}%.1f MiB shuffled) ${p.json}")
   }
 }

@@ -3,7 +3,8 @@ package graft.util
 import org.apache.spark.sql.DataFrame
 
 /** Scan-parallelism widening for SMALL relations feeding expensive scans
-  * (round 17's WideScanProbe finding, unified here round 18): scan
+  * (SCALING.md "Round 17: the quadratic scans were file-split-bound,
+  * not core-bound", unified here round 18): scan
   * parallelism equals the stream side's partition count, and a few-MB
   * parquet relation arrives as a handful of file splits — the 10× e16
   * n² scan ran as 10 equal ~70 s tasks on a 32-thread box (wall = file

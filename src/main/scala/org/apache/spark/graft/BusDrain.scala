@@ -3,11 +3,11 @@ package org.apache.spark.graft
 import org.apache.spark.SparkContext
 
 /** Doorway to `private[spark]` LiveListenerBus.waitUntilEmpty, used by
-  * [[graft.Bench]]'s per-query task-metrics attribution: listener events
-  * are posted on an async bus, so a cpu/shuffle counter read immediately
-  * after an action can miss the tail of that query's own tasks (and
-  * charge them to the NEXT query). Draining the bus between queries makes
-  * the per-query executor-cpu numbers in bench_detail.json attributable.
+  * [[graft.obs.GateProfiler]]'s per-gate attribution: listener events
+  * are posted on an async bus, so a counter read immediately after an
+  * action can miss the tail of that gate's own tasks (and charge them to
+  * the NEXT gate). Draining the bus between gates makes the per-gate
+  * profiles in bench_detail.json attributable.
   * A drain timeout degrades to a slightly-smeared sample, never an error
   * — measurement must not fail the bench.
   */

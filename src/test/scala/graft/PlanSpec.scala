@@ -621,7 +621,8 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("bruteForceTopK widens the quadratic scan: >=1MB stream side gets a round-robin exchange") {
-    // round 17 (WideScanProbe): the n² scan's parallelism equals the
+    // round 17 (SCALING.md "Round 17: the quadratic scans were
+    // file-split-bound, not core-bound"): the n² scan's parallelism equals the
     // stream side's partition count — a few-MB parquet relation arrives
     // as a handful of file splits and the 10× e16 scan ran as 10 tasks
     // on 32 cores. The widened() guard must fire for >=1MB relations

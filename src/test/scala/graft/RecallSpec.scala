@@ -86,8 +86,9 @@ class RecallSpec extends AnyFunSuite {
     // On planted-cluster geometry (the real-embedding corpus class,
     // graft.tools.PlantedCorpus — fully deterministic, so this recall is
     // a constant): measured 0.899 here (n=2k) and 0.988 at n=10k where
-    // the tier runs at 0.17× the exact wall (MutualKnnClusteredProbe,
-    // SCALING.md round 12). Floor a few points under the n=2k value.
+    // the tier runs at 0.17× the exact wall (SCALING.md "Round 12 — …
+    // mutual-kNN on clustered geometry"). Floor a few points under the
+    // n=2k value.
     val emb = graft.tools.PlantedCorpus.generate(spark, n = 2000, dim = 64, clusters = 8)
       .localCheckpoint(true)
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
