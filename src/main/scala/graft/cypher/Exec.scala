@@ -38,8 +38,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale: each step is one equi-join `paths.src = edges.src` with the label
   * /direction/orth predicates pushed into the scan; AQE turns small-frontier
-  * joins into broadcasts at runtime. Repetition loops `localCheckpoint`
-  * every hop to cut lineage and keep the per-hop plan constant-size.
+  * joins into broadcasts at runtime. A start that is a predicate (labels,
+  * anyNode, or distinct ids) joins nothing on the first hop: it folds into
+  * the edge scan's filter, ids as a data-bound `InSet` ([[idIn]]), so a
+  * read from a new anchor reuses the classes compiled for the last one.
+  * [[evalLtoR]] ends with one emptiness action for the whole-result
+  * collapse; [[pathsLtoR]] (`Query.paths`) skips it when no node spec has
+  * an appl hook, so an anchored 1-hop read runs only the caller's own
+  * action. Repetition loops `localCheckpoint` every hop to cut lineage and
+  * keep the per-hop plan constant-size.
   */
 object Exec {
 
@@ -92,9 +99,21 @@ object Exec {
         val spans = g.ranges.filter(r => ls.contains(r.nodeLabel))
         if (spans.isEmpty) Some(lit(false))
         else Some(spans.map(r => c >= r.start && c < r.start + r.len).reduce(_ || _))
-      case IdSel(ids) => Some(c.isin(ids: _*))
+      case IdSel(ids) => Some(idIn(c, ids))
       case DfSel(_) => None // handled with a semi-join by the caller
     }
+
+  /** `c IN ids` over a node-id column, built as Catalyst `InSet`. For a
+    * LONG column the generated code holds the id set as a reference object,
+    * so every id set reuses the same compiled classes; `===` or `isin` would
+    * write each id into the Java source and compile new classes per anchor.
+    * The cast folds away on LONG columns and keeps the set's boxed longs
+    * comparable on narrower ones. */
+  private def idIn(c: Column, ids: Iterable[Long]): Column = {
+    import org.apache.spark.sql.catalyst.expressions.InSet
+    import org.apache.spark.sql.graft.ColumnOf
+    ColumnOf(InSet(ColumnOf.expr(c.cast("long")), ids.map(id => id: Any).toSet))
+  }
 
   // ---- one hop ------------------------------------------------------------
 
@@ -153,7 +172,10 @@ object Exec {
   private def applyTarget(g: PropertyGraph, df: DataFrame, spec: NodeSpec, colName: String): DataFrame = {
     val restricted = spec.sel match {
       case DfSel(f) =>
-        df.join(f.select(col("id").as(colName)), Seq(colName), "left_semi")
+        // an expression key, not `Seq(colName)`: a USING join moves the key
+        // column first, and the path columns must keep their n0, e1_label,
+        // n1, … order
+        df.join(f.select(col("id").as("__target")), col(colName) === col("__target"), "left_semi")
       case _ => targetPred(g, spec, col(colName)).fold(df)(p => df.filter(p))
     }
     spec.applFn.fold(restricted)(f => f(restricted))
@@ -168,9 +190,10 @@ object Exec {
 
     if (lo == 1 && hi == 1) {
       // Lazy: no per-step action. Empty frontiers propagate through the
-      // inner joins, and evalLtoR's single final emptiness check implements
-      // the whole-result collapse — one action per query instead of one per
-      // hop, and the full multi-join plan stays visible to Catalyst.
+      // inner joins, so the result is already empty when any step is;
+      // evalLtoR's one final emptiness check only swaps in the collapsed
+      // layers and `failed` (pathsLtoR skips it). The full multi-join plan
+      // stays visible to Catalyst.
       Some((applyTarget(g, hop(g, paths0, fromCol, e, step, walkRight, keepEdgeCols = true), target, s"n$step"), 1))
     } else if (lo == hi && hi <= 8) {
       // Exact-k repetition (several(k,k)): the k hops compose LAZILY
@@ -268,20 +291,47 @@ object Exec {
     comps.tail.grouped(2).collect { case Vector(CompE(e), CompN(n)) => (e, n) }.toSeq
 
   /** Quick strategy — strict left-to-right (reference evalLtoR,
-    * Cypher.hs:650-695). */
+    * Cypher.hs:650-695). One final action implements the reference's
+    * whole-result collapse (noMoreNodesFound, Cypher.hs:680-688): any empty
+    * step empties the final inner-join chain, and the result then reports
+    * `failed` with every layer empty. */
   def evalLtoR(g: PropertyGraph, pat: Pat): QueryResult = {
+    val res = walkLtoR(g, pat)
+    if (res.failed || !res.paths.isEmpty) res else emptyResult(g, pat.comps)
+  }
+
+  /** `evalLtoR(g, pat).paths` without the collapse action where it cannot
+    * change the frame. Without appl hooks an empty walk already is the
+    * collapsed result's empty frame, with the same columns; a hook may
+    * reshape or refill its layer, so a pattern with one takes the full
+    * evaluation. */
+  private[cypher] def pathsLtoR(g: PropertyGraph, pat: Pat): DataFrame = {
+    val hooked = pat.comps.exists { case CompN(n) => n.applFn.isDefined; case _ => false }
+    if (hooked) evalLtoR(g, pat).paths else walkLtoR(g, pat).paths
+  }
+
+  /** The left-to-right walk, lazy unless a repetition step must probe its
+    * frontier; `failed` only when such a probe found the walk dry. */
+  private[cypher] def walkLtoR(g: PropertyGraph, pat: Pat): QueryResult = {
     val comps = pat.comps
     val start = comps.head match {
       case CompN(n) => n
       case _ => throw new IllegalArgumentException("a query has to start with a node")
     }
     val stepPairs = pairsOf(comps)
-    // Predicate-only starts (labels/anyNode, no appl hook) never materialize
-    // a frontier: the range restriction folds into the first edge scan — at
-    // scale a label's id span can be a sparse 10^7-wide reservation while
-    // the matching edges are few; enumerating it would dwarf the query.
+    // Predicate-only starts (labels/anyNode/distinct ids, no appl hook)
+    // never materialize a frontier: the restriction folds into the first
+    // edge scan — at scale a label's id span can be a sparse 10^7-wide
+    // reservation while the matching edges are few; enumerating it would
+    // dwarf the query, and an id list would cost a local relation and a
+    // broadcast join per read. A repeated id stays a frontier row: the join
+    // emits its paths once per occurrence, a filter would emit them once.
     val pushdownStart = stepPairs.nonEmpty && start.applFn.isEmpty &&
-      (start.sel match { case AllNodes | LabelSel(_) => true; case _ => false })
+      (start.sel match {
+        case AllNodes | LabelSel(_) => true
+        case IdSel(ids) => ids.distinct.size == ids.size
+        case DfSel(_) => false
+      })
 
     // Layer 0 display stays reference-faithful (all nodes of the start
     // spec, even match-less ones) but lazy — only computed if collected.
@@ -329,11 +379,7 @@ object Exec {
           }
       }
     }
-    // One final action implements the reference's whole-result collapse
-    // (noMoreNodesFound, Cypher.hs:680-688): any empty step empties the
-    // final inner-join chain.
-    if (paths.isEmpty) emptyResult(g, comps)
-    else QueryResult(layers, paths, Option(traversed).getOrElse(emptyEdges(g)), failed = false, snapshots)
+    QueryResult(layers, paths, Option(traversed).getOrElse(emptyEdges(g)), failed = false, snapshots)
   }
 
   /** The planned strategy's start choice (exposed for tests): the node

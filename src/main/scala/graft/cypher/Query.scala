@@ -16,9 +16,10 @@ object Query {
     if (quick) Exec.evalLtoR(g, pat) else Exec.runOnE(g, pat)
 
   /** Flat path DataFrame: one row per complete match, columns
-    * n0, e1_label, n1, …, nk. */
+    * n0, e1_label, n1, …, nk. The quick strategy returns it without the
+    * whole-result emptiness action `run` takes (see [[Exec.pathsLtoR]]). */
   def paths(g: PropertyGraph, pat: Pat, quick: Boolean = true): DataFrame =
-    run(g, pat, quick).paths
+    if (quick) Exec.pathsLtoR(g, pat) else Exec.runOnE(g, pat).paths
 
   /** Flattened layer table (reference `table`, Cypher.hs:463-471): one
     * entry per pattern component — distinct node ids per node layer,
@@ -94,9 +95,23 @@ object Query {
     * already present; deletedEdges = rows overwritten by an upsert (same
     * (src,label,dir) slot, different target — the reference's
     * insertNodeEdgeAttr overwrite=True, Cypher.hs:866-889).
+    *
+    * Both sides are cut from their lineage (`localCheckpoint`): a diff is
+    * small next to the graph, while as plans they hold `g.edges` twice and
+    * three times, so every version written through `applyDiff` would
+    * multiply the lineage of the one before. Spark re-plans a cached
+    * version from that lineage when its predecessor is unpersisted, and two
+    * chained writes without the cut planned for minutes (SCALING.md
+    * "Anchored reads in two jobs"). A diff, and every version built from
+    * it, therefore depends on blocks held by the executors, which cannot be
+    * recomputed if an executor is lost.
+    *
+    * The quick strategy walks without `run`'s whole-result emptiness
+    * action: a walk that adds no edge is the empty diff whether or not it
+    * collapsed, so the collapse is checked only for a diff with new edges.
     */
   def createMem(g: PropertyGraph, pat: Pat, quick: Boolean = true): GraphDiff = {
-    val res = run(g, pat, quick)
+    val res = if (quick) Exec.walkLtoR(g, pat) else Exec.runOnE(g, pat)
     val cols = Seq("src", "dst", "label", "attrMask", "dir")
     if (res.failed) {
       val e = res.traversed
@@ -104,7 +119,14 @@ object Query {
     }
     val trav = res.traversed.select(cols.map(col): _*).distinct()
     val newEdges = trav.join(g.edges.select("src", "dst", "label"), Seq("src", "dst", "label"), "left_anti")
+      .localCheckpoint()
+    if (newEdges.isEmpty) return GraphDiff(newEdges, newEdges)
+    if (res.paths.isEmpty) { // the walk collapsed
+      val e = newEdges.limit(0)
+      return GraphDiff(e, e)
+    }
     val deleted = g.edges.join(newEdges.select(col("src"), col("label"), col("dir")), Seq("src", "label", "dir"), "left_semi")
+      .localCheckpoint()
     GraphDiff(newEdges, deleted)
   }
 

@@ -121,6 +121,21 @@ class GraphQuerySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet === Set((0L, 99L)))
   }
 
+  test("createMem: a walk that collapses after a rewired step writes nothing") {
+    import org.apache.spark.sql.functions.lit
+    val ranges = Seq(RangeDef(0, 100, 0, Seq(1)))
+    val g = Loaders.fromList(spark,
+      Seq(InputEdge(0, 1, Seq(1), addReverse = false)), ranges)
+    // step 1 alone would upsert (0,1,99) as in the test above; node 99 has
+    // no out-edge, so the second step dries up and the whole result
+    // collapses, taking the diff with it
+    val pat = nodes32(0) --| edge(attr(1)) |--> anyNode.appl(_.withColumn("n1", lit(99L))) --|
+      edge(attr(1)) |--> anyNode
+    val diff = Query.createMem(g, pat)
+    assert(diff.isEmpty)
+    assert(Query.applyDiff(g, diff).edges.count() === 1L)
+  }
+
   test("deep repetition: several(1,30) over a 30-deep chain stays bounded") {
     // 30 hop iterations × localCheckpoint each — pins that the loop's
     // lineage cuts keep per-hop plans constant-size (no analysis blowup)
@@ -479,6 +494,27 @@ class GraphQuerySpec extends AnyFunSuite {
       }
     }
     assert(prof.jobs === 0, s"planning on warm stats launched ${prof.jobs} Spark jobs")
+  }
+
+  test("an id-anchored 1-hop Query.paths runs at most 2 jobs and compiles nothing new") {
+    // The anchor folds into the cached edge scan as a data-bound InSet: no
+    // local relation, no broadcast, no collapse action, and a read from a
+    // new anchor reuses the classes the first read compiled (a literal
+    // `src = a` would be written into the generated Java, once per anchor).
+    // The profile is read after a listener-bus drain, so a launched job
+    // counts.
+    val ranges = Seq(RangeDef(0, 1000, 0, Seq(1, 2)))
+    val edges = (0 until 400).map(i =>
+      InputEdge(i % 40, 40 + i, Seq(1 + i % 2), addReverse = false))
+    val g = Loaders.fromList(spark, edges, ranges).cached()
+    def read(anchor: Long): Long =
+      Query.paths(g, nodes32(anchor) --| edge(attr(1)) |--> anyNode).count()
+    assert(read(4) === 10L) // warm-up: fills the cache, compiles the plan
+    val (n, prof) = graft.obs.GateProfiler.of(spark).profile("anchored read") { read(18) }
+    assert(n === 10L)
+    assert(prof.jobs <= 2, s"anchored 1-hop read ran ${prof.jobs} Spark jobs")
+    assert(prof.codegenCompiles === 0L,
+      s"anchored 1-hop read from a new anchor compiled ${prof.codegenCompiles} classes")
   }
 
   test("fromTemp: composing query 2 from query 1's temp output matches one-shot") {

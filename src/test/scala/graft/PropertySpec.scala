@@ -124,6 +124,71 @@ class PropertySpec extends AnyFunSuite {
     }, n = 5)
   }
 
+  test("id-anchored Query.paths ≡ Query.run(...).paths ≡ a frontier-join start, as multisets") {
+    // Query.paths folds distinct start ids into the first edge scan and
+    // skips the collapse action; Query.run keeps the action, and a nodesDF
+    // start with the same ids walks the frontier join. All three must give
+    // the same rows and columns, and a walk that dries up must still make
+    // Query.run report `failed` with every layer empty. Label 4 is on no
+    // edge, so a step over it dries wherever it sits.
+    import spark.implicits._
+    import graft.cypher.{EdgeSpec, Exec, NodeSpec, Pat}
+    val someIds = nodesDF((0L to 7L).toDF("id"))
+    val genEdge: Gen[EdgeSpec] = Gen.oneOf(
+      Gen.choose(1, 4).map(l => edge(attr(l))), Gen.choose(1, 3).map(l => edge(orth(l))),
+      Gen.const(edge()))
+    val genTarget: Gen[NodeSpec] = Gen.oneOf(Gen.const(anyNode), Gen.const(someIds),
+      Gen.choose(0, 14).map(i => nodes32(i.toLong, (i + 5L) % 15)))
+    val genStart: Gen[Seq[Long]] = Gen.oneOf(Gen.choose(0, 14).map(i => Seq(i.toLong)),
+      Gen.const(Seq(99L)), Gen.choose(0, 14).map(i => Seq(i.toLong, i.toLong)),
+      Gen.listOfN(3, Gen.choose(0, 14)).map(_.map(_.toLong).distinct))
+    val genCase: Gen[(Seq[Long], List[(EdgeSpec, NodeSpec)])] = for {
+      ids <- genStart
+      n <- Gen.choose(1, 3)
+      steps <- Gen.listOfN(n, Gen.zip(genEdge, genTarget))
+      rep <- Gen.oneOf(false, true)
+    } yield (ids, if (rep) steps.head.copy(_1 = steps.head._1.rep(1, 2)) :: steps.tail else steps)
+    def pat(start: NodeSpec, steps: List[(EdgeSpec, NodeSpec)]): Pat =
+      steps.foldLeft(Pat.of(start)) { case (p, (e, t)) => p --| e |--> t }
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    def layersEmpty(r: Exec.QueryResult) = r.layers.forall {
+      case Exec.NodeLayerOut(df) => df.isEmpty
+      case Exec.EdgeLayerOut(df) => df.isEmpty
+    }
+    // no shrinking: shrunk edge lists leave the generator's id and label
+    // ranges, and each shrink step re-runs six Spark queries
+    check("anchoredPaths", Prop.forAllNoShrink(genEdgeList, genCase) { case (edges, (ids, random)) =>
+      val g = graphOf(edges, mirror = false)
+      val (a, l) = (edges.head._1.toLong, edges.head._3)
+      val cases = Seq(
+        "random" -> (ids, random),
+        "absent id" -> (Seq(99L), List(edge() -> anyNode)),
+        "duplicate id" -> (Seq(a, a), List(edge(attr(l)) -> anyNode, edge() -> anyNode)),
+        "orth to nodesDF" -> (Seq(a), List(edge(orth(l)) -> someIds)),
+        "dry middle" -> (Seq(a), List(edge(attr(l)) -> anyNode, edge(attr(4)) -> anyNode,
+          edge() -> anyNode)),
+        "leading several" -> (Seq(a), List(edge(attr(l), several(1, 2)) -> anyNode,
+          edge() -> anyNode)))
+      Prop.all(cases.map { case (name, (start, steps)) =>
+        val p = pat(nodes32(start: _*), steps)
+        val fast = Query.paths(g, p)
+        val full = Query.run(g, p)
+        val joined = Query.run(g, pat(nodesDF(start.toDF("id")), steps)).paths
+        val rows = bag(fast)
+        val bad = Seq(
+          "columns" -> (fast.columns.toSeq == full.paths.columns.toSeq &&
+            fast.columns.toSeq == joined.columns.toSeq),
+          "rows vs run" -> (rows == bag(full.paths)),
+          "rows vs frontier join" -> (rows == bag(joined)),
+          "failed iff empty" -> (full.failed == rows.isEmpty),
+          "failed layers empty" -> (!full.failed || layersEmpty(full)),
+          "dry middle fails" -> (name != "dry middle" || full.failed)).filterNot(_._2).map(_._1)
+        Prop(bad.isEmpty) :| s"$name: start $start, steps ${steps.map(_._1)}: ${bad.mkString(", ")}"
+      }: _*)
+    }, n = 4)
+  }
+
   test("native text-hash expressions ≡ their relational forms on random strings") {
     import spark.implicits._
     import graft.functions.Dedup

@@ -1,0 +1,76 @@
+#!/usr/bin/env python3
+"""Per-op-kind summary of perfbench span files.
+
+Usage:
+    python3 tools/perf_spans.py A.spans.jsonl [B.spans.jsonl]
+
+A traced perfbench run (`--trace 1`) writes one span per op, per layer
+call and per Spark job to `perfbench/out/results/*-trace1.spans.jsonl`.
+For each op kind this prints how many ops ran, their median wall, and for
+each layer call the op made (`layer.fn`) the calls per op and the median
+Spark jobs per call. Given two files (say parent and change), the columns
+stand side by side. The layer totals perfbench reports (`cypher.jobs`)
+sum over every call of a layer; this splits them per op kind, so the cost
+of one cheap read shows on its own line.
+"""
+import json
+import statistics
+import sys
+from collections import defaultdict
+
+
+def summarize(path):
+    spans = [json.loads(line) for line in open(path) if line.strip()]
+    ops = {s["id"]: s for s in spans if s["kind"] == "op"}
+    calls = {s["id"]: s for s in spans if s["kind"] == "call"}
+    jobs = defaultdict(int)
+    for s in spans:
+        if s["kind"] == "job":
+            jobs[s["parent"]] += 1
+    walls = defaultdict(list)
+    for o in ops.values():
+        walls[o["name"]].append(o["end_ms"] - o["start_ms"])
+    per_call = defaultdict(list)  # (op kind, layer.fn) -> jobs of each call
+    for c in calls.values():
+        op = ops.get(c["parent"])
+        if op is not None:
+            per_call[(op["name"], f'{c["layer"]}.{c["name"]}')].append(jobs[c["id"]])
+    return walls, per_call
+
+
+def cells(summary, kind, call):
+    walls, per_call = summary
+    if call is None:
+        w = walls.get(kind)
+        return [str(len(w)), f"{statistics.median(w):.0f}"] if w else ["-", "-"]
+    js = per_call.get((kind, call))
+    if not js:
+        return ["-", "-"]
+    return [f"{len(js) / max(1, len(walls.get(kind, []))):.1f}", f"{statistics.median(js):g}"]
+
+
+def main(argv):
+    if len(argv) not in (2, 3):
+        print(__doc__.strip(), file=sys.stderr)
+        return 2
+    runs = [summarize(p) for p in argv[1:]]
+    kinds = sorted({k for walls, _ in runs for k in walls})
+    head = ["op kind / layer.fn"]
+    for i, _ in enumerate(runs):
+        tag = "AB"[i] if len(runs) > 1 else ""
+        head += [f"{tag} ops | calls/op", f"{tag} wall p50 ms | jobs/call p50"]
+    rows = [head]
+    for k in kinds:
+        rows.append([k] + [c for r in runs for c in cells(r, k, None)])
+        fns = sorted({fn for _, per_call in runs for (kk, fn) in per_call if kk == k})
+        for fn in fns:
+            rows.append(["  " + fn] + [c for r in runs for c in cells(r, k, fn)])
+    widths = [max(len(r[i]) for r in rows) for i in range(len(head))]
+    for r in rows:
+        print("  ".join(c.ljust(w) if i == 0 else c.rjust(w)
+                        for i, (c, w) in enumerate(zip(r, widths))))
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv))
