@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.functions.expressions.{PackedVectors, ScoreBucketBlock}
+import graft.functions.expressions.{PackedVectors, ScoreBucketBlock, VecKernel}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ARRAY<FLOAT>). Hot-path vector math runs through the native codegen'd
@@ -231,12 +231,17 @@ object Similarity {
     *
     * Scale shape: the candidate pool is the top-`candidates` relevance
     * shortlist per query (one [[bruteForceTopK]]-shaped pass — compose
-    * with an ANN tier upstream for sublinear pools), pairwise sims are
-    * C²-per-query over the SHORTLIST only (never the corpus), and each
-    * of the k greedy rounds is one join + max-penalty aggregation +
-    * argmax min_by — all map-side combinable, lineage cut per round.
-    * First pick = pure relevance (empty penalty = 0, the classic
-    * definition); ties break to the smaller id everywhere.
+    * with an ANN tier upstream for sublinear pools), collected per query
+    * by ONE exchange (the shortlist groupBy). The k greedy rounds are
+    * sequential per query but the shortlist is tiny, so they run inside
+    * one codegen'd expression ([[expressions.MmrGreedy]], operation
+    * order in its doc) over the collected shortlist: pairwise sims are
+    * C²-per-query over the SHORTLIST only (never the corpus), and no
+    * round pays a job. FLOAT and DOUBLE vector columns take the same
+    * path. The shortlist is collected unsorted; the greedy is
+    * independent of its order. First pick = pure relevance (empty
+    * penalty = 0, the classic definition); ties break to the smaller id
+    * everywhere.
     *
     * Returns (query_id, neighbor_id, mmr_rank, mmr_score rounded 6 dp).
     * Queries with fewer than k candidates emit what they have. */
@@ -247,75 +252,18 @@ object Similarity {
     require(lambda >= 0 && lambda <= 1, s"mmrTopK: lambda must be in [0,1], got $lambda")
     require(candidates >= k, s"mmrTopK: candidates ($candidates) must be >= k ($k)")
     useNative(queries)
-    val cands0 = bruteForceTopK(queries, corpus, candidates, idCol, vecCol)
+    import org.apache.spark.sql.graft.ColumnOf
+    val short = bruteForceTopK(queries, corpus, candidates, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id").as("id"), col("cosine").as("rel"))
       .join(corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
         nnorm(col(vecCol)).as("n")), "id")
-    // FUSED tier (round 22, VERDICT r21 #3, guide §4): the k−1 greedy
-    // rounds are inherently sequential PER QUERY but the shortlist is
-    // tiny (≤ `candidates` rows), so the whole greedy runs in ONE
-    // codegen'd expression over the query's collected shortlist
-    // ([[expressions.MmrGreedy]] — bit-identity contract in its doc)
-    // instead of k−1 sequential job rounds each paying a join, an
-    // aggregation, an argmax and a localCheckpoint of driver floor.
-    // One exchange (the shortlist groupBy) replaces them all. Declines
-    // non-FLOAT vector columns (the packed loop reads floats); conf
-    // spark.graft.mmr.fused=false forces the join-shaped rounds (the
-    // tests' equality pin).
-    val fusedMmr = (corpus.schema(vecCol).dataType match {
-      case t: org.apache.spark.sql.types.ArrayType =>
-        t.elementType == org.apache.spark.sql.types.FloatType
-      case _ => false
-    }) && corpus.sparkSession.conf.get("spark.graft.mmr.fused", "true").toBoolean
-    if (fusedMmr) {
-      import org.apache.spark.sql.graft.ColumnOf
-      val short = cands0.groupBy(col("query_id"))
-        .agg(collect_list(struct(col("id"), col("rel"), col("v"), col("n"))).as("shortlist"))
-      val picks = ColumnOf(expressions.MmrGreedy(
-        ColumnOf.expr(col("shortlist")), k, lambda))
-      return short.select(col("query_id"), explode(picks).as("p"))
-        .select(col("query_id"), col("p.id").as("neighbor_id"),
-          col("p.mmr_rank").as("mmr_rank"),
-          round(col("p.mmr_score"), 6).as("mmr_score"))
-    }
-    val cands = cands0.localCheckpoint(true)
-    val pairs = cands.select(col("query_id"), col("id").as("a"),
-        col("v").as("av"), col("n").as("an"))
-      .join(cands.select(col("query_id"), col("id").as("b"),
-        col("v").as("bv"), col("n").as("bn")), "query_id")
-      .filter(col("a") =!= col("b"))
-      .select(col("query_id"), col("a"), col("b"),
-        (ndot(col("av"), col("bv")) / (col("an") * col("bn"))).as("sim"))
-      .localCheckpoint(true)
-    val lam = lit(lambda)
-    // round 1: pure relevance argmax
-    var selected = cands.groupBy(col("query_id"))
-      .agg(min_by(struct(col("id"), col("rel")), struct(-col("rel"), col("id"))).as("p"))
-      .select(col("query_id"), col("p.id").as("id"), lit(1).as("mmr_rank"),
-        (lam * col("p.rel")).as("mmr_score"))
-      .localCheckpoint(true)
-    var i = 2
-    while (i <= k) {
-      val remaining = cands.join(selected.select(col("query_id"), col("id")),
-        Seq("query_id", "id"), "left_anti")
-      val pen = remaining
-        .join(pairs.withColumnRenamed("a", "id"), Seq("query_id", "id"))
-        .join(selected.select(col("query_id"), col("id").as("b")), Seq("query_id", "b"))
-        .groupBy(col("query_id"), col("id"))
-        .agg(first(col("rel")).as("rel"), max(col("sim")).as("penalty"))
-      val pick = pen
-        .withColumn("score", lam * col("rel") - (lit(1.0) - lam) * col("penalty"))
-        .groupBy(col("query_id"))
-        .agg(min_by(struct(col("id"), col("score")),
-          struct(-col("score"), col("id"))).as("p"))
-        .select(col("query_id"), col("p.id").as("id"), lit(i).as("mmr_rank"),
-          col("p.score").as("mmr_score"))
-      selected = selected.unionByName(pick).localCheckpoint(true)
-      i += 1
-    }
-    selected.select(col("query_id"), col("id").as("neighbor_id"),
-      col("mmr_rank").cast("long").as("mmr_rank"),
-      round(col("mmr_score"), 6).as("mmr_score"))
+      .groupBy(col("query_id"))
+      .agg(collect_list(struct(col("id"), col("rel"), col("v"), col("n"))).as("shortlist"))
+    val picks = ColumnOf(expressions.MmrGreedy(ColumnOf.expr(col("shortlist")), k, lambda))
+    short.select(col("query_id"), explode(picks).as("p"))
+      .select(col("query_id"), col("p.id").as("neighbor_id"),
+        col("p.mmr_rank").as("mmr_rank"),
+        round(col("p.mmr_score"), 6).as("mmr_score"))
   }
 
   /** Deterministic pseudo-random hyperplanes: dim × bits doubles in [-1,1),
@@ -325,22 +273,13 @@ object Similarity {
     Seq.fill(bits)(Seq.fill(dim)(rnd.nextDouble() * 2 - 1))
   }
 
-  /** B-bit random-hyperplane signature of a vector column. Zero planes →
-    * constant bucket 0 (the degenerate exhaustive configuration: every
-    * vector shares one bucket, so the bucket join is the full cross
-    * product — the verification tier of the LSH path). */
-  def lshSignature(vec: Column, planes: Seq[Seq[Double]]): Column =
-    if (planes.isEmpty) lit(0L)
-    else planes.zipWithIndex.map { case (p, i) =>
-      val planeCol = array(p.map(lit): _*)
-      when(dot(vec, planeCol) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-
   /** Native single-pass B-bit signature ([[graft.functions.expressions.LshSignature]]):
     * bit-identical to the composed per-plane `when(ndot >= 0, 1L << i)`
     * OR-reduction, but the vector column is decoded once per row instead
     * of once per BIT (round 19 — d4's signature work was the top sf1 CPU
-    * line; parity pinned in PipelineSpec). */
+    * line; parity pinned in PipelineSpec). Zero planes → constant bucket
+    * 0: every vector shares one bucket, the exhaustive verification
+    * configuration of the LSH path. */
   private def nativeSignature(vec: Column, planes: Seq[Seq[Double]]): Column =
     if (planes.isEmpty) lit(0L)
     else call_function("graft_lsh_sig", vec,
@@ -962,9 +901,7 @@ object Similarity {
     // unit-normalize once; a zero-norm centroid keeps NaN cosines, which
     // rank LAST (the assignTo NaN rule)
     val cn: Array[(Long, Array[Double])] = centRows.map { case (cid, c) =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      val n = math.sqrt(s)
+      val n = math.sqrt(VecKernel.sumSq(c))
       (cid, if (n > 0) c.map(_ / n) else c.map(_ => Double.NaN))
     }
     val alpha = math.acos(math.max(-1.0, math.min(1.0, threshold)))
@@ -984,9 +921,7 @@ object Similarity {
     // bit-for-bit the assignTo / assignTopM ranking
     def topRanks(x: Array[Double]): Array[Long] = {
       val scored = cn.map { case (cid, c) =>
-        var s = 0.0; var i = 0
-        val len = math.min(x.length, c.length)
-        while (i < len) { s += x(i) * c(i); i += 1 }
+        val s = VecKernel.dot(x, c)
         (if (java.lang.Double.isNaN(s)) Double.PositiveInfinity else -s, cid)
       }
       scored.sortBy(identity).take(capEff).map(_._2)
@@ -994,9 +929,7 @@ object Similarity {
     val counts = new Array[Int](capEff + 2) // counts(m*) ; capEff+1 = missed at cap
     var total = 0
     sample.foreach { case (id, v0) =>
-      var nv = 0.0; var i = 0
-      while (i < v0.length) { nv += v0(i) * v0(i); i += 1 }
-      nv = math.sqrt(nv)
+      val nv = math.sqrt(VecKernel.sumSq(v0))
       if (nv > 0) {
         val a = v0.map(_ / nv)
         val ra = topRanks(a)
@@ -1009,13 +942,10 @@ object Similarity {
           var u: Array[Double] = null
           while (u == null) {
             val g = Array.fill(a.length)(rng.nextGaussian())
-            var proj = 0.0; var t = 0
-            while (t < a.length) { proj += g(t) * a(t); t += 1 }
-            val o = new Array[Double](a.length)
-            var no = 0.0; t = 0
-            while (t < a.length) { o(t) = g(t) - proj * a(t); no += o(t) * o(t); t += 1 }
-            no = math.sqrt(no)
-            if (no > 1e-9) { t = 0; while (t < a.length) { o(t) /= no; t += 1 }; u = o }
+            val proj = VecKernel.dot(g, a)
+            val o = Array.tabulate(a.length)(t => g(t) - proj * a(t))
+            val no = math.sqrt(VecKernel.sumSq(o))
+            if (no > 1e-9) u = o.map(_ / no)
           }
           val b = new Array[Double](a.length)
           var t = 0

@@ -19,10 +19,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   * or the [[GraftExtensions]] SparkSessionExtensions entry point
   * (`spark.sql.extensions=graft.functions.expressions.GraftExtensions`).
   *
-  * Element nulls are treated as 0 (embedding columns are dense by contract);
-  * length mismatch uses the common prefix, matching `zip_with`'s null-pad
-  * then multiply-by-null → 0-sum behavior only on equal lengths — callers
-  * compare equal-dim vectors.
+  * The arithmetic is [[VecKernel]]'s rule (common prefix, ascending
+  * index, double accumulator, null elements read as 0); both evaluation
+  * paths call it.
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -43,36 +42,13 @@ case class DotProduct(left: Expression, right: Expression)
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    val xf = elemIsFloat(left); val yf = elemIsFloat(right)
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
-      s += xv * yv
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VecKernel.dot(a.asInstanceOf[ArrayData], elemIsFloat(left),
+      b.asInstanceOf[ArrayData], elemIsFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val getA = if (elemIsFloat(left)) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      val getB = if (elemIsFloat(right)) s"(double)$b.getFloat($i)" else s"$b.getDouble($i)"
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { $s += $getA * $getB; }
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => "graft.functions.expressions.VecKernel.dot(" +
+      s"$a, ${elemIsFloat(left)}, $b, ${elemIsFloat(right)})")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -91,7 +67,7 @@ case class DotProduct(left: Expression, right: Expression)
   * Semantics (the dirty-vector contract): NaN/±Inf elements make s
   * NaN/Inf (both fail `s < Inf` — in JAVA NaN comparisons are false),
   * the zero vector fails `s > 0`, a NULL array returns NULL (dropped by
-  * any filter), and null ELEMENTS read as 0 — the [[DotProduct]] rule. */
+  * any filter), and null ELEMENTS read as 0 — the [[VecKernel]] rule. */
 case class FiniteNorm(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -109,36 +85,19 @@ case class FiniteNorm(child: Expression) extends UnaryExpression {
   private def elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val f = elemIsFloat
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val v = if (f) x.getFloat(i).toDouble else x.getDouble(i)
-      s += v * v
-      i += 1
-    }
-    s > 0.0 && s < Double.PositiveInfinity
-  }
+  override def nullSafeEval(a: Any): Any =
+    FiniteNorm.hasDirection(VecKernel.sumSq(a.asInstanceOf[ArrayData], elemIsFloat))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val getA = if (elemIsFloat) s"(double)$a.getFloat($i)" else s"$a.getDouble($i)"
-      s"""
-         |final int $n = $a.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { $s += $getA * $getA; }
-         |${ev.value} = ($s > 0.0 && $s < Double.POSITIVE_INFINITY);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, a => "graft.functions.expressions.FiniteNorm.hasDirection(" +
+      s"graft.functions.expressions.VecKernel.sumSq($a, $elemIsFloat))")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object FiniteNorm {
+  def hasDirection(sumSq: Double): Boolean = sumSq > 0.0 && sumSq < Double.PositiveInfinity
 }
 
 object GraftFunctions {

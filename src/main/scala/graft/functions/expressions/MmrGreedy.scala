@@ -9,34 +9,28 @@ import org.apache.spark.sql.types._
 
 /** Fused MMR greedy (round 22, VERDICT r21 #3): the whole k-round
   * Maximal-Marginal-Relevance selection for ONE query, evaluated in one
-  * codegen'd call over the query's collected candidate shortlist —
-  * replacing [[graft.functions.Similarity.mmrTopK]]'s k−1 sequential
-  * per-round job chains (each a join + max-penalty aggregation + argmax
-  * + localCheckpoint, ~0.3 s of driver floor per round at sf0.1, the
-  * recorded 0.83 scaling ratio).
+  * codegen'd call over the query's collected candidate shortlist — the
+  * k−1 greedy rounds are sequential per query, but the shortlist is tiny,
+  * so [[graft.functions.Similarity.mmrTopK]] runs no per-round jobs (a
+  * join-shaped round pays a join, an aggregation, an argmax and a
+  * localCheckpoint, ~0.3 s of driver floor each at sf0.1: SCALING.md
+  * "Round 22: e14 fused MMR greedy").
   *
-  * Child: `ARRAY<STRUCT<id BIGINT, rel DOUBLE, v ARRAY<FLOAT>, n DOUBLE>>`
-  * — the shortlist with the SAME column values the join-shaped rounds
-  * consumed (rel is bruteForceTopK's cosine; n is the nnorm column), so
-  * every float that enters the greedy arithmetic is bit-identical.
-  * Emits `ARRAY<STRUCT<id BIGINT, mmr_rank BIGINT, mmr_score DOUBLE>>`,
-  * ranks 1..min(k, |shortlist|).
+  * Child: `ARRAY<STRUCT<id BIGINT, rel DOUBLE, v ARRAY<FLOAT|DOUBLE>, n
+  * DOUBLE>>` — rel is bruteForceTopK's cosine, n is the `nnorm` column
+  * (`sqrt(graft_dot(v, v))`). Emits `ARRAY<STRUCT<id BIGINT, mmr_rank
+  * BIGINT, mmr_score DOUBLE>>`, ranks 1..min(k, |shortlist|).
   *
-  * Bit-identity contract (equality-pinned in PipelineSpec against the
-  * join-shaped implementation):
-  *  - round 1 score = `lambda * rel` (the `lam * col("p.rel")` column);
-  *  - pairwise sim = DotProduct's common-prefix ascending
-  *    double-accumulated dot / (n_cand * n_sel) — the
-  *    `ndot(av, bv) / (an * bn)` column;
-  *  - penalty = max sim over the selected set: max is a SELECTION
-  *    (order-independent for the finite sims the usable() contract
-  *    guarantees), so the incremental running-max equals the per-round
-  *    aggregation bit for bit;
-  *  - round i score = `lambda * rel - (1.0 - lambda) * penalty`, the
-  *    identical operation order;
+  * Operation order (equality-pinned in PipelineSpec against a driver-side
+  * brute-force reference):
+  *  - round 1 score = `lambda * rel`;
+  *  - pairwise sim = [[VecKernel.dot]] / (n_cand * n_sel);
+  *  - penalty = max sim over the selected set, kept as a running max
+  *    (max is a selection: order-independent for the finite sims the
+  *    usable() contract guarantees);
+  *  - round i score = `lambda * rel - (1.0 - lambda) * penalty`;
   *  - every argmax breaks ties to the smaller id, and 0.0 ties -0.0
-  *    (IEEE ==), matching min_by over struct(-score, id) under Spark's
-  *    nan-safe ordering.
+  *    (IEEE ==).
   * Result is independent of shortlist order: all comparisons are
   * selections with total deterministic tie-breaks. */
 case class MmrGreedy(child: Expression, k: Int, lambda: Double)
@@ -46,11 +40,12 @@ case class MmrGreedy(child: Expression, k: Int, lambda: Double)
     child.dataType match {
       case ArrayType(StructType(Array(
         StructField(_, LongType, _, _), StructField(_, DoubleType, _, _),
-        StructField(_, ArrayType(FloatType, _), _, _), StructField(_, DoubleType, _, _))), _) =>
+        StructField(_, ArrayType(FloatType | DoubleType, _), _, _),
+        StructField(_, DoubleType, _, _))), _) =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"graft_mmr_greedy requires ARRAY<STRUCT<BIGINT, DOUBLE, ARRAY<FLOAT>, DOUBLE>>, " +
+          s"graft_mmr_greedy requires ARRAY<STRUCT<BIGINT, DOUBLE, ARRAY<FLOAT|DOUBLE>, DOUBLE>>, " +
             s"got ${other.catalogString}")
     }
 
@@ -61,6 +56,11 @@ case class MmrGreedy(child: Expression, k: Int, lambda: Double)
 
   override def nullSafeEval(input: Any): Any =
     greedy(input.asInstanceOf[ArrayData])
+
+  @transient private lazy val isFloat = child.dataType match {
+    case ArrayType(StructType(fs), _) => fs(2).dataType.asInstanceOf[ArrayType].elementType == FloatType
+    case _ => false
+  }
 
   def greedy(shortlist: ArrayData): ArrayData = {
     val m = shortlist.numElements()
@@ -82,8 +82,7 @@ case class MmrGreedy(child: Expression, k: Int, lambda: Double)
     val out = new Array[Any](rounds)
     val taken = new Array[Boolean](m)
     // pen(i) = max sim(i, s) over selected s — running max, updated once
-    // per pick (max is a selection: order-independent, bit-identical to
-    // the per-round max aggregation)
+    // per pick
     val pen = new Array[Double](m)
     java.util.Arrays.fill(pen, Double.NegativeInfinity)
     // round 1: pure relevance argmax, ties to the smaller id
@@ -99,22 +98,13 @@ case class MmrGreedy(child: Expression, k: Int, lambda: Double)
     var round = 2
     while (round <= rounds) {
       // fold the last pick into each remaining candidate's penalty:
-      // sim = dot(v_i, v_s) / (n_i * n_s), the ndot/nnorm column math
+      // sim = dot(v_i, v_s) / (n_i * n_s)
       val sv = vecs(best)
-      val sLen = sv.numElements()
       val sn = norms(best)
       i = 0
       while (i < m) {
         if (!taken(i)) {
-          val v = vecs(i)
-          val n = math.min(v.numElements(), sLen)
-          var s = 0.0
-          var j = 0
-          while (j < n) {
-            s += v.getFloat(j).toDouble * sv.getFloat(j).toDouble
-            j += 1
-          }
-          val sim = s / (norms(i) * sn)
+          val sim = VecKernel.dot(vecs(i), isFloat, sv, isFloat) / (norms(i) * sn)
           if (sim > pen(i)) pen(i) = sim
         }
         i += 1

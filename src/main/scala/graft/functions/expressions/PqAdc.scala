@@ -30,8 +30,8 @@ import org.apache.spark.sql.types._
   *
   * Parity with the join formulation it replaces, pinned by the
   * PipelineSpec degenerate-exact identities:
-  *  - encode: argmin over a sub's rows of c·c − 2·x·c, c·c summed
-  *    ascending ([[DotProduct]] order), ties to the LOWER code id =
+  *  - encode: argmin over a sub's rows of c·c − 2·x·c, every dot by
+  *    [[VecKernel]]'s rule, ties to the LOWER code id =
   *    lower row index under the (sub, code) sort — exactly
   *    pqAssign's min_by(code, struct(d, code));
   *  - lut: part = dot(sub-slice of query, centroid), ascending;
@@ -47,25 +47,14 @@ object PqCore {
     val nSub = starts.length - 1
     val nRows = starts(nSub)
     val subDim = cents.length / nRows
-    val dim = nSub * subDim
-    val n = v.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"graft PQ: expected $dim-dimensional vectors, found $n")
+    VecKernel.requireDim(v, nSub * subDim, "PQ")
+    val x = VecKernel.widen(v, isFloat)
     val out = new Array[Double](nRows)
     var sub = 0
     while (sub < nSub) {
-      val vBase = sub * subDim
       var r = starts(sub)
       while (r < starts(sub + 1)) {
-        val cBase = r * subDim
-        var s = 0.0
-        var i = 0
-        while (i < subDim) {
-          val x = if (isFloat) v.getFloat(vBase + i).toDouble else v.getDouble(vBase + i)
-          s += x * cents(cBase + i)
-          i += 1
-        }
-        out(r) = s
+        out(r) = VecKernel.dotAt(x, sub * subDim, null, cents, r * subDim, subDim)
         r += 1
       }
       sub += 1
@@ -95,19 +84,30 @@ object PqCore {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** c·c per flattened codebook row, summed ascending (ndot parity). */
+  /** c·c per flattened codebook row, the [[VecKernel]] sum of squares. */
   def rowNorms(cents: Array[Double], nRows: Int): Array[Double] = {
     val subDim = cents.length / nRows
-    val cc = new Array[Double](nRows)
-    var r = 0
-    while (r < nRows) {
-      var s = 0.0
-      var i = 0
-      while (i < subDim) { val c = cents(r * subDim + i); s += c * c; i += 1 }
-      cc(r) = s
-      r += 1
+    Array.tabulate(nRows)(r => VecKernel.sumSq(null, cents, r * subDim, subDim))
+  }
+
+  /** Σ_sub lut[codes[sub]], ascending — [[AdcSum]]'s one body for both
+    * evaluation paths. */
+  def adc(codes: ArrayData, lut: ArrayData): Double = {
+    val n = codes.numElements()
+    val m = lut.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      val c = codes.getInt(i)
+      // UnsafeArrayData.getDouble does NO bounds check — a mismatched
+      // codes/lut pair would silently read garbage off the row buffer
+      if (c < 0 || c >= m) throw new IllegalArgumentException(
+        s"graft_adc: code $c out of range for LUT of $m entries — " +
+          "codes and lut disagree on the subspace/centroid geometry")
+      s += lut.getDouble(c)
+      i += 1
     }
-    cc
+    s
   }
 
   private[expressions] def params(centsE: Expression, startsE: Expression,
@@ -212,51 +212,10 @@ case class AdcSum(left: Expression, right: Expression) extends BinaryExpression 
           s"${l.catalogString}, ${r.catalogString}")
     }
   override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val codes = a.asInstanceOf[ArrayData]
-    val lut = b.asInstanceOf[ArrayData]
-    var s = 0.0
-    var i = 0
-    val n = codes.numElements()
-    val m = lut.numElements()
-    while (i < n) {
-      val c = codes.getInt(i)
-      // UnsafeArrayData.getDouble does NO bounds check — a mismatched
-      // codes/lut pair would silently read garbage off the row buffer
-      if (c < 0 || c >= m) AdcSum.outOfRange(c, m)
-      s += lut.getDouble(c); i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    PqCore.adc(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val c = ctx.freshName("c")
-      val s = ctx.freshName("s")
-      s"""
-         |final int $n = $a.numElements();
-         |final int $m = $b.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final int $c = $a.getInt($i);
-         |  if ($c < 0 || $c >= $m)
-         |    graft.functions.expressions.AdcSum.outOfRange($c, $m);
-         |  $s += $b.getDouble($c);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.expressions.PqCore.adc($a, $b)")
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object AdcSum {
-  /** Shared throw helper for both eval paths (keeps the generated loop
-    * body free of string concatenation). */
-  def outOfRange(code: Int, lutLen: Int): Nothing =
-    throw new IllegalArgumentException(
-      s"graft_adc: code $code out of range for LUT of $lutLen entries — " +
-        "codes and lut disagree on the subspace/centroid geometry")
 }

@@ -20,12 +20,12 @@ import org.apache.spark.sql.types._
   * is decoded once, the dim check runs once, and a substituted copy costs
   * one call, not outDim subtrees.
   *
-  * Bit-for-bit equal to the composed form: per plane j the accumulation
-  * is `s += v(i) * planes(j*dim + i)` ascending in i ([[DotProduct]]'s
-  * order) followed by a single `/ sqrt(outDim)` — identical FP trajectory,
-  * so e13's hash-green oracle parity is unchanged. Contracts preserved:
-  * NULL vector → NULL projection (null-intolerant child); element nulls
-  * read as 0 (the [[DotProduct]] dense-by-contract rule); a vector whose
+  * Bit-for-bit equal to the composed form: per plane j the dot is
+  * [[VecKernel.matVec]]'s (the kernel's accumulation order) followed by a
+  * single `/ sqrt(outDim)` — identical FP trajectory, so e13's hash-green
+  * oracle parity is unchanged. Contracts preserved: NULL vector → NULL
+  * projection (null-intolerant child); element nulls read as 0 (the
+  * [[VecKernel]] dense-by-contract rule); a vector whose
   * length ≠ dim fails fast with the randomProject message (zip-truncation
   * would silently corrupt every downstream distance).
   *
@@ -69,25 +69,11 @@ object RandomProjection {
   /** Static helper the generated code calls. Accumulation order matches
     * the composed ndot-per-plane form exactly (see class doc). */
   def compute(v: ArrayData, planes: Array[Double], outDim: Int, isFloat: Boolean): ArrayData = {
-    val dim = planes.length / outDim
-    val n = v.numElements()
-    if (n != dim) throw new IllegalArgumentException(
-      s"graft randomProject: expected $dim-dimensional vectors, found $n")
+    VecKernel.requireDim(v, planes.length / outDim, "randomProject")
     val scale = math.sqrt(outDim.toDouble)
-    val out = new Array[Double](outDim)
+    val out = VecKernel.matVec(v, isFloat, planes, outDim)
     var j = 0
-    while (j < outDim) {
-      val base = j * dim
-      var s = 0.0
-      var i = 0
-      while (i < dim) {
-        val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
-        s += x * planes(base + i)
-        i += 1
-      }
-      out(j) = s / scale
-      j += 1
-    }
+    while (j < outDim) { out(j) /= scale; j += 1 }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 

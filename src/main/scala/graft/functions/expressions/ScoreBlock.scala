@@ -12,13 +12,12 @@ import org.apache.spark.sql.types._
 
 /** One corpus packed for fused in-bucket scoring (round 22, VERDICT r21
   * #2): flat primitive arrays — ids widened to BIGINT, per-row offsets
-  * (vectors may be ragged; [[DotProduct]]'s common-prefix rule needs
+  * (vectors may be ragged; [[VecKernel]]'s common-prefix rule needs
   * true lengths), the concatenated elements in the corpus' own width
   * (`floats` for ARRAY<FLOAT>, `doubles` for ARRAY<DOUBLE>; the other is
   * null, so a FLOAT corpus broadcasts 4 B per element, not 8), and
-  * per-row norms computed with exactly [[DotProduct]]'s accumulation
-  * (ascending index, double accumulator, then sqrt — bit-identical to
-  * the `nnorm` column it replaces).
+  * per-row norms `sqrt(VecKernel.sumSq)` — bit-identical to the `nnorm`
+  * column it replaces.
   *
   * Shipped ONCE per query as an `sc.broadcast` (the same budget-gated
   * bytes a corpus-by-id broadcast relation would carry), and looked up
@@ -61,29 +60,9 @@ final class PackedVectors(
     -1
   }
 
-  /** Row `i` as doubles (float → double is exact). */
-  def row(i: Int): Array[Double] = {
-    val off = offs(i)
-    val a = new Array[Double](offs(i + 1) - off)
-    if (floats == null) System.arraycopy(doubles, off, a, 0, a.length)
-    else {
-      var j = 0
-      while (j < a.length) { a(j) = floats(off + j); j += 1 }
-    }
-    a
-  }
-
-  /** `a · row(i)` by [[DotProduct]]'s rule: common prefix, ascending
-    * index, double accumulator. */
-  def dot(a: Array[Double], i: Int): Double = {
-    val off = offs(i)
-    val n = math.min(a.length, offs(i + 1) - off)
-    var s = 0.0
-    var j = 0
-    if (floats == null) while (j < n) { s += a(j) * doubles(off + j); j += 1 }
-    else while (j < n) { s += a(j) * floats(off + j); j += 1 }
-    s
-  }
+  /** Row `i`'s offset and length in the packed elements. */
+  def off(i: Int): Int = offs(i)
+  def len(i: Int): Int = offs(i + 1) - offs(i)
 }
 
 object PackedVectors {
@@ -152,21 +131,18 @@ object PackedVectors {
       offs(i) = off
       val v = rows(order(i)).getSeq[Any](1)
       val len = v.length
-      var s = 0.0
       var j = 0
       while (j < len) {
-        // null elements read as 0 — the [[DotProduct]] rule (dense by
+        // null elements read as 0 — the [[VecKernel]] rule (dense by
         // contract, but the packed corpus must not diverge from it)
-        val x = v(j) match {
-          case null => 0.0
-          case f: java.lang.Float => f.doubleValue
-          case d => d.asInstanceOf[java.lang.Double].doubleValue
+        v(j) match {
+          case null => // the arrays are zero-filled
+          case f: java.lang.Float => floats(off + j) = f
+          case d => doubles(off + j) = d.asInstanceOf[java.lang.Double]
         }
-        if (isFloat) floats(off + j) = x.toFloat else doubles(off + j) = x
-        s += x * x // DotProduct's accumulation
         j += 1
       }
-      norms(i) = math.sqrt(s) // = nnorm = sqrt(graft_dot(v, v))
+      norms(i) = math.sqrt(VecKernel.sumSq(floats, doubles, off, len)) // = nnorm
       off += len
       i += 1
     }
@@ -185,8 +161,8 @@ object PackedVectors {
   * [[PackedVectors]] broadcast.
   *
   * Bit-identity contract (equality-pinned in PipelineSpec against the
-  * per-table union tier): the dot accumulates ascending-index into a
-  * double over the [[DotProduct]] common prefix, `cosine = dot / (an *
+  * per-table union tier): the dot is [[VecKernel]]'s (common prefix,
+  * ascending index, double accumulator), `cosine = dot / (an *
   * bn)` with both norms packed as `sqrt(Σ x²)` (= the nnorm column), and
   * the threshold is the same IEEE `>=`. Candidate membership is the
   * bucket block itself — grouped from the identical signature
@@ -254,7 +230,8 @@ case class ScoreBucketBlock(children: Seq[Expression],
     val p = packed.value
     val ai = p.indexOf(aId)
     require(ai >= 0, s"graft_score_block: probe id $aId not in the packed corpus")
-    scoreLoop(p, p.row(ai), p.norms(ai), aId, bids)
+    scoreLoop(p, VecKernel.widen(p.floats, p.doubles, p.off(ai), p.len(ai)),
+      p.norms(ai), aId, bids)
   }
 
   @transient private lazy val probeIsFloat = children(0).dataType match {
@@ -263,21 +240,12 @@ case class ScoreBucketBlock(children: Seq[Expression],
   }
 
   /** Cross-corpus scoring: probe vector rides the row (the reference is
-    * the packed side). Copies the probe once per call, element by
-    * element as [[DotProduct]] reads it, so the inner loop reads
-    * primitive arrays on both sides. */
-  def scoreCross(av: ArrayData, an: Double, bids: ArrayData): ArrayData = {
-    val a = new Array[Double](av.numElements())
-    val f = probeIsFloat
-    var j = 0
-    while (j < a.length) {
-      a(j) = if (f) av.getFloat(j).toDouble else av.getDouble(j)
-      j += 1
-    }
-    scoreLoop(packed.value, a, an, 0L, bids)
-  }
+    * the packed side). Widens the probe once per call, so the inner loop
+    * reads primitive arrays on both sides. */
+  def scoreCross(av: ArrayData, an: Double, bids: ArrayData): ArrayData =
+    scoreLoop(packed.value, VecKernel.widen(av, probeIsFloat), an, 0L, bids)
 
-  /** The fused inner loop: for each block member, [[PackedVectors.dot]],
+  /** The fused inner loop: for each block member, [[VecKernel.dot]],
     * `cosine = dot / (an * bn)`, emit when `cosine >= threshold`.
     * `aId` drives the mode's membership rule: SelfUnprobed keeps only
     * doc_b > aId (the a<b contract), SelfProbed skips doc_b == aId
@@ -298,7 +266,8 @@ case class ScoreBucketBlock(children: Seq[Expression],
       if (keep) {
         val bi = p.indexOf(bId)
         require(bi >= 0, s"graft_score_block: block id $bId not in the packed corpus")
-        val c = p.dot(a, bi) / (an * p.norms(bi))
+        val c = VecKernel.dot(a, p.floats, p.doubles, p.off(bi), p.len(bi)) /
+          (an * p.norms(bi))
         if (c >= threshold) {
           if (out == null) out = new Array[Any](m)
           out(k) = new GenericInternalRow(Array[Any](bId, c))

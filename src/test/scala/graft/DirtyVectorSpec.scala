@@ -327,4 +327,26 @@ class DirtyVectorSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(res == Set((11L, 12L, 1.0), (12L, 11L, 1.0)), s"got $res")
   }
+
+  test("null elements read as 0 on a vectorized Parquet scan, past its first batch") {
+    // The vectorized reader leaves a null element's slot holding whatever
+    // an earlier batch wrote there (4,096 rows per batch): dense rows
+    // first, then null-holed rows, in one file, so the holes land on
+    // stale values unless the kernel zeroes them.
+    import spark.implicits._
+    graft.functions.expressions.GraftFunctions.init(spark)
+    val dir = java.nio.file.Files.createTempDirectory("graft_null_elems").resolve("t").toString
+    val rows = (0 until 10000).map(i => (i.toLong,
+      if (i < 5000) Seq[java.lang.Float](1f, 2f, 3f) else Seq[java.lang.Float](null, null, 3f)))
+    rows.toDF("vec_id", "embedding").coalesce(1).write.parquet(dir)
+    val read = spark.read.parquet(dir)
+    assert(read.queryExecution.executedPlan.toString.contains("Batched: true"),
+      "the scan must be the vectorized reader")
+    val bad = read.filter(col("vec_id") >= 5000)
+      .select(call_function("graft_dot", col("embedding"), col("embedding")).as("d"),
+        call_function("graft_project", col("embedding"),
+          array(Seq(1.0, 1.0, 0.0).map(lit): _*), lit(1)).getItem(0).as("p"))
+      .filter(col("d") =!= 9.0 || col("p") =!= 0.0)
+    assert(bad.count() === 0L, s"null elements read as stale values: ${bad.limit(3).collect().mkString}")
+  }
 }

@@ -1412,38 +1412,128 @@ class PipelineSpec extends AnyFunSuite {
     assert(short.count() === 1L)
   }
 
-  test("mmrTopK: fused greedy ≡ the join-shaped rounds, bit for bit") {
-    // round 22 (VERDICT r21 #3): the k−1 sequential per-round job chains
-    // are fused into one MmrGreedy expression over the collected
-    // shortlist. Same shortlist column values (rel = bruteForceTopK's
-    // cosine, n = the nnorm column), same arithmetic in the same order
-    // (expression doc) → every (query_id, neighbor_id, mmr_rank,
-    // mmr_score) row must match BIT for bit, across lambda values and a
-    // shortlist smaller than k. The join-shaped implementation stays
-    // reachable via spark.graft.mmr.fused=false — the pin's other arm.
+  /** Plain-Scala brute-force MMR over one query's shortlist of
+    * (id, rel), in MmrGreedy's documented operation order: every round
+    * recomputes each remaining candidate's penalty over the whole
+    * selected set; dots are common-prefix, ascending, double-accumulated;
+    * argmax ties go to the smaller id under IEEE ==. Returns
+    * (id, rank, unrounded score). */
+  private def referenceMmr(short: Seq[(Long, Double)], vec: Long => Array[Double],
+      k: Int, lambda: Double): Seq[(Long, Long, Double)] = {
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < math.min(a.length, b.length)) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    def norm(id: Long) = math.sqrt(dot(vec(id), vec(id)))
+    val picked = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+    for (round <- 1 to math.min(k, short.size)) {
+      val scored = short.filterNot(c => picked.exists(_._1 == c._1)).map { case (id, rel) =>
+        if (picked.isEmpty) (id, lambda * rel)
+        else {
+          val pen = picked.map(s => dot(vec(id), vec(s._1)) / (norm(id) * norm(s._1)))
+            .foldLeft(Double.NegativeInfinity)((m, x) => if (x > m) x else m)
+          (id, lambda * rel - (1.0 - lambda) * pen)
+        }
+      }
+      val best = scored.reduce((x, y) => if (y._2 > x._2 || (y._2 == x._2 && y._1 < x._1)) y else x)
+      picked += ((best._1, round.toLong, best._2))
+    }
+    picked.toSeq
+  }
+
+  test("mmrTopK: fused greedy ≡ a driver-side brute-force MMR, bit for bit") {
+    // The whole greedy runs in one MmrGreedy expression over each query's
+    // collected shortlist. The reference re-runs MMR in plain Scala over
+    // the same shortlist (bruteForceTopK's rel, vectors read as doubles),
+    // so every (query_id, neighbor_id, mmr_rank, mmr_score) row must match
+    // bit for bit across lambda values, a shortlist smaller than k, and a
+    // DOUBLE copy of the corpus (which must plan the fused expression).
+    import graft.functions.expressions.MmrGreedy
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types._
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val embD = emb.withColumn("embedding", col("embedding").cast("array<double>"))
+    val vecs: Map[Long, Array[Float]] = emb.select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val vec = (id: Long) => vecs(id).map(_.toDouble)
     val qs = emb.filter(col("vec_id") < 40)
+    def rounded(d: Double) =
+      BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-    def run() = Similarity.mmrTopK(qs, emb, k = 5, lambda = 0.7, candidates = 20)
-    def runHalf() = Similarity.mmrTopK(qs, emb, k = 5, lambda = 0.5, candidates = 8)
-    def runShort() = Similarity.mmrTopK(qs, emb.filter(col("vec_id") < 3), k = 5,
-      lambda = 0.7, candidates = 20)
-    val fusedPlan = run().queryExecution.executedPlan.toString.toLowerCase
-    assert(fusedPlan.contains("mmrgreedy"),
-      "float-vector MMR must take the fused greedy expression")
-    val (f1, f2, f3) = (keyed(run()), keyed(runHalf()), keyed(runShort()))
-    assert(f1.nonEmpty && f3.nonEmpty)
+    val shortType = ArrayType(StructType(Seq(StructField("id", LongType),
+      StructField("rel", DoubleType), StructField("v", ArrayType(FloatType)),
+      StructField("n", DoubleType))))
+    def check(corpus: org.apache.spark.sql.DataFrame, k: Int, lambda: Double,
+        candidates: Int): Unit = {
+      val out = Similarity.mmrTopK(qs, corpus, k, lambda, candidates)
+      assert(out.queryExecution.executedPlan.toString.toLowerCase.contains("mmrgreedy"),
+        "mmrTopK must take the fused greedy expression")
+      val shortlists = Similarity.bruteForceTopK(qs, corpus, candidates).collect()
+        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSeq }
+      val want = shortlists.toSeq.flatMap { case (q, short) =>
+        val ref = referenceMmr(short, vec, k, lambda)
+        // the expression itself, unrounded, over the same shortlist
+        val rows = short.map { case (id, rel) => new GenericInternalRow(Array[Any](id, rel,
+          UnsafeArrayData.fromPrimitiveArray(vecs(id)), math.sqrt(vec(id).map(x => x * x)
+            .foldLeft(0.0)(_ + _)))) }
+        val got = MmrGreedy(BoundReference(0, shortType, nullable = false), k, lambda)
+          .eval(InternalRow(new GenericArrayData(rows.toArray[Any]))).asInstanceOf[GenericArrayData]
+          .array.map { case r: InternalRow => (r.getLong(0), r.getLong(1), r.getDouble(2)) }.toSeq
+        assert(got.map(t => (t._1, t._2, java.lang.Double.doubleToLongBits(t._3))) ===
+          ref.map(t => (t._1, t._2, java.lang.Double.doubleToLongBits(t._3))),
+          s"MmrGreedy ≠ reference for query $q")
+        ref.map { case (id, rank, score) =>
+          (q, id, rank, java.lang.Double.doubleToLongBits(rounded(score))) }
+      }.toSet
+      assert(want.nonEmpty)
+      assert(keyed(out) === want, s"k=$k lambda=$lambda candidates=$candidates")
+    }
+    check(emb, k = 5, lambda = 0.7, candidates = 20)
+    check(emb, k = 5, lambda = 0.5, candidates = 8)
+    check(emb.filter(col("vec_id") < 3), k = 5, lambda = 0.7, candidates = 20)
+    check(embD, k = 5, lambda = 0.7, candidates = 20)
+  }
+
+  test("mmrTopK and cosineDuplicates: bit-equal rows at 1 and 7 shuffle partitions") {
+    // The fused greedy reads each query's shortlist from an UNSORTED
+    // collect_list, whose order follows the shuffle; the greedy's
+    // selections with total tie-breaks must make that order irrelevant.
+    // With broadcast joins the shortlist arrives in rank order at any
+    // partition count, so the 7-partition run also turns them off: the
+    // shortlist join then shuffles and the order changes (a greedy that
+    // skips the last shortlist entry fails here). The LSH pair tier
+    // likewise must not depend on the partition count or join strategy.
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val embD = emb.withColumn("embedding", col("embedding").cast("array<double>"))
+    val qs = emb.filter(col("vec_id") < 40)
+    def multiset(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(_.toSeq.map { case d: Double => java.lang.Double.doubleToLongBits(d); case x => x })
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def runs() = Seq(
+      Similarity.mmrTopK(qs, emb, k = 5, lambda = 0.7, candidates = 20),
+      Similarity.mmrTopK(qs, embD, k = 5, lambda = 0.7, candidates = 20),
+      Similarity.cosineDuplicates(emb, threshold = 0.35, dim = 64,
+        bits = -1, tables = -1, probes = -1, probes2 = -1)).map(multiset)
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
-      spark.conf.set("spark.graft.mmr.fused", "false")
-      val legacyPlan = run().queryExecution.executedPlan.toString.toLowerCase
-      assert(!legacyPlan.contains("mmrgreedy"),
-        "mmr.fused=false must route to the join-shaped rounds")
-      assert(keyed(run()) === f1)
-      assert(keyed(runHalf()) === f2)
-      assert(keyed(runShort()) === f3)
-    } finally spark.conf.unset("spark.graft.mmr.fused")
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      val one = runs()
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val seven = runs()
+      for ((a, b) <- one.zip(seven)) assert(a.nonEmpty && a === b)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
   }
 
   test("semanticDecontam: bucketed tier recalls the exhaustive pair set; removal flow") {

@@ -1,0 +1,178 @@
+package graft
+
+import graft.functions.expressions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, InterpretedUnsafeProjection, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.types._
+import org.scalacheck.Prop.propBoolean
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every native vector expression gives the same result, bit for bit
+  * (`doubleToLongBits`), on Spark's interpreted path (`expr.eval`) and on
+  * its generated path (an `UnsafeProjection` compiled under
+  * `spark.sql.codegen.factoryMode=CODEGEN_ONLY`), on dirty inputs: null
+  * arrays, null elements, NaN, ±Inf, −0.0, ragged and empty arrays, FLOAT
+  * and DOUBLE elements, each both as generic and as unsafe rows. Where a
+  * strict-length expression throws, both paths must throw the same
+  * exception. A plain-Scala fold pins [[VecKernel]]'s rule itself. */
+class VecKernelSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  /** A generated vector: FLOAT or DOUBLE elements, None = null element,
+    * a null `elems` = null array. */
+  private case class Vec(isFloat: Boolean, elems: Seq[Option[Double]]) {
+    def dt: DataType = ArrayType(if (isFloat) FloatType else DoubleType)
+    def data: ArrayData = if (elems == null) null else new GenericArrayData(elems.map {
+      case None => null
+      case Some(d) => if (isFloat) java.lang.Float.valueOf(d.toFloat) else java.lang.Double.valueOf(d)
+    }.toArray[Any])
+    /** The element as the rule reads it: null → 0, FLOAT widened exactly. */
+    def read(i: Int): Double = elems(i).fold(0.0)(d => if (isFloat) d.toFloat.toDouble else d)
+  }
+
+  private val special = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+    -0.0, 0.0, Double.MinPositiveValue, 1e300, -1e-300, 3.4e38)
+  private val genDouble: Gen[Double] =
+    Gen.frequency(2 -> Gen.oneOf(special), 9 -> Gen.choose(-4.0, 4.0))
+  private val genElem: Gen[Option[Double]] =
+    Gen.frequency(1 -> Gen.const(None), 11 -> genDouble.map(Some(_)))
+  private val genLen: Gen[Int] = Gen.frequency(1 -> Gen.const(0), 8 -> Gen.choose(1, 9))
+  private def genVec(len: Gen[Int] = genLen, isFloat: Gen[Boolean] = Gen.oneOf(true, false),
+      nullable: Boolean = true): Gen[Vec] = for {
+    f <- isFloat
+    isNull <- Gen.frequency(1 -> nullable, 9 -> false)
+    n <- len
+    es <- Gen.listOfN(n, genElem)
+  } yield Vec(f, if (isNull) null else es)
+  /** Length `dim` half the time (the strict callers' happy path). */
+  private def genLenAround(dim: Int): Gen[Int] = Gen.oneOf(Gen.const(dim), Gen.choose(0, 10))
+  private def genMatrix(n: Int): Gen[Array[Double]] = Gen.listOfN(n,
+    Gen.frequency(1 -> Gen.oneOf(special), 9 -> Gen.choose(-1.0, 1.0))).map(_.toArray)
+
+  /** One expression over bound inputs, and the input values. */
+  private case class Case(expr: Expression, types: Seq[DataType], values: Seq[Any])
+  private def caseOf(vs: Seq[(DataType, Any)])(build: Seq[Expression] => Expression): Case =
+    Case(build(vs.map(_._1).zipWithIndex.map { case (t, i) => BoundReference(i, t, nullable = true) }),
+      vs.map(_._1), vs.map(_._2))
+  private def caseOf1(v: Vec)(build: Expression => Expression): Case =
+    caseOf(Seq(v.dt -> v.data))(c => build(c.head))
+
+  private def canon(v: Any, dt: DataType): Any = (v, dt) match {
+    case (null, _) => null
+    case (d: Double, DoubleType) => java.lang.Double.doubleToLongBits(d)
+    case (a: ArrayData, ArrayType(et, _)) =>
+      (0 until a.numElements()).map(i => if (a.isNullAt(i)) null else canon(a.get(i, et), et))
+    case (r: InternalRow, st: StructType) => st.fields.indices.map(i =>
+      if (r.isNullAt(i)) null else canon(r.get(i, st(i).dataType), st(i).dataType))
+    case (x, _) => x
+  }
+  private def outcome(dt: DataType)(f: => Any): Either[(Class[_], String), Any] =
+    try Right(canon(f, dt)) catch { case e: Exception => Left((e.getClass, e.getMessage)) }
+
+  private def parity(c: Case): Prop = {
+    val dt = c.expr.dataType
+    val proj = UnsafeProjection.create(Seq(c.expr))
+    val generic = new GenericInternalRow(c.values.toArray)
+    val unsafe = UnsafeProjection.create(c.types.toArray).apply(generic).copy()
+    val generatedProj = (!proj.isInstanceOf[InterpretedUnsafeProjection]) :| "projection must be generated"
+    Prop.all(generatedProj +: Seq(generic, unsafe).map { row =>
+        val interpreted = outcome(dt)(c.expr.eval(row))
+        val generated = outcome(dt) { val o = proj(row); if (o.isNullAt(0)) null else o.get(0, dt) }
+        (interpreted == generated) :|
+          s"${c.expr.prettyName} on ${row.getClass.getSimpleName}: interpreted $interpreted, generated $generated"
+      }: _*)
+  }
+
+  private def check(name: String, p: Prop): Unit = {
+    SparkSession.setActiveSession(spark)
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    // fixed seed, as in PropertySpec: new coverage is a deliberate change
+    try {
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(150)
+        .withInitialSeed(org.scalacheck.rng.Seed(0x7ec7e57L)), p)
+      assert(res.passed, s"$name: $res")
+    } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+  }
+
+  private val genMmrShortlist: Gen[(DataType, Any)] = for {
+    isFloat <- Gen.oneOf(true, false)
+    isNull <- Gen.frequency(1 -> true, 9 -> false)
+    m <- Gen.choose(0, 6)
+    rows <- Gen.listOfN(m, for {
+      id <- Gen.choose(0L, 5L)
+      rel <- genDouble
+      v <- genVec(Gen.choose(0, 5), Gen.const(isFloat), nullable = false)
+      n <- Gen.frequency(1 -> Gen.oneOf(special), 9 -> Gen.choose(0.1, 3.0))
+    } yield new GenericInternalRow(Array[Any](id, rel, v.data, n)))
+  } yield (ArrayType(StructType(Seq(StructField("id", LongType), StructField("rel", DoubleType),
+      StructField("v", ArrayType(if (isFloat) FloatType else DoubleType)),
+      StructField("n", DoubleType)))),
+    if (isNull) null else new GenericArrayData(rows.toArray[Any]))
+
+  private val pqBooks: Gen[(Array[Double], Array[Int], Int)] = for {
+    nSub <- Gen.choose(1, 3)
+    perSub <- Gen.listOfN(nSub, Gen.choose(1, 3))
+    subDim <- Gen.choose(1, 3)
+    cents <- genMatrix(perSub.sum * subDim)
+  } yield (cents, perSub.scanLeft(0)(_ + _).toArray, nSub * subDim)
+
+  private val cases: Seq[(String, Gen[Case])] = Seq(
+    "DotProduct" -> (for { a <- genVec(); b <- genVec() } yield
+      caseOf(Seq(a.dt -> a.data, b.dt -> b.data))(c => DotProduct(c(0), c(1)))),
+    "FiniteNorm" -> genVec().map(v => caseOf1(v)(FiniteNorm(_))),
+    "LshSignature" -> (for {
+      dim <- Gen.choose(1, 8); bits <- Gen.choose(1, 6)
+      planes <- genMatrix(bits * dim); v <- genVec(genLenAround(dim))
+    } yield caseOf1(v)(LshSignature(_, planes, bits))),
+    "LshProbeBuckets" -> (for {
+      dim <- Gen.choose(1, 8); bits <- Gen.choose(1, 6)
+      probes <- Gen.choose(0, 3); probes2 <- Gen.choose(0, 3)
+      planes <- genMatrix(bits * dim); v <- genVec(genLenAround(dim))
+    } yield caseOf1(v)(LshProbeBuckets(_, planes, bits, probes, probes2))),
+    "RandomProjection" -> (for {
+      dim <- Gen.choose(1, 6); outDim <- Gen.choose(1, 4)
+      planes <- genMatrix(outDim * dim); v <- genVec(genLenAround(dim))
+    } yield caseOf1(v)(RandomProjection(_, planes, outDim))),
+    "PqEncode" -> (for { (cents, starts, dim) <- pqBooks; v <- genVec(genLenAround(dim)) } yield
+      caseOf1(v)(PqEncode(_, cents, starts))),
+    "PqLut" -> (for { (cents, starts, dim) <- pqBooks; v <- genVec(genLenAround(dim)) } yield
+      caseOf1(v)(PqLut(_, cents, starts))),
+    "AdcSum" -> (for {
+      codesNull <- Gen.frequency(1 -> true, 9 -> false)
+      codes <- Gen.choose(0, 5).flatMap(Gen.listOfN(_,
+        Gen.frequency(1 -> Gen.const(null), 9 -> Gen.choose(-1, 9).map(Int.box))))
+      lut <- genVec(isFloat = Gen.const(false))
+    } yield caseOf(Seq(ArrayType(IntegerType) ->
+        (if (codesNull) null else new GenericArrayData(codes.toArray[Any])),
+      lut.dt -> lut.data))(c => AdcSum(c(0), c(1)))),
+    "MmrGreedy" -> (for {
+      short <- genMmrShortlist; k <- Gen.choose(1, 4); lambda <- Gen.oneOf(0.0, 0.3, 0.7, 1.0)
+    } yield caseOf(Seq(short))(c => MmrGreedy(c.head, k, lambda))))
+
+  for ((name, gen) <- cases)
+    test(s"$name: interpreted eval ≡ generated code, bit for bit") {
+      check(name, Prop.forAll(gen)(parity))
+    }
+
+  test("VecKernel rule: DotProduct and FiniteNorm ≡ a plain-Scala fold") {
+    check("rule", Prop.forAll(genVec(), genVec()) { (a, b) =>
+      val dot = caseOf(Seq(a.dt -> a.data, b.dt -> b.data))(c => DotProduct(c(0), c(1)))
+      val norm = caseOf1(a)(FiniteNorm(_))
+      val row = new GenericInternalRow(Array[Any](a.data, b.data))
+      val wantDot = if (a.elems == null || b.elems == null) null else {
+        var s = 0.0
+        for (i <- 0 until math.min(a.elems.size, b.elems.size)) s += a.read(i) * b.read(i)
+        java.lang.Double.doubleToLongBits(s)
+      }
+      val wantNorm = if (a.elems == null) null else {
+        val ss = a.elems.indices.foldLeft(0.0)((acc, i) => acc + a.read(i) * a.read(i))
+        ss > 0.0 && ss < Double.PositiveInfinity
+      }
+      (canon(dot.expr.eval(row), DoubleType) == wantDot) :| "dot" &&
+        (norm.expr.eval(row) == wantNorm) :| "finite norm"
+    })
+  }
+}
