@@ -2,9 +2,9 @@ package graft.analytics
 
 import graft.model.PropertyGraph
 import org.apache.spark.graphx.{Edge => GxEdge, EdgeDirection, Graph => GxGraph, VertexId}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructType}
 
 /** GraphX bridge for whole-graph analytics the reference lacks entirely
   * (shortest path is a TODO in its docs, doc/Neo4j.md:179-196): connected
@@ -63,6 +63,12 @@ object GraphAnalytics {
         evict
       }
     }
+  /** Superstep partition count from an EXACT forward-edge count: ~40 B
+    * per edge at 8 MB per partition, clamped to [1, 10000]. The one sizing
+    * rule of [[toGraphX]] and [[Fixpoint]]. */
+  private[analytics] def superstepPartitions(edges: Long): Int =
+    ((edges * 40L + (8L << 20) - 1) / (8L << 20)).min(10000).max(1).toInt
+
   def toGraphX(g: PropertyGraph): GxGraph[Int, Int] = {
     val appPrefix = s"gx|${g.spark.sparkContext.applicationId}|"
     val key = appPrefix +
@@ -79,10 +85,10 @@ object GraphAnalytics {
       // session's full task width — isolated d5/d8 steady 1.5-1.9 s at
       // 32 shuffle partitions vs 0.5-0.7 s at 8. Post-materialization
       // the SAME plan reads 5.4 KB → p = 1. The count is one cheap job
-      // per memoized conversion; ~40 B per GxEdge keeps the 8 MB/
-      // partition superstep target the stats path aimed at.)
-      val p = ((fwd.count() * 40L + (8L << 20) - 1) / (8L << 20))
-        .min(10000).max(1).toInt
+      // per distinct edge plan, shared with the BFS dispatch and
+      // Fixpoint; ~40 B per GxEdge keeps the 8 MB/partition superstep
+      // target the stats path aimed at.)
+      val p = superstepPartitions(dirEdgeCount(g))
       val edges = fwd.rdd.map(r => GxEdge(r.getLong(0), r.getLong(1), r.getInt(2)))
         .coalesce(p)
       // isolated nodes (explicitNodes) must appear as singleton components /
@@ -378,77 +384,39 @@ object GraphAnalytics {
     *   pr_0(v)  = [v = source]
     *   pr_i(v)  = reset·[v = source] + (1−reset)·Σ_{(u,v)∈E} pr_{i−1}(u)/outdeg(u)
     *
-    * Expressed as a DataFrame power iteration rather than GraphX: the
+    * Expressed as an explicit power iteration rather than GraphX: the
     * formula IS the spec, so an external engine replicates it exactly
     * (mod double-summation order, absorbed by the gate's 6-dp round) —
     * the same oracle-ability argument as the unrolled static-PageRank
-    * oracle (a5). Lineage is cut per iteration (`localCheckpoint`, the
-    * [[kCoreEdges]] idiom) so plan depth stays constant at any iteration
-    * count.
+    * oracle (a5).
     *
-    * Scale shape (the [[hits]] discipline): the edge relation carries
-    * its source degree and is persisted PRE-PARTITIONED on src once, so
-    * every round's join reuses the cached layout and shuffle-hash-joins
-    * only the rank vector — no per-round |E| Exchange, no per-round
-    * driver broadcast, no |V| driver-memory ceiling (the old
-    * broadcastMaxVerts knob is gone for the same reason as hits').
-    * The rank vector stays SPARSE through the iteration: pr_0 is one
-    * row, and a vertex absent from a round's vector would carry rank
-    * reset·[v=source] ⊕ 0 contribution — exactly what the final dense
-    * verts join restores once at the end. Per round: one |reached|-row
-    * vector shuffle + one dst-keyed map-side-combined aggregation;
-    * lineage cut per round. */
+    * Scale shape: a [[Fixpoint]] superstep per round. The call indexes the
+    * forward edges once (vertex set = edge endpoints ∪ explicitNodes ∪ the
+    * seed, so a seed with no edges still gets its reset row); each round
+    * zips the rank vector with that index and runs ONE map-side-combined
+    * message shuffle, and the final dense vector is the one eager cut —
+    * one Spark job for all rounds, and the seed rides as data, so a new
+    * seed compiles nothing. The rank vector stays SPARSE through the
+    * iteration: pr_0 is one row, only ranked vertices send, and a vertex
+    * no message reached reads 0 in the dense output. The seed sends itself
+    * a 0.0 message each round, which keeps it in every vector. */
   def personalizedPageRank(g: PropertyGraph, source: Long, numIter: Int,
       resetProb: Double = 0.15): DataFrame = {
     require(numIter >= 1, s"personalizedPageRank: numIter must be >= 1, got $numIter")
-    val spark = g.spark
-    import spark.implicits._
-    val fwd = g.edges.filter(col("dir")).select(col("src"), col("dst"))
-    // (src, dst, d): source out-degree attached once, not once per round.
-    // The degree rides a count window rather than a groupBy+self-join:
-    // ONE pass over the base relation and one |E| exchange — and that
-    // exchange IS the src-hash layout the round joins need, reported
-    // through the persist (localCheckpoint would drop the partitioning
-    // under AQE — PartitionPreserveProbe), so no separate repartition
-    val fwdD = fwd.withColumn("d",
-        count(lit(1)).over(Window.partitionBy(col("src"))))
-      .persist()
-    try {
-      fwdD.count()
-      // vertex set = edge endpoints ∪ explicitNodes (the toGraphX
-      // invariant: isolated nodes must appear as ranked vertices —
-      // pageRankStatic honors it via GraphX, this path must too) ∪ the
-      // seed itself, so a seed with no edges still gets its resetProb
-      // row instead of a silent all-zero vector. Derived from the CACHED
-      // relation (every fwd src survives the degree window), not from
-      // two more base-relation passes — the a11 setup lesson
-      val verts = fwdD.select(col("src").as("id"))
-        .unionAll(fwdD.select(col("dst").as("id")))
-        .unionAll(g.explicitNodes.map(_.select(col("id")))
-          .getOrElse(Seq.empty[Long].toDF("id")))
-        .unionAll(Seq(source).toDF("id"))
-        .distinct().localCheckpoint(true)
-      val sourceRow = spark.range(1)
-        .select(lit(source).as("id"), lit(resetProb).as("rank"))
-      var pr = spark.range(1).select(lit(source).as("id"), lit(1.0).as("rank"))
-        .localCheckpoint(true)
-      for (i <- 1 to numIter) {
-        val contrib = fwdD.join(pr.hint("shuffle_hash"), fwdD("src") === pr("id"))
-          .groupBy(fwdD("dst").as("id"))
-          .agg((lit(1.0 - resetProb) * sum(col("rank") / col("d"))).as("rank"))
-        // sparse next vector: damped contributions ⊕ the seed's reset mass
-        pr = contrib.unionByName(sourceRow)
-          .groupBy(col("id")).agg(sum(col("rank")).as("rank"))
-          .localCheckpoint(true)
+    Fixpoint.run(g, extraIds = Seq(source)) { fp =>
+      var pr = fp.init(v => if (v == source) Some(1.0) else None)
+      for (_ <- 1 to numIter) {
+        pr = fp.step(pr) { (p, i, r) =>
+          val out = p.out(i)
+          val self = if (p.ids(i) == source) Iterator(source -> 0.0) else Iterator.empty
+          out.iterator.map(v => v -> r / out.length) ++ self
+        }(_ + _).map { case (v, s) =>
+          v -> (if (v == source) (1.0 - resetProb) * s + resetProb else (1.0 - resetProb) * s)
+        }
       }
-      verts.join(pr, Seq("id"), "left")
-        .select(col("id"), coalesce(col("rank"), lit(0.0)).as("rank"))
-    } finally {
-      // the returned frame depends only on the eager localCheckpoints
-      // (verts + the per-round pr), so the cached |E| layout can be
-      // released immediately — without this every distinct input graph
-      // left its repartitioned edge relation resident for the session
-      fwdD.unpersist(blocking = false)
+      fp.output(new StructType().add("id", LongType, false).add("rank", DoubleType, false), pr) {
+        (v, r) => Row(v, r.head.getOrElse(0.0))
+      }
     }
   }
 
@@ -464,7 +432,7 @@ object GraphAnalytics {
     * memoized per edge plan (one job per distinct graph). */
   private val FrontierCrossoverEdges = 500000L
   private val edgeCountCache = new graft.util.SessionCache[Long]
-  private def dirEdgeCount(g: PropertyGraph): Long = {
+  private[analytics] def dirEdgeCount(g: PropertyGraph): Long = {
     val fwd = g.edges.filter(col("dir"))
     edgeCountCache(g.spark,
       s"bfsE|${fwd.queryExecution.logical.semanticHash()}")(fwd.count())
@@ -1365,59 +1333,41 @@ object GraphAnalytics {
     * ties by hash-map iteration order, which no external engine can
     * replicate — with min-label ties and a FIXED round count the whole
     * computation unrolls as plain SQL (the [[pageRankStatic]] /
-    * [[personalizedPageRank]] oracle-ability trade). Isolated vertices
-    * (and vertices whose neighbors all tie away) keep their previous
-    * label via the carried left join. Parallel edges vote once (the
-    * mirrored edge set is deduped); self-loops are dropped (a vertex
-    * does not vote for itself).
+    * [[personalizedPageRank]] oracle-ability trade). Vertices are the
+    * edge endpoints ∪ explicitNodes; one no neighbor votes for (isolated,
+    * or with only self-loops) keeps its previous label. Parallel edges
+    * vote once (each distinct neighbor votes once); self-loops are dropped
+    * (a vertex does not vote for itself).
     *
-    * Scale shape, per round: one |E|-row hash join fetching neighbor
-    * labels, one (v, label)-keyed count with map-side partial
-    * aggregation (the exchange carries |distinct (v, label)| ≤ |E|
-    * rows, not |E|), one plurality min_by aggregation, one |V| left
-    * join carrying labels forward. The mirrored neighbor relation is
-    * persisted PRE-PARTITIONED on the label fetch key, so each round's
-    * fetch join reuses the cached layout and shuffle-hash-joins only
-    * the |V|-row label vector — no per-round |E| Exchange, no driver
-    * broadcast, no |V| ceiling (the old `broadcastMaxVerts` knob is
-    * gone). Lineage cut stride-2 (the PPR idiom) keeps plan depth
-    * constant at any round count. */
+    * Scale shape: a [[Fixpoint]] superstep per round over the call's one
+    * edge index. Each vertex sends its label to every distinct undirected
+    * neighbor, plus a zero-count vote for its own current label, which is
+    * what keeps an un-voted vertex's label; the (target, label)-keyed
+    * counts combine map-side and shuffle once into the target's
+    * partition, where the plurality is picked. One shuffle per round, one
+    * Spark job for all rounds (the final labels are the one eager cut). */
   def labelPropagation(g: PropertyGraph, numIter: Int): DataFrame = {
     require(numIter >= 1, s"labelPropagation: numIter must be >= 1, got $numIter")
-    val spark = g.spark
-    import spark.implicits._
-    val fwd = g.edges.filter(col("dir")).select(col("src"), col("dst"))
-    // mirrored neighbor relation persisted PRE-PARTITIONED on the label
-    // fetch key w (the [[hits]]/[[personalizedPageRank]] discipline):
-    // each round's fetch join reuses the cached layout and shuffles only
-    // the |V|-row label vector — no per-round |E| Exchange, no driver
-    // broadcast, no |V| ceiling (the old broadcastMaxVerts knob)
-    val und = fwd.unionAll(fwd.select(col("dst"), col("src")))
-      .toDF("v", "w")
-      .filter(col("v") =!= col("w")).distinct()
-      .repartition(col("w")).persist()
-    try {
-      und.count()
-      val verts = und.select(col("v").as("id"))
-        .unionAll(g.explicitNodes.map(_.select(col("id")))
-          .getOrElse(Seq.empty[Long].toDF("id")))
-        .distinct().localCheckpoint(true)
-      var lbl = verts.select(col("id"), col("id").as("label"))
-      for (i <- 1 to numIter) {
-        val pick = und.join(lbl.hint("shuffle_hash"), und("w") === lbl("id"))
-          .groupBy(und("v").as("vid"), col("label"))
-          .agg(count(lit(1)).as("c"))
-          .groupBy(col("vid"))
-          .agg(min_by(col("label"), struct((-col("c")).as("nc"), col("label"))).as("nl"))
-        lbl = lbl.join(pick, lbl("id") === pick("vid"), "left")
-          .select(lbl("id"), coalesce(col("nl"), col("label")).as("label"))
-        if (i % 2 == 0 || i == numIter) lbl = lbl.localCheckpoint(true)
+    Fixpoint.run(g) { fp =>
+      var lbl = fp.init(v => Some(v))
+      for (_ <- 1 to numIter) {
+        lbl = fp.step(lbl) { (p, i, l) =>
+          Iterator((p.ids(i), l) -> 0L) ++ p.und(i).iterator.map(w => (w, l) -> 1L)
+        }(_ + _).mapPartitions { votes =>
+          // plurality per vertex: most votes, then the smallest label
+          val best = new scala.collection.mutable.LongMap[(Long, Long)]
+          votes.foreach { case ((v, l), c) =>
+            best.get(v) match {
+              case Some((bl, bc)) if bc > c || (bc == c && bl < l) =>
+              case _ => best(v) = (l, c)
+            }
+          }
+          best.iterator.map { case (v, (l, _)) => v -> l }
+        }
       }
-      lbl
-    } finally {
-      // the final round always ends in an eager localCheckpoint, so the
-      // returned label vector no longer references the cached relation
-      und.unpersist(blocking = false)
+      fp.output(new StructType().add("id", LongType, false).add("label", LongType, false), lbl) {
+        (v, l) => Row(v, l.head.get)
+      }
     }
   }
 
@@ -1442,116 +1392,35 @@ object GraphAnalytics {
     * same way in DuckDB, while sqrt would compound rounding differently
     * per engine. Rankings are identical under any positive scaling.
     *
-    * Scale shape: per iteration one dst-keyed and one src-keyed
-    * aggregation over |E| (the two shuffles HITS is), the per-iteration
-    * normalization total attached as a broadcast 1-row join (never a
-    * driver collect).
-    * The edge relation is materialized pre-partitioned per join
-    * direction, so each step shuffles ONLY the |V|-row sparse score
-    * vector into a shuffle-hash join — no per-step |E| exchange, no
-    * per-step driver broadcast, no |V| driver-memory ceiling. Per-step
-    * lineage cuts keep plan depth constant at any iteration count.
+    * Scale shape: per iteration two [[Fixpoint]] supersteps over the
+    * call's one edge index — hub scores travel out-edges into authRaw,
+    * authRaw travels in-edges into hubRaw, each one map-side-combined
+    * shuffle — and one small job for the L1 total (the last one also
+    * totals authRaw). Score vectors stay SPARSE: a vertex no message
+    * reached scores 0, which adds nothing to the next sums or the total;
+    * the dense output is the one eager cut.
     *
     * Graphs with NO edges have undefined normalized scores; auth/hub
     * come back 0.0 for isolated vertices of a non-empty edge set (the
     * iteration never reaches them and the L1 total is positive). */
   def hits(g: PropertyGraph, numIter: Int): DataFrame = {
     require(numIter >= 1, s"hits: numIter must be >= 1, got $numIter")
-    val spark = g.spark
-    import spark.implicits._
-    // the edge relation is joined 2·numIter times, alternating join key —
-    // materialize it TWICE, pre-partitioned per direction, so every
-    // iteration's join co-locates on the already-shuffled fwd side and
-    // only the |V|-row score vector moves (localCheckpoint preserves
-    // outputPartitioning, so Catalyst plans no fwd Exchange). This
-    // replaces the round-10 per-step score BROADCAST: a driver
-    // collect+rebroadcast of |V| rows every step measured ~1.0 s/step at
-    // sf0.1 vs ~0.5 s/step for the shuffle-hash shape — and the shuffle
-    // shape needs no |V| driver-memory ceiling (the old broadcastMaxVerts
-    // knob) at any scale.
-    // persist, not localCheckpoint: a checkpoint's LogicalRDD loses the
-    // repartition's outputPartitioning under AQE (each step would plan a
-    // fresh |E| Exchange — PartitionPreserveProbe), while an
-    // InMemoryRelation reports it, so the per-step join reuses the
-    // cached layout with no |E| shuffle. The caches live only for this
-    // call (finally-unpersist below): the layouts are per-invocation
-    // scratch, not session fixtures, and leaving one pair resident per
-    // distinct input graph accumulates for the session lifetime.
-    // the base edge relation is scanned ONCE: the dst layout and the
-    // vertex set both derive from the already-cached src layout (a
-    // narrow cache scan), not from three more passes over g.edges —
-    // setup cost matters because the layouts are rebuilt per invocation
-    val fwdBySrc = g.edges.filter(col("dir")).select(col("src"), col("dst"))
-      .repartition(col("src")).persist()
-    val fwdByDst = fwdBySrc.repartition(col("dst")).persist()
-    try {
-      fwdBySrc.count(); fwdByDst.count()
-      val verts = fwdBySrc.select(col("src").as("id"))
-        .unionAll(fwdBySrc.select(col("dst").as("id")))
-        .unionAll(g.explicitNodes.map(_.select(col("id")))
-          .getOrElse(Seq.empty[Long].toDF("id")))
-        .distinct().localCheckpoint(true)
-      // one raw neighbor-sum of `scores` through the edge keyed on
-      // `from`, grouped on `to`. Score vectors stay SPARSE through the
-      // iteration — a vertex absent from raw would carry 0.0, and a 0
-      // contributes nothing to the next neighbor-sum or the L1 total, so
-      // the dense |V| left-join the round-10 shape ran per step was pure
-      // overhead. Density is restored ONCE at the end.
-      def rawStep(scores: DataFrame, valCol: String, from: String,
-          to: String): DataFrame = {
-        val fwd = if (from == "src") fwdBySrc else fwdByDst
-        fwd.join(scores.hint("shuffle_hash"), fwd(from) === scores("id"))
-          .groupBy(fwd(to).as("id")).agg(sum(col(valCol)).as("s"))
-      }
-      // L1-normalize a raw vector: the total attaches as a broadcast
-      // 1-row join (never a driver collect); tot NULL/0 (edge-less
-      // graph, or an all-sink frontier) → all-0 scores, not NULL poison.
-      // Callers must pass a MATERIALIZED raw (it is referenced twice —
-      // the total and the division) or the producing join runs twice.
-      def l1(raw: DataFrame, outCol: String): DataFrame = {
-        val tot = raw.agg(sum(col("s")).as("tot"))
-        raw.crossJoin(broadcast(tot))
-          .select(col("id"),
-            when(col("tot") > 0, col("s") / col("tot"))
-              .otherwise(lit(0.0)).as(outCol))
-      }
-      // Normalization is applied ONCE per iteration (to hub), not after
-      // every half-step: each L1 division is a positive scalar that
-      // commutes through the linear neighbor-sums, so
-      // norm(A·norm(Aᵀh)) ≡ norm(A·Aᵀh) exactly — the textbook per-step
-      // schedule and this one agree to fp noise, which the 6-dp gate
-      // round absorbs (the oracle runs this same recursion). Dropping
-      // the per-auth normalization halves the broadcast-total stages,
-      // and letting authRaw stay lazy inside hubRaw's checkpoint job
-      // cuts the sequential actions per iteration from 2 to 1 — at gate
-      // scale the wall is action latency, not shuffle volume (HitsProbe).
-      // One un-normalized half-step cannot overflow: hub is normalized
-      // (Σ=1, entries ≤1), so authRaw entries ≤ in-degree and hubRaw
-      // entries ≤ maxdeg², at any scale and iteration count — unlike
-      // full deferral, whose raw scores grow geometrically per round.
-      var hub = verts.select(col("id"), lit(1.0).as("hub"))
-      var authRaw: DataFrame = null
-      var hubRaw: DataFrame = null
+    Fixpoint.run(g) { fp =>
+      def l1(tot: Double): ((Long, Double)) => (Long, Double) =
+        { case (v, s) => v -> (if (tot > 0) s / tot else 0.0) }
+      var hub = fp.init(_ => Some(1.0))
+      var auth = hub
       for (i <- 1 to numIter) {
-        authRaw = rawStep(hub, "hub", "src", "dst")
-        // the final authRaw feeds BOTH the last hubRaw join and the
-        // output normalization — materialize exactly that one
-        if (i == numIter) authRaw = authRaw.localCheckpoint(true)
-        hubRaw = rawStep(authRaw, "s", "dst", "src").localCheckpoint(true)
-        hub = l1(hubRaw, "hub")
+        val authRaw = fp.step(hub)((p, j, h) => p.out(j).iterator.map(_ -> h))(_ + _)
+        val hubRaw = fp.step(authRaw)((p, j, a) => p.in(j).iterator.map(_ -> a))(_ + _)
+        val tot = fp.totals(Seq(hubRaw) ++ (if (i == numIter) Seq(authRaw) else Nil): _*)
+        hub = hubRaw.map(l1(tot.head))
+        if (i == numIter) auth = authRaw.map(l1(tot(1)))
       }
-      // dense-ify once: vertices the iteration never reached (isolated, or
-      // pure-source/pure-sink roles) surface with explicit 0.0 scores
-      verts.join(l1(authRaw, "auth"), Seq("id"), "left")
-        .join(hub, Seq("id"), "left")
-        .select(col("id"), coalesce(col("auth"), lit(0.0)).as("auth"),
-          coalesce(col("hub"), lit(0.0)).as("hub"))
-    } finally {
-      // every step's raw is eagerly checkpointed, so the returned frame
-      // never re-reads the two cached edge layouts — release them rather
-      // than leave 2·|E| cached blocks per distinct input graph resident
-      fwdBySrc.unpersist(blocking = false)
-      fwdByDst.unpersist(blocking = false)
+      fp.output(new StructType().add("id", LongType, false).add("auth", DoubleType, false)
+          .add("hub", DoubleType, false), auth, hub) {
+        (v, s) => Row(v, s(0).getOrElse(0.0), s(1).getOrElse(0.0))
+      }
     }
   }
 

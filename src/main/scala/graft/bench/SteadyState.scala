@@ -275,9 +275,9 @@ object SteadyState {
     // memos (edge relation + support + triangles warmed in train phase;
     // a6/a10 now emit their memo) and the incremental-truss rewrite
     "a10_edge_support" -> 0.15,
-    // re-measured 2026-08-14 after the once-per-iteration normalization
-    // + single-base-scan setup restructure (isolated REPEAT=2 pass-2)
-    "a11_hits" -> 9.22,
+    // a8/a9/a11 re-measured on the Fixpoint runtime (isolated
+    // a8/a9/a11/a12 REPEAT=2 subset, pass 2, 4 vCPU)
+    "a11_hits" -> 3.07,
     "a12_modularity" -> 2.78,
     "a13_adamic_adar" -> 1.40, // r18: shared triangle-set memo
     "a14_jaccard_links" -> 1.60, // r18: explicit triangle-set memo
@@ -312,8 +312,8 @@ object SteadyState {
     "t43_source_overlap" -> 2.10, // r18: wideT documents scan
     "t44_source_overlap_sketch" -> 1.20, // r18: wideT documents scan
     "a7_kcore" -> 3.02,
-    "a8_ppr" -> 2.73,  // re-measured 2026-08-14: window-degree single-scan setup
-    "a9_label_propagation" -> 0.03,
+    "a8_ppr" -> 1.02,
+    "a9_label_propagation" -> 0.04,
     "cw_mailed_1hop" -> 0.2,
     "d10_dup_ngrams" -> 0.7,
     "d11_dup_ngram_removal" -> 2.41,

@@ -4,12 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.functions.expressions.{PackedVectors, ScoreBucketBlock, VecKernel}
+import graft.functions.expressions.{DotProduct, PackedVectors, ScoreBucketBlock, VecKernel}
+import org.apache.spark.sql.graft.ColumnOf
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (ARRAY<FLOAT>). Hot-path vector math runs through the native codegen'd
   * [[graft.functions.expressions.DotProduct]] expression (`graft_dot`);
-  * the lambda forms ([[dot]]/[[l2Norm]]/[[cosine]]) remain as the
+  * [[dot]]/[[l2Norm]]/[[cosine]] build it directly, so they are also the
   * session-free public API.
   *
   * Two tiers:
@@ -23,19 +24,18 @@ import graft.functions.expressions.{PackedVectors, ScoreBucketBlock, VecKernel}
   */
 object Similarity {
 
-  /** dot(a,b) as a Column (double) — session-free lambda form (interpreted
-    * HigherOrderFunction). The DataFrame entry points below upgrade to the
-    * codegen'd native [[graft.functions.expressions.DotProduct]] via
-    * [[useNative]]. */
+  /** dot(a, b) as a Column (double), session-free: the native
+    * [[graft.functions.expressions.DotProduct]] expression built directly,
+    * so it needs no registered `graft_dot` and follows [[VecKernel]]'s rule
+    * (common prefix, null elements read as 0) on every tier. */
   def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
+    ColumnOf(DotProduct(ColumnOf.expr(a), ColumnOf.expr(b)))
 
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, x) => acc + x))
+  def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  // native (whole-stage-codegen) variants, used once a session is in hand
+  // registers the native SQL functions the entry points below call by name
   private def useNative(df: DataFrame): Unit =
     graft.functions.expressions.GraftFunctions.init(df.sparkSession)
 
@@ -51,9 +51,6 @@ object Similarity {
   private def corpusCount(df: DataFrame): Long =
     countCache(df.sparkSession,
       s"n|${df.queryExecution.logical.semanticHash()}")(df.count())
-  private def ndot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
-  private def nnorm(a: Column): Column = sqrt(ndot(a, a))
-  private def ncos(a: Column, b: Column): Column = ndot(a, b) / (nnorm(a) * nnorm(b))
 
   /** Dirty-vector contract (the embedding-side twin of Dedup's null-text
     * policy): a vector with no defined direction — NULL, a NaN or
@@ -113,7 +110,7 @@ object Similarity {
   /** [[usableVec]] applied to a raw (id, vec) relation — the entry guard
     * every public scoring/training path routes its sides through. The
     * predicate is ONE native fused pass ([[graft.functions.expressions.FiniteNorm]]):
-    * a composed `nnorm(v) > 0 && nnorm(v) < Inf` gets its alias SUBSTITUTED
+    * a composed `l2Norm(v) > 0 && l2Norm(v) < Inf` gets its alias SUBSTITUTED
     * when pushed below a projection, duplicating the whole norm subtree per
     * comparison — on expression-backed vectors (projectedTopK's projection
     * array) that blew whole-stage codegen past janino's 64 KB method limit
@@ -132,9 +129,9 @@ object Similarity {
     // before the join rather than per pair (O(|q|*|c|) extra dots);
     // dirty rows drop per the [[usableVec]] contract
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), nnorm(col(vecCol)).as("qn"))
+      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
     val c = usable(corpus, vecCol).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), nnorm(col(vecCol)).as("cn"))
+      col(vecCol).as("cv"), l2Norm(col(vecCol)).as("cn"))
     // the vectors are projected away BEFORE the rank window: the window
     // exchange repartitions its whole input on query_id, and carrying
     // qv/cv through it costs O(|q|·|c| · vector width) shuffle bytes —
@@ -145,7 +142,7 @@ object Similarity {
     // and the contract note above it: unconditional by measurement)
     val scored = widened(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", ndot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
     val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
@@ -252,11 +249,10 @@ object Similarity {
     require(lambda >= 0 && lambda <= 1, s"mmrTopK: lambda must be in [0,1], got $lambda")
     require(candidates >= k, s"mmrTopK: candidates ($candidates) must be >= k ($k)")
     useNative(queries)
-    import org.apache.spark.sql.graft.ColumnOf
     val short = bruteForceTopK(queries, corpus, candidates, idCol, vecCol)
       .select(col("query_id"), col("neighbor_id").as("id"), col("cosine").as("rel"))
       .join(corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
-        nnorm(col(vecCol)).as("n")), "id")
+        l2Norm(col(vecCol)).as("n")), "id")
       .groupBy(col("query_id"))
       .agg(collect_list(struct(col("id"), col("rel"), col("v"), col("n"))).as("shortlist"))
     val picks = ColumnOf(expressions.MmrGreedy(ColumnOf.expr(col("shortlist")), k, lambda))
@@ -274,7 +270,7 @@ object Similarity {
   }
 
   /** Native single-pass B-bit signature ([[graft.functions.expressions.LshSignature]]):
-    * bit-identical to the composed per-plane `when(ndot >= 0, 1L << i)`
+    * bit-identical to the composed per-plane `when(dot >= 0, 1L << i)`
     * OR-reduction, but the vector column is decoded once per row instead
     * of once per BIT (round 19 — d4's signature work was the top sf1 CPU
     * line; parity pinned in PipelineSpec). Zero planes → constant bucket
@@ -327,9 +323,9 @@ object Similarity {
       probes: Int = 0, probes2: Int = 0): DataFrame = {
     useNative(queries)
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), nnorm(col(vecCol)).as("qn"))
+      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
     val c = usable(corpus, vecCol).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), nnorm(col(vecCol)).as("cn"))
+      col(vecCol).as("cv"), l2Norm(col(vecCol)).as("cn"))
     val cands0 = (0 until tables).map { t =>
       val planes = hyperplanes(dim, bits, t, seed)
       q.withColumn("bucket", explode(probeBuckets(col("qv"), planes, probes, probes2)))
@@ -346,7 +342,7 @@ object Similarity {
     // after scoring keeps the exact same rows — now at (query_id,
     // neighbor_id, cosine) width.
     val scored0 = cands0.withColumn("cosine",
-        ndot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+        dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
     // single table → one bucket per CORPUS vector and distinct probe
     // buckets per query (base + distinct weight-1/2 flips) → no duplicate
@@ -478,10 +474,10 @@ object Similarity {
     // (the d15 gate ran its whole |corpus|·|reference| dot stream as ONE
     // task at 10×); a stats-guarded no-op at scale
     val a0 = probeRel.select(col(idCol).as(aId), col(vecCol).as("av"),
-      nnorm(col(vecCol)).as("an"))
+      l2Norm(col(vecCol)).as("an"))
     val a = if (cross) widened(a0) else a0
     val b = build.select(col(idCol).as(bId), col(vecCol).as("bv"),
-      nnorm(col(vecCol)).as("bn"))
+      l2Norm(col(vecCol)).as("bn"))
     def member(df: DataFrame): DataFrame = mode match {
       case ScoreBucketBlock.SelfUnprobed => df.filter(col(aId) < col(bId))
       case ScoreBucketBlock.SelfProbed => // cosine is symmetric: vectors need no swap
@@ -498,7 +494,7 @@ object Similarity {
     // so the threshold keeps all copies or none and the dedup exchange
     // carries only passing (aId, bId, cosine) rows, never embeddings
     def score(df: DataFrame): DataFrame = df
-      .withColumn("cosine", ndot(col("av"), col("bv")) / (col("an") * col("bn")))
+      .withColumn("cosine", dot(col("av"), col("bv")) / (col("an") * col("bn")))
       .filter(col("cosine") >= threshold)
       .select(col(aId), col(bId), emit(col("cosine")))
     // TIERS (round 21 scale guard, round 22 fusion; D4ScaleProbe and
@@ -575,7 +571,6 @@ object Similarity {
             .groupBy(col("pos").as("tbl"), col("col").as("bucket"))
             .agg(sort_array(collect_list(col("bid"))).as("bids"))
           val probe = if (cross) Seq(col("av"), col("an")) else Seq(col(aId).cast(LongType))
-          import org.apache.spark.sql.graft.ColumnOf
           val hits = ColumnOf(ScoreBucketBlock((probe :+ col("bids")).map(ColumnOf.expr),
             bc, threshold, mode))
           // ids were packed as BIGINT: cast back so the schema is the tier-1 one
@@ -778,7 +773,7 @@ object Similarity {
       else assignTopM(vs, cents, idCol, vecCol, m)
     val assigned = assigned0
       .select(col(idCol).as("id"), col(vecCol).as("v"),
-        nnorm(col(vecCol)).as("n"), col("centroid_id"))
+        l2Norm(col(vecCol)).as("n"), col("centroid_id"))
     val small = assigned.groupBy("centroid_id")
       .agg(count(lit(1)).as("sz")).filter(col("sz") <= maxClusterSize)
       .select("centroid_id")
@@ -807,7 +802,7 @@ object Similarity {
     // Single assignment has no duplicates (each doc in exactly 1
     // cluster) — no dedup aggregation at all.
     val scored = cands
-      .withColumn("cosine", ndot(col("av"), col("bv")) / (col("an") * col("bn")))
+      .withColumn("cosine", dot(col("av"), col("bv")) / (col("an") * col("bn")))
       .filter(col("cosine") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("cosine"), col("centroid_id"))
     val uniq = if (m == 1) scored
@@ -998,7 +993,7 @@ object Similarity {
     while (j < mEff) {
       acc = acc.crossJoin(broadcast(centroids))
         .filter(!array_contains(col("cids"), col("cid")))
-        .withColumn("d", -ncos(col(vecCol), col("centroid")))
+        .withColumn("d", -cosine(col(vecCol), col("centroid")))
         .groupBy(col(idCol))
         .agg(min_by(col("cid"), struct(col("d"), col("cid"))).as("cnext"),
           first(col(vecCol)).as(vecCol), first(col("cids")).as("cids"))
@@ -1026,7 +1021,7 @@ object Similarity {
       idCol: String, vecCol: String): DataFrame = {
     useNative(vectors)
     val withC = vectors.crossJoin(broadcast(centroids))
-      .withColumn("d", -ncos(col(vecCol), col("centroid")))
+      .withColumn("d", -cosine(col(vecCol), col("centroid")))
     val carried = vectors.columns.filter(_ != idCol).toSeq
     val aggs = min_by(col("cid"), struct(col("d"), col("cid"))).as("centroid_id") +:
       carried.map(c => first(col(c)).as(c))
@@ -1191,7 +1186,7 @@ object Similarity {
         if (m == 1) assignTo(cleanCorpus, cents, idCol, vecCol)
         else assignTopM(cleanCorpus, cents, idCol, vecCol, m)
       val stored = assigned
-        .select(col(idCol), col(vecCol), nnorm(col(vecCol)).as("norm"), col("centroid_id"))
+        .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("norm"), col("centroid_id"))
       // metadata columns ride IN the index (one build-time join), so
       // filtered search ([[ivfTopKIndexed]] corpusFilter) can push its
       // predicate into the partitioned corpus scan at probe time
@@ -1228,7 +1223,7 @@ object Similarity {
     if (graft.util.MetaFiles.readLong(spark, marker).nonEmpty) return
     requireIndexFormat(spark, dir, "appendToIvfIndex")
     val cents = spark.read.parquet(s"$dir/centroids")
-    // fail fast on a dimension mismatch with the index (ncos over unequal
+    // fail fast on a dimension mismatch with the index (cosine over unequal
     // lengths zip-truncates — a silent recall collapse, not an error)
     val batchDim = batch.select(size(col(vecCol)).as("d")).filter(col("d") > 0)
       .limit(1).collect().headOption.map(_.getInt(0))
@@ -1253,7 +1248,7 @@ object Similarity {
     // batch schema must match the build corpus — parquet appends are
     // schema-positional); mergeSchema on read surfaces drift as nulls
     val stored = assigned
-      .select(col(idCol), col(vecCol), nnorm(col(vecCol)).as("norm"), col("centroid_id"))
+      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("norm"), col("centroid_id"))
     val metaCols = batch.columns.filterNot(c => c == idCol || c == vecCol)
     val withMeta =
       if (metaCols.isEmpty) stored
@@ -1318,7 +1313,7 @@ object Similarity {
       // predicate duplicates only a column ref (no codegen-size concern)
       .filter(col("cn") > lit(0d) && col("cn") < lit(Double.PositiveInfinity))
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), nnorm(col(vecCol)).as("qn"))
+      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
     val qprobe = probeCentroids(q, cents, nProbe)
       .select(col("query_id"), col("qv"), col("qn"), col("cid").as("centroid_id"))
     val cands = indexed.join(broadcast(qprobe), "centroid_id")
@@ -1340,7 +1335,7 @@ object Similarity {
     val softBuilt = graft.util.MetaFiles.readLong(spark, s"$dir/_nassign").exists(_ > 1L)
     val streamed = graft.util.MetaFiles.readLong(spark, s"$dir/_streamed").nonEmpty
     val scoredAll = cands
-      .withColumn("cosine", ndot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
     val scored =
       if (streamed) scoredAll.groupBy(col("query_id"), col("neighbor_id"))
@@ -1393,9 +1388,9 @@ object Similarity {
       else assignTopM(searchCorpus, cents, idCol, vecCol, m)
     val assigned = assigned0
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("centroid_id"),
-        nnorm(col(vecCol)).as("cn"))
+        l2Norm(col(vecCol)).as("cn"))
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), nnorm(col(vecCol)).as("qn"))
+      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
     val qprobe = probeCentroids(q, cents, nProbe)
       .select(col("query_id"), col("qv"), col("qn"), col("cid").as("centroid_id"))
     val cands = qprobe.join(assigned, "centroid_id")
@@ -1410,7 +1405,7 @@ object Similarity {
     // its copies score bit-identically, so post-score dedup keeps the
     // same rows. Single assignment is duplicate-free by construction.
     val scored0 = cands
-      .withColumn("cosine", ndot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
     val scored = if (m == 1) scored0
       else scored0.dropDuplicates("query_id", "neighbor_id")
@@ -1434,7 +1429,7 @@ object Similarity {
     * ONE narrow per-row expression against the broadcast literal
     * planes — [[graft.functions.expressions.RandomProjection]], the
     * fused whole-matrix form: the vector column is decoded once per row
-    * and the dim guard runs once, where the previous ndot-per-plane
+    * and the dim guard runs once, where the previous dot-per-plane
     * composition re-expanded both per OUTPUT dimension and Catalyst's
     * alias substitution then re-duplicated the outDim-way tree into
     * every pushed predicate/derived norm (e15's flagged 10-task × 4.1 s
@@ -1537,15 +1532,15 @@ object Similarity {
     // exactly those (NaN norm orders above +Inf in Spark)
     val emb = corpus
       .filter(col(vecCol).isNotNull &&
-        nnorm(col(vecCol)) < lit(Double.PositiveInfinity))
+        l2Norm(col(vecCol)) < lit(Double.PositiveInfinity))
       .select(col(idCol).as("vec_id"), col(vecCol).cast("array<double>").as("v"))
     // TakeOrderedAndProject, not a global window: distributed top-k
     var cents = emb.orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
       .select(col("vec_id").as("cid"), col("v").as("c"))
     def assign(cs: DataFrame): DataFrame = {
-      val b = cs.withColumn("__cc", ndot(col("c"), col("c")))
+      val b = cs.withColumn("__cc", dot(col("c"), col("c")))
       emb.crossJoin(broadcast(b))
-        .withColumn("d", col("__cc") - lit(2.0) * ndot(col("v"), col("c")))
+        .withColumn("d", col("__cc") - lit(2.0) * dot(col("v"), col("c")))
         .groupBy(col("vec_id"))
         .agg(min_by(col("cid"), struct(col("d"), col("cid"))).as("cluster"))
     }
@@ -1598,9 +1593,9 @@ object Similarity {
     * ([[bruteForceTopK]]'s per-side-norm idiom) — each pair costs ONE
     * subDim-width dot instead of three. */
   private def pqAssign(sub: DataFrame, books: DataFrame): DataFrame = {
-    val b = books.withColumn("__cc", ndot(col("centroid"), col("centroid")))
+    val b = books.withColumn("__cc", dot(col("centroid"), col("centroid")))
     sub.join(broadcast(b), "sub")
-      .withColumn("d", col("__cc") - lit(2.0) * ndot(col("sv"), col("centroid")))
+      .withColumn("d", col("__cc") - lit(2.0) * dot(col("sv"), col("centroid")))
       .groupBy(col("id"), col("sub"))
       .agg(min_by(col("code"), struct(col("d"), col("code"))).as("code"),
         first(col("sv")).as("sv"))
@@ -1656,7 +1651,7 @@ object Similarity {
     * between tiers. */
   private def probeCentroids(q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
     val probes = q.crossJoin(broadcast(cents))
-      .withColumn("d", -ncos(col("qv"), col("centroid")))
+      .withColumn("d", -cosine(col("qv"), col("centroid")))
     val pw = Window.partitionBy(col("query_id")).orderBy(col("d"), col("cid"))
     probes.withColumn("rk", row_number().over(pw)).filter(col("rk") <= nProbe)
   }
@@ -1709,9 +1704,9 @@ object Similarity {
   private def rerankExact(shortlist: DataFrame, queries: DataFrame,
       corpus: DataFrame, k: Int, idCol: String, vecCol: String): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      nnorm(col(vecCol)).as("cn"))
+      l2Norm(col(vecCol)).as("cn"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      nnorm(col(vecCol)).as("qn"))
+      l2Norm(col(vecCol)).as("qn"))
     // the corpus side STREAMS against the broadcast shortlist and the
     // exact re-rank dots compute downstream of that scan — whose
     // parallelism is the corpus' file-split count (e15's residual
@@ -1730,14 +1725,14 @@ object Similarity {
     // exactly what silently un-widened e15 in round 18 (the reverted
     // static broadcast gate). The bounded waste case — one exchange of a
     // relation the byte ceiling already caps — beats a guard that can
-    // quietly serialize the n² scan; the partial-agg ndots MUST run
+    // quietly serialize the n² scan; the partial-agg dots MUST run
     // above an exchange, because map-side they run at file-split width.
     val scored = widened(c)
       .join(broadcast(shortlist.select(col("query_id"), col("neighbor_id"))),
         "neighbor_id")
       .join(q, "query_id")
       .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(ndot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
+      .agg(max(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
@@ -1753,7 +1748,7 @@ object Similarity {
     subVectors(queries, idCol, vecCol, nSub, subDim)
       .join(broadcast(books), "sub")
       .select(col("id").as("query_id"), col("sub"), col("code"),
-        ndot(col("sv"), col("centroid")).as("part"))
+        dot(col("sv"), col("centroid")).as("part"))
 
   /** Product-quantization codebooks (Jégou et al., TPAMI 2011): split the
     * vector into `nSub` contiguous subspaces and k-means each
@@ -1798,7 +1793,7 @@ object Similarity {
     // on an all-duplicate corpus would empty the train set entirely.
     // A NULL vector makes the norm NULL → predicate NULL → dropped.
     val corpus = corpus0.filter(
-      nnorm(col(vecCol)) < lit(Double.PositiveInfinity))
+      l2Norm(col(vecCol)) < lit(Double.PositiveInfinity))
     val dim = corpus.select(size(col(vecCol)).as("d")).filter(col("d") > 0)
       .limit(1).collect().headOption.map(_.getInt(0))
       .getOrElse(throw new IllegalArgumentException("pqCodebooks: no non-empty vectors"))
@@ -1861,7 +1856,7 @@ object Similarity {
     // min_by an arbitrary garbage code into the caller's index; zero
     // vectors encode fine (legitimate L2 points)
     encodeAgainst(corpus.filter(
-        nnorm(col(vecCol)) < lit(Double.PositiveInfinity)),
+        l2Norm(col(vecCol)) < lit(Double.PositiveInfinity)),
       books, nSub, subDim, idCol, vecCol)
   }
 
@@ -1917,10 +1912,10 @@ object Similarity {
     val (centsL, startsL) = booksFlatLits(books, nSub)
     val codes = widened(cleanCorpus).select(col(idCol).as("id"),
       call_function("graft_pq_encode", col(vecCol), centsL, startsL).as("cidx"),
-      nnorm(col(vecCol)).as("cn"))
+      l2Norm(col(vecCol)).as("cn"))
     val qf = cleanQueries.select(col(idCol).as("query_id"),
       call_function("graft_pq_lut", col(vecCol), centsL, startsL).as("lut"),
-      nnorm(col(vecCol)).as("qn"))
+      l2Norm(col(vecCol)).as("qn"))
     val scored = codes.crossJoin(broadcast(qf))
       .filter(col("query_id") =!= col("id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
@@ -2025,11 +2020,11 @@ object Similarity {
     // element raises CAST_OVERFLOW inside model.codes, a zero norm 0/0s
     // in the cosine
     val c = usable(corpus, vecCol).select(col(idCol).as("neighbor_id"),
-      model.codes(col(vecCol)).as("codes"), nnorm(col(vecCol)).as("cn"))
+      model.codes(col(vecCol)).as("codes"), l2Norm(col(vecCol)).as("cn"))
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
       model.scaledQuery(col(vecCol)).as("sq"),
       model.base(col(vecCol)).as("base"),
-      nnorm(col(vecCol)).as("qn"))
+      l2Norm(col(vecCol)).as("qn"))
     // codes/scaled-query arrays projected away before the rank window
     // (the d9/d4 restructure): scoring is map-side on the codegen'd
     // broadcast-join scan; the window exchange moves only
@@ -2073,11 +2068,11 @@ object Similarity {
       if (m == 1) assignTo(cleanCorpus, cents, idCol, vecCol)
       else assignTopM(cleanCorpus, cents, idCol, vecCol, m)
     val coded = assigned0.select(col(idCol).as("neighbor_id"), col("centroid_id"),
-      model.codes(col(vecCol)).as("codes"), nnorm(col(vecCol)).as("cn"))
+      model.codes(col(vecCol)).as("codes"), l2Norm(col(vecCol)).as("cn"))
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       model.scaledQuery(col(vecCol)).as("sq"),
       model.base(col(vecCol)).as("base"),
-      nnorm(col(vecCol)).as("qn"))
+      l2Norm(col(vecCol)).as("qn"))
     val qprobe = probeCentroids(q, cents, nProbe)
       .select(col("query_id"), col("sq"), col("base"), col("qn"),
         col("cid").as("centroid_id"))
@@ -2147,9 +2142,9 @@ object Similarity {
     val cleanQueries = usable(queries, vecCol)
     val cleanCorpus = usable(corpus, vecCol)
     val q = cleanQueries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      nnorm(col(vecCol)).as("qn"))
+      l2Norm(col(vecCol)).as("qn"))
     val probeRows = probeCentroids(q, cents, nProbe)
-    val norms = cleanCorpus.select(col(idCol).as("id"), nnorm(col(vecCol)).as("cn"))
+    val norms = cleanCorpus.select(col(idCol).as("id"), l2Norm(col(vecCol)).as("cn"))
     val scored0 =
       if (!residual) {
         // FUSED ADC over the probed partitions (round 19 — the pqTopK
@@ -2162,7 +2157,7 @@ object Similarity {
         val (centsL, startsL) = booksFlatLits(books, nSub)
         val codes = widened(cleanCorpus).select(col(idCol).as("id"),
             call_function("graft_pq_encode", col(vecCol), centsL, startsL).as("cidx"),
-            nnorm(col(vecCol)).as("cn"))
+            l2Norm(col(vecCol)).as("cn"))
           .join(coarseAssigned(cleanCorpus, cents, m, idCol, vecCol), "id")
         val qprobe = probeRows.select(col("query_id"), col("cid").as("centroid_id"))
         val qlut = cleanQueries.select(col(idCol).as("query_id"),
@@ -2208,7 +2203,7 @@ object Similarity {
             col("sub"), col("code"))
           .join(norms.withColumnRenamed("id", "nid"), "nid")
         val qprobe = probeRows.select(col("query_id"),
-          col("cid").as("centroid_id"), ndot(col("qv"), col("centroid")).as("base"))
+          col("cid").as("centroid_id"), dot(col("qv"), col("centroid")).as("base"))
         val lut = adcLut(cleanQueries, books, nSub, subDim, idCol, vecCol)
         widened(codes).join(broadcast(qprobe), "centroid_id")
           .join(broadcast(lut), Seq("query_id", "sub", "code"))
@@ -2242,7 +2237,7 @@ object Similarity {
       nSub: Int, subDim: Int, idCol: String, vecCol: String,
       normName: String): DataFrame =
     encodeAgainst(corpus, books, nSub, subDim, idCol, vecCol)
-      .join(corpus.select(col(idCol).as("id"), nnorm(col(vecCol)).as(normName)), "id")
+      .join(corpus.select(col(idCol).as("id"), l2Norm(col(vecCol)).as(normName)), "id")
       .join(assigned, "id") // ×nAssign copies of each code row, one per home centroid
 
   /** The (id, centroid_id) coarse assignment shared by the IVF-PQ coded
@@ -2348,7 +2343,7 @@ object Similarity {
     // dirty queries match nothing (the [[usableVec]] contract)
     val cleanQueries = usable(queries, vecCol)
     val q = cleanQueries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      nnorm(col(vecCol)).as("qn"))
+      l2Norm(col(vecCol)).as("qn"))
     val qprobe = probeCentroids(q, cents, nProbe)
       .select(col("query_id"), col("cid").as("centroid_id"))
     val lut = adcLut(cleanQueries, books, nSub, subDim, idCol, vecCol)

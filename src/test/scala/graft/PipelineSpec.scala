@@ -984,6 +984,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(math.abs(spark.sql("SELECT graft_dot(a, b) FROM dot_t").head().getDouble(0) - 32.0) < 1e-9)
   }
 
+  test("Similarity.dot/l2Norm/cosine follow graft_dot's rule: null elements read 0, common prefix") {
+    // no session registration needed: the public forms build the kernel
+    // expression directly, so they agree with graft_dot on dirty input
+    val df = Seq(
+      (Seq(Some(1.0), None, Some(2.0)), Seq(1.0, 1.0, 1.0)),
+      (Seq(Some(1.0), Some(2.0)), Seq(1.0, 1.0, 1.0))).toDF("a", "b")
+    val r = df.select(Similarity.dot(col("a"), col("b")), Similarity.l2Norm(col("a")),
+      Similarity.cosine(col("a"), col("b"))).collect()
+    assert(r.map(_.getDouble(0)).toSeq === Seq(3.0, 3.0))
+    assert(r.map(_.getDouble(1)).toSeq === Seq(math.sqrt(5.0), math.sqrt(5.0)))
+    assert(r.map(_.getDouble(2)).toSeq === Seq.fill(2)(3.0 / (math.sqrt(5.0) * math.sqrt(3.0))))
+    graft.functions.expressions.GraftFunctions.init(spark)
+    val native = df.select(call_function("graft_dot", col("a"), col("b"))).collect().map(_.getDouble(0))
+    assert(native.toSeq === Seq(3.0, 3.0))
+  }
+
   test("ivfTopK: high recall vs brute force when probing most partitions") {
     val brute = Similarity.bruteForceTopK(clustered, clustered, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -372,6 +372,82 @@ class PropertySpec extends AnyFunSuite {
     assert(plain.size === 1002) // 500×2 hot-key combos + 2×1 for key 1
   }
 
+  test("personalizedPageRank, hits and labelPropagation ≡ plain-Scala references at 1 and 7 edge partitions") {
+    // Results must not change with the partition count (ROADMAP aim 3).
+    // Each graph gets a forced self-loop and parallel edge, isolated
+    // explicit nodes (15-19 never appear in genEdgeList), and PPR also
+    // runs from a seed with no out-edges. LPA labels are integers, so
+    // they are compared exactly; PPR and HITS sums may reduce in another
+    // order, so within 1e-12 relative.
+    import graft.analytics.GraphAnalytics
+    import graft.model.NodeRow
+    val gen = for {
+      edges <- genEdgeList
+      lone <- Gen.listOf(Gen.choose(15, 19))
+      seed <- Gen.choose(0L, 19L)
+      iters <- Gen.choose(1, 4)
+    } yield (edges, lone.distinct, seed, iters)
+    def close(a: Double, b: Double): Boolean =
+      math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+    def closeAll(a: Map[Long, Seq[Double]], b: Map[Long, Seq[Double]]): Boolean =
+      a.keySet == b.keySet && a.forall { case (v, xs) => xs.zip(b(v)).forall { case (x, y) => close(x, y) } }
+    check("fixpoint", Prop.forAllNoShrink(gen) { case (raw, lone, seed, iters) =>
+      val (s0, d0, l0) = raw.head
+      val edges = raw ++ List((s0, s0, l0), (s0, d0, l0 % 3 + 1))
+      val fwd = edges.map { case (s, d, _) => (s.toLong, d.toLong) }
+      val verts = (fwd.flatMap { case (s, d) => Seq(s, d) } ++ lone.map(_.toLong)).distinct
+      val out = fwd.groupBy(_._1).view.mapValues(_.map(_._2)).toMap.withDefaultValue(Nil)
+      val in = fwd.groupBy(_._2).view.mapValues(_.map(_._1)).toMap.withDefaultValue(Nil)
+      val sink = (0L to 19L).find(v => out(v).isEmpty).get
+      def ppr(src: Long): Map[Long, Seq[Double]] = {
+        var pr = Map(src -> 1.0)
+        for (_ <- 1 to iters) {
+          val sums = scala.collection.mutable.Map[Long, Double]().withDefaultValue(0.0)
+          for ((u, r) <- pr; v <- out(u)) sums(v) += r / out(u).size
+          pr = (sums.keySet.toSet + src).map(v =>
+            v -> (0.85 * sums(v) + (if (v == src) 0.15 else 0.0))).toMap
+        }
+        (verts :+ src).distinct.map(v => v -> Seq(pr.getOrElse(v, 0.0))).toMap
+      }
+      val hits: Map[Long, Seq[Double]] = {
+        def l1(m: Map[Long, Double]) = { val t = m.values.sum; m.map { case (v, x) => v -> (if (t > 0) x / t else 0.0) } }
+        var hub = verts.map(_ -> 1.0).toMap
+        var auth = hub
+        for (_ <- 1 to iters) {
+          val authRaw = verts.map(v => v -> in(v).map(hub).sum).toMap
+          hub = l1(verts.map(u => u -> out(u).map(authRaw).sum).toMap)
+          auth = l1(authRaw)
+        }
+        verts.map(v => v -> Seq(auth(v), hub(v))).toMap
+      }
+      val lpa: Map[Long, Long] = {
+        val nbrs = (fwd ++ fwd.map(_.swap)).filter { case (a, b) => a != b }.distinct
+          .groupBy(_._1).view.mapValues(_.map(_._2)).toMap.withDefaultValue(Nil)
+        var l = verts.map(v => v -> v).toMap
+        for (_ <- 1 to iters) l = l.map { case (v, cur) =>
+          val votes = nbrs(v).groupBy(l).view.mapValues(_.size).toSeq
+          v -> (if (votes.isEmpty) cur else votes.minBy { case (lb, c) => (-c, lb) }._1)
+        }
+        l
+      }
+      val g0 = Loaders.fromList(spark,
+        edges.map { case (s, d, l) => InputEdge(s, d, Seq(l), addReverse = false) }, ranges,
+        nodes = lone.map(i => NodeRow(i.toLong, 0)))
+      val runs = Seq(1, 7).map { k =>
+        val g = g0.copy(edges = g0.edges.repartition(k))
+        def doubles(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => r.getLong(0) -> (1 until r.length).map(r.getDouble)).toMap
+        (Seq(seed, sink).map(src => doubles(GraphAnalytics.personalizedPageRank(g, src, iters))),
+          doubles(GraphAnalytics.hits(g, iters)),
+          GraphAnalytics.labelPropagation(g, iters).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      }
+      runs.forall { case (pprs, h, l) =>
+        pprs.zip(Seq(seed, sink)).forall { case (got, src) => closeAll(got, ppr(src)) } &&
+          closeAll(h, hits) && l == lpa
+      } && runs(0)._3 == runs(1)._3
+    })
+  }
+
   test("triangleCounts ≡ brute-force 3-way enumeration on random graphs") {
     import spark.implicits._
     val genEdges: Gen[List[(Long, Long)]] =

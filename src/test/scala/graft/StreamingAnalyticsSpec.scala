@@ -2325,12 +2325,49 @@ class StreamingAnalyticsSpec extends AnyFunSuite {
         Seq(InputEdge(0, 1 + shift, Seq(1), addReverse = false),
           InputEdge(0, 2, Seq(1), addReverse = false),
           InputEdge(2, 3, Seq(1), addReverse = false)), ranges)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       GraphAnalytics.personalizedPageRank(g, source = 0L, numIter = 2).collect()
       GraphAnalytics.hits(g, numIter = 2).collect()
       GraphAnalytics.labelPropagation(g, numIter = 2).collect()
       assert(cacheEntryCount() === base,
         s"graph $shift left persisted layouts registered in the cache manager")
+      // the CacheManager cannot see an RDD-level persist(): every RDD a
+      // call leaves persisted must be a materialized cut its result reads
+      // (a local checkpoint), never a leftover adjacency index
+      val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(left.values.forall(_.isCheckpointed),
+        s"graph $shift left persisted RDDs that are not checkpoints: " +
+          left.values.filterNot(_.isCheckpointed).mkString(", "))
     }
+  }
+
+  test("personalizedPageRank, labelPropagation and hits: one job for all rounds, nothing compiled for a new seed") {
+    // The Fixpoint runtime runs every round lazily inside the result's one
+    // eager cut, so after a warm-up on the same cached graph (which also
+    // memoizes the edge count that sizes the partitions) a call costs that
+    // cut plus the caller's collect. The seed rides as data, not as a
+    // literal in generated code, so a new seed compiles nothing. hits may
+    // add one job per round for its L1 total. The profile is read after a
+    // listener-bus drain, so a launched job counts.
+    val ranges = Seq(RangeDef(0, 1000, 0, Seq(1)))
+    val g = Loaders.fromList(spark, (0 until 600).map(i =>
+      InputEdge(i % 97, (i * 7 + 3) % 211, Seq(1), addReverse = false)), ranges).cached()
+    val prof = graft.obs.GateProfiler.of(spark)
+    GraphAnalytics.personalizedPageRank(g, source = 1L, numIter = 4).collect()
+    GraphAnalytics.labelPropagation(g, numIter = 4).collect()
+    GraphAnalytics.hits(g, numIter = 4).collect()
+    val (ranks, ppr) = prof.profile("ppr") {
+      GraphAnalytics.personalizedPageRank(g, source = 5L, numIter = 4).collect()
+    }
+    assert(ranks.exists(r => r.getLong(0) == 5L && r.getDouble(1) >= 0.15))
+    assert(ppr.jobs <= 2, s"personalizedPageRank ran ${ppr.jobs} Spark jobs")
+    assert(ppr.codegenCompiles === 0L,
+      s"personalizedPageRank from a new seed compiled ${ppr.codegenCompiles} classes")
+    val (_, lpa) = prof.profile("lpa") { GraphAnalytics.labelPropagation(g, numIter = 4).collect() }
+    assert(lpa.jobs <= 2, s"labelPropagation ran ${lpa.jobs} Spark jobs")
+    val (_, hits) = prof.profile("hits") { GraphAnalytics.hits(g, numIter = 4).collect() }
+    assert(hits.jobs <= 4 + 2, s"hits ran ${hits.jobs} Spark jobs")
+    g.edges.unpersist(blocking = true)
   }
 
   test("hits matches a hand-rolled L1-normalized mutual recursion") {
