@@ -306,9 +306,12 @@ object Exec {
     * reshape or refill its layer, so a pattern with one takes the full
     * evaluation. */
   private[cypher] def pathsLtoR(g: PropertyGraph, pat: Pat): DataFrame = {
-    val hooked = pat.comps.exists { case CompN(n) => n.applFn.isDefined; case _ => false }
-    if (hooked) evalLtoR(g, pat).paths else walkLtoR(g, pat).paths
+    if (hooked(pat)) evalLtoR(g, pat).paths else walkLtoR(g, pat).paths
   }
+
+  /** Whether a node spec of `pat` carries an appl hook. */
+  private[cypher] def hooked(pat: Pat): Boolean =
+    pat.comps.exists { case CompN(n) => n.applFn.isDefined; case _ => false }
 
   /** The left-to-right walk, lazy unless a repetition step must probe its
     * frontier; `failed` only when such a probe found the walk dry. */

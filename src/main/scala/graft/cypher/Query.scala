@@ -1,8 +1,10 @@
 package graft.cypher
 
 import graft.model._
-import org.apache.spark.sql.DataFrame
+import graft.operators.GraphOps
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.UnionOf
 
 /** The four result modes of the reference's `GraphCreateReadUpdate` class
   * (Cypher.hs:423-520): table / temp / createMem / graphQuery, plus the
@@ -96,15 +98,19 @@ object Query {
     * (src,label,dir) slot, different target — the reference's
     * insertNodeEdgeAttr overwrite=True, Cypher.hs:866-889).
     *
-    * Both sides are cut from their lineage (`localCheckpoint`): a diff is
-    * small next to the graph, while as plans they hold `g.edges` twice and
-    * three times, so every version written through `applyDiff` would
-    * multiply the lineage of the one before. Spark re-plans a cached
-    * version from that lineage when its predecessor is unpersisted, and two
-    * chained writes without the cut planned for minutes (SCALING.md
-    * "Anchored reads in two jobs"). A diff, and every version built from
-    * it, therefore depends on blocks held by the executors, which cannot be
-    * recomputed if an executor is lost.
+    * A quick walk with no appl hook traverses stored rows only, so every
+    * triple it finds is already present: its diff is empty, and no job
+    * runs (repetition probes aside). Otherwise both sides are cut from
+    * their lineage, as plans they hold `g.edges` twice and three times, and
+    * a version written through `applyDiff` would multiply the lineage of
+    * the one before (SCALING.md "Anchored reads in two jobs"):
+    *  - when `g.edges` fits the optimizer's broadcast rule, each side is
+    *    collected into a local relation (a side holds at most a few rows per
+    *    edge of `g`), so the diff, and every version `applyDiff` builds from
+    *    it, is driver data that no lost executor can take away;
+    *  - a larger graph's diff keeps the eager `localCheckpoint`, which
+    *    depends on blocks held by the executors: they cannot be recomputed
+    *    if an executor is lost (ROADMAP item 12).
     *
     * The quick strategy walks without `run`'s whole-result emptiness
     * action: a walk that adds no edge is the empty diff whether or not it
@@ -118,24 +124,43 @@ object Query {
       return GraphDiff(e, e)
     }
     val trav = res.traversed.select(cols.map(col): _*).distinct()
-    val newEdges = trav.join(g.edges.select("src", "dst", "label"), Seq("src", "dst", "label"), "left_anti")
-      .localCheckpoint()
+    if (quick && !Exec.hooked(pat)) {
+      val e = g.spark.createDataFrame(java.util.List.of[Row](), trav.schema)
+      return GraphDiff(e, e)
+    }
+    val small = GraphOps.fits(g.edges)
+    def cut(df: DataFrame) =
+      if (small) g.spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      else df.localCheckpoint()
+    val key = Seq("src", "dst", "label")
+    val slot = Seq("src", "label", "dir")
+    val newEdges = cut(trav.join(g.edges.select(key.map(col): _*), key, "left_anti"))
     if (newEdges.isEmpty) return GraphDiff(newEdges, newEdges)
     if (res.paths.isEmpty) { // the walk collapsed
       val e = newEdges.limit(0)
       return GraphDiff(e, e)
     }
-    val deleted = g.edges.join(newEdges.select(col("src"), col("label"), col("dir")), Seq("src", "label", "dir"), "left_semi")
-      .localCheckpoint()
-    GraphDiff(newEdges, deleted)
+    GraphDiff(newEdges, cut(g.edges.join(newEdges.select(slot.map(col): _*), slot, "left_semi")))
   }
 
-  /** Apply a diff (the reference applies it to the LMDB copy offline). */
+  /** Apply a diff (the reference applies it to the LMDB copy offline). The
+    * new version is `g.edges` minus the deleted keys plus the new rows,
+    * unioned as whole subtrees, so a cached `g` is read from its cache. A
+    * side that is a small local relation, as `createMem` returns for a
+    * small graph ([[GraphOps.localRows]]), is applied as data: the deleted
+    * keys as a predicate, the new rows as a local relation, and an empty
+    * side adds nothing to the plan. A checkpointed side keeps the anti-join
+    * or union. */
   def applyDiff(g: PropertyGraph, diff: GraphDiff): PropertyGraph = {
     val cols = Seq("src", "dst", "label", "attrMask", "dir")
-    g.copy(edges = g.edges
-      .join(diff.deletedEdges.select("src", "dst", "label"), Seq("src", "dst", "label"), "left_anti")
-      .unionByName(diff.newEdges.select(cols.map(col): _*)))
+    val key = Seq("src", "dst", "label")
+    val del = diff.deletedEdges.select(key.map(col): _*)
+    val kept = GraphOps.localRows(del) match {
+      case Some(rs) => GraphOps.minus(g.edges, key, rs.map(GraphOps.keyOf(_, key)))
+      case None => g.edges.join(del, key, "left_anti")
+    }
+    val add = diff.newEdges.select(cols.map(col): _*)
+    g.copy(edges = if (GraphOps.localRows(add).exists(_.isEmpty)) kept else UnionOf.byName(kept, add))
   }
 
   /** Subgraph of all edges traversed by the pattern (reference `graphQuery`

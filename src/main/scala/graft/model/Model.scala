@@ -90,7 +90,13 @@ final case class PropertyGraph(
   def partitionBySrc(n: Int): PropertyGraph =
     copy(edges = edges.repartition(n, col("src")).sortWithinPartitions("src", "label"))
 
-  /** Cache the edge relation for iterative traversal. */
+  /** Cache the edge relation for iterative traversal. The caller owns the
+    * cache: the first action materializes the whole relation, and
+    * `edges.unpersist` releases it. A version written on a cached graph
+    * (GraphOps' writes, `Query.applyDiff`) keeps it as a subtree, so
+    * caching that version reads the predecessor from its cache: its plan is
+    * the cached scan, a filter and a local union. Unpersisting the
+    * predecessor after the new version is materialized keeps the new one. */
   def cached(): PropertyGraph = copy(edges = edges.cache())
 
   /** Real per-label node counts (one aggregation over the node set,

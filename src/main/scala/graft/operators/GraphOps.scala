@@ -1,18 +1,89 @@
 package graft.operators
 
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, GetMapValue, InSet, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnOf, UnionOf}
+import org.apache.spark.sql.types._
 
 /** The reference's point-read / point-mutation surface (SURVEY §2.2-2.4) as
   * relational transforms. Reads are filters/joins the optimizer can push
   * into the parquet scan; "mutations" return a new PropertyGraph (immutable
   * lineage) — the reference itself treats post-load mutation as second-class
   * ("Deletion not tested and slows down the queries", README.md:17).
+  *
+  * A chained write builds on its cached predecessor at constant cost:
+  *  - a new version unions through [[UnionOf.byName]], so the cached
+  *    predecessor stays a subtree the cache lookup finds, instead of
+  *    being re-derived from the base;
+  *  - a transaction input that is a small local relation ([[localRows]])
+  *    becomes a predicate or projection over the predecessor, with its
+  *    keys bound as a reference object of the generated code ([[keyIn]]),
+  *    so a write runs no broadcast job and compiles no new classes for new
+  *    ids. Any other input keeps its join.
   */
 object GraphOps {
 
   private val edgeCols = Seq("src", "dst", "label", "attrMask", "dir")
+  private val edgeTypes: Map[String, DataType] =
+    PropertyGraph.edgeSchema.fields.map(f => f.name -> f.dataType).toMap
+
+  // ---- transaction inputs as data ------------------------------------------
+
+  /** The rows of a transaction input that already is driver data: a local
+    * relation that fits the optimizer's broadcast rule, read without a
+    * job. None keeps the join: a file-backed input would cost a collect on
+    * top of its scan, and at sf0.1 g8 measured slower that way (SCALING.md
+    * "Chained writes at constant cost"). */
+  private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case _: LocalRelation if fits(df) => Some(df.collect())
+      case _ => None
+    }
+
+  /** The optimizer's broadcast rule (`canBroadcastBySize`) applied to `df`. */
+  private[graft] def fits(df: DataFrame): Boolean = {
+    val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    size >= 0 && size <= df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+  }
+
+  /** The values of `r`'s columns `cols` as the edge columns' types, so keys
+    * from differently typed inputs compare equal on the driver and in
+    * [[keyIn]]'s set. */
+  private[graft] def keyOf(r: Row, cols: Seq[String]): Row = Row.fromSeq(cols.map { c =>
+    (r.getAs[Any](c), edgeTypes(c)) match {
+      case (n: Number, LongType) => n.longValue
+      case (n: Number, IntegerType) => n.intValue
+      case (v, _) => v
+    }
+  })
+
+  /** `struct(cols) IN keys` over edge columns whose first is `src`, for
+    * keys built by [[keyOf]]. Like `Exec.idIn` it is made of Catalyst
+    * `InSet`s, whose generated code holds each set as a reference object,
+    * so new keys compile no new classes. A struct set is a tree searched
+    * with interpreted comparisons, so a hashed `src IN {…}` test goes
+    * first and only rows that pass it search the tree. Keys with a null
+    * field are left out: a join never matches them. */
+  private def keyIn(cols: Seq[String], keys: Iterable[Row]): Column = {
+    require(cols.head == "src", s"key columns must start with src: $cols")
+    val ks = keys.filterNot(_.anyNull)
+    val srcs = ks.iterator.map(_.get(0)).toSet
+    val set = ks.iterator.map(k => InternalRow.fromSeq(k.toSeq): Any).toSet
+    ColumnOf(And(InSet(ColumnOf.expr(col("src").cast(LongType)), srcs), InSet(ColumnOf.expr(keyStruct(cols)), set)))
+  }
+
+  private def keyStruct(cols: Seq[String]): Column =
+    struct(cols.map(c => col(c).cast(edgeTypes(c)).as(c)): _*)
+
+  /** Edges minus the rows whose `cols` match one of `keys` ([[keyOf]]
+    * rows): the predicate form of a left anti-join with a small input. */
+  private[graft] def minus(edges: DataFrame, cols: Seq[String], keys: Iterable[Row]): DataFrame =
+    if (keys.isEmpty) edges else edges.filter(!keyIn(cols, keys))
 
   /** All (edge,target) pairs for node+label+dir — the reference's flagship
     * `adjacentNodesByAttr` ("the function that is the purpose of the whole
@@ -74,14 +145,22 @@ object GraphOps {
     * the new row (reference insertNodeEdge's overwrite flag,
     * FastAccess.hs:283-290); otherwise appends (multi-edges allowed, like
     * the reference's counter-bumped extra slots).
+    *
+    * The new version is the old one's edges plus the new rows, unioned as
+    * whole subtrees, so a cached `g` is read from its cache. An upsert
+    * whose input is a small local relation ([[localRows]]) turns its keys
+    * into a predicate on the old edges, with no job; any other input keeps
+    * the anti-join.
     */
   def insertEdges(g: PropertyGraph, newEdges: DataFrame, overwrite: Boolean = false): PropertyGraph = {
+    val rows = newEdges.select(edgeCols.map(col): _*)
     val key = Seq("src", "dst", "label", "dir")
-    val merged =
-      if (overwrite) g.edges.join(newEdges.select(edgeCols.map(col): _*), key, "left_anti")
-        .unionByName(newEdges.select(edgeCols.map(col): _*))
-      else g.edges.unionByName(newEdges.select(edgeCols.map(col): _*))
-    g.copy(edges = merged)
+    g.copy(edges =
+      if (!overwrite) UnionOf.byName(g.edges, rows)
+      else localRows(rows) match {
+        case Some(rs) => UnionOf.byName(minus(g.edges, key, rs.map(keyOf(_, key))), rows)
+        case None => UnionOf.byName(g.edges.join(rows, key, "left_anti"), rows)
+      })
   }
 
   /** Overlay additional labels onto existing edges — the reference sums
@@ -108,19 +187,36 @@ object GraphOps {
       explicitNodes = g.explicitNodes.map(_.filter(!col("id").isin(nodes: _*))))
 
   /** Delete specific (src,dst) edges in both directions (reference
-    * deleteEdge(s), FastAccess.hs:364-376). */
+    * deleteEdge(s), FastAccess.hs:364-376). `pairs` that are a small local
+    * relation ([[localRows]]) become one predicate over both orientations,
+    * with no job; other pairs keep the two anti-joins. */
   def deleteEdges(g: PropertyGraph, pairs: DataFrame): PropertyGraph = {
-    val back = pairs.select(col("dst").as("src"), col("src").as("dst"))
-    g.copy(edges = g.edges
-      .join(pairs.select("src", "dst"), Seq("src", "dst"), "left_anti")
-      .join(back, Seq("src", "dst"), "left_anti"))
+    val both = Seq("src", "dst")
+    localRows(pairs.select(both.map(col): _*)) match {
+      case Some(rows) =>
+        val keys = rows.map(keyOf(_, both))
+        g.copy(edges = minus(g.edges, both, keys ++ keys.map(k => Row(k(1), k(0)))))
+      case None =>
+        val back = pairs.select(col("dst").as("src"), col("src").as("dst"))
+        g.copy(edges = g.edges
+          .join(pairs.select("src", "dst"), both, "left_anti")
+          .join(back, both, "left_anti"))
+    }
   }
 
   /** Rewrite the target of one (node,label) slot (reference updateNodeEdges,
-    * FastAccess.hs:442-449). */
-  def updateEdgeTarget(g: PropertyGraph, src: Long, label: Int, newDst: Long): PropertyGraph =
-    g.copy(edges = g.edges.withColumn("dst",
-      when(col("src") === src && col("label") === label, lit(newDst)).otherwise(col("dst"))))
+    * FastAccess.hs:442-449). The slot and its new target are data: a
+    * one-entry map literal, held by the generated code as a reference
+    * object and looked up by `struct(src, label)`, so a write with new
+    * values compiles no new classes (literals in `when` would). */
+  def updateEdgeTarget(g: PropertyGraph, src: Long, label: Int, newDst: Long): PropertyGraph = {
+    val slot = Seq("src", "label")
+    val keyType = StructType(slot.map(c => StructField(c, edgeTypes(c), nullable = false)))
+    val target = Literal(ArrayBasedMapData(Array[Any](InternalRow(src, label)), Array[Any](newDst)),
+      MapType(keyType, LongType, valueContainsNull = false))
+    val moved = ColumnOf(GetMapValue(target, ColumnOf.expr(keyStruct(slot))))
+    g.copy(edges = g.edges.withColumn("dst", coalesce(moved, col("dst"))))
+  }
 
   /** Re-map node ids through a column function, preserving edges (reference
     * mapNodeJ re-maps node-attr bits of every key, FastAccess.hs:516-547).
@@ -171,7 +267,7 @@ object GraphOps {
   /** Upsert node property rows by id (reference insertNode(s), JudyGraph.hs:134-157). */
   def insertNodeProps(g: PropertyGraph, props: DataFrame): PropertyGraph = {
     val merged = g.nodeProps match {
-      case Some(old) => old.join(props.select("id"), Seq("id"), "left_anti").unionByName(props)
+      case Some(old) => UnionOf.byName(old.join(props.select("id"), Seq("id"), "left_anti"), props)
       case None => props
     }
     g.copy(nodeProps = Some(merged))
@@ -186,7 +282,7 @@ object GraphOps {
     */
   def insertEdgeProps(g: PropertyGraph, props: DataFrame): PropertyGraph = {
     val merged = g.edgeProps match {
-      case Some(old) => old.unionByName(props, allowMissingColumns = true)
+      case Some(old) => UnionOf.byName(old, props, allowMissingColumns = true)
       case None => props
     }
     g.copy(edgeProps = Some(merged))

@@ -136,6 +136,102 @@ class GraphQuerySpec extends AnyFunSuite {
     assert(Query.applyDiff(g, diff).edges.count() === 1L)
   }
 
+  test("createMem: a small diff reads back after its checkpoint blocks are gone") {
+    // Dropping the blocks of the RDDs checkpointed during createMem stands
+    // in for a lost executor: a small diff is driver data, so the applied
+    // version must not depend on any of them.
+    import org.apache.spark.sql.functions.lit
+    val ranges = Seq(RangeDef(0, 100, 0, Seq(1)))
+    val g = Loaders.fromList(spark,
+      Seq(InputEdge(0, 1, Seq(1), addReverse = false), InputEdge(0, 2, Seq(1), addReverse = false),
+        InputEdge(3, 4, Seq(1), addReverse = false)), ranges)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val diff = Query.createMem(g, nodes32(0) --| edge(attr(1)) |--> anyNode.appl(_.withColumn("n1", lit(99L))))
+    val g2 = Query.applyDiff(g, diff)
+    sc.getPersistentRDDs.filter { case (id, rdd) => !before(id) && rdd.isCheckpointed }
+      .values.foreach(_.unpersist(blocking = true))
+    val got = g2.edges.select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === Set((0L, 99L), (3L, 4L)))
+  }
+
+  test("chained writes build on the cached predecessor: flat jobs, few compiles, no re-derivation") {
+    // Three transactions shaped like perfbench's write op, each re-cached,
+    // with the previous version unpersisted: the second and third cost no
+    // more jobs than the first, a transaction with new ids and values
+    // compiles almost nothing, and the second transaction's plan reads the
+    // first version from its cache instead of re-reading its file.
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val ranges = Seq(RangeDef(0, 500, 0, Seq(1, 2, 3)))
+    val base = PropertyGraph(spark.range(0, 6000, 1, 4).select(
+      (col("id") % 500).as("src"), (col("id") * 7919 % 500).as("dst"),
+      (col("id") % 3 + 1).cast("int").as("label"), (col("id") % 3 + 1).cast("long").as("attrMask"),
+      org.apache.spark.sql.functions.lit(true).as("dir")), ranges).cached()
+    base.edges.count()
+    val dir = java.nio.file.Files.createTempDirectory("graft-chain").toFile
+    val profiler = graft.obs.GateProfiler.of(spark)
+    def nodes(p: LogicalPlan): Seq[LogicalPlan] = p +: p.children.flatMap(nodes)
+    // one transaction on `g`: the new version, cached, the plan it was
+    // built from (cached data substituted) and the name of its bulk file
+    def tx(i: Int, g: PropertyGraph): (PropertyGraph, Seq[LogicalPlan], String) = {
+      val r = new scala.util.Random(i)
+      def id = r.nextInt(500).toLong
+      val a = id
+      val ins = Seq.fill(100)((if (r.nextBoolean()) a else id, id, 1 + r.nextInt(3), 2L, true))
+        .toDF("src", "dst", "label", "attrMask", "dir")
+      var v = GraphOps.insertEdges(g, ins)
+      v = GraphOps.deleteEdges(v, Seq.fill(5)((a, id)).toDF("src", "dst"))
+      v = GraphOps.updateEdgeTarget(v, a, 1 + r.nextInt(3), id)
+      v = Query.applyDiff(v, Query.createMem(v, nodes32(a) --| edge(attr(1)) |--> anyNode))
+      val f = new java.io.File(dir, s"bulk$i.txt")
+      val out = new java.io.PrintWriter(f)
+      try Seq.fill(200)(s"$id $id").foreach(out.println) finally out.close()
+      v = GraphOps.insertEdges(v, Loaders.fromEdgeTextFile(spark, f.getPath, 1, mirror = false, ranges).edges)
+      val plan = nodes(v.edges.select("*").queryExecution.withCachedData)
+      val c = v.cached()
+      c.edges.count()
+      (c, plan, f.getName)
+    }
+    var live = base
+    def step(i: Int): (graft.obs.Profile, Seq[LogicalPlan], String) = {
+      val old = live
+      val ((next, plan, file), p) = profiler.profile(s"tx$i")(tx(i, old))
+      if (old ne base) old.edges.unpersist(blocking = true)
+      live = next
+      (p, plan, file)
+    }
+    step(0) // warm-up: compiles the transaction's classes
+    live.edges.unpersist(blocking = true)
+    live = base
+    val (p1, _, file1) = step(1)
+    val v1 = live.edges.queryExecution.withCachedData
+    val (p2, plan2, _) = step(2)
+    val (p3, _, _) = step(3)
+    Seq(live, base).foreach(_.edges.unpersist(blocking = true))
+    dir.listFiles.foreach(_.delete())
+    dir.delete()
+    info(s"jobs ${Seq(p1, p2, p3).map(_.jobs)}, compiles ${Seq(p1, p2, p3).map(_.codegenCompiles)}")
+    assert(p2.jobs <= p1.jobs && p3.jobs <= p1.jobs,
+      s"jobs per chained transaction: ${p1.jobs}, ${p2.jobs}, ${p3.jobs}")
+    assert(Seq(p1, p2, p3).forall(_.codegenCompiles <= 4),
+      s"classes compiled per transaction: ${Seq(p1, p2, p3).map(_.codegenCompiles)}")
+    assert(plan2.exists {
+      case m: InMemoryRelation => m.cacheBuilder eq v1.asInstanceOf[InMemoryRelation].cacheBuilder
+      case _ => false
+    }, "the second transaction must read the first version from its cache")
+    assert(!plan2.exists {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.inputFiles.exists(_.endsWith(file1))
+        case _ => false
+      }
+      case _ => false
+    }, s"the second transaction's plan re-reads $file1")
+  }
+
   test("deep repetition: several(1,30) over a 30-deep chain stays bounded") {
     // 30 hop iterations × localCheckpoint each — pins that the loop's
     // lineage cuts keep per-hop plans constant-size (no analysis blowup)

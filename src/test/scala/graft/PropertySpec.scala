@@ -448,6 +448,111 @@ class PropertySpec extends AnyFunSuite {
     })
   }
 
+  test("write sequences ≡ a plain-Scala replay: data and join paths, 1 and 7 partitions") {
+    // Random mutation sequences against a replay on an edge list, as
+    // perfbench's RefEdges does. Multi-edges and dir = false mirror rows
+    // come from the generator; an update may rewrite a slot the insert
+    // right before it created. Inputs are local relations or parquet files,
+    // and the broadcast threshold is the default or -1, so small inputs run
+    // as data and as joins, and createMem runs each of its three ways.
+    import spark.implicits._
+    sealed trait Mut
+    final case class Ins(rows: List[(Long, Long, Int, Long, Boolean)], overwrite: Boolean) extends Mut
+    final case class Del(pairs: List[(Long, Long)]) extends Mut
+    final case class Upd(src: Long, label: Int, dst: Long) extends Mut
+    // shift None: a hook-free walk; Some(k): the target rewired to (n1 + k) % 15
+    final case class Mem(anchor: Long, label: Int, shift: Option[Long]) extends Mut
+    val node = Gen.choose(0L, 14L)
+    val lbl = Gen.choose(1, 3)
+    val genE: Gen[(Long, Long, Int, Long, Boolean)] = for { s <- node; d <- node; l <- lbl; m <- Gen.choose(0L, 15L); dir <- Gen.prob(0.8) } yield (s, d, l, m, dir)
+    val genIns = for { rows <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, genE)); o <- Gen.prob(0.5) } yield Ins(rows, o)
+    // deletes and walks mostly aim at stored edges, so they do remove and
+    // rewire rows; every sequence ends in such a delete and walk
+    def genMut(base: List[(Long, Long, Int, Long, Boolean)]): Gen[List[Mut]] = {
+      val stored = Gen.oneOf(base)
+      val pair = Gen.frequency(1 -> Gen.zip(node, node),
+        3 -> stored.flatMap(e => Gen.oneOf((e._1, e._2), (e._2, e._1))))
+      val del = Gen.choose(1, 4).flatMap(Gen.listOfN(_, pair)).map(Del(_))
+      val mem = for { e <- stored; k <- Gen.option(Gen.choose(1L, 14L)) } yield Mem(e._1, e._3, k)
+      Gen.frequency(
+        3 -> genIns.map(List(_)),
+        2 -> del.map(List(_)),
+        2 -> (for { s <- node; l <- lbl; d <- node } yield List(Upd(s, l, d))),
+        2 -> (for { i <- genIns; d <- node } yield List(i, Upd(i.rows.head._1, i.rows.head._3, d))),
+        4 -> mem.map(List(_)),
+        1 -> lbl.map(l => List(Mem(20L, l, Some(3L)))),
+        2 -> (for { d <- del; m <- mem } yield List(d, m.copy(shift = Some(m.shift.getOrElse(1L))))))
+    }
+    val gen = for {
+      base <- Gen.choose(8, 25).flatMap(Gen.listOfN(_, genE))
+      muts <- Gen.choose(2, 5).flatMap(Gen.listOfN(_, genMut(base))).map(_.flatten)
+      parts <- Gen.oneOf(1, 7)
+      joins <- Gen.prob(0.5)
+    } yield (base, muts, parts, joins)
+
+    def replay(es: Vector[(Long, Long, Int, Long, Boolean)], m: Mut): Vector[(Long, Long, Int, Long, Boolean)] = m match {
+      case Ins(rows, false) => es ++ rows
+      case Ins(rows, true) =>
+        val keys = rows.map(e => (e._1, e._2, e._3, e._5)).toSet
+        es.filterNot(e => keys((e._1, e._2, e._3, e._5))) ++ rows
+      case Del(pairs) =>
+        val p = pairs.toSet
+        es.filterNot(e => p((e._1, e._2)) || p((e._2, e._1)))
+      case Upd(s, l, d) => es.map(e => if (e._1 == s && e._3 == l) e.copy(_2 = d) else e)
+      case Mem(a, l, k) =>
+        val present = es.map(e => (e._1, e._2, e._3)).toSet
+        val trav = es.filter(e => e._1 == a && e._3 == l && e._5)
+          .map(e => (a, k.fold(e._2)(s => (e._2 + s) % 15), l)).toSet
+        val fresh = trav.filterNot(present)
+        if (fresh.isEmpty) es
+        else {
+          val gone = es.filter(e => e._1 == a && e._3 == l && e._5).map(e => (e._1, e._2, e._3)).toSet
+          es.filterNot(e => gone((e._1, e._2, e._3))) ++ fresh.toSeq.map(t => (t._1, t._2, t._3, 0L, true))
+        }
+    }
+
+    val dir = java.nio.file.Files.createTempDirectory("graft-writes").toFile
+    var nFiles = 0
+    def input(df: org.apache.spark.sql.DataFrame, files: Boolean) =
+      if (!files) df
+      else {
+        nFiles += 1
+        val path = new java.io.File(dir, s"in$nFiles").getPath
+        df.write.parquet(path)
+        spark.read.parquet(path)
+      }
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(threshold)
+    // each sequence runs twice: on local inputs at the default threshold
+    // (every small input as data), and on parquet inputs at the default
+    // threshold or at -1 (every input as a join, createMem's cut)
+    def run(base: List[(Long, Long, Int, Long, Boolean)], muts: List[Mut], parts: Int, files: Boolean) = {
+      val g0 = graft.model.PropertyGraph(base.toDF("src", "dst", "label", "attrMask", "dir").repartition(parts), ranges)
+      val g = muts.foldLeft(g0) { (g, m) => m match {
+        case Ins(rows, o) => GraphOps.insertEdges(g, input(rows.toDF("src", "dst", "label", "attrMask", "dir"), files), o)
+        case Del(pairs) => GraphOps.deleteEdges(g, input(pairs.toDF("src", "dst"), files))
+        case Upd(s, l, d) => GraphOps.updateEdgeTarget(g, s, l, d)
+        case Mem(a, l, k) =>
+          val target = k.fold(anyNode)(s => anyNode.appl(_.withColumn("n1", (col("n1") + s) % 15)))
+          Query.applyDiff(g, Query.createMem(g, nodes32(a) --| edge(attr(l)) |--> target))
+      } }
+      g.edges.select("src", "dst", "label", "attrMask", "dir").as[(Long, Long, Int, Long, Boolean)].collect().toSeq.sorted
+    }
+    try check("writes", Prop.forAllNoShrink(gen) { case (base, muts, parts, joins) =>
+      val want = muts.foldLeft(base.toVector)(replay).sorted
+      val data = run(base, muts, parts, files = false)
+      spark.conf.set(threshold, if (joins) "-1" else saved)
+      val filed = try run(base, muts, parts, files = true) finally spark.conf.set(threshold, saved)
+      val ok = data == want && filed == want
+      if (!ok) println(s"writes: parts=$parts joins=$joins muts=$muts\n data  $data\n files $filed\n want  $want")
+      ok
+    }, n = 8)
+    finally {
+      def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }
+      rm(dir)
+    }
+  }
+
   test("triangleCounts ≡ brute-force 3-way enumeration on random graphs") {
     import spark.implicits._
     val genEdges: Gen[List[(Long, Long)]] =

@@ -7,11 +7,13 @@ Usage:
 A traced perfbench run (`--trace 1`) writes one span per op, per layer
 call and per Spark job to `perfbench/out/results/*-trace1.spans.jsonl`.
 For each op kind this prints how many ops ran, their median wall, and for
-each layer call the op made (`layer.fn`) the calls per op and the median
-Spark jobs per call. Given two files (say parent and change), the columns
-stand side by side. The layer totals perfbench reports (`cypher.jobs`)
-sum over every call of a layer; this splits them per op kind, so the cost
-of one cheap read shows on its own line.
+each layer call the op made (`layer.fn`) the calls per op and the Spark
+jobs of every call, in the order they ran, with a run of equal counts
+written `jobs×n`: a write chain that grows reads `6,13`, not a median of
+9.5. Given two files (say parent and change), the columns stand side by
+side. The layer totals perfbench reports (`cypher.jobs`) sum over every
+call of a layer; this splits them per op kind, so the cost of one cheap
+read shows on its own line.
 """
 import json
 import statistics
@@ -30,8 +32,8 @@ def summarize(path):
     walls = defaultdict(list)
     for o in ops.values():
         walls[o["name"]].append(o["end_ms"] - o["start_ms"])
-    per_call = defaultdict(list)  # (op kind, layer.fn) -> jobs of each call
-    for c in calls.values():
+    per_call = defaultdict(list)  # (op kind, layer.fn) -> jobs of each call, in run order
+    for c in sorted(calls.values(), key=lambda c: c["start_ms"]):
         op = ops.get(c["parent"])
         if op is not None:
             per_call[(op["name"], f'{c["layer"]}.{c["name"]}')].append(jobs[c["id"]])
@@ -46,7 +48,18 @@ def cells(summary, kind, call):
     js = per_call.get((kind, call))
     if not js:
         return ["-", "-"]
-    return [f"{len(js) / max(1, len(walls.get(kind, []))):.1f}", f"{statistics.median(js):g}"]
+    return [f"{len(js) / max(1, len(walls.get(kind, []))):.1f}", runs(js)]
+
+
+def runs(xs):
+    """`2,2,2,3` as `2×3,3`."""
+    out = []
+    for x in xs:
+        if out and out[-1][0] == x:
+            out[-1][1] += 1
+        else:
+            out.append([x, 1])
+    return ",".join(f"{x}×{n}" if n > 1 else str(x) for x, n in out)
 
 
 def main(argv):
@@ -58,7 +71,7 @@ def main(argv):
     head = ["op kind / layer.fn"]
     for i, _ in enumerate(runs):
         tag = "AB"[i] if len(runs) > 1 else ""
-        head += [f"{tag} ops | calls/op", f"{tag} wall p50 ms | jobs/call p50"]
+        head += [f"{tag} ops | calls/op", f"{tag} wall p50 ms | jobs per call"]
     rows = [head]
     for k in kinds:
         rows.append([k] + [c for r in runs for c in cells(r, k, None)])
