@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.functions.expressions.{DotProduct, PackedVectors, ScoreBucketBlock, VecKernel}
+import graft.functions.expressions.{DotProduct, LshIndex, PackedVectors, ScoreBucketBlock,
+  VecKernel}
 import org.apache.spark.sql.graft.ColumnOf
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -18,9 +19,10 @@ import org.apache.spark.sql.graft.ColumnOf
   *    full cross product — only for small query sets or verification.
   *  - [[lshTopK]]: random-hyperplane LSH. Each vector gets a B-bit bucket
   *    signature (sign of dot with B fixed hyperplanes); candidates share a
-  *    bucket in at least one of `tables` independent tables. The cross
-  *    product shrinks by ~2^B per table — the 100 TB path, at the cost of
-  *    recall (tunable via B/tables).
+  *    bucket in at least one of `tables` independent tables, and each is
+  *    scored once ([[lshCore]]). The cross product shrinks by ~2^B per
+  *    table — the 100 TB path, at the cost of recall (tunable via
+  *    B/tables).
   */
 object Similarity {
 
@@ -309,50 +311,29 @@ object Similarity {
       array(planes.flatten.map(lit): _*), lit(planes.size),
       lit(probes), lit(probes2))
 
-  /** LSH-bucketed approximate top-k: union of per-table bucket joins,
-    * exact cosine on the candidates, global top-k per query. `probes` > 0
-    * adds margin-ordered Hamming-1 multi-probe on the query side (see
-    * [[probeBuckets]]) — the standard recall lever when buckets are fine
-    * relative to the corpus (recall tracking vs the exact twin showed
-    * 0.024 at bits=10/tables=4 on the isotropic gate corpus; full
-    * Hamming-1 probing lifts candidate coverage ~(1+bits)× at the same
-    * index). */
+  /** LSH-bucketed approximate top-k through the fused core
+    * ([[lshCore]]): each query's candidates are the distinct union of the
+    * corpus rows sharing one of its buckets in any of `tables` tables,
+    * each scored once by exact cosine, and the k best (self-match
+    * excluded) are cut in the same kernel call — no candidate row, dedup
+    * or rank window exchange. `probes` > 0 adds margin-ordered Hamming-1
+    * multi-probe on the query side (see [[probeBuckets]]) — the standard
+    * recall lever when buckets are fine relative to the corpus (recall
+    * tracking vs the exact twin showed 0.024 at bits=10/tables=4 on the
+    * isotropic gate corpus; full Hamming-1 probing lifts candidate
+    * coverage ~(1+bits)× at the same index). Ranks follow `row_number()
+    * over (partition by query_id order by cosine desc, neighbor_id)`.
+    * Query ids are keys: each query row is ranked on its own. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       bits: Int = 12, tables: Int = 4, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
       probes: Int = 0, probes2: Int = 0): DataFrame = {
     useNative(queries)
     val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
-    val c = usable(corpus, vecCol).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), l2Norm(col(vecCol)).as("cn"))
-    val cands0 = (0 until tables).map { t =>
-      val planes = hyperplanes(dim, bits, t, seed)
-      q.withColumn("bucket", explode(probeBuckets(col("qv"), planes, probes, probes2)))
-        .join(c.withColumn("bucket", nativeSignature(col("cv"), planes)), "bucket")
-        .drop("bucket")
-    }.reduce(_ unionByName _)
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // score FIRST, map-side on the bucket-join output, and project the
-    // vectors away BEFORE any exchange (the d9/d4 score-then-dedup
-    // restructure): the cross-table dedup and the per-query rank window
-    // both shuffle their input, and pre-restructure BOTH exchanges
-    // carried qv/cv per candidate row. Duplicate (q,c) copies score
-    // bit-identically (same two vectors, same expression), so deduping
-    // after scoring keeps the exact same rows — now at (query_id,
-    // neighbor_id, cosine) width.
-    val scored0 = cands0.withColumn("cosine",
-        dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    // single table → one bucket per CORPUS vector and distinct probe
-    // buckets per query (base + distinct weight-1/2 flips) → no duplicate
-    // (q,c) pairs; skip the dedup shuffle (matters for the bits=0
-    // exhaustive config)
-    val scored = if (tables == 1) scored0
-      else scored0.dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+      col(vecCol).as("av"), l2Norm(col(vecCol)).as("an"))
+    lshCore(q, "query_id", usable(corpus, vecCol), "neighbor_id", idCol, vecCol, dim,
+      (0 until tables).map(t => hyperplanes(dim, bits, t, seed)), probes, probes2,
+      ScoreBucketBlock.TopK, threshold = 0.0, k)
   }
 
   /** Table count for the adaptive-LSH configuration (`tables <= 0` with
@@ -403,11 +384,11 @@ object Similarity {
   /** The LSH candidate-pair core of [[cosineDuplicates]] (self-join:
     * `probeRel` and `build` are the same relation) and
     * [[semanticDecontam]] (`cross`: the corpus probes the reference). Both
-    * share the sizing, the hyperplanes, the signature/probe expressions
-    * and exactly three tiers; they differ only in the membership rule
-    * (self-join pairs are a<b, cross pairs are every (doc, ref)) and the
-    * output projection (`aId`/`bId` names; decontam rounds cosine to 6
-    * dp). Dirty rows are already gone from both relations.
+    * share the sizing, the hyperplanes and [[lshCore]]; they differ only
+    * in the membership rule (self-join pairs are a<b, cross pairs are
+    * every (doc, ref)) and the output projection (`aId`/`bId` names;
+    * decontam rounds cosine to 6 dp). Dirty rows are already gone from
+    * both relations.
     *
     * Fixed bits do NOT survive corpus growth: per-bucket pair count grows
     * with (n/2^bits)², so 4× data at constant bits ≈ 16× candidate pairs
@@ -457,140 +438,131 @@ object Similarity {
     // max(probes, 2) — probes = 0 would silently collapse recall at scale.
     val p1 = if (probes < 0 || p2n > 0 && probes2 < 0) nBits else probes
     // multi-probe (Hamming-1/2, margin-ordered — see [[probeBuckets]])
-    // widens ONE side: the probed side's bucket LIST joins the build
+    // widens ONE side: the probed side's bucket LIST meets the build
     // side's single base bucket, so candidates grow at most
     // (1 + p1 + p2n)×. In a self-join both orientations of a pair are
     // distinct probe events, so the probed membership canonicalizes with
-    // least/greatest and dedups; unprobed keeps the a<b filter, which
-    // needs no dedup shuffle at one table.
-    val probed = p1 > 0 || p2n > 0
+    // least/greatest and dedups; unprobed keeps the a<b rule and needs no
+    // dedup at all (each probe row's candidates are distinct).
     val mode =
       if (cross) ScoreBucketBlock.Cross
-      else if (probed) ScoreBucketBlock.SelfProbed
+      else if (p1 > 0 || p2n > 0) ScoreBucketBlock.SelfProbed
       else ScoreBucketBlock.SelfUnprobed
-    // the cross probe side is widened (round 19): the exhaustive tier's
-    // plan is a BNLJ streaming the corpus against the broadcast
-    // reference, and a range-filtered corpus can land in one file split
-    // (the d15 gate ran its whole |corpus|·|reference| dot stream as ONE
-    // task at 10×); a stats-guarded no-op at scale
+    // the cross probe side is widened (round 19): the probe stream is a
+    // narrow projection, and a range-filtered corpus can land in one file
+    // split (the d15 gate ran its whole |corpus|·|reference| dot stream
+    // as ONE task at 10×); a stats-guarded no-op at scale
     val a0 = probeRel.select(col(idCol).as(aId), col(vecCol).as("av"),
       l2Norm(col(vecCol)).as("an"))
-    val a = if (cross) widened(a0) else a0
-    val b = build.select(col(idCol).as(bId), col(vecCol).as("bv"),
-      l2Norm(col(vecCol)).as("bn"))
-    def member(df: DataFrame): DataFrame = mode match {
-      case ScoreBucketBlock.SelfUnprobed => df.filter(col(aId) < col(bId))
-      case ScoreBucketBlock.SelfProbed => // cosine is symmetric: vectors need no swap
-        df.filter(col(aId) =!= col(bId))
-          .select(least(col(aId), col(bId)).as(aId), greatest(col(aId), col(bId)).as(bId),
-            col("av"), col("an"), col("bv"), col("bn"))
-      case _ => df
-    }
-    def emit(c: Column): Column = (if (cross) round(c, 6) else c).as("cosine")
-    // per-pair cosine FIRST, then the threshold, then the cross-table
-    // dedup (the d9 score-then-dedup restructure): scoring is map-side on
-    // the bucket-join output and bit-deterministic across copies (same
-    // two vectors, element-wise products commute, same summation order),
-    // so the threshold keeps all copies or none and the dedup exchange
-    // carries only passing (aId, bId, cosine) rows, never embeddings
-    def score(df: DataFrame): DataFrame = df
-      .withColumn("cosine", dot(col("av"), col("bv")) / (col("an") * col("bn")))
-      .filter(col("cosine") >= threshold)
-      .select(col(aId), col(bId), emit(col("cosine")))
-    // TIERS (round 21 scale guard, round 22 fusion; D4ScaleProbe and
-    // D15ScaleProbe). All three reuse the same hyperplanes and
-    // signature/probe expressions → identical candidate sets, and score
-    // each pair by the same arithmetic → bit-identical rows (pinned in
-    // PipelineSpec by forcing each tier at gate scale via the broadcast
-    // threshold and the budget conf):
-    //
-    //  1. PER-TABLE UNION while the build side broadcasts — one bucket
-    //     join per table, each broadcast by the planner: the measured-
-    //     fastest gate-scale shape (a posexplode'd composite-key join
-    //     measured 14% slower at sf0.1). The bench and the gates run it.
-    //  2. FUSED BROADCAST past the planner threshold but within the
-    //     explicit budget (`spark.graft.lsh.broadcastBudgetBytes`, default
-    //     512 MB/relation — the guide's "a few hundred MB" point): past
-    //     the threshold every tier-1 branch would degrade to a shuffle
-    //     join carrying the probe-exploded vectors (ENOSPC at the d4 100×
-    //     point, round 21). Instead the build side's (table, bucket) id
-    //     blocks broadcast, [[ScoreBucketBlock]] scores a probe row
-    //     against its whole block in one codegen'd call over a
-    //     [[PackedVectors]] broadcast, and only passing pairs are emitted
-    //     — the probe stream never crosses an exchange (−30% steady vs
-    //     the join-shaped form at d4/d15 100×).
-    //  3. COMPOSITE-KEY SORT-MERGE past the budget, or when the build
-    //     side cannot pack (non-integral, null or duplicate ids): the
-    //     per-table buckets posexplode into ONE (table, bucket)-keyed
-    //     join per side with the vectors riding, so the same bytes cross
-    //     in TWO exchanges instead of 2·nTables. Correct for any input.
-    //     A vector-free metadata-only variant was measured slower at
-    //     every dim and deleted (SCALING.md, round 22 negative).
-    val bigBuild = (probed || nTables > 1) &&
-      build.queryExecution.optimizedPlan.stats.sizeInBytes >
-        build.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    if (!bigBuild) {
-      val raw = (0 until nTables).map { t =>
-        val planes = hyperplanes(dim, nBits, t, seed)
-        val aB =
-          if (!probed) a.withColumn("bucket", nativeSignature(col("av"), planes))
-          else a.withColumn("bucket", explode(probeBuckets(col("av"), planes, p1, p2n)))
-        aB.join(b.withColumn("bucket", nativeSignature(col("bv"), planes)), "bucket")
-          .drop("bucket")
-      }.reduce(_ unionByName _)
-      val scored = score(member(raw))
-      if (nTables == 1 && !probed) scored else scored.dropDuplicates(aId, bId)
-    } else {
-      val planesAll = (0 until nTables).map(t => hyperplanes(dim, nBits, t, seed))
-      def signatures(v: String): Column =
-        posexplode(array(planesAll.map(p => nativeSignature(col(v), p)): _*))
-      def bucketsOfA(p: Seq[Seq[Double]]): Column =
-        if (probed) probeBuckets(col("av"), p, p1, p2n)
-        else array(nativeSignature(col("av"), p))
-      val aB = a
-        .select(col(aId), col("av"), col("an"),
-          posexplode(array(planesAll.map(bucketsOfA): _*)))
-        .select(col(aId), col("av"), col("an"),
-          col("pos").as("tbl"), explode(col("col")).as("bucket"))
-      // sizes from the memoized exact count, never plan-stat estimates (the
-      // e15 lesson: estimates overshoot on derived plans): bucket blocks ≈
-      // 20 B·nTables·n, packed vectors ≈ (element width·dim + 48)·n
-      val n = corpusCount(build)
-      val budget = build.sparkSession.conf
-        .get("spark.graft.lsh.broadcastBudgetBytes", (512L << 20).toString).toLong
-      val vecBytes = (PackedVectors.elemBytes(build.schema(vecCol).dataType) * dim + 48L) * n
-      val packed =
-        if (math.max(20L * nTables * n, vecBytes) <= budget)
-          PackedVectors.pack(build, idCol, vecCol)
-        else None
-      packed match {
-        case Some(pk) =>
-          val bc = build.sparkSession.sparkContext.broadcast(pk)
-          val blocks = build
-            .select(col(idCol).cast(LongType).as("bid"), signatures(vecCol))
-            .groupBy(col("pos").as("tbl"), col("col").as("bucket"))
-            .agg(sort_array(collect_list(col("bid"))).as("bids"))
-          val probe = if (cross) Seq(col("av"), col("an")) else Seq(col(aId).cast(LongType))
-          val hits = ColumnOf(ScoreBucketBlock((probe :+ col("bids")).map(ColumnOf.expr),
-            bc, threshold, mode))
-          // ids were packed as BIGINT: cast back so the schema is the tier-1 one
-          val pairs = aB.join(broadcast(blocks), Seq("tbl", "bucket"))
-            .select(col(aId), explode(hits).as("hit"))
-            .select(col(aId), col("hit.doc_b").cast(build.schema(idCol).dataType).as(bId),
-              emit(col("hit.cosine")))
-          val out =
-            if (mode != ScoreBucketBlock.SelfProbed) pairs // Cross/SelfUnprobed filter in-kernel
-            else pairs.select(least(col(aId), col(bId)).as(aId),
-              greatest(col(aId), col(bId)).as(bId), col("cosine"))
-          out.dropDuplicates(aId, bId)
-        case None =>
-          val bB = b
-            .select(col(bId), col("bv"), col("bn"), signatures("bv"))
-            .select(col(bId), col("bv"), col("bn"),
-              col("pos").as("tbl"), col("col").as("bucket"))
-          score(member(aB.join(bB, Seq("tbl", "bucket")).drop("tbl", "bucket")))
+    val pairs = lshCore(if (cross) widened(a0) else a0, aId, build, bId, idCol, vecCol, dim,
+      (0 until nTables).map(t => hyperplanes(dim, nBits, t, seed)), p1, p2n, mode,
+      threshold, k = 0)
+    if (cross) pairs.select(col(aId), col(bId), round(col("cosine"), 6).as("cosine")) else pairs
+  }
+
+  /** The one LSH candidate core, behind [[lshTopK]] (`TopK` mode),
+    * [[cosineDuplicates]] (`SelfUnprobed`/`SelfProbed`) and
+    * [[semanticDecontam]] (`Cross`). `a` is the probe side `(aId, av,
+    * an)`; `build` is `(idCol, vecCol)`, dirty rows already gone from
+    * both. Table `t` buckets a build row by its signature under
+    * `planes(t)` and a probe row by its `p1`/`p2n` multi-probe list under
+    * the same planes. Returns `(aId, bId, cosine)` pairs at or above
+    * `threshold` (a<b for the self-join modes), or `(aId, bId, cosine,
+    * rank)` for the k best of each probe row; `bId` keeps the build id's
+    * type.
+    *
+    * Two tiers, the same candidate sets and the same arithmetic, so the
+    * same rows bit for bit (pinned in PipelineSpec by zeroing the budget,
+    * and against a test-local copy of the per-table union these replaced):
+    *
+    *  1. FUSED, while the build side fits `spark.graft.lsh.broadcastBudgetBytes`
+    *     (default 512 MB) and packs (integral, non-null, distinct ids):
+    *     ONE collect of the build rows with their per-table signatures
+    *     (computed on the executors), packed and grouped into `(table,
+    *     bucket)` blocks on the driver ([[LshIndex]]), ONE broadcast, then
+    *     ONE narrow projection of the probe side: [[ScoreBucketBlock]]
+    *     looks up every probe bucket, takes the distinct union of the
+    *     blocks and scores each candidate once — in TopK mode it also
+    *     cuts the k best. No candidate row, dedup (but the probed
+    *     self-join's) or rank window crosses an exchange, and the plan
+    *     holds one codegen stage whatever the table count: a join per
+    *     table costs a stage and its classes per table, which overflow
+    *     Spark's codegen cache (SCALING.md "One fused LSH core": 2 jobs
+    *     and no compiles per call on a 1,000-vector batch, against 10–12
+    *     jobs for the per-table union).
+    *  2. COMPOSITE-KEY SORT-MERGE past the budget, or when the build side
+    *     cannot pack: the per-table buckets posexplode into ONE (table,
+    *     bucket)-keyed join per side with the vectors riding, then score,
+    *     dedup and, for top-k, the rank window. Correct for any input. A
+    *     vector-free metadata-only variant was measured slower at every
+    *     dim and deleted (SCALING.md, round 22 negative).
+    *
+    * Sizes come from the memoized exact count, never plan-stat estimates
+    * (the e15 lesson: estimates overshoot on derived plans): blocks ≈
+    * 20 B·tables·n, packed vectors ≈ (element width·dim + 48)·n. */
+  private def lshCore(a: DataFrame, aId: String, build: DataFrame, bId: String,
+      idCol: String, vecCol: String, dim: Int, planes: Seq[Seq[Seq[Double]]],
+      p1: Int, p2n: Int, mode: Int, threshold: Double, k: Int): DataFrame = {
+    import ScoreBucketBlock.{Cross, SelfProbed, SelfUnprobed, TopK}
+    val probes = array(planes.map(p => probeBuckets(col("av"), p, p1, p2n)): _*)
+    val sigs = array(planes.map(p => nativeSignature(col(vecCol), p)): _*)
+    val budget = build.sparkSession.conf
+      .get("spark.graft.lsh.broadcastBudgetBytes", (512L << 20).toString).toLong
+    val n = corpusCount(build)
+    val bytes = 20L * planes.size * n +
+      (PackedVectors.elemBytes(build.schema(vecCol).dataType) * dim + 48L) * n
+    // top-k's self-match rule compares the query id as BIGINT
+    val keyed = mode != TopK || PackedVectors.integral(a.schema(aId).dataType)
+    val index =
+      if (bytes <= budget && keyed) LshIndex.collect(build, idCol, vecCol, sigs, planes.size)
+      else None
+    index match {
+      case Some(ix) =>
+        val bc = build.sparkSession.sparkContext.broadcast(ix)
+        val aKey = if (mode == Cross) lit(0L) else col(aId).cast(LongType)
+        val hits = ColumnOf(ScoreBucketBlock(Seq(aKey, col("av"), col("an"), probes)
+          .map(ColumnOf.expr), bc, threshold, k, mode))
+        // ids were packed as BIGINT: cast back so the schema is the build's
+        val out = a.select(col(aId), posexplode(hits).as(Seq("pos", "hit")))
+          .select(col(aId), col("hit.doc_b").cast(build.schema(idCol).dataType).as(bId),
+            col("hit.cosine").as("cosine"), (col("pos") + 1).as("rank"))
+        mode match {
+          case TopK => out
+          case SelfProbed => out.select(least(col(aId), col(bId)).as(aId),
+            greatest(col(aId), col(bId)).as(bId), col("cosine")).dropDuplicates(aId, bId)
+          // only a corpus id repeated across rows can repeat a pair: the
+          // banded configs merge such pairs per (doc, ref), and the
+          // exhaustive one keeps one row per corpus row, as before
+          case Cross if planes.size > 1 || p1 > 0 || p2n > 0 =>
+            out.drop("rank").dropDuplicates(aId, bId)
+          case _ => out.drop("rank")
+        }
+      case None =>
+        val aB = a.select(col(aId), col("av"), col("an"), posexplode(probes))
+          .select(col(aId), col("av"), col("an"), col("pos").as("tbl"),
+            explode(col("col")).as("bucket"))
+        val bB = build.select(col(idCol).as(bId), col(vecCol).as("bv"),
+            l2Norm(col(vecCol)).as("bn"), posexplode(sigs))
+          .select(col(bId), col("bv"), col("bn"), col("pos").as("tbl"), col("col").as("bucket"))
+        val joined = aB.join(bB, Seq("tbl", "bucket"))
+        val members = mode match {
+          case SelfUnprobed => joined.filter(col(aId) < col(bId))
+          case Cross => joined
+          case _ => joined.filter(col(aId) =!= col(bId))
+        }
+        val scored = members.select(col(aId), col(bId),
+          (dot(col("av"), col("bv")) / (col("an") * col("bn"))).as("cosine"))
+        if (mode == TopK) {
+          val w = Window.partitionBy(aId).orderBy(desc("cosine"), col(bId))
+          scored.dropDuplicates(aId, bId).withColumn("rank", row_number().over(w))
+            .filter(col("rank") <= k)
+        } else {
+          val passing = scored.filter(col("cosine") >= threshold)
+          (if (mode != SelfProbed) passing
+           else passing.select(least(col(aId), col(bId)).as(aId),
+             greatest(col(aId), col(bId)).as(bId), col("cosine")))
             .dropDuplicates(aId, bId)
-      }
+        }
     }
   }
 
@@ -601,16 +573,15 @@ object Similarity {
     * verdict's one weak): `bits = -1` (buckets sized from the corpus),
     * `tables = -1` (the [[adaptiveTables]] scale rule), `probes2 = -1`
     * (auto Hamming-2 past the 6-bit anchor, which forces full Hamming-1)
-    * — the builder's own 10× probes measured the old manual defaults
-    * (bits=12, tables=4) silently decaying (recall 0.417-class) while
-    * the auto forms hold ≥ 0.97 at every measured scale. Explicit
-    * bits/tables remain the zero-sizing-jobs fast path when the corpus
-    * class is known.
-    * Unlike [[lshTopK]] there is NO per-query rank window: thresholding
-    * needs only candidate → score → filter, so the candidate set streams
-    * through one codegen'd projection instead of a shuffle+sort per query
-    * partition (that window made this quadratic-ish on duplicate-heavy
-    * corpora). */
+    * — the 10× probes measured the old manual defaults (bits=12,
+    * tables=4) silently decaying (recall 0.417-class) while the auto
+    * forms hold ≥ 0.97 at every measured scale. Sizing costs one count
+    * per corpus plan, memoized per session, and the broadcast budget
+    * reads the same count, so explicit bits/tables save no job once the
+    * corpus has been counted. Thresholding needs only candidate → score
+    * → filter, so in the fused tier the unprobed self-join is ONE
+    * narrow projection of the corpus with no exchange at all; the
+    * probed form adds one canonicalizing dedup. */
   def cosineDuplicates(vectors: DataFrame, threshold: Double, dim: Int,
       bits: Int = -1, tables: Int = -1, seed: Long = 42L,
       idCol: String = "vec_id", vecCol: String = "embedding",
@@ -634,8 +605,9 @@ object Similarity {
     * the reference side is usually small, so the exhaustive tier is
     * often affordable too (|corpus|×|ref| streamed through codegen, no
     * exchange). `probes` widens the CORPUS side's bucket list; adaptive
-    * bits size from the corpus side, the tier guard reads the reference
-    * side (a corpus-class reference is the dedup-against regime).
+    * bits size from the corpus side, the broadcast budget reads the
+    * reference side (a corpus-class reference is the dedup-against
+    * regime).
     *
     * Returns (doc_id, ref_id, cosine rounded 6 dp) — one row per
     * contaminated pair; distinct doc_ids are the removal set.

@@ -1,64 +1,28 @@
 package graft.functions.expressions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** One corpus packed for fused in-bucket scoring (round 22, VERDICT r21
-  * #2): flat primitive arrays — ids widened to BIGINT, per-row offsets
-  * (vectors may be ragged; [[VecKernel]]'s common-prefix rule needs
-  * true lengths), the concatenated elements in the corpus' own width
-  * (`floats` for ARRAY<FLOAT>, `doubles` for ARRAY<DOUBLE>; the other is
-  * null, so a FLOAT corpus broadcasts 4 B per element, not 8), and
-  * per-row norms `sqrt(VecKernel.sumSq)` — bit-identical to the `nnorm`
-  * column it replaces.
-  *
-  * Shipped ONCE per query as an `sc.broadcast` (the same budget-gated
-  * bytes a corpus-by-id broadcast relation would carry), and looked up
-  * per candidate through a lazily built open-addressing id→index table
-  * (one build per deserialized copy, i.e. once per executor). */
+/** One corpus packed for fused scoring: flat primitive arrays, rows
+  * sorted by id — ids widened to BIGINT, per-row offsets (vectors may be
+  * ragged; [[VecKernel]]'s common-prefix rule needs true lengths), the
+  * concatenated elements in the corpus' own width (`floats` for
+  * ARRAY<FLOAT>, `doubles` for ARRAY<DOUBLE>; the other is null, so a
+  * FLOAT corpus broadcasts 4 B per element, not 8), and per-row norms
+  * `sqrt(VecKernel.sumSq)` — bit-identical to the `l2Norm` column. Rows
+  * are addressed by their packed index, so index order is id order. */
 final class PackedVectors(
     val ids: Array[Long], val offs: Array[Int],
     val floats: Array[Float], val doubles: Array[Double],
     val norms: Array[Double]) extends Serializable {
   def n: Int = ids.length
-
-  // open-addressing id→index map: power-of-two capacity ≥ 2n, linear
-  // probing, splitmix64 finalizer — built lazily so only executors that
-  // actually score pay the one-time pass (slot value -1 = empty)
-  @transient private lazy val (tblKeys, tblVals, tblMask): (Array[Long], Array[Int], Int) = {
-    var cap = 16
-    while (cap < 2 * math.max(1, n)) cap <<= 1
-    val ks = new Array[Long](cap)
-    val vs = new Array[Int](cap)
-    java.util.Arrays.fill(vs, -1)
-    val mask = cap - 1
-    var i = 0
-    while (i < n) {
-      var s = PackedVectors.mix(ids(i)) & mask
-      while (vs(s) >= 0) s = (s + 1) & mask
-      ks(s) = ids(i); vs(s) = i
-      i += 1
-    }
-    (ks, vs, mask)
-  }
-
-  /** Index of `id`, or -1 when absent. */
-  def indexOf(id: Long): Int = {
-    val (ks, vs, mask) = (tblKeys, tblVals, tblMask)
-    var s = PackedVectors.mix(id) & mask
-    while (vs(s) >= 0) {
-      if (ks(s) == id) return vs(s)
-      s = (s + 1) & mask
-    }
-    -1
-  }
 
   /** Row `i`'s offset and length in the packed elements. */
   def off(i: Int): Int = offs(i)
@@ -66,14 +30,6 @@ final class PackedVectors(
 }
 
 object PackedVectors {
-  private[expressions] def mix(x0: Long): Int = {
-    // splitmix64 finalizer — well-spread slots for arbitrary id spaces
-    var x = x0 + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    (x ^ (x >>> 31)).toInt
-  }
-
   /** Element width in bytes of a packable vector column (4 for FLOAT, 8
     * for DOUBLE) — what the caller's broadcast budget is sized from. */
   def elemBytes(vecType: DataType): Long = vecType match {
@@ -81,26 +37,29 @@ object PackedVectors {
     case _ => 4L
   }
 
-  /** Collect and pack `(idCol, vecCol)` — the fused tier's broadcast
-    * build, run at plan-construction time under the caller's byte
-    * budget (the same driver-side collect a BroadcastHashJoin build
-    * would do at execution). Any integral id type packs (as BIGINT; the
-    * caller casts emitted ids back) and FLOAT or DOUBLE elements pack in
-    * their own width. Returns None when the packed lookup could not
-    * reproduce a by-id join — non-integral or null ids, or duplicate
-    * ids (a join matches every copy) — so the caller takes its
-    * composite-key tier, which is correct for any input. */
-  def pack(df: DataFrame, idCol: String, vecCol: String): Option[PackedVectors] = {
-    val okShape = (df.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }) && (df.schema(vecCol).dataType match {
+  /** An id type that widens to BIGINT exactly. */
+  def integral(idType: DataType): Boolean = idType match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  /** Integral ids and FLOAT or DOUBLE elements: the shapes that pack. */
+  private[expressions] def packable(schema: StructType, idCol: String, vecCol: String): Boolean =
+    integral(schema(idCol).dataType) && (schema(vecCol).dataType match {
       case ArrayType(FloatType | DoubleType, _) => true
       case _ => false
     })
-    if (!okShape) return None
-    val isFloat = elemBytes(df.schema(vecCol).dataType) == 4L
-    val rows = df.select(col(idCol), col(vecCol)).collect()
+
+  /** Pack collected rows whose fields 0 and 1 are an integral id and a
+    * vector. Any integral id packs (as BIGINT; the caller casts emitted
+    * ids back) and FLOAT or DOUBLE elements pack in their own width.
+    * Returns the packed rows and, per packed row, the index of its source
+    * row; or None for null or repeated ids, which the kernel's id-keyed
+    * membership rules cannot tell apart (a join matches every copy and
+    * dedups the pairs), so the caller takes its composite-key tier, which
+    * is correct for any input. */
+  private[expressions] def packRows(rows: Array[Row],
+      isFloat: Boolean): Option[(PackedVectors, Array[Int])] = {
     val n = rows.length
     val rawIds = new Array[Long](n)
     var i = 0
@@ -142,159 +101,224 @@ object PackedVectors {
         }
         j += 1
       }
-      norms(i) = math.sqrt(VecKernel.sumSq(floats, doubles, off, len)) // = nnorm
+      norms(i) = math.sqrt(VecKernel.sumSq(floats, doubles, off, len)) // = l2Norm
       off += len
       i += 1
     }
     offs(n) = off
-    Some(new PackedVectors(ids, offs, floats, doubles, norms))
+    Some((new PackedVectors(ids, offs, floats, doubles, norms), order))
   }
 }
 
-/** Fused in-bucket scoring (round 22, VERDICT r21 #2, guide §4 + the §8
-  * worked-example rule): score one probe row against its bucket's whole
-  * id block in ONE call and emit only the PASSING `(doc_b, cosine)`
-  * pairs as `ARRAY<STRUCT<doc_b BIGINT, cosine DOUBLE>>` — the
-  * candidate rows themselves (≈20 B per-row scorings at the d4 100×
-  * probe point) never materialize as join output, and the by-id
-  * vector-attach broadcast join disappears: vectors come from the
-  * [[PackedVectors]] broadcast.
+/** The fused LSH core's one broadcast: the build side's vectors
+  * ([[PackedVectors]]) and, per hash table, its buckets as blocks of
+  * packed-row indices, ascending. Table `t`'s distinct bucket keys sit
+  * sorted in `keys[tblOff(t), tblOff(t + 1))`; block `j`'s members are
+  * `members[memOff(j), memOff(j + 1))`. Primitive arrays only, so a
+  * copy deserializes fast and a lookup is one binary search. */
+final class LshIndex private (val vectors: PackedVectors, val tables: Int,
+    keys: Array[Long], tblOff: Array[Int], memOff: Array[Int], members: Array[Int])
+    extends Serializable {
+  /** Block index of `bucket` in table `t`, or -1 when it is empty. */
+  def block(t: Int, bucket: Long): Int = {
+    val j = java.util.Arrays.binarySearch(keys, tblOff(t), tblOff(t + 1), bucket)
+    if (j >= 0) j else -1
+  }
+  def blockStart(j: Int): Int = memOff(j)
+  def blockEnd(j: Int): Int = memOff(j + 1)
+  def member(r: Int): Int = members(r)
+}
+
+object LshIndex {
+  /** `sigs(t)(i)` is table `t`'s bucket of packed row `i`. */
+  def apply(vectors: PackedVectors, sigs: Array[Array[Long]]): LshIndex = {
+    val n = vectors.n
+    val keys = new Array[Long](sigs.length * n)
+    val tblOff = new Array[Int](sigs.length + 1)
+    val memOff = new Array[Int](sigs.length * n + 1)
+    val members = new Array[Int](sigs.length * n)
+    var nk = 0
+    for ((s, t) <- sigs.zipWithIndex) {
+      tblOff(t) = nk
+      val sorted = s.clone()
+      java.util.Arrays.sort(sorted)
+      val first = nk
+      for (b <- sorted) if (nk == first || keys(nk - 1) != b) { keys(nk) = b; nk += 1 }
+      // counting sort of the rows into their blocks; rows go in ascending
+      // index order, so every block is sorted
+      val count = new Array[Int](nk - first)
+      val slot = s.map(b => java.util.Arrays.binarySearch(keys, first, nk, b) - first)
+      slot.foreach(j => count(j) += 1)
+      var at = t * n
+      for (j <- count.indices) { memOff(first + j) = at; at += count(j) }
+      val fill = count.indices.map(j => memOff(first + j)).toArray
+      for (i <- 0 until n) { members(fill(slot(i))) = i; fill(slot(i)) += 1 }
+    }
+    tblOff(sigs.length) = nk
+    memOff(nk) = sigs.length * n
+    new LshIndex(vectors, sigs.length, java.util.Arrays.copyOf(keys, nk), tblOff,
+      java.util.Arrays.copyOf(memOff, nk + 1), members)
+  }
+
+  /** The build side's one collect: each `(idCol, vecCol)` row with its
+    * per-table signatures `sigs` (an ARRAY<BIGINT> of `tables` buckets,
+    * computed on the executors), packed and grouped on the driver. None
+    * when the rows cannot pack ([[PackedVectors.packRows]]). */
+  def collect(df: DataFrame, idCol: String, vecCol: String, sigs: Column,
+      tables: Int): Option[LshIndex] =
+    if (!PackedVectors.packable(df.schema, idCol, vecCol)) None
+    else {
+      val rows = df.select(col(idCol), col(vecCol), sigs).collect()
+      PackedVectors.packRows(rows, PackedVectors.elemBytes(df.schema(vecCol).dataType) == 4L)
+        .map { case (packed, order) =>
+          LshIndex(packed, Array.tabulate(tables) { t =>
+            order.map(r => rows(r).getSeq[Long](2)(t))
+          })
+        }
+    }
+}
+
+/** The fused LSH kernel: one probe row against its candidate set, in
+  * ONE call, emitting `ARRAY<STRUCT<doc_b BIGINT, cosine DOUBLE>>`.
+  * Children `(aKey BIGINT, av, an, probes)`: the probe row's id (for the
+  * membership rule), vector (FLOAT or DOUBLE elements) and norm, and its
+  * per-table probe-bucket lists (`ARRAY<ARRAY<BIGINT>>`, one
+  * `graft_lsh_probes` list per table). The kernel looks each bucket up in
+  * the [[LshIndex]] broadcast, takes the distinct union of the blocks'
+  * rows, and scores each candidate ONCE, however many tables and probes
+  * it collides in — candidate work tracks distinct candidates, not the
+  * per-table fan-out. Candidate rows never materialize.
   *
-  * Bit-identity contract (equality-pinned in PipelineSpec against the
-  * per-table union tier): the dot is [[VecKernel]]'s (common prefix,
-  * ascending index, double accumulator), `cosine = dot / (an *
-  * bn)` with both norms packed as `sqrt(Σ x²)` (= the nnorm column), and
-  * the threshold is the same IEEE `>=`. Candidate membership is the
-  * bucket block itself — grouped from the identical signature
-  * expressions.
+  * Bit-identity contract: the dot is [[VecKernel]]'s (common prefix,
+  * ascending index, double accumulator, probe operand first), `cosine =
+  * dot / (an * bn)` with the packed norm `sqrt(Σ x²)` (= the `l2Norm`
+  * column), and the threshold is the same IEEE `>=` as a filter.
   *
-  * Modes: SelfProbed (children `(aId BIGINT, bids)`, probe vector looked
-  * up in the packed corpus, emits `doc_b != aId` — both orientations,
-  * the caller canonicalizes), SelfUnprobed (same children, emits only
-  * `doc_b > aId` — the a<b contract with no canonicalize step), Cross
-  * (children `(av, an, bids)` with `av` FLOAT or DOUBLE elements, emits
-  * every passing block member — the decontamination shape, reference
-  * packed). */
-case class ScoreBucketBlock(children: Seq[Expression],
-    packed: Broadcast[PackedVectors], threshold: Double, mode: Int)
-    extends Expression {
+  * Modes (the membership rule compares ids): SelfUnprobed emits `doc_b >
+  * aKey` passing pairs (the a<b contract); SelfProbed emits `doc_b !=
+  * aKey` passing pairs (both orientations, the caller canonicalizes);
+  * Cross emits every passing candidate; TopK emits the `k` best `doc_b
+  * != aKey` candidates with no threshold, best first: cosine descending
+  * in Spark's double order (`SQLOrderingUtil.compareDoubles`: −0.0
+  * equals 0.0, NaN is largest), ties to the smaller id — the order of a
+  * `row_number()` window over `(cosine desc, neighbor_id)`. */
+case class ScoreBucketBlock(children: Seq[Expression], index: Broadcast[LshIndex],
+    threshold: Double, k: Int, mode: Int) extends Expression {
 
   import ScoreBucketBlock._
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val idBlock = children.last.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    val ok = idBlock && (mode match {
-      case SelfProbed | SelfUnprobed =>
-        children.size == 2 && children(0).dataType == LongType
-      case Cross =>
-        children.size == 3 && children(1).dataType == DoubleType &&
-          (children(0).dataType match {
-            case ArrayType(FloatType | DoubleType, _) => true
-            case _ => false
-          })
-      case _ => false
-    })
+    val ok = children.size == 4 && children(0).dataType == LongType &&
+      (children(1).dataType match {
+        case ArrayType(FloatType | DoubleType, _) => true
+        case _ => false
+      }) && children(2).dataType == DoubleType &&
+      (children(3).dataType match {
+        case ArrayType(ArrayType(LongType, _), _) => true
+        case _ => false
+      }) && (mode == Cross || mode == SelfProbed || mode == SelfUnprobed || mode == TopK && k >= 1)
     if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"graft_score_block mode $mode got ${children.map(_.dataType.catalogString)}")
+      s"graft_score_block mode $mode k $k got ${children.map(_.dataType.catalogString)}")
   }
 
+  // the fields are never null; declared nullable so the emitted columns
+  // keep the nullability a join of the id and cosine columns gives
   override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("doc_b", LongType, nullable = false),
-      StructField("cosine", DoubleType, nullable = false))), containsNull = false)
+    StructType(Seq(StructField("doc_b", LongType), StructField("cosine", DoubleType))),
+    containsNull = false)
 
   override def nullable: Boolean = true
 
-  override def eval(input: InternalRow): Any = mode match {
-    case Cross =>
-      val av = children(0).eval(input)
-      val an = children(1).eval(input)
-      val bids = children(2).eval(input)
-      if (av == null || an == null || bids == null) null
-      else scoreCross(av.asInstanceOf[ArrayData], an.asInstanceOf[Double],
-        bids.asInstanceOf[ArrayData])
-    case _ =>
-      val aId = children(0).eval(input)
-      val bids = children(1).eval(input)
-      if (aId == null || bids == null) null
-      else scoreSelf(aId.asInstanceOf[Long], bids.asInstanceOf[ArrayData])
+  override def eval(input: InternalRow): Any = {
+    val vs = children.map(_.eval(input))
+    if (vs.contains(null)) null
+    else score(vs(0).asInstanceOf[Long], vs(1).asInstanceOf[ArrayData],
+      vs(2).asInstanceOf[Double], vs(3).asInstanceOf[ArrayData])
   }
 
-  /** Self-join scoring: the probe vector is the packed corpus row of
-    * `aId` (bit-identical elements/norm to the column values — packed
-    * from the same relation). */
-  def scoreSelf(aId: Long, bids: ArrayData): ArrayData = {
-    val p = packed.value
-    val ai = p.indexOf(aId)
-    require(ai >= 0, s"graft_score_block: probe id $aId not in the packed corpus")
-    scoreLoop(p, VecKernel.widen(p.floats, p.doubles, p.off(ai), p.len(ai)),
-      p.norms(ai), aId, bids)
-  }
-
-  @transient private lazy val probeIsFloat = children(0).dataType match {
+  @transient private lazy val probeIsFloat = children(1).dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
 
-  /** Cross-corpus scoring: probe vector rides the row (the reference is
-    * the packed side). Widens the probe once per call, so the inner loop
-    * reads primitive arrays on both sides. */
-  def scoreCross(av: ArrayData, an: Double, bids: ArrayData): ArrayData =
-    scoreLoop(packed.value, VecKernel.widen(av, probeIsFloat), an, 0L, bids)
+  // the candidate union's visited marks: this row's candidates carry the
+  // current stamp. Per expression copy, so per task (each task
+  // deserializes its own), never shared through the broadcast value
+  @transient private lazy val seen = new Array[Int](index.value.vectors.n)
+  @transient private var stamp = 0
 
-  /** The fused inner loop: for each block member, [[VecKernel.dot]],
-    * `cosine = dot / (an * bn)`, emit when `cosine >= threshold`.
-    * `aId` drives the mode's membership rule: SelfUnprobed keeps only
-    * doc_b > aId (the a<b contract), SelfProbed skips doc_b == aId
-    * (both orientations kept for the caller's canonicalize), Cross
-    * keeps every member. */
-  private def scoreLoop(p: PackedVectors, a: Array[Double], an: Double, aId: Long,
-      bids: ArrayData): ArrayData = {
-    val m = bids.numElements()
-    var out: Array[Any] = null
-    var k = 0
-    var i = 0
-    while (i < m) {
-      val bId = bids.getLong(i)
-      val keep =
-        if (mode == SelfUnprobed) bId > aId
-        else if (mode == SelfProbed) bId != aId
-        else true
-      if (keep) {
-        val bi = p.indexOf(bId)
-        require(bi >= 0, s"graft_score_block: block id $bId not in the packed corpus")
-        val c = VecKernel.dot(a, p.floats, p.doubles, p.off(bi), p.len(bi)) /
-          (an * p.norms(bi))
-        if (c >= threshold) {
-          if (out == null) out = new Array[Any](m)
-          out(k) = new GenericInternalRow(Array[Any](bId, c))
-          k += 1
+  /** One probe row: the distinct union of its blocks, each candidate
+    * scored once when first seen, then the mode's output. */
+  def score(aKey: Long, av: ArrayData, an: Double, probes: ArrayData): ArrayData = {
+    val ix = index.value
+    val p = ix.vectors
+    val a = VecKernel.widen(av, probeIsFloat)
+    if (stamp == Int.MaxValue) { java.util.Arrays.fill(seen, 0); stamp = 0 }
+    stamp += 1
+    val cap = if (mode == TopK) math.min(k, p.n) else 16
+    var outIdx = new Array[Int](cap)
+    var outCos = new Array[Double](cap)
+    var m = 0
+    var t = 0
+    while (t < math.min(probes.numElements(), ix.tables)) {
+      val bs = if (probes.isNullAt(t)) null else probes.getArray(t)
+      var q = 0
+      while (bs != null && q < bs.numElements()) {
+        val j = if (bs.isNullAt(q)) -1 else ix.block(t, bs.getLong(q))
+        var r = if (j < 0) 0 else ix.blockStart(j)
+        val end = if (j < 0) 0 else ix.blockEnd(j)
+        while (r < end) {
+          val i = ix.member(r)
+          val id = p.ids(i)
+          if (seen(i) != stamp && (mode match {
+              case SelfUnprobed => id > aKey
+              case Cross => true
+              case _ => id != aKey
+            })) {
+            val c = VecKernel.dot(a, p.floats, p.doubles, p.off(i), p.len(i)) / (an * p.norms(i))
+            if (mode == TopK) {
+              // sorted insertion into the k best so far
+              var at =
+                if (m < cap) { m += 1; m - 1 }
+                else if (better(c, i, outCos(cap - 1), outIdx(cap - 1))) cap - 1
+                else -1
+              while (at > 0 && better(c, i, outCos(at - 1), outIdx(at - 1))) {
+                outCos(at) = outCos(at - 1); outIdx(at) = outIdx(at - 1); at -= 1
+              }
+              if (at >= 0) { outCos(at) = c; outIdx(at) = i }
+            } else if (c >= threshold) {
+              if (m == outIdx.length) {
+                outIdx = java.util.Arrays.copyOf(outIdx, 2 * m)
+                outCos = java.util.Arrays.copyOf(outCos, 2 * m)
+              }
+              outIdx(m) = i; outCos(m) = c; m += 1
+            }
+          }
+          seen(i) = stamp
+          r += 1
         }
+        q += 1
       }
-      i += 1
+      t += 1
     }
-    if (out == null) ScoreBucketBlock.empty
-    else new GenericArrayData(if (k == out.length) out else java.util.Arrays.copyOf(
-      out.asInstanceOf[Array[AnyRef]], k).asInstanceOf[Array[Any]])
+    if (m == 0) empty
+    else new GenericArrayData(Array.tabulate[Any](m)(x =>
+      new GenericInternalRow(Array[Any](p.ids(outIdx(x)), outCos(x)))))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("fusedScore", this, classOf[ScoreBucketBlock].getName)
     val gens = children.map(_.genCode(ctx))
-    val call = mode match {
-      case Cross => s"$ref.scoreCross(${gens(0).value}, ${gens(1).value}, ${gens(2).value})"
-      case _ => s"$ref.scoreSelf(${gens(0).value}, ${gens(1).value})"
-    }
     val nullChecks = gens.filter(_.isNull != FalseLiteral).map(g => s"${g.isNull}")
     val anyNull = if (nullChecks.isEmpty) "false" else nullChecks.mkString(" || ")
     ev.copy(code = code"""
       ${gens.map(_.code).mkString("\n")}
       boolean ${ev.isNull} = $anyNull;
       org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-      if (!${ev.isNull}) { ${ev.value} = $call; }
+      if (!${ev.isNull}) {
+        ${ev.value} = $ref.score(${gens.map(_.value).mkString(", ")});
+      }
     """)
   }
 
@@ -303,13 +327,23 @@ case class ScoreBucketBlock(children: Seq[Expression],
 }
 
 object ScoreBucketBlock {
+  /** Cross-corpus: emit every passing candidate. */
+  val Cross = 0
   /** Probed self-join: emit both orientations of every passing pair
-    * except the self pair (caller canonicalizes with least/greatest). */
+    * except the self pair (the caller canonicalizes with least/greatest). */
   val SelfProbed = 1
   /** Unprobed self-join: emit only doc_b > doc_a (the a<b contract). */
   val SelfUnprobed = 2
-  /** Cross-corpus: emit every passing block member. */
-  val Cross = 0
+  /** Top-k: emit the k best candidates other than the probe's own id,
+    * best first, with no threshold. */
+  val TopK = 3
+
+  /** (c1, row i1) ranks before (c2, row i2): larger cosine in Spark's
+    * double order, then the smaller packed row, i.e. the smaller id. */
+  private def better(c1: Double, i1: Int, c2: Double, i2: Int): Boolean = {
+    val cmp = SQLOrderingUtil.compareDoubles(c1, c2)
+    cmp > 0 || cmp == 0 && i1 < i2
+  }
 
   private val empty: ArrayData = new GenericArrayData(Array.empty[Any])
 }

@@ -5,25 +5,26 @@ import org.apache.spark.sql.functions._
 
 /** Reference-side scaling probe for d15's `semanticDecontam` in its
   * LSH-bucketed scale configuration (adaptive bits/tables, full H1 +
-  * auto-H2) — OPTIMIZATION_r21 "Not yet optimized" #1: the cross-corpus
-  * tier shares cosineDuplicates' per-table broadcast-join union, and its
-  * broadcast side is the REFERENCE corpus. Decontamination references
-  * are usually broadcast-scale by construction (eval/benchmark sets),
-  * but dedup-against-another-corpus style references are not — once the
-  * reference outgrows the planner's broadcast threshold EVERY one of the
-  * nTables branches degrades to a shuffle join whose a-side exchange
-  * carries the probe-exploded corpus VECTOR payload (the exact d4 cliff
-  * class, D4ScaleProbe round 21). This probe measures that transition on
-  * the reference axis: corpus FIXED at 10× (20,000 vectors — the axis d4
+  * auto-H2). The cross-corpus tier shares cosineDuplicates' fused LSH
+  * core, and its broadcast is the REFERENCE corpus, packed with its
+  * (table, bucket) blocks. Decontamination references are usually
+  * broadcast-scale by construction (eval/benchmark sets), but
+  * dedup-against-another-corpus style references are not: once the
+  * reference outgrows `spark.graft.lsh.broadcastBudgetBytes` the
+  * composite-key join takes over, and before the fused core every one
+  * of the per-table union's nTables branches degraded to a shuffle join
+  * past the planner's broadcast threshold (the d4 cliff class,
+  * D4ScaleProbe round 21). This probe measures the reference axis:
+  * corpus FIXED at 10× (20,000 vectors — the axis d4
   * already probed), reference scaled 1×/10×/100× as DISJOINT
   * signed-permutation copies (cross-copy cosines at the random baseline,
   * so true contamination pairs scale ×k — the clean denominator).
   *
   * The adaptive config is sized from the CORPUS side (10 bits / auto-H2
   * tables at 20k vectors) and therefore CONSTANT across the reference
-  * points: what changes is only which side of the planner threshold the
-  * reference lands on (1×: ~0.6 MB broadcast; 10×: ~6 MB broadcast;
-  * 100×: ~55 MB — past the 10 MB default, the cliff point).
+  * points: what changes is only the reference's size against the
+  * planner threshold (1×: ~0.6 MB; 10×: ~6 MB; 100×: ~55 MB — past the
+  * 10 MB default, where the per-table union fell off its cliff).
   * Pass-2 of each point is the steady reading (ProbeHarness protocol).
   * One-off diagnostic, not a gate; results land in SCALING.md.
   * Usage: runMain graft.tools.D15ScaleProbe [refFactors…] (default 1 10 100);

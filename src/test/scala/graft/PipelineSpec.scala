@@ -22,6 +22,86 @@ class PipelineSpec extends AnyFunSuite {
     1L -> base, 2L -> base, 3L -> nearDup, 4L -> unrelated,
     5L -> "short text", 6L -> "short text")
 
+  /** A test-local copy of the per-table union the fused LSH core
+    * replaced: one bucket join per table over (vec_id, embedding), the
+    * union scored by the same arithmetic, deduped across tables, and for
+    * top-k cut by the rank window. The core's rows must equal these. */
+  private object PerTableUnion {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.expressions.Window
+    private def planes(dim: Int, bits: Int, table: Int): Seq[Seq[Double]] = {
+      val rnd = new scala.util.Random(42L + table * 7919) // Similarity's seed-42 planes
+      Seq.fill(bits)(Seq.fill(dim)(rnd.nextDouble() * 2 - 1))
+    }
+    private def sig(v: Column, p: Seq[Seq[Double]]): Column =
+      if (p.isEmpty) lit(0L)
+      else call_function("graft_lsh_sig", v, array(p.flatten.map(lit): _*), lit(p.size))
+    private def probesOf(v: Column, p: Seq[Seq[Double]], p1: Int, p2: Int): Column =
+      if (p.isEmpty) array(lit(0L))
+      else call_function("graft_lsh_probes", v, array(p.flatten.map(lit): _*), lit(p.size),
+        lit(p1), lit(p2))
+    private def side(df: DataFrame, id: String, v: String, n: String): DataFrame = {
+      graft.functions.expressions.GraftFunctions.init(df.sparkSession)
+      df.filter(call_function("graft_finite_norm", col("embedding")))
+        .select(col("vec_id").as(id), col("embedding").as(v),
+          Similarity.l2Norm(col("embedding")).as(n))
+    }
+    private def union(a: DataFrame, av: String, b: DataFrame, bv: String, dim: Int, bits: Int,
+        tables: Int, p1: Int, p2: Int): DataFrame = (0 until tables).map { t =>
+      val p = planes(dim, bits, t)
+      a.withColumn("bucket", explode(probesOf(col(av), p, p1, p2)))
+        .join(b.withColumn("bucket", sig(col(bv), p)), "bucket").drop("bucket")
+    }.reduce(_ unionByName _)
+
+    def topK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int, bits: Int, tables: Int,
+        probes: Int, probes2: Int): DataFrame = {
+      val scored0 = union(side(queries, "query_id", "qv", "qn"), "qv",
+          side(corpus, "neighbor_id", "cv", "cn"), "cv", dim, bits, tables, probes, probes2)
+        .filter(col("query_id") =!= col("neighbor_id"))
+        .withColumn("cosine", Similarity.dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
+        .select(col("query_id"), col("neighbor_id"), col("cosine"))
+      val scored = if (tables == 1) scored0 else scored0.dropDuplicates("query_id", "neighbor_id")
+      val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
+      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    }
+
+    /** cosineDuplicates (cross = false) or semanticDecontam (cross =
+      * true) at a resolved configuration. */
+    def pairs(probeRel: DataFrame, build: DataFrame, cross: Boolean, aId: String, bId: String,
+        threshold: Double, dim: Int, bits: Int, tables: Int, p1: Int, p2: Int): DataFrame = {
+      val probed = p1 > 0 || p2 > 0
+      val raw = union(side(probeRel, aId, "av", "an"), "av", side(build, bId, "bv", "bn"), "bv",
+        dim, bits, tables, p1, p2)
+      val members =
+        if (cross) raw
+        else if (!probed) raw.filter(col(aId) < col(bId))
+        else raw.filter(col(aId) =!= col(bId)).select(least(col(aId), col(bId)).as(aId),
+          greatest(col(aId), col(bId)).as(bId), col("av"), col("an"), col("bv"), col("bn"))
+      val c = Similarity.dot(col("av"), col("bv")) / (col("an") * col("bn"))
+      val scored = members.withColumn("cosine", c).filter(col("cosine") >= threshold)
+        .select(col(aId), col(bId),
+          (if (cross) round(col("cosine"), 6) else col("cosine")).as("cosine"))
+      if (tables == 1 && !probed) scored else scored.dropDuplicates(aId, bId)
+    }
+  }
+
+  /** `n` 64-d FLOAT vectors (ids 0..n-1) around 25 Gaussian centers. */
+  private def clusteredCorpus(n: Int, seed: Long): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    val centers = Array.fill(25)(Array.fill(64)(rnd.nextGaussian()))
+    (0 until n).map { i =>
+      (i.toLong, centers(i % 25).map(x => (x + 0.3 * rnd.nextGaussian()).toFloat).toSeq)
+    }.toDF("vec_id", "embedding")
+  }
+
+  /** The adaptive bit width `bits = -1` resolves to for `df`'s usable rows. */
+  private def adaptiveBits(df: org.apache.spark.sql.DataFrame): Int = {
+    graft.functions.expressions.GraftFunctions.init(spark)
+    val n = df.filter(call_function("graft_finite_norm", col("embedding"))).count()
+    math.max(2, math.ceil(math.log(math.max(n, 128L) / 32.0) / math.log(2.0)).toInt)
+  }
+
   test("graft_minhash: native signature ≡ relational minHashSignatures, bit for bit") {
     import spark.implicits._
     // edge shapes: empty text (one empty shingle), shorter-than-k (one
@@ -1552,6 +1632,107 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("lshTopK: fused core ≡ the per-table union + dedup + window, bit for bit, at 1 and 7 partitions") {
+    // The core ranks in-kernel; the rows must be the ones the per-table
+    // union, its cross-table dedup and the row_number() window gave:
+    // bits 8 / tables 8 / probes 1 (perfbench), e2's full H1 + H2 probing
+    // and the exhaustive config, FLOAT and DOUBLE corpora, queries 0..39
+    // outside the corpus and 40..59 inside it (self-match excluded).
+    // Ids 500..539 repeat the vectors of 100..139, so equal cosines tie
+    // and the rank falls to the smaller id.
+    val base = clusteredCorpus(500, 42)
+    val emb = base.unionByName(base.filter(col("vec_id").between(100, 139))
+      .withColumn("vec_id", col("vec_id") + 400L))
+    val embD = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    def multiset(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2)),
+        r.getInt(3)))
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def runs() = for {
+      c <- Seq(emb, embD)
+      (bits, tables, p1, p2) <- Seq((8, 8, 1, 0), (8, 8, 8, 28), (0, 1, 0, 0))
+    } yield {
+      val (qs, corpus) = (c.filter(col("vec_id") < 60), c.filter(col("vec_id") >= 40))
+      val got = multiset(Similarity.lshTopK(qs, corpus, k = 10, dim = 64, bits = bits,
+        tables = tables, probes = p1, probes2 = p2))
+      val want = multiset(PerTableUnion.topK(qs, corpus, 10, 64, bits, tables, p1, p2))
+      assert(got.nonEmpty && got === want, s"bits $bits tables $tables probes $p1/$p2")
+      got
+    }
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      val one = runs()
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      assert(runs() === one)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
+  }
+
+  test("cosineDuplicates and lshTopK: a repeated call on 1,000 vectors runs at most 4 jobs and compiles nothing") {
+    // perfbench's vectors op: a cached 1,000-vector 64-d clustered batch,
+    // the default adaptive cosineDuplicates and an 8-bit 8-table probed
+    // lshTopK. The fused core is one build-side collect plus the result's
+    // job; the per-table union it replaced ran 10–12 jobs per call and
+    // recompiled its per-table stages.
+    val vecs = clusteredCorpus(1000, 711).cache()
+    try {
+      assert(vecs.count() === 1000L)
+      val qs = vecs.filter(col("vec_id") % 40 === 0)
+      val calls = Seq[(String, () => Int)](
+        "cosineDuplicates" -> (() => Similarity.cosineDuplicates(vecs, 0.9, 64).collect().length),
+        "lshTopK" -> (() => Similarity.lshTopK(qs, vecs, 10, 64, bits = 8, tables = 8,
+          probes = 1).collect().length))
+      calls.foreach(_._2()) // warm-up: the sizing count, the first compiles
+      val profiler = graft.obs.GateProfiler.of(spark)
+      for ((name, call) <- calls) {
+        val (rows, prof) = profiler.profile(name)(call())
+        info(s"$name: $rows rows, ${prof.jobs} jobs, ${prof.codegenCompiles} compiles")
+        assert(rows > 0)
+        assert(prof.jobs <= 4, s"$name ran ${prof.jobs} Spark jobs")
+        assert(prof.codegenCompiles === 0, s"$name compiled ${prof.codegenCompiles} classes")
+      }
+    } finally vecs.unpersist()
+  }
+
+  test("minHashDuplicates: equal rows at 1 and 7 shuffle partitions with broadcast joins off") {
+    // candidatesFromSigs gathers each band bucket's ids with an UNSORTED
+    // collect_list, whose order follows the shuffle. With broadcast
+    // joins off and 7 partitions the lists really arrive in another
+    // order; the pair set and its Jaccards must not move.
+    // 400 docs of 40 words from a 300-word vocabulary; every 7th has a
+    // copy with one word changed
+    val rnd = new scala.util.Random(5)
+    val texts = (0 until 400).map(i => i.toLong -> Seq.fill(40)(s"w${rnd.nextInt(300)}"))
+    val withDups = docsDF((texts.map { case (i, ws) => i -> ws.mkString(" ") } ++
+      texts.filter(_._1 % 7 == 0).map { case (i, ws) =>
+        (i + 1000L) -> ws.updated(20, "x").mkString(" ") }): _*)
+    def multiset() = Dedup.minHashDuplicates(withDups, threshold = 0.7).collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val one = multiset()
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      val seven = multiset()
+      assert(one.nonEmpty && one === seven)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
+  }
+
   test("semanticDecontam: bucketed tier recalls the exhaustive pair set; removal flow") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") < 250)
@@ -2286,17 +2467,14 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cosineDuplicates: past-broadcast composite-key single-join path ≡ the per-table union path, bit for bit") {
-    // round 21 scale guard (VERDICT r20 #1): past the broadcast threshold
-    // the per-table union's nTables branches each degrade to a shuffle
-    // join — 2·nTables exchanges and corpus scans; the big path
-    // posexplodes the per-table buckets into ONE (table, bucket)-keyed
-    // join per side. Same hyperplanes, same signature/probe expressions
-    // → the candidate pair set is identical; scoring stays map-side and
-    // is deterministic per pair (dot sums index-ascending on both
-    // orientations) → the emitted (doc_a, doc_b, cosine) rows must match
-    // bit for bit. Force the big path via the broadcast threshold,
-    // compare against the default path on the same corpus — probed
-    // adaptive config AND the unprobed multi-table branch.
+    // The fused core serves every corpus within the broadcast budget,
+    // whatever the planner's broadcast threshold; the composite-key join
+    // (one (table, bucket)-keyed join per side) serves the rest. Same
+    // hyperplanes, same signature/probe expressions → the same candidate
+    // pairs; VecKernel's arithmetic on both → the same (doc_a, doc_b,
+    // cosine) rows bit for bit, equal also to a test-local copy of the
+    // per-table union they replaced — for the probed adaptive config AND
+    // the unprobed multi-table one.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -2305,33 +2483,34 @@ class PipelineSpec extends AnyFunSuite {
     def unprobedRun() = Similarity.cosineDuplicates(emb, threshold = 0.35,
       dim = 64, bits = -1, tables = 8, probes = 0, probes2 = 0)
     val (smallProbed, smallUnprobed) = (keyed(probedRun()), keyed(unprobedRun()))
-    // gate-scale plan witness: the default path must carry NO posexplode
-    // (the per-table union shape the bench measures is unchanged)
+    // below the 2,000-vector anchor the adaptive tables floor at 8 and
+    // probes = -1 is full Hamming-1 at the resolved width
+    val bits = adaptiveBits(emb)
+    assert(smallProbed === keyed(PerTableUnion.pairs(emb, emb, cross = false, "doc_a", "doc_b",
+      0.35, 64, bits, 8, bits, 0)))
+    assert(smallUnprobed === keyed(PerTableUnion.pairs(emb, emb, cross = false, "doc_a", "doc_b",
+      0.35, 64, bits, 8, 0, 0)))
+    // plan witness: the fused core — one kernel projection, no bucket join
     val smallPlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
-    assert(!smallPlan.contains("posexplode"),
-      "broadcast-scale corpus must keep the per-table union shape")
+    assert(smallPlan.contains("scorebucketblock") && !smallPlan.contains("join"),
+      "a corpus within the broadcast budget must take the fused core")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      // tier 2 (broadcast-metadata): the default 512 MB budget admits the
-      // test corpus, so the big path must be the broadcast-hash shape
+      // past the planner's threshold the budget still admits the corpus
       val bigPlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
-      assert(bigPlan.contains("posexplode"),
-        "past-broadcast corpus must engage the composite-bucket path")
-      assert(bigPlan.contains("broadcasthashjoin"),
-        "within the broadcast budget the big path must stay broadcast-hash")
+      assert(bigPlan.contains("scorebucketblock") && !bigPlan.contains("join"),
+        "past the planner's broadcast threshold the budget keeps the fused core")
       assert(smallProbed.nonEmpty)
       assert(keyed(probedRun()) === smallProbed)
       assert(smallUnprobed.nonEmpty)
       assert(keyed(unprobedRun()) === smallUnprobed)
-      // round 22: within the budget tier 2 is the FUSED scoring shape
-      // (ScoreBucketBlock against the PackedVectors broadcast — the
-      // equalities above pin it bit-for-bit)
-      assert(bigPlan.contains("scorebucketblock"),
-        "within the broadcast budget the big path must fuse scoring into the bucket join")
-      // tier 3 (composite-key sort-merge): force by zeroing the budget —
-      // same rows, bit for bit, with no broadcast in the candidate join
+      // composite-key sort-merge: force by zeroing the budget — same
+      // rows, bit for bit
       spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "0")
+      val compositePlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
+      assert(compositePlan.contains("posexplode") && !compositePlan.contains("scorebucketblock"),
+        "over budget the composite-key join must serve")
       assert(keyed(probedRun()) === smallProbed)
       assert(keyed(unprobedRun()) === smallUnprobed)
     } finally {
@@ -2341,14 +2520,11 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("semanticDecontam: past-broadcast reference single-join path ≡ the per-table union path, bit for bit") {
-    // round 21 (the cosineDuplicates guard applied to the cross-corpus
-    // tier, D15ScaleProbe): past the broadcast threshold the per-table
-    // union's nTables branches each shuffle the probe-exploded corpus
-    // vectors; the big path posexplodes into ONE (table, bucket)-keyed
-    // join — same hyperplanes, same signature/probe expressions, scoring
-    // map-side and deterministic per pair → bit-identical
-    // (doc_id, ref_id, cosine) rows. The d15 GATE is the exhaustive tier
-    // and never reaches the guard; this pins the LSH scale tier.
+    // The cosineDuplicates pin's contract on the cross-corpus Cross mode
+    // (the reference is the packed side): fused core ≡ composite-key
+    // join ≡ the per-table union, (doc_id, ref_id, cosine) rows bit for
+    // bit. The d15 GATE is the exhaustive config; this pins the LSH scale
+    // config.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") < 400)
     val ref = emb.filter(col("vec_id") >= 400)
@@ -2359,32 +2535,32 @@ class PipelineSpec extends AnyFunSuite {
     def unprobedRun() = Similarity.semanticDecontam(corpus, ref, threshold = 0.35,
       dim = 64, bits = -1, tables = 8, probes = 0, probes2 = 0)
     val (smallProbed, smallUnprobed) = (keyed(probedRun()), keyed(unprobedRun()))
-    // gate-scale plan witness: a broadcast-scale reference must keep the
-    // per-table union shape (no posexplode — the plan the bench measures)
+    // adaptive bits size from the corpus (probe) side
+    val bits = adaptiveBits(corpus)
+    assert(smallProbed === keyed(PerTableUnion.pairs(corpus, ref, cross = true, "doc_id", "ref_id",
+      0.35, 64, bits, 8, bits, 0)))
+    assert(smallUnprobed === keyed(PerTableUnion.pairs(corpus, ref, cross = true, "doc_id",
+      "ref_id", 0.35, 64, bits, 8, 0, 0)))
+    // plan witness: the fused core — one kernel projection, no bucket join
     val smallPlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
-    assert(!smallPlan.contains("posexplode"),
-      "broadcast-scale reference must keep the per-table union shape")
+    assert(smallPlan.contains("scorebucketblock") && !smallPlan.contains("join"),
+      "a reference within the broadcast budget must take the fused core")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      // tier 2 (broadcast-metadata): the default 512 MB budget admits the
-      // test reference, so the big path must be the broadcast-hash shape
       val bigPlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
-      assert(bigPlan.contains("posexplode"),
-        "past-broadcast reference must engage the composite-bucket path")
-      assert(bigPlan.contains("broadcasthashjoin"),
-        "within the broadcast budget the big path must stay broadcast-hash")
+      assert(bigPlan.contains("scorebucketblock") && !bigPlan.contains("join"),
+        "past the planner's broadcast threshold the budget keeps the fused core")
       assert(smallProbed.nonEmpty)
       assert(keyed(probedRun()) === smallProbed)
       assert(smallUnprobed.nonEmpty)
       assert(keyed(unprobedRun()) === smallUnprobed)
-      // round 22: within the budget tier 2 is the FUSED Cross-mode
-      // scoring shape (the equalities above pin it bit-for-bit)
-      assert(bigPlan.contains("scorebucketblock"),
-        "within the broadcast budget the big path must fuse scoring into the bucket join")
-      // tier 3 (composite-key sort-merge): force by zeroing the budget —
-      // same rows, bit for bit
+      // composite-key sort-merge: force by zeroing the budget — same
+      // rows, bit for bit
       spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "0")
+      val compositePlan = probedRun().queryExecution.executedPlan.toString.toLowerCase
+      assert(compositePlan.contains("posexplode") && !compositePlan.contains("scorebucketblock"),
+        "over budget the composite-key join must serve")
       assert(keyed(probedRun()) === smallProbed)
       assert(keyed(unprobedRun()) === smallUnprobed)
     } finally {
@@ -2396,8 +2572,8 @@ class PipelineSpec extends AnyFunSuite {
   test("fused LSH tier: DOUBLE vectors and INT ids take scorebucketblock ≡ per-table union; duplicate ids stay off it") {
     // the packed broadcast takes any integral id (as BIGINT, cast back)
     // and FLOAT or DOUBLE elements on both the packed and the Cross probe
-    // side, so these shapes score fused past the broadcast threshold and
-    // must equal the gate-scale per-table union row for row and in
+    // side, so these shapes score fused at any broadcast threshold and
+    // must equal the per-table union (test-local copy) row for row and in
     // schema. Duplicate ids cannot pack (a by-id lookup sees one copy):
     // they take the composite-key tier and keep the same pair set.
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -2418,8 +2594,22 @@ class PipelineSpec extends AnyFunSuite {
       df.collect().map(r => (r.get(0), r.get(1), r.getDouble(2))).toSet
     def fields(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => (r.get(0), r.get(1))).toSet
-    val small = runs.map(run => (rows(run()), fields(run())))
-    val smallDup = pairs(dups(dupIds))
+    // the references: the per-table union at the resolved adaptive config
+    // (tables floor at 8 below the anchor; full Hamming-1 at the width)
+    val (eBits, cBits, dBits) =
+      (adaptiveBits(emb), adaptiveBits(emb.filter(col("vec_id") < 400)), adaptiveBits(dupIds))
+    def unionOf(df: org.apache.spark.sql.DataFrame, bits: Int) = PerTableUnion.pairs(df, df,
+      cross = false, "doc_a", "doc_b", 0.35, 64, bits, 8, bits, 0)
+    val small = Seq(unionOf(dbl, eBits), unionOf(intIds, eBits),
+      PerTableUnion.pairs(emb.filter(col("vec_id") < 400), dbl.filter(col("vec_id") >= 400),
+        cross = true, "doc_id", "ref_id", 0.35, 64, cBits, 8, cBits, 0))
+      .map(ref => (rows(ref), fields(ref)))
+    val smallDup = pairs(unionOf(dupIds, dBits))
+    for ((run, (smallRows, smallFields)) <- runs.zip(small)) {
+      assert(rows(run()) === smallRows)
+      assert(fields(run()) === smallFields)
+    }
+    assert(pairs(dups(dupIds)) === smallDup)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
@@ -2532,17 +2722,24 @@ class PipelineSpec extends AnyFunSuite {
     // exercise the offsets (DotProduct's common-prefix rule needs true
     // lengths).
     import spark.implicits._
-    import graft.functions.expressions.PackedVectors
+    import graft.functions.expressions.LshIndex
     graft.functions.expressions.GraftFunctions.init(spark)
+    // the fused core's one collect, with one all-zero bucket table
+    def pack(df: org.apache.spark.sql.DataFrame, idCol: String, vecCol: String) =
+      LshIndex.collect(df, idCol, vecCol, array(lit(0L)), 1).map(_.vectors)
     val df = Seq(
       (7L, Array(0.25f, -1.5f, 3.0f)),
       (3L, Array(2.0f, 0.125f, -0.75f, 1.0f)), // ragged: len 4
       (11L, Array(-0.5f, 0.5f, 0.25f))
     ).toDF("vec_id", "embedding")
-    val p = PackedVectors.pack(df, "vec_id", "embedding").get
+    val p = pack(df, "vec_id", "embedding").get
     assert(p.ids.toSeq === Seq(3L, 7L, 11L)) // sorted by id
     assert(p.offs.toSeq === Seq(0, 4, 7, 10)) // true ragged lengths
-    assert(p.indexOf(7L) === 1 && p.indexOf(4L) === -1)
+    // the fused core's blocks: packed rows grouped by bucket, ascending
+    val ix = LshIndex(p, Array(Array(5L, 9L, 5L)))
+    def members(b: Long) = { val j = ix.block(0, b)
+      if (j < 0) Nil else (ix.blockStart(j) until ix.blockEnd(j)).map(r => p.ids(ix.member(r))) }
+    assert(members(5L) === Seq(3L, 11L) && members(9L) === Seq(7L) && members(4L) === Nil)
     val norms = df.select(col("vec_id"),
       sqrt(call_function("graft_dot", col("embedding"), col("embedding"))))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -2554,20 +2751,20 @@ class PipelineSpec extends AnyFunSuite {
     // doubles (FLOAT corpora stay 4 B/element), and since float → double
     // is exact their norms are the FLOAT corpus' norms bit for bit
     assert(p.floats != null && p.doubles == null)
-    val pInt = PackedVectors.pack(df.select(col("vec_id").cast("int").as("vec_id"),
+    val pInt = pack(df.select(col("vec_id").cast("int").as("vec_id"),
       col("embedding")), "vec_id", "embedding").get
     assert(pInt.ids.toSeq === p.ids.toSeq)
-    val pDbl = PackedVectors.pack(df.select(col("vec_id"),
+    val pDbl = pack(df.select(col("vec_id"),
       col("embedding").cast("array<double>").as("embedding")), "vec_id", "embedding").get
     assert(pDbl.floats == null && pDbl.doubles != null)
     assert(pDbl.norms.map(java.lang.Double.doubleToLongBits).toSeq ===
       p.norms.map(java.lang.Double.doubleToLongBits).toSeq)
     // contract declines: duplicate, null and non-integral ids
-    assert(PackedVectors.pack(df.union(df.limit(1)), "vec_id", "embedding").isEmpty)
-    assert(PackedVectors.pack(df.select(
+    assert(pack(df.union(df.limit(1)), "vec_id", "embedding").isEmpty)
+    assert(pack(df.select(
       when(col("vec_id") === 7L, lit(null)).otherwise(col("vec_id")).as("vec_id"),
       col("embedding")), "vec_id", "embedding").isEmpty)
-    assert(PackedVectors.pack(df.select(col("vec_id").cast("string").as("vec_id"),
+    assert(pack(df.select(col("vec_id").cast("string").as("vec_id"),
       col("embedding")), "vec_id", "embedding").isEmpty)
   }
 

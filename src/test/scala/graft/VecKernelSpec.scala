@@ -119,6 +119,37 @@ class VecKernelSpec extends AnyFunSuite {
     cents <- genMatrix(perSub.sum * subDim)
   } yield (cents, perSub.scanLeft(0)(_ + _).toArray, nSub * subDim)
 
+  /** A packed corpus of distinct ids, 1–3 tables of buckets over it:
+    * what the fused LSH core broadcasts (vectors may carry null elements
+    * and be ragged or empty, so norms may be 0). */
+  private val genIndex: Gen[LshIndex] = for {
+    isFloat <- Gen.oneOf(true, false)
+    n <- Gen.choose(0, 6)
+    ids <- Gen.pick(n, 0L to 9L).map(_.toSeq.sorted)
+    vecs <- Gen.listOfN(n, genVec(Gen.choose(0, 5), Gen.const(isFloat), nullable = false))
+    tables <- Gen.choose(1, 3)
+    sigs <- Gen.listOfN(tables, Gen.listOfN(n, Gen.choose(0L, 3L)))
+  } yield {
+    val lens = vecs.map(_.elems.size)
+    val offs = lens.scanLeft(0)(_ + _).toArray
+    val flat = vecs.flatMap(v => v.elems.indices.map(v.read))
+    val floats = if (isFloat) flat.map(_.toFloat).toArray else null
+    val doubles = if (isFloat) null else flat.toArray
+    val norms = Array.tabulate(n)(i =>
+      math.sqrt(VecKernel.sumSq(floats, doubles, offs(i), lens(i))))
+    LshIndex(new PackedVectors(ids.toArray, offs, floats, doubles, norms),
+      sigs.map(_.toArray).toArray)
+  }
+  /** Per-table probe-bucket lists, with null lists and null buckets. */
+  private val genBuckets: Gen[Any] = Gen.choose(0, 4).flatMap(Gen.listOfN(_,
+      Gen.frequency(1 -> Gen.const(null), 9 -> Gen.choose(-1L, 4L).map(Long.box))))
+    .map(bs => new GenericArrayData(bs.toArray[Any]))
+  private val genProbes: Gen[Any] = for {
+    isNull <- Gen.frequency(1 -> true, 9 -> false)
+    lists <- Gen.choose(0, 4).flatMap(Gen.listOfN(_,
+      Gen.frequency(1 -> Gen.const(null), 6 -> genBuckets)))
+  } yield if (isNull) null else new GenericArrayData(lists.toArray[Any])
+
   private val cases: Seq[(String, Gen[Case])] = Seq(
     "DotProduct" -> (for { a <- genVec(); b <- genVec() } yield
       caseOf(Seq(a.dt -> a.data, b.dt -> b.data))(c => DotProduct(c(0), c(1)))),
@@ -148,6 +179,19 @@ class VecKernelSpec extends AnyFunSuite {
     } yield caseOf(Seq(ArrayType(IntegerType) ->
         (if (codesNull) null else new GenericArrayData(codes.toArray[Any])),
       lut.dt -> lut.data))(c => AdcSum(c(0), c(1)))),
+    "ScoreBucketBlock" -> (for {
+      index <- genIndex
+      mode <- Gen.oneOf(ScoreBucketBlock.Cross, ScoreBucketBlock.SelfProbed,
+        ScoreBucketBlock.SelfUnprobed, ScoreBucketBlock.TopK)
+      k <- Gen.choose(1, 4)
+      threshold <- Gen.oneOf(-1.0, 0.0, 0.5, Double.NaN)
+      aKey <- Gen.frequency(1 -> Gen.const(null), 9 -> Gen.choose(0L, 9L).map(Long.box))
+      av <- genVec(Gen.choose(0, 5))
+      an <- Gen.frequency(1 -> Gen.const(null), 9 -> genDouble.map(Double.box))
+      probes <- genProbes
+    } yield caseOf(Seq(LongType -> aKey, av.dt -> av.data, DoubleType -> an,
+        ArrayType(ArrayType(LongType)) -> probes))(c =>
+      ScoreBucketBlock(c, spark.sparkContext.broadcast(index), threshold, k, mode))),
     "MmrGreedy" -> (for {
       short <- genMmrShortlist; k <- Gen.choose(1, 4); lambda <- Gen.oneOf(0.0, 0.3, 0.7, 1.0)
     } yield caseOf(Seq(short))(c => MmrGreedy(c.head, k, lambda))))
