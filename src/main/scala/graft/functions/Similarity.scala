@@ -14,15 +14,20 @@ import org.apache.spark.sql.graft.ColumnOf
   * [[dot]]/[[l2Norm]]/[[cosine]] build it directly, so they are also the
   * session-free public API.
   *
-  * Two tiers:
-  *  - [[bruteForceTopK]]: exact cosine top-k. The baseline; the join is a
-  *    full cross product — only for small query sets or verification.
-  *  - [[lshTopK]]: random-hyperplane LSH. Each vector gets a B-bit bucket
-  *    signature (sign of dot with B fixed hyperplanes); candidates share a
-  *    bucket in at least one of `tables` independent tables, and each is
-  *    scored once ([[lshCore]]). The cross product shrinks by ~2^B per
-  *    table — the 100 TB path, at the cost of recall (tunable via
-  *    B/tables).
+  * Every top-k form is one core: a candidate source, a scorer, one cut.
+  *  - Candidates: all pairs; the corpus rows homed in each query's nProbe
+  *    nearest IVF cells ([[Cells]], in memory, or read back from a saved
+  *    index); shared LSH buckets ([[lshCore]]); a projected shortlist
+  *    ([[projectedTopK]]).
+  *  - Scorers: exact cosine, SQ8 ([[sq8Scored]]) and PQ-ADC
+  *    ([[adcScored]]), each one body across its exhaustive and IVF forms.
+  *    A source that yields a pair more than once collapses the copies to
+  *    their max cosine ([[scorePairs]]).
+  *  - Cut: [[rankTopK]], the one rank window (cosine desc, then the
+  *    smaller neighbor id). The quantized tiers reach it through
+  *    [[finishTopK]], which can put an include-ties shortlist and an
+  *    exact re-rank ([[rerankExact]]) in front of it; the fused LSH
+  *    kernel cuts in place by the same order.
   */
 object Similarity {
 
@@ -54,30 +59,6 @@ object Similarity {
     countCache(df.sparkSession,
       s"n|${df.queryExecution.logical.semanticHash()}")(df.count())
 
-  /** Dirty-vector contract (the embedding-side twin of Dedup's null-text
-    * policy): a vector with no defined direction — NULL, a NaN or
-    * ±Infinity element, or zero norm — is never trained on, never emitted
-    * as a neighbor or duplicate, and never matches as a query. At 100 TB
-    * a failed encoder emitting zeros or NaNs is a certainty, and without
-    * the guard ONE such row is fatal, not just wrong: Spark 4's ANSI mode
-    * raises DIVIDE_BY_ZERO on the zero-norm cosine (the whole job dies
-    * hours in), sq8's code cast raises CAST_OVERFLOW on a NaN scale, and
-    * with ANSI off the failure turns silent — Spark SQL orders NaN ABOVE
-    * every double and `NaN >= threshold` is TRUE, so a zero-norm vector
-    * takes rank 1 of EVERY query's top-k and the threshold tiers emit it
-    * as a "duplicate" of its entire candidate bucket. Trainers need the
-    * guard independently: max() also treats NaN as largest, so one NaN
-    * element turns sq8Bounds' scales NaN (every corpus code overflows)
-    * and a dirty seed or Lloyd member poisons a k-means/PQ centroid.
-    *
-    * ONE norm predicate catches every class — the norm aggregates every
-    * element, so NULL vector → null norm, NaN element → NaN norm, ±Inf
-    * element → Inf norm, zero vector → 0 — and `0 < norm < +Inf` rejects
-    * all of them (NaN fails `< +Inf`: Spark orders NaN above it; null
-    * fails the WHERE). Null ELEMENTS are deliberately NOT dirty:
-    * graft_dot reads them as 0 (its dense-by-contract rule), so a
-    * null-padded vector behaves as its zero-filled twin throughout.
-    * DirtyVectorSpec pins the contract end to end. */
   /** Widen a SMALL relation that feeds a quadratic or exploding scan
     * (the brute-force cross join, the PQ broadcast-LUT join): see
     * [[graft.util.Widen]] for the mechanism and its three scale guards
@@ -107,6 +88,30 @@ object Similarity {
   // already bounds small; the un-widened case costs a serial quadratic
   // scan. Cheap-and-rare beats wrong-and-measured.
 
+  /** Dirty-vector contract (the embedding-side twin of Dedup's null-text
+    * policy): a vector with no defined direction — NULL, a NaN or
+    * ±Infinity element, or zero norm — is never trained on, never emitted
+    * as a neighbor or duplicate, and never matches as a query. At 100 TB
+    * a failed encoder emitting zeros or NaNs is a certainty, and without
+    * the guard ONE such row is fatal, not just wrong: Spark 4's ANSI mode
+    * raises DIVIDE_BY_ZERO on the zero-norm cosine (the whole job dies
+    * hours in), sq8's code cast raises CAST_OVERFLOW on a NaN scale, and
+    * with ANSI off the failure turns silent — Spark SQL orders NaN ABOVE
+    * every double and `NaN >= threshold` is TRUE, so a zero-norm vector
+    * takes rank 1 of EVERY query's top-k and the threshold tiers emit it
+    * as a "duplicate" of its entire candidate bucket. Trainers need the
+    * guard independently: max() also treats NaN as largest, so one NaN
+    * element turns sq8Bounds' scales NaN (every corpus code overflows)
+    * and a dirty seed or Lloyd member poisons a k-means/PQ centroid.
+    *
+    * ONE norm predicate catches every class — the norm aggregates every
+    * element, so NULL vector → null norm, NaN element → NaN norm, ±Inf
+    * element → Inf norm, zero vector → 0 — and `0 < norm < +Inf` rejects
+    * all of them (NaN fails `< +Inf`: Spark orders NaN above it; null
+    * fails the WHERE). Null ELEMENTS are deliberately NOT dirty:
+    * graft_dot reads them as 0 (its dense-by-contract rule), so a
+    * null-padded vector behaves as its zero-filled twin throughout.
+    * DirtyVectorSpec pins the contract end to end. */
   private def usableVec(v: Column): Column =
     call_function("graft_finite_norm", v)
   /** [[usableVec]] applied to a raw (id, vec) relation — the entry guard
@@ -120,36 +125,99 @@ object Similarity {
   private def usable(df: DataFrame, vecCol: String): DataFrame =
     df.filter(usableVec(col(vecCol)))
 
+  /** The query side of every top-k tier: the usable rows as (query_id,
+    * qv, qn) plus the scorer's `extra` columns over `vecCol`. Norms are
+    * per side (O(|q|+|c|) dots), never per pair. */
+  private def querySide(queries: DataFrame, idCol: String, vecCol: String,
+      extra: Column*): DataFrame =
+    usable(queries, vecCol).select(Seq(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      l2Norm(col(vecCol)).as("qn")) ++ extra: _*)
+
+  /** The exact cosine of a (qv, qn) × (cv, cn) candidate row. */
+  private def exactCosine: Column = dot(col("qv"), col("cv")) / (col("qn") * col("cn"))
+
+  /** Scores candidate rows: self-matches dropped, then (query_id,
+    * neighbor_id, cosine), the vectors projected away before any
+    * exchange (the rank window repartitions its whole input on query_id;
+    * carrying the vectors through it cost ~2 GB of shuffle at the 2,000²
+    * dim-64 e16 scale). `copies`: the source may yield a pair more than
+    * once (soft IVF assignment, a stream-appended index), and the copies
+    * collapse to their max cosine before the cut, so one neighbor never
+    * takes two ranks. Copies of one vector score bit-identically; among
+    * differing stored versions a stale one never outranks the best. */
+  private def scorePairs(pairs: DataFrame, score: Column, copies: Boolean): DataFrame = {
+    val scored = pairs.filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), score.as("cosine"))
+    if (!copies) scored
+    else scored.groupBy(col("query_id"), col("neighbor_id")).agg(max(col("cosine")).as("cosine"))
+  }
+
+  /** The one top-k cut: per query, `row_number()` over (cosine desc,
+    * neighbor_id), so exact ties go to the smaller id, kept while ≤ k.
+    * Returns (query_id, neighbor_id, cosine, rank). */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+  }
+
+  /** The end of every quantized tier: `rerank` ≤ 0 cuts the quantized
+    * scores as they are; `rerank` > 0 keeps the top rerank·k with the
+    * boundary tie group ([[quantShortlist]]) and lets the exact cosine
+    * over `vectors` decide ([[rerankExact]]). `vectors` is read only
+    * then. */
+  private def finishTopK(scored: DataFrame, k: Int, rerank: Int, queries: DataFrame,
+      vectors: => DataFrame, idCol: String, vecCol: String): DataFrame =
+    if (rerank <= 0) rankTopK(scored, k)
+    else rerankExact(quantShortlist(scored, k * rerank), queries, vectors, k, idCol, vecCol)
+
+  /** The IVF candidate source: each query meets the corpus rows homed in
+    * its `nProbe` nearest cells of `cents`. Every corpus row has `m`
+    * homes ([[coarseAssigned]]), so m > 1 yields copies. */
+  private case class Cells(cents: DataFrame, nProbe: Int, m: Int) {
+    def probe(q: DataFrame, keep: Column*): DataFrame = probeCentroids(q, cents, nProbe, keep: _*)
+    def homes(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+      coarseAssigned(corpus, cents, m, idCol, vecCol)
+  }
+
+  /** [[Cells]] over the memoized centroids of the FULL corpus (training
+    * is probe-independent). */
+  private def cells(corpus: DataFrame, nCentroids: Int, nProbe: Int, nAssign: Int,
+      lloydIters: Int, idCol: String, vecCol: String): Cells =
+    Cells(centroidsCached(corpus, nCentroids, idCol, vecCol, lloydIters), nProbe,
+      homeCount(nAssign, nCentroids))
+
+  /** Homes per corpus row: `nAssign` clamped to [1, nCentroids]. */
+  private def homeCount(nAssign: Int, nCentroids: Int): Int =
+    math.min(math.max(nAssign, 1), nCentroids)
+
+  /** The exact scorer, one body for [[bruteForceTopK]] and [[ivfTopK]].
+    * All pairs: the planner broadcasts the corpus (BuildRight) and
+    * streams the queries, so the scan's parallelism is the query side's
+    * partition count, which is widened (see [[widened]] and the contract
+    * note beside it: unconditional by measurement). Cells: the probe
+    * rows meet the corpus homes in one keyed join. */
+  private def exactScored(queries: DataFrame, corpus: DataFrame, cells: Option[Cells],
+      idCol: String, vecCol: String): DataFrame = {
+    useNative(queries)
+    val q = querySide(queries, idCol, vecCol)
+    val c = Seq(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), l2Norm(col(vecCol)).as("cn"))
+    val pairs = cells match {
+      case None => widened(q).crossJoin(usable(corpus, vecCol).select(c: _*))
+      case Some(ix) => ix.probe(q, col("query_id"), col("qv"), col("qn"))
+        .join(ix.homes(usable(corpus, vecCol), idCol, vecCol)
+          .select(c :+ col("centroid_id"): _*), "centroid_id")
+    }
+    scorePairs(pairs, exactCosine, cells.exists(_.m > 1))
+  }
+
   /** Exact top-k cosine neighbors for each query vector.
     * queries/corpus: (idCol, vecCol). Returns (query_id, neighbor_id,
     * cosine, rank) with rank 1..k, self-matches excluded.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    useNative(queries)
-    // norms are per-vector, so compute them per SIDE (O(|q|+|c|) dots)
-    // before the join rather than per pair (O(|q|*|c|) extra dots);
-    // dirty rows drop per the [[usableVec]] contract
-    val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
-    val c = usable(corpus, vecCol).select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("cv"), l2Norm(col(vecCol)).as("cn"))
-    // the vectors are projected away BEFORE the rank window: the window
-    // exchange repartitions its whole input on query_id, and carrying
-    // qv/cv through it costs O(|q|·|c| · vector width) shuffle bytes —
-    // ~2 GB at the 2,000² dim-64 e16 scale — for columns the ranking
-    // never reads. Scoring is map-side on the codegen'd cross-join scan.
-    // the planner broadcasts the corpus side (BuildRight) and streams q:
-    // scan parallelism = q's partition count — widen it (see [[widened]]
-    // and the contract note above it: unconditional by measurement)
-    val scored = widened(q).crossJoin(c)
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    rankTopK(exactScored(queries, corpus, None, idCol, vecCol), k)
 
   /** Mutual k-NN graph over the corpus — the local-density clustering /
     * manifold-learning primitive: an undirected edge (a, b) exists iff
@@ -164,12 +232,8 @@ object Similarity {
     * corpus scale); the mutual join is |corpus|·k vs |corpus|·k,
     * hash-keyed on the pair. */
   def mutualKnnGraph(corpus: DataFrame, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val knn = bruteForceTopK(corpus, corpus, k, idCol, vecCol)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .localCheckpoint(true)
-    mutualOf(knn)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    mutualOf(bruteForceTopK(corpus, corpus, k, idCol, vecCol))
 
   /** IVF-backed approximate tier of [[mutualKnnGraph]] — the corpus-scale
     * path: candidate neighbor lists come from [[ivfTopK]] (centroid-
@@ -188,13 +252,8 @@ object Similarity {
     * Returns (a, b, cosine 6 dp), a < b. */
   def mutualKnnGraphIvf(corpus: DataFrame, k: Int, nCentroids: Int,
       nProbe: Int = 2, nAssign: Int = 1,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val knn = ivfTopK(corpus, corpus, k, nCentroids, nProbe,
-        idCol, vecCol, nAssign = nAssign)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .localCheckpoint(true)
-    mutualOf(knn)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    mutualOf(ivfTopK(corpus, corpus, k, nCentroids, nProbe, idCol, vecCol, nAssign = nAssign))
 
   /** [[mutualKnnGraph]] with [[projectedTopK]] candidate lists — the
     * tier that MEASURED best on the near-isotropic synthetic corpus
@@ -204,15 +263,15 @@ object Similarity {
     * semi-join; (a, b, cosine 6 dp), a < b. */
   def mutualKnnGraphProjected(corpus: DataFrame, k: Int, outDim: Int = 32,
       shortlist: Int = -1,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val knn = projectedTopK(corpus, corpus, k, outDim, shortlist,
-        idCol = idCol, vecCol = vecCol)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-      .localCheckpoint(true)
-    mutualOf(knn)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    mutualOf(projectedTopK(corpus, corpus, k, outDim, shortlist, idCol = idCol, vecCol = vecCol))
 
-  private def mutualOf(knn: DataFrame): DataFrame = {
+  /** The mutual edges of a corpus-vs-corpus top-k frame. Its (query,
+    * neighbor, cosine) rows are materialized once, because the semi-join
+    * reads them on both sides. */
+  private def mutualOf(topK: DataFrame): DataFrame = {
+    val knn = topK.select(col("query_id"), col("neighbor_id"), col("cosine"))
+      .localCheckpoint(true)
     val rev = knn.select(col("neighbor_id").as("query_id"),
       col("query_id").as("neighbor_id"))
     knn.join(rev, Seq("query_id", "neighbor_id"), "left_semi")
@@ -552,11 +611,9 @@ object Similarity {
         }
         val scored = members.select(col(aId), col(bId),
           (dot(col("av"), col("bv")) / (col("an") * col("bn"))).as("cosine"))
-        if (mode == TopK) {
-          val w = Window.partitionBy(aId).orderBy(desc("cosine"), col(bId))
-          scored.dropDuplicates(aId, bId).withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= k)
-        } else {
+        // top-k mode names its sides query_id / neighbor_id
+        if (mode == TopK) rankTopK(scored.dropDuplicates(aId, bId), k)
+        else {
           val passing = scored.filter(col("cosine") >= threshold)
           (if (mode != SelfProbed) passing
            else passing.select(least(col(aId), col(bId)).as(aId),
@@ -739,11 +796,7 @@ object Similarity {
     // exchange ships real bytes for parallelism the assignment stage
     // didn't lack; the flagged stages are elsewhere (cluster-size skew
     // in the pair join, bounded by maxClusterSize).
-    val vs = usable(vectors, vecCol)
-    val assigned0 =
-      if (m == 1) assignTo(vs, cents, idCol, vecCol)
-      else assignTopM(vs, cents, idCol, vecCol, m)
-    val assigned = assigned0
+    val assigned = coarseAssigned(usable(vectors, vecCol), cents, m, idCol, vecCol)
       .select(col(idCol).as("id"), col(vecCol).as("v"),
         l2Norm(col(vecCol)).as("n"), col("centroid_id"))
     val small = assigned.groupBy("centroid_id")
@@ -1001,17 +1054,6 @@ object Similarity {
       .select((idCol +: carried :+ "centroid_id").map(col): _*)
   }
 
-  /** IVF coarse-quantizer centroids: deterministic hash-ordered sample of
-    * nCentroids vectors, refined by `lloydIters` Lloyd steps (assign all
-    * vectors, recompute element-wise means). Returns (cid, centroid).
-    * Each Lloyd pass explodes |corpus|×dim rows once at INDEX-BUILD time —
-    * linear, shuffle-partitioned, amortized over every later probe; extra
-    * iterations tighten clusters (better recall at the SAME nProbe cost)
-    * without touching the probe path. Intermediate centroid tables are
-    * materialized eagerly (localCheckpoint — the deterministic-lifecycle
-    * idiom) so the plan does not nest one crossJoin+agg per iteration.
-    * A cluster that loses every member simply drops out of the table
-    * (standard Lloyd-on-sample behavior; k is an upper bound). */
   /** Checkpointed [[ivfCentroids]], memoized per (session, corpus plan,
     * config) — training is deterministic, so every tier probing the same
     * corpus at the same quantizer config (e.g. IVF-flat and IVF-SQ8 side
@@ -1030,6 +1072,17 @@ object Similarity {
       s"ivf|${corpus.queryExecution.logical.semanticHash()}|$idCol|$vecCol|$nCentroids|$lloydIters")(
       ivfCentroids(corpus, nCentroids, idCol, vecCol, lloydIters).localCheckpoint(true))
 
+  /** IVF coarse-quantizer centroids: deterministic hash-ordered sample of
+    * nCentroids vectors, refined by `lloydIters` Lloyd steps (assign all
+    * vectors, recompute element-wise means). Returns (cid, centroid).
+    * Each Lloyd pass explodes |corpus|×dim rows once at INDEX-BUILD time —
+    * linear, shuffle-partitioned, amortized over every later probe; extra
+    * iterations tighten clusters (better recall at the SAME nProbe cost)
+    * without touching the probe path. Intermediate centroid tables are
+    * materialized eagerly (localCheckpoint — the deterministic-lifecycle
+    * idiom) so the plan does not nest one crossJoin+agg per iteration.
+    * A cluster that loses every member simply drops out of the table
+    * (standard Lloyd-on-sample behavior; k is an upper bound). */
   def ivfCentroids(vectors0: DataFrame, nCentroids: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       lloydIters: Int = 1): DataFrame = {
@@ -1148,16 +1201,12 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       lloydIters: Int = 1, nAssign: Int = 1): Unit = {
     useNative(corpus)
-    val m = math.min(math.max(nAssign, 1), nCentroids)
+    val m = homeCount(nAssign, nCentroids)
     val cents = ivfCentroids(corpus, nCentroids, idCol, vecCol, lloydIters).cache()
     try {
       // dirty rows are not indexed ([[usableVec]] contract) — they could
       // never be returned, and one zero-norm row is a 0/0 crash here
-      val cleanCorpus = usable(corpus, vecCol)
-      val assigned =
-        if (m == 1) assignTo(cleanCorpus, cents, idCol, vecCol)
-        else assignTopM(cleanCorpus, cents, idCol, vecCol, m)
-      val stored = assigned
+      val stored = coarseAssigned(usable(corpus, vecCol), cents, m, idCol, vecCol)
         .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("norm"), col("centroid_id"))
       // metadata columns ride IN the index (one build-time join), so
       // filtered search ([[ivfTopKIndexed]] corpusFilter) can push its
@@ -1211,16 +1260,12 @@ object Similarity {
     // dirty rows drop here ([[usableVec]] contract) — in a STREAM one
     // zero-norm vector would otherwise kill the query permanently (the
     // batch replays into the same 0/0 on every restart)
-    val vecs = usable(batch.select(col(idCol), col(vecCol)), vecCol)
-    val assigned =
-      if (m <= 1) assignTo(vecs, cents, idCol, vecCol)
-      else assignTopM(vecs, cents, idCol, vecCol, m)
+    val stored = coarseAssigned(usable(batch, vecCol), cents, m, idCol, vecCol)
+      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("norm"), col("centroid_id"))
     graft.util.MetaFiles.writeLong(spark, s"$dir/_streamed", 1L)
     // metadata columns appended like [[saveIvfIndex]] stores them (the
     // batch schema must match the build corpus — parquet appends are
     // schema-positional); mergeSchema on read surfaces drift as nulls
-    val stored = assigned
-      .select(col(idCol), col(vecCol), l2Norm(col(vecCol)).as("norm"), col("centroid_id"))
     val metaCols = batch.columns.filterNot(c => c == idCol || c == vecCol)
     val withMeta =
       if (metaCols.isEmpty) stored
@@ -1284,39 +1329,18 @@ object Similarity {
       // at probe time; norm is a plain stored column, so the composed
       // predicate duplicates only a column ref (no codegen-size concern)
       .filter(col("cn") > lit(0d) && col("cn") < lit(Double.PositiveInfinity))
-    val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
-    val qprobe = probeCentroids(q, cents, nProbe)
-      .select(col("query_id"), col("qv"), col("qn"), col("cid").as("centroid_id"))
-    val cands = indexed.join(broadcast(qprobe), "centroid_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // score map-side on the pruned-partition join output and project the
-    // vectors away before any exchange (the d9/d4 restructure — the
-    // dedup AND the rank window used to carry qv/cv). An index built
-    // with soft assignment ([[saveIvfIndex]] nAssign > 1, stamped in
-    // _nassign) holds each vector under several centroids — dedup so
-    // duplicate ranks can't evict true neighbors; copies score
-    // bit-identically, so the post-score dedup keeps the same rows. A
-    // legacy/hard index (stamp absent or 1) skips the extra exchange.
-    // A STREAM-MAINTAINED index (_streamed stamp, [[ivfIndexStream]])
-    // may additionally hold several VERSIONS of an id (at-least-once
-    // appends, re-ingest with a changed vector) whose cosines DIFFER, so
-    // a value-blind dropDuplicates would pick nondeterministically —
-    // collapse to max cosine per (query, neighbor) instead
-    // (deterministic, and a stale version can never outrank the best one)
-    val softBuilt = graft.util.MetaFiles.readLong(spark, s"$dir/_nassign").exists(_ > 1L)
-    val streamed = graft.util.MetaFiles.readLong(spark, s"$dir/_streamed").nonEmpty
-    val scoredAll = cands
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val scored =
-      if (streamed) scoredAll.groupBy(col("query_id"), col("neighbor_id"))
-        .agg(max(col("cosine")).as("cosine"))
-      else if (softBuilt) scoredAll.dropDuplicates("query_id", "neighbor_id")
-      else scoredAll
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    val qprobe = probeCentroids(querySide(queries, idCol, vecCol), cents, nProbe,
+      col("query_id"), col("qv"), col("qn"))
+    // An index built with soft assignment ([[saveIvfIndex]] nAssign > 1,
+    // stamped in _nassign) holds each vector under several centroids; a
+    // STREAM-MAINTAINED one (_streamed stamp, [[ivfIndexStream]]) may
+    // also hold several VERSIONS of an id (at-least-once appends,
+    // re-ingest with a changed vector). Either way the copies collapse
+    // before the cut ([[scorePairs]]); a legacy/hard index (stamp absent
+    // or 1) skips that exchange.
+    val copies = graft.util.MetaFiles.readLong(spark, s"$dir/_nassign").exists(_ > 1L) ||
+      graft.util.MetaFiles.readLong(spark, s"$dir/_streamed").nonEmpty
+    rankTopK(scorePairs(indexed.join(broadcast(qprobe), "centroid_id"), exactCosine, copies), k)
   }
 
   /** IVF top-k: probe the nProbe nearest centroid partitions per query and
@@ -1333,8 +1357,8 @@ object Similarity {
     * nAssign× indexed rows (and ≤ nAssign× scored candidates), NOT more
     * probes per query — the right trade when the index is built once and
     * probed many times. Duplicate (query, neighbor) candidates from
-    * shared clusters are deduped BEFORE ranking, so ranks and the top-k
-    * cut are unaffected.
+    * shared clusters collapse to one BEFORE ranking ([[scorePairs]]), so
+    * ranks and the top-k cut are unaffected.
     *
     * `corpusFilter` = FILTERED vector search (the metadata-predicate
     * ANN every retrieval stack needs): centroids stay trained on the
@@ -1349,42 +1373,9 @@ object Similarity {
       nCentroids: Int, nProbe: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
       lloydIters: Int = 1, nAssign: Int = 1,
-      corpusFilter: Option[Column] = None): DataFrame = {
-    val cents = centroidsCached(corpus, nCentroids, idCol, vecCol, lloydIters)
-    val m = math.min(math.max(nAssign, 1), nCentroids)
-    // dirty rows never assigned or probed (the [[usableVec]] contract)
-    val searchCorpus = usable(
-      corpusFilter.map(corpus.filter).getOrElse(corpus), vecCol)
-    val assigned0 =
-      if (m == 1) assignTo(searchCorpus, cents, idCol, vecCol)
-      else assignTopM(searchCorpus, cents, idCol, vecCol, m)
-    val assigned = assigned0
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"), col("centroid_id"),
-        l2Norm(col(vecCol)).as("cn"))
-    val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      col(vecCol).as("qv"), l2Norm(col(vecCol)).as("qn"))
-    val qprobe = probeCentroids(q, cents, nProbe)
-      .select(col("query_id"), col("qv"), col("qn"), col("cid").as("centroid_id"))
-    val cands = qprobe.join(assigned, "centroid_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // score map-side on the bucket-join output and project the vectors
-    // away before ANY exchange (the d9/d4 restructure): both the
-    // soft-assignment dedup and the rank window shuffle their input, and
-    // carrying qv/cv through them is O(candidates · vector width) for
-    // columns neither needs. A neighbor indexed under several probed
-    // clusters still dedups BEFORE the rank cut (it would otherwise
-    // occupy several ranks and push true neighbors out of the top-k);
-    // its copies score bit-identically, so post-score dedup keeps the
-    // same rows. Single assignment is duplicate-free by construction.
-    val scored0 = cands
-      .withColumn("cosine", dot(col("qv"), col("cv")) / (col("qn") * col("cn")))
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val scored = if (m == 1) scored0
-      else scored0.dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-  }
+      corpusFilter: Option[Column] = None): DataFrame =
+    rankTopK(exactScored(queries, corpusFilter.map(corpus.filter).getOrElse(corpus),
+      Some(cells(corpus, nCentroids, nProbe, nAssign, lloydIters, idCol, vecCol)), idCol, vecCol), k)
 
   /** The deterministic projection matrix behind [[randomProject]] —
     * PUBLIC so an external oracle can embed the identical literals
@@ -1617,35 +1608,19 @@ object Similarity {
   /** The per-query nProbe nearest centroids — the shared probe-selection
     * block of every IVF tier (in-memory, indexed, and both PQ
     * compositions): rank against the BROADCAST centroid table, keep rank
-    * ≤ nProbe. Input must carry (query_id, qv, ...); output keeps the
-    * probe row's columns plus `cid`/`centroid`/`d`/`rk` for the caller's
-    * projection. ONE body so a probe tie-break change cannot drift
-    * between tiers. */
-  private def probeCentroids(q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    * ≤ nProbe. Input must carry (query_id, qv, ...); output is the
+    * `keep` columns (over the probe row and its `centroid`) plus the
+    * probed `centroid_id`. ONE body so a probe tie-break change cannot
+    * drift between tiers. */
+  private def probeCentroids(q: DataFrame, cents: DataFrame, nProbe: Int,
+      keep: Column*): DataFrame = {
     val probes = q.crossJoin(broadcast(cents))
       .withColumn("d", -cosine(col("qv"), col("centroid")))
     val pw = Window.partitionBy(col("query_id")).orderBy(col("d"), col("cid"))
     probes.withColumn("rk", row_number().over(pw)).filter(col("rk") <= nProbe)
+      .select(keep :+ col("cid").as("centroid_id"): _*)
   }
 
-  /** Exact re-rank (Jégou et al. TPAMI 2011 §VI, "IVFADC+R"): the ADC
-    * shortlist — (query_id, neighbor_id), rerank·k rows per query — is
-    * joined back to the FULL vectors and re-scored with the exact dot,
-    * and only then cut to the final top-k. ADC's quantization error
-    * mis-orders neighbors near the cut; the shortlist only has to RANK
-    * the true neighbor inside the top rerank·k (much easier), after
-    * which the exact pass puts it in its true position — recall@k
-    * becomes ADC's recall@(rerank·k) for one extra bounded join.
-    *
-    * Scale shape: the shortlist is |queries|·rerank·k id pairs —
-    * BROADCAST into the corpus scan, so the full-vector fetch is one
-    * corpus pass with no shuffle of the corpus side (the probe-side
-    * broadcast contract of [[ivfTopKIndexed]]; for corpus-sized query
-    * sets split the query batch). The re-scored set (shortlist-sized)
-    * then joins the query vectors — AQE broadcasts the small side.
-    * Duplicate (query, neighbor) candidates (a soft-assigned index
-    * stores a vector once per home) are collapsed by max(cosine) —
-    * copies carry identical vectors, so this is value-deterministic. */
   /** Quantized-score shortlist for the exact re-rank stage: the top
     * `cut` candidates by quantized score WITH TIES at the boundary —
     * rank() over the score alone, never row_number's arbitrary id
@@ -1673,6 +1648,24 @@ object Similarity {
       rank().over(Window.partitionBy("query_id").orderBy(desc("cosine"))))
       .filter(col("rank") <= cut)
 
+  /** Exact re-rank (Jégou et al. TPAMI 2011 §VI, "IVFADC+R"): the ADC
+    * shortlist — (query_id, neighbor_id), rerank·k rows per query — is
+    * joined back to the FULL vectors and re-scored with the exact dot,
+    * and only then cut to the final top-k. ADC's quantization error
+    * mis-orders neighbors near the cut; the shortlist only has to RANK
+    * the true neighbor inside the top rerank·k (much easier), after
+    * which the exact pass puts it in its true position — recall@k
+    * becomes ADC's recall@(rerank·k) for one extra bounded join.
+    *
+    * Scale shape: the shortlist is |queries|·rerank·k id pairs —
+    * BROADCAST into the corpus scan, so the full-vector fetch is one
+    * corpus pass with no shuffle of the corpus side (the probe-side
+    * broadcast contract of [[ivfTopKIndexed]]; for corpus-sized query
+    * sets split the query batch). The re-scored set (shortlist-sized)
+    * then joins the query vectors — AQE broadcasts the small side.
+    * Duplicate (query, neighbor) candidates (a soft-assigned index
+    * stores a vector once per home) are collapsed by max(cosine) —
+    * copies carry identical vectors, so this is value-deterministic. */
   private def rerankExact(shortlist: DataFrame, queries: DataFrame,
       corpus: DataFrame, k: Int, idCol: String, vecCol: String): DataFrame = {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
@@ -1699,15 +1692,11 @@ object Similarity {
     // relation the byte ceiling already caps — beats a guard that can
     // quietly serialize the n² scan; the partial-agg dots MUST run
     // above an exchange, because map-side they run at file-split width.
-    val scored = widened(c)
+    val pairs = widened(c)
       .join(broadcast(shortlist.select(col("query_id"), col("neighbor_id"))),
         "neighbor_id")
       .join(q, "query_id")
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(max(dot(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+    rankTopK(scorePairs(pairs, exactCosine, copies = true), k)
   }
 
   /** The per-query ADC lookup table: (query_id, sub, code, part) with
@@ -1832,6 +1821,40 @@ object Similarity {
       books, nSub, subDim, idCol, vecCol)
   }
 
+  /** The raw PQ-ADC scorer, one body for [[pqTopK]] and the raw branch
+    * of [[ivfPqTopK]]. FUSED ADC (round 19,
+    * [[graft.functions.expressions.PqCore]]): codes as ONE array<int> per
+    * vector, the per-query LUT as ONE array<double>, the score a
+    * codegen'd gather per (query, vector) pair. The join formulation it
+    * replaced — (id, sub, code) rows ⋈ broadcast LUT rows, then a
+    * (query, id)-keyed sum — moved |q|·|corpus|·nSub rows through a hash
+    * join and an aggregation exchange for nSub array lookups of work (e7
+    * and e8 were the 4th and 3rd sf1 wall lines, 18.9 s and 20.7 s). All
+    * pairs: the coded corpus streams, widened, against the broadcast
+    * query side. Cells: the coded homes stream against the broadcast
+    * probe list and query side. Dirty rows drop on BOTH sides
+    * ([[usableVec]] contract — a NULL vector would raise in the fused
+    * encode, a zero-norm one in the cosine). */
+  private def adcScored(queries: DataFrame, corpus: DataFrame, books: DataFrame, nSub: Int,
+      cells: Option[Cells], idCol: String, vecCol: String): DataFrame = {
+    val (centsL, startsL) = booksFlatLits(books, nSub)
+    val clean = usable(corpus, vecCol)
+    val codes = widened(clean).select(col(idCol).as("neighbor_id"),
+      call_function("graft_pq_encode", col(vecCol), centsL, startsL).as("cidx"),
+      l2Norm(col(vecCol)).as("cn"))
+    val q = querySide(queries, idCol, vecCol,
+      call_function("graft_pq_lut", col(vecCol), centsL, startsL).as("lut"))
+    val pairs = cells match {
+      case None => codes.crossJoin(broadcast(q))
+      case Some(ix) => widened(codes.join(ix.homes(clean, idCol, vecCol)
+          .select(col(idCol).as("neighbor_id"), col("centroid_id")), "neighbor_id"))
+        .join(broadcast(ix.probe(q, col("query_id"))), "centroid_id")
+        .join(broadcast(q), "query_id")
+    }
+    scorePairs(pairs, call_function("graft_adc", col("cidx"), col("lut")) /
+      (col("qn") * col("cn")), cells.exists(_.m > 1))
+  }
+
   /** PQ top-k by ASYMMETRIC DISTANCE COMPUTATION: queries stay exact,
     * the corpus is scanned in its quantized form — dot(q, v) ≈ Σ_sub
     * LUT[sub][code(v, sub)] where LUT holds the query's exact dot with
@@ -1864,50 +1887,19 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rerank: Int = 0): DataFrame = {
     useNative(queries)
-    // codebooks feed the encode AND the LUT subtrees — the memoized
-    // pqCodebooks table arrives checkpointed (deterministic lifecycle)
-    val books = pqCodebooks(corpus, nSub, nCodes, lloydIters, idCol, vecCol)
-    // dirty rows drop on BOTH sides ([[usableVec]] contract — a NULL
-    // vector would raise in the fused encode, a zero-norm one in the cosine)
-    val cleanCorpus = usable(corpus, vecCol)
-    val cleanQueries = usable(queries, vecCol)
-    // FUSED ADC (round 19, [[graft.functions.expressions.PqCore]]): codes
-    // as ONE array<int> per vector, the per-query LUT as ONE array<double>,
-    // the score a codegen'd gather per (query, vector) pair. The previous
-    // join formulation — (id, sub, code) rows ⋈ broadcast LUT rows, then
-    // a (query, id)-keyed sum — moved |q|·|corpus|·nSub rows through a
-    // hash join and an aggregation exchange for nSub array lookups of
-    // work (e7 was the 4th sf1 wall line at 18.9 s, previously mislabeled
-    // "intrinsic ADC CPU" — intrinsic to the join shape, not the math).
-    // subDim kept for the dim contract; encode fails fast on a mismatch
-    // with the same message as the row form.
-    val (centsL, startsL) = booksFlatLits(books, nSub)
-    val codes = widened(cleanCorpus).select(col(idCol).as("id"),
-      call_function("graft_pq_encode", col(vecCol), centsL, startsL).as("cidx"),
-      l2Norm(col(vecCol)).as("cn"))
-    val qf = cleanQueries.select(col(idCol).as("query_id"),
-      call_function("graft_pq_lut", col(vecCol), centsL, startsL).as("lut"),
-      l2Norm(col(vecCol)).as("qn"))
-    val scored = codes.crossJoin(broadcast(qf))
-      .filter(col("query_id") =!= col("id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        (call_function("graft_adc", col("cidx"), col("lut")) /
-          (col("qn") * col("cn"))).as("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    if (rerank <= 0)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-    else // include-ties shortlist (see [[quantShortlist]])
-      rerankExact(quantShortlist(scored, k * rerank), queries, corpus, k, idCol, vecCol)
+    // the memoized pqCodebooks table arrives checkpointed (deterministic
+    // lifecycle): it feeds the encode AND the LUT subtrees
+    finishTopK(adcScored(queries, corpus, pqCodebooks(corpus, nSub, nCodes, lloydIters,
+      idCol, vecCol), nSub, None, idCol, vecCol), k, rerank, queries, corpus, idCol, vecCol)
   }
 
-  /** Per-dimension affine SQ8 bounds trained over the corpus → (mins,
-    * scales), scale_d = (max_d − min_d)/255 (0 for constant dimensions —
+  /** Per-dimension affine SQ8 bounds trained over the corpus → the
+    * [[Sq8Model]] of (mins, scales), scale_d = (max_d − min_d)/255 (0 for constant dimensions —
     * their codes collapse to −128 and decode back to min_d exactly).
     * One posexplode + map-side-combined min/max agg (exchange O(dim ·
     * parallelism), never O(corpus)); the result is 2·dim doubles of
     * driver-held model state — the [[hyperplanes]] precedent. */
-  private def sq8Bounds(corpus: DataFrame, vecCol: String): (Seq[Double], Seq[Double]) = {
+  private def sq8Bounds(corpus: DataFrame, vecCol: String): Sq8Model = {
     // dirty-vector contract: Spark's min/max order NaN ABOVE every double,
     // so ONE NaN element made hi — and therefore scale — NaN for that
     // dimension, and every corpus code then raised CAST_OVERFLOW (ANSI)
@@ -1918,9 +1910,63 @@ object Similarity {
       .agg(min(col("x")).cast("double").as("lo"), max(col("x")).cast("double").as("hi"))
       .orderBy(col("pos")).collect()
     require(rows.nonEmpty, "sq8TopK: empty corpus")
-    val mins = rows.map(_.getDouble(1)).toSeq
-    val scales = rows.map(r => (r.getDouble(2) - r.getDouble(1)) / 255.0).toSeq
-    (mins, scales)
+    Sq8Model(rows.map(_.getDouble(1)).toSeq,
+      rows.map(r => (r.getDouble(2) - r.getDouble(1)) / 255.0).toSeq)
+  }
+
+  /** The SQ8 expression bundle of [[sq8Scored]]. */
+  private case class Sq8Model(mins: Seq[Double], scales: Seq[Double]) {
+    val dim: Int = mins.size
+    private val minsArr = array(mins.map(lit): _*)
+    private val scalesArr = array(scales.map(lit): _*)
+    // the subVectors rule: a ragged vector must raise, not zip-truncate
+    // into a plausible-but-wrong score
+    private def checked(vc: Column): Column = when(size(vc) === dim, vc).otherwise(
+      raise_error(concat(
+        lit(s"graft SQ8: expected $dim-dimensional vectors, found "),
+        coalesce(size(vc).cast("string"), lit("NULL vector")))))
+    def codes(vc: Column): Column = transform(checked(vc), (x, i) => {
+      val s = element_at(scalesArr, i + 1)
+      when(s > 0,
+        least(lit(255), greatest(lit(0),
+          round((x.cast("double") - element_at(minsArr, i + 1)) / s).cast("int"))) - 128)
+        .otherwise(lit(-128)).cast("tinyint")
+    })
+    def scaledQuery(vc: Column): Column =
+      transform(checked(vc), (x, i) => x.cast("double") * element_at(scalesArr, i + 1))
+    def base(vc: Column): Column =
+      aggregate(zip_with(vc, minsArr, (x, m) => x.cast("double") * m),
+        lit(0.0), (acc, x) => acc + x)
+    /** approximate cosine of a (query, coded-corpus) pair row */
+    def pairCosine: Column =
+      (col("base") + aggregate(zip_with(col("sq"), col("codes"),
+        (a, cc) => a * (cc.cast("double") + lit(128.0))), lit(0.0), (acc, x) => acc + x)) /
+        (col("qn") * col("cn"))
+  }
+
+  /** The SQ8 scorer, one body for [[sq8TopK]] and [[ivfSq8TopK]]: the
+    * bounds train on the FULL corpus (global, probe-independent), and the
+    * codes and scaled-query arrays are projected away before any
+    * exchange. All pairs: the coded corpus streams, widened, against the
+    * broadcast query side. Cells: the probe rows meet the coded homes in
+    * one keyed join. Dirty rows drop before the encode ([[usableVec]]
+    * contract): a NaN element raises CAST_OVERFLOW inside the code cast,
+    * a zero norm 0/0s in the cosine. */
+  private def sq8Scored(queries: DataFrame, corpus: DataFrame, cells: Option[Cells],
+      idCol: String, vecCol: String): DataFrame = {
+    useNative(queries)
+    val model = sq8Bounds(corpus, vecCol)
+    val q = querySide(queries, idCol, vecCol, model.scaledQuery(col(vecCol)).as("sq"),
+      model.base(col(vecCol)).as("base"))
+    val c = Seq(col(idCol).as("neighbor_id"), model.codes(col(vecCol)).as("codes"),
+      l2Norm(col(vecCol)).as("cn"))
+    val pairs = cells match {
+      case None => widened(usable(corpus, vecCol).select(c: _*)).crossJoin(broadcast(q))
+      case Some(ix) => ix.probe(q, Seq("query_id", "sq", "base", "qn").map(col): _*)
+        .join(ix.homes(usable(corpus, vecCol), idCol, vecCol)
+          .select(c :+ col("centroid_id"): _*), "centroid_id")
+    }
+    scorePairs(pairs, model.pairCosine, cells.exists(_.m > 1))
   }
 
   /** Scalar-quantization (SQ8) top-k: each corpus dimension uniformly
@@ -1951,67 +1997,11 @@ object Similarity {
     * `rerank` > 0 adds the [[rerankExact]] stage (shortlist top
     * rerank·k by SQ8 score, exact dot decides) — with rerank·k ≥ |corpus|
     * this tier equals brute force EXACTLY (the unit pin). */
-  /** The SQ8 expression bundle — ONE body behind [[sq8TopK]] and
-    * [[ivfSq8TopK]] so the quantize/score math cannot drift between the
-    * exhaustive and the IVF-pruned tier. */
-  private case class Sq8Model(mins: Seq[Double], scales: Seq[Double]) {
-    val dim: Int = mins.size
-    private val minsArr = array(mins.map(lit): _*)
-    private val scalesArr = array(scales.map(lit): _*)
-    // the subVectors rule: a ragged vector must raise, not zip-truncate
-    // into a plausible-but-wrong score
-    private def checked(vc: Column): Column = when(size(vc) === dim, vc).otherwise(
-      raise_error(concat(
-        lit(s"graft SQ8: expected $dim-dimensional vectors, found "),
-        coalesce(size(vc).cast("string"), lit("NULL vector")))))
-    def codes(vc: Column): Column = transform(checked(vc), (x, i) => {
-      val s = element_at(scalesArr, i + 1)
-      when(s > 0,
-        least(lit(255), greatest(lit(0),
-          round((x.cast("double") - element_at(minsArr, i + 1)) / s).cast("int"))) - 128)
-        .otherwise(lit(-128)).cast("tinyint")
-    })
-    def scaledQuery(vc: Column): Column =
-      transform(checked(vc), (x, i) => x.cast("double") * element_at(scalesArr, i + 1))
-    def base(vc: Column): Column =
-      aggregate(zip_with(vc, minsArr, (x, m) => x.cast("double") * m),
-        lit(0.0), (acc, x) => acc + x)
-    /** approximate cosine of a (query, coded-corpus) pair row */
-    def pairCosine: Column =
-      (col("base") + aggregate(zip_with(col("sq"), col("codes"),
-        (a, cc) => a * (cc.cast("double") + lit(128.0))), lit(0.0), (acc, x) => acc + x)) /
-        (col("qn") * col("cn"))
-  }
-
   def sq8TopK(queries: DataFrame, corpus: DataFrame, k: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      rerank: Int = 0): DataFrame = {
-    useNative(queries)
-    val model = { val (mn, sc) = sq8Bounds(corpus, vecCol); Sq8Model(mn, sc) }
-    // dirty rows drop before the encode ([[usableVec]] contract): a NaN
-    // element raises CAST_OVERFLOW inside model.codes, a zero norm 0/0s
-    // in the cosine
-    val c = usable(corpus, vecCol).select(col(idCol).as("neighbor_id"),
-      model.codes(col(vecCol)).as("codes"), l2Norm(col(vecCol)).as("cn"))
-    val q = usable(queries, vecCol).select(col(idCol).as("query_id"),
-      model.scaledQuery(col(vecCol)).as("sq"),
-      model.base(col(vecCol)).as("base"),
-      l2Norm(col(vecCol)).as("qn"))
-    // codes/scaled-query arrays projected away before the rank window
-    // (the d9/d4 restructure): scoring is map-side on the codegen'd
-    // broadcast-join scan; the window exchange moves only
-    // (query_id, neighbor_id, cosine).
-    val scored = widened(c).crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", model.pairCosine)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    if (rerank <= 0)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-    else // include-ties shortlist (see [[quantShortlist]])
-      rerankExact(quantShortlist(scored, k * rerank), queries, corpus, k, idCol, vecCol)
-  }
+      rerank: Int = 0): DataFrame =
+    finishTopK(sq8Scored(queries, corpus, None, idCol, vecCol), k, rerank, queries, corpus,
+      idCol, vecCol)
 
   /** IVF-SQ8: coarse-quantizer partition pruning ([[ivfTopK]]'s probe
     * body — nProbe of nCentroids clusters per query, soft `nAssign`
@@ -2021,50 +2011,18 @@ object Similarity {
     * the middle ground between IVF-flat (exact scoring of candidates)
     * and IVF-PQ (stronger compression, needs re-rank). Bounds train on
     * the FULL corpus (global, probe-independent). Soft-assignment
-    * duplicates are deduped at (query, neighbor) before ranking (codes
-    * of a duplicated vector are identical — the ivfTopK argument).
+    * duplicates collapse to one before ranking (codes of a duplicated
+    * vector are identical, so its copies score alike).
     * `rerank` > 0 adds the exact [[rerankExact]] stage; with full probe
     * and rerank·k ≥ |corpus| the tier equals brute force exactly (the
     * unit pin). */
   def ivfSq8TopK(queries: DataFrame, corpus: DataFrame, k: Int,
       nCentroids: Int, nProbe: Int = 2, nAssign: Int = 1, lloydIters: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      rerank: Int = 0): DataFrame = {
-    useNative(queries)
-    val model = { val (mn, sc) = sq8Bounds(corpus, vecCol); Sq8Model(mn, sc) }
-    val cents = centroidsCached(corpus, nCentroids, idCol, vecCol, lloydIters)
-    val m = math.min(math.max(nAssign, 1), nCentroids)
-    // dirty rows never assigned, encoded or probed ([[usableVec]] contract)
-    val cleanCorpus = usable(corpus, vecCol)
-    val assigned0 =
-      if (m == 1) assignTo(cleanCorpus, cents, idCol, vecCol)
-      else assignTopM(cleanCorpus, cents, idCol, vecCol, m)
-    val coded = assigned0.select(col(idCol).as("neighbor_id"), col("centroid_id"),
-      model.codes(col(vecCol)).as("codes"), l2Norm(col(vecCol)).as("cn"))
-    val q = usable(queries, vecCol).select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      model.scaledQuery(col(vecCol)).as("sq"),
-      model.base(col(vecCol)).as("base"),
-      l2Norm(col(vecCol)).as("qn"))
-    val qprobe = probeCentroids(q, cents, nProbe)
-      .select(col("query_id"), col("sq"), col("base"), col("qn"),
-        col("cid").as("centroid_id"))
-    val cands = qprobe.join(coded, "centroid_id")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    // score map-side, project the codes/scaled-query arrays away, THEN
-    // dedup soft-assignment duplicates and rank (the d9/d4 restructure;
-    // copies of a duplicated vector carry identical codes, so they score
-    // bit-identically and post-score dedup keeps the same rows).
-    val scored0 = cands.withColumn("cosine", model.pairCosine)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"))
-    val scored = if (m == 1) scored0
-      else scored0.dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    if (rerank <= 0)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-    else // include-ties shortlist (see [[quantShortlist]])
-      rerankExact(quantShortlist(scored, k * rerank), queries, corpus, k, idCol, vecCol)
-  }
+      rerank: Int = 0): DataFrame =
+    finishTopK(sq8Scored(queries, corpus,
+      Some(cells(corpus, nCentroids, nProbe, nAssign, lloydIters, idCol, vecCol)), idCol, vecCol),
+      k, rerank, queries, corpus, idCol, vecCol)
 
   /** IVF-PQ: the classic composition (Jégou et al. TPAMI 2011 §V) and the
     * genuine 100 TB ANN shape — IVF's coarse quantizer makes the
@@ -2106,48 +2064,12 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       rerank: Int = 0): DataFrame = {
     useNative(queries)
-    val cents = centroidsCached(corpus, nCentroids, idCol, vecCol, lloydIters)
-    val m = math.min(math.max(nAssign, 1), nCentroids)
-    // dirty rows never probed, assigned or encoded (the [[usableVec]]
-    // contract; the trainers above filter internally on the raw relation
-    // so their session-memo keys stay caller-consistent)
-    val cleanQueries = usable(queries, vecCol)
-    val cleanCorpus = usable(corpus, vecCol)
-    val q = cleanQueries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2Norm(col(vecCol)).as("qn"))
-    val probeRows = probeCentroids(q, cents, nProbe)
-    val norms = cleanCorpus.select(col(idCol).as("id"), l2Norm(col(vecCol)).as("cn"))
-    val scored0 =
-      if (!residual) {
-        // FUSED ADC over the probed partitions (round 19 — the pqTopK
-        // restructure applied to the IVF composition): per candidate
-        // (query, vector) pair the score is one codegen'd gather, where
-        // the join formulation moved |candidates|·nSub LUT-joined rows
-        // through a dedup and a sum exchange (e8 was the 3rd sf1 wall
-        // line at 20.7 s).
-        val books = pqCodebooks(corpus, nSub, nCodes, lloydIters, idCol, vecCol)
-        val (centsL, startsL) = booksFlatLits(books, nSub)
-        val codes = widened(cleanCorpus).select(col(idCol).as("id"),
-            call_function("graft_pq_encode", col(vecCol), centsL, startsL).as("cidx"),
-            l2Norm(col(vecCol)).as("cn"))
-          .join(coarseAssigned(cleanCorpus, cents, m, idCol, vecCol), "id")
-        val qprobe = probeRows.select(col("query_id"), col("cid").as("centroid_id"))
-        val qlut = cleanQueries.select(col(idCol).as("query_id"),
-          call_function("graft_pq_lut", col(vecCol), centsL, startsL).as("lut"))
-        val cands = widened(codes).join(broadcast(qprobe), "centroid_id")
-          .join(broadcast(qlut), "query_id")
-          .filter(col("query_id") =!= col("id"))
-          .select(col("query_id"), col("id"), col("cn"),
-            call_function("graft_adc", col("cidx"), col("lut")).as("adc"))
-        // soft assignment duplicates a candidate once per shared probed
-        // centroid — the fused score is value-identical across
-        // duplicates, so dedup at (query, id) with first(); hard
-        // assignment needs no dedup.
-        if (m == 1) cands.select(col("query_id"), col("id").as("neighbor_id"),
-          col("adc"), col("cn"))
-        else cands.groupBy(col("query_id"), col("id").as("neighbor_id"))
-          .agg(first(col("adc")).as("adc"), first(col("cn")).as("cn"))
-      } else {
+    val ix = cells(corpus, nCentroids, nProbe, nAssign, lloydIters, idCol, vecCol)
+    val scored =
+      if (!residual)
+        adcScored(queries, corpus, pqCodebooks(corpus, nSub, nCodes, lloydIters, idCol, vecCol),
+          nSub, Some(ix), idCol, vecCol)
+      else {
         // RESIDUAL encoding (Jégou §V's refinement): PQ codes v − c(v)
         // per HOME centroid; adc(q, v) = q·c_home + Σ_s q_s·codeword_s.
         // Codebooks train on the FULL home-residual table — exactly the
@@ -2157,69 +2079,47 @@ object Similarity {
         // the non-primary homes don't follow). The composite
         // (id, home) struct is the training key — every pqCodebooks
         // stage (hash sample, seeds, assignment) is key-type-agnostic.
-        // Per-home scores differ; the best home wins (max adc), which
-        // also makes the soft duplicates deterministic.
-        val centsB = broadcast(cents)
-        val res = (x: Column, c: Column) => zip_with(x, c, (a, b) => a - b)
-        val assigned =
-          if (m == 1) assignTo(cleanCorpus.select(col(idCol), col(vecCol)), cents, idCol, vecCol)
-          else assignTopM(cleanCorpus.select(col(idCol), col(vecCol)), cents, idCol, vecCol, m)
-        val homes = assigned.join(centsB, col("centroid_id") === col("cid"))
+        // Per-home scores differ; the best home wins (the max-cosine
+        // collapse of [[scorePairs]]).
+        val clean = usable(corpus, vecCol)
+        val homes = ix.homes(clean, idCol, vecCol)
+          .join(broadcast(ix.cents), col("centroid_id") === col("cid"))
           .select(struct(col(idCol).as("i"), col("centroid_id").as("c")).as("__rid"),
-            res(col(vecCol), col("centroid")).as("__res"))
+            zip_with(col(vecCol), col("centroid"), (a, b) => a - b).as("__res"))
           .localCheckpoint(true) // read by training AND encoding below
         val books = pqCodebooks(homes, nSub, nCodes, lloydIters, "__rid", "__res")
         val subDim = subDimOf(books)
         val codes = encodeAgainst(homes, books, nSub, subDim, "__rid", "__res")
-          .select(col("id.i").as("nid"), col("id.c").as("centroid_id"),
+          .select(col("id.i").as("neighbor_id"), col("id.c").as("centroid_id"),
             col("sub"), col("code"))
-          .join(norms.withColumnRenamed("id", "nid"), "nid")
-        val qprobe = probeRows.select(col("query_id"),
-          col("cid").as("centroid_id"), dot(col("qv"), col("centroid")).as("base"))
-        val lut = adcLut(cleanQueries, books, nSub, subDim, idCol, vecCol)
-        widened(codes).join(broadcast(qprobe), "centroid_id")
-          .join(broadcast(lut), Seq("query_id", "sub", "code"))
-          .filter(col("query_id") =!= col("nid"))
-          .groupBy(col("query_id"), col("nid"), col("centroid_id"))
+          .join(clean.select(col(idCol).as("neighbor_id"), l2Norm(col(vecCol)).as("cn")),
+            "neighbor_id")
+        val qprobe = ix.probe(querySide(queries, idCol, vecCol), col("query_id"),
+          dot(col("qv"), col("centroid")).as("base"), col("qn"))
+        val perHome = widened(codes).join(broadcast(qprobe), "centroid_id")
+          .join(broadcast(adcLut(usable(queries, vecCol), books, nSub, subDim, idCol, vecCol)),
+            Seq("query_id", "sub", "code"))
+          .groupBy(col("query_id"), col("neighbor_id"), col("centroid_id"))
           .agg(sum(col("part")).as("rsum"), first(col("base")).as("base"),
-            first(col("cn")).as("cn"))
-          .withColumn("adcHome", col("base") + col("rsum"))
-          .groupBy(col("query_id"), col("nid").as("neighbor_id"))
-          .agg(max(col("adcHome")).as("adc"), first(col("cn")).as("cn"))
+            first(col("qn")).as("qn"), first(col("cn")).as("cn"))
+        scorePairs(perHome, (col("base") + col("rsum")) / (col("qn") * col("cn")), ix.m > 1)
       }
-    val scored = scored0
-      .join(broadcast(q.select(col("query_id"), col("qn"))), "query_id")
-      .withColumn("cosine", col("adc") / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    if (rerank <= 0)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
     // re-rank recall is CAPPED by IVF partition coverage: a neighbor in
     // an unprobed partition never reaches the shortlist — raise
     // nProbe/nAssign for coverage, rerank only fixes ADC mis-ordering.
-    // Shortlist admits boundary TIE GROUPS whole (see [[quantShortlist]])
-    else rerankExact(quantShortlist(scored, k * rerank), queries, corpus, k, idCol, vecCol)
+    finishTopK(scored, k, rerank, queries, corpus, idCol, vecCol)
   }
 
-  /** The coded corpus of the raw IVF-PQ tiers: (id, sub, code, <norm>,
-    * centroid_id) — ONE body behind [[ivfPqTopK]]'s in-memory raw branch
-    * and [[saveIvfPqIndex]]'s persisted layout, so the two stay
-    * byte-compatible by construction. */
-  private def pqCodedCorpus(corpus: DataFrame, assigned: DataFrame, books: DataFrame,
-      nSub: Int, subDim: Int, idCol: String, vecCol: String,
-      normName: String): DataFrame =
-    encodeAgainst(corpus, books, nSub, subDim, idCol, vecCol)
-      .join(corpus.select(col(idCol).as("id"), l2Norm(col(vecCol)).as(normName)), "id")
-      .join(assigned, "id") // ×nAssign copies of each code row, one per home centroid
-
-  /** The (id, centroid_id) coarse assignment shared by the IVF-PQ coded
-    * corpus and the optional re-rank vector store — ONE body so both
-    * sides of a [[saveIvfPqIndex]] index agree on homes by construction. */
+  /** Each corpus row under its `m` nearest centroids: (idCol, vecCol,
+    * centroid_id), one row per home. ONE body behind every IVF tier,
+    * both index writers, the stream append and [[semanticDedup]], so the
+    * coded corpus, the vector store and the probed tiers agree on homes
+    * by construction. */
   private def coarseAssigned(corpus: DataFrame, cents: DataFrame, m: Int,
-      idCol: String, vecCol: String): DataFrame =
-    (if (m == 1) assignTo(corpus.select(col(idCol), col(vecCol)), cents, idCol, vecCol)
-     else assignTopM(corpus.select(col(idCol), col(vecCol)), cents, idCol, vecCol, m))
-      .select(col(idCol).as("id"), col("centroid_id"))
+      idCol: String, vecCol: String): DataFrame = {
+    val vs = corpus.select(col(idCol), col(vecCol))
+    if (m == 1) assignTo(vs, cents, idCol, vecCol) else assignTopM(vs, cents, idCol, vecCol, m)
+  }
 
   /** Persist an IVF-PQ index: Lloyd centroids + PQ codebooks + the coded
     * corpus physically PARTITIONED BY centroid_id — the [[saveIvfIndex]]
@@ -2248,7 +2148,7 @@ object Similarity {
       .localCheckpoint(true)
     val books = pqCodebooks(corpus, nSub, nCodes, lloydIters, idCol, vecCol)
     val subDim = subDimOf(books)
-    val m = math.min(math.max(nAssign, 1), nCentroids)
+    val m = homeCount(nAssign, nCentroids)
     // dirty rows are not indexed ([[usableVec]] contract — they could
     // never be returned, and one would 0/0 the assignment under ANSI)
     val cleanCorpus = usable(corpus, vecCol)
@@ -2256,8 +2156,13 @@ object Similarity {
     // store — materialize it once so both writes agree on homes and the
     // linear assignment pass runs once, not twice
     val assigned0 = coarseAssigned(cleanCorpus, cents, m, idCol, vecCol)
+      .select(col(idCol).as("id"), col("centroid_id"))
     val assigned = if (storeVectors) assigned0.localCheckpoint(true) else assigned0
-    pqCodedCorpus(cleanCorpus, assigned, books, nSub, subDim, idCol, vecCol, normName = "norm")
+    // (id, sub, code, norm, centroid_id): ×nAssign copies of each code
+    // row, one per home centroid
+    encodeAgainst(cleanCorpus, books, nSub, subDim, idCol, vecCol)
+      .join(cleanCorpus.select(col(idCol).as("id"), l2Norm(col(vecCol)).as("norm")), "id")
+      .join(assigned, "id")
       .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$dir/corpus")
     if (storeVectors)
       cleanCorpus.select(col(idCol), col(vecCol))
@@ -2299,8 +2204,8 @@ object Similarity {
     val nSub = books.agg(max(col("sub"))).collect().head.getInt(0) + 1
     val subDim = subDimOf(books)
     // fail fast on a dimension mismatch with the index: subVectors would
-    // slice only the first nSub·subDim query elements and ncos would
-    // zip-truncate — plausible-looking but wrong top-k, not an error
+    // slice only the first nSub·subDim query elements — plausible-looking
+    // but wrong top-k, not an error
     // (the appendToIvfIndex guard, applied to the PQ probe)
     queries.select(size(col(vecCol)).as("d")).filter(col("d") > 0)
       .limit(1).collect().headOption.map(_.getInt(0)).foreach { d =>
@@ -2308,36 +2213,28 @@ object Similarity {
           s"ivfPqTopKIndexed: query vectors are $d-dimensional but the index at " +
             s"$dir was built on ${nSub * subDim}-dimensional vectors")
       }
-    val codes = spark.read.parquet(s"$dir/corpus")
+    val codes = spark.read.parquet(s"$dir/corpus").withColumnRenamed("id", "neighbor_id")
       // legacy-index guard, the ivfTopKIndexed rule: stored norm must be
       // usable or the row's ADC cosine is 0/0 or NaN at probe time
       .filter(col("norm") > lit(0d) && col("norm") < lit(Double.PositiveInfinity))
-    // dirty queries match nothing (the [[usableVec]] contract)
-    val cleanQueries = usable(queries, vecCol)
-    val q = cleanQueries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      l2Norm(col(vecCol)).as("qn"))
-    val qprobe = probeCentroids(q, cents, nProbe)
-      .select(col("query_id"), col("cid").as("centroid_id"))
-    val lut = adcLut(cleanQueries, books, nSub, subDim, idCol, vecCol)
+    // dirty queries match nothing (the [[usableVec]] contract); qn rides
+    // the broadcast probe list to the score
+    val qprobe = probeCentroids(querySide(queries, idCol, vecCol), cents, nProbe,
+      col("query_id"), col("qn"))
     val cands = codes.join(broadcast(qprobe), "centroid_id")
-      .join(broadcast(lut), Seq("query_id", "sub", "code"))
-      .filter(col("query_id") =!= col("id"))
-    // soft-built index (stamped _nassign > 1): dedup shared-probed-home
-    // duplicates before the sum, the ivfPqTopK rule
+      .join(broadcast(adcLut(usable(queries, vecCol), books, nSub, subDim, idCol, vecCol)),
+        Seq("query_id", "sub", "code"))
+    // soft-built index (stamped _nassign > 1): a code row is stored once
+    // per home, so keep one part per (query, vector, sub) before the sum
     val soft = graft.util.MetaFiles.readLong(spark, s"$dir/_nassign").exists(_ > 1L)
     val uniq =
       if (!soft) cands
-      else cands.groupBy(col("query_id"), col("id"), col("sub"))
-        .agg(first(col("part")).as("part"), first(col("norm")).as("norm"))
-    val scored = uniq.groupBy(col("query_id"), col("id").as("neighbor_id"))
-      .agg(sum(col("part")).as("adc"), first(col("norm")).as("cn"))
-      .join(broadcast(q.select(col("query_id"), col("qn"))), "query_id")
-      .withColumn("cosine", col("adc") / (col("qn") * col("cn")))
-    val w = Window.partitionBy("query_id").orderBy(desc("cosine"), col("neighbor_id"))
-    if (rerank <= 0)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-    else {
+      else cands.groupBy(col("query_id"), col("neighbor_id"), col("sub")).agg(
+        first(col("part")).as("part"), first(col("norm")).as("norm"), first(col("qn")).as("qn"))
+    val perNeighbor = uniq.groupBy(col("query_id"), col("neighbor_id")).agg(
+      sum(col("part")).as("adc"), first(col("norm")).as("cn"), first(col("qn")).as("qn"))
+    val scored = scorePairs(perNeighbor, col("adc") / (col("qn") * col("cn")), copies = false)
+    finishTopK(scored, k, rerank, queries, {
       // marker must be PRESENT and 1: absent = pre-store legacy index,
       // 0 = the store was invalidated by a later storeVectors=false
       // rebuild (stale vectors may still sit on disk — do not use them)
@@ -2348,12 +2245,9 @@ object Similarity {
       // shortlist ids live in probed partitions by construction — fetch
       // vectors from those partitions only (broadcast probe list → DPP,
       // the same pruned-scan shape as the code side)
-      val vecs = spark.read.parquet(s"$dir/vectors")
-        .join(broadcast(qprobe.select(col("centroid_id")).dropDuplicates()),
-          "centroid_id")
+      spark.read.parquet(s"$dir/vectors")
+        .join(broadcast(qprobe.select(col("centroid_id")).dropDuplicates()), "centroid_id")
         .select(col(idCol), col(vecCol))
-      // include-ties shortlist (see [[quantShortlist]])
-      rerankExact(quantShortlist(scored, k * rerank), queries, vecs, k, idCol, vecCol)
-    }
+    }, idCol, vecCol)
   }
 }

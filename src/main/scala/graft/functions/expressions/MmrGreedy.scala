@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * "Round 22: e14 fused MMR greedy").
   *
   * Child: `ARRAY<STRUCT<id BIGINT, rel DOUBLE, v ARRAY<FLOAT|DOUBLE>, n
-  * DOUBLE>>` — rel is bruteForceTopK's cosine, n is the `nnorm` column
-  * (`sqrt(graft_dot(v, v))`). Emits `ARRAY<STRUCT<id BIGINT, mmr_rank
+  * DOUBLE>>` — rel is bruteForceTopK's cosine, n is the vector's
+  * `Similarity.l2Norm` (`sqrt(graft_dot(v, v))`). Emits `ARRAY<STRUCT<id BIGINT, mmr_rank
   * BIGINT, mmr_score DOUBLE>>`, ranks 1..min(k, |shortlist|).
   *
   * Operation order (equality-pinned in PipelineSpec against a driver-side

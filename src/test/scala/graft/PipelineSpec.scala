@@ -1675,6 +1675,64 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("every top-k tier cuts exact ties like bruteForceTopK (the smaller neighbor_id), bit for bit, at 1 and 7 partitions") {
+    // Ids 200..239 repeat the vectors of 0..39, so their cosines tie
+    // exactly and only the cut's neighbor_id order can rank them. Each
+    // configuration scores every candidate exactly in the end (full
+    // probe, rerank·k ≥ |corpus|, a full projected shortlist, the
+    // exhaustive LSH table), so each must give bruteForceTopK's rows,
+    // cosine bits and ranks included.
+    val base = clusteredCorpus(200, 7)
+    val emb = base.unionByName(base.filter(col("vec_id") < 40)
+      .withColumn("vec_id", col("vec_id") + 200L))
+    val qs = emb.filter(col("vec_id") % 10 === 3 || col("vec_id") >= 230)
+    val (k, all) = (5, 240 / 5) // rerank·k = |corpus|
+    val dir = java.nio.file.Files.createTempDirectory("graft_tie_pin").toString
+    def multiset(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2)),
+        r.getInt(3)))
+      .groupBy(identity).map { case (r, rs) => r -> rs.size }
+    def runs() = {
+      val brute = multiset(Similarity.bruteForceTopK(qs, emb, k))
+      val tiers = Seq(
+        "ivfTopK" -> Similarity.ivfTopK(qs, emb, k, nCentroids = 8, nProbe = 8, nAssign = 2),
+        "ivfTopKIndexed" -> Similarity.ivfTopKIndexed(qs, dir, k, nProbe = 8),
+        "sq8TopK" -> Similarity.sq8TopK(qs, emb, k, rerank = all),
+        "ivfSq8TopK" -> Similarity.ivfSq8TopK(qs, emb, k, nCentroids = 8, nProbe = 8,
+          nAssign = 2, rerank = all),
+        "pqTopK" -> Similarity.pqTopK(qs, emb, k, nSub = 8, nCodes = 16, rerank = all),
+        "ivfPqTopK" -> Similarity.ivfPqTopK(qs, emb, k, nCentroids = 8, nProbe = 8,
+          nSub = 8, nCodes = 16, nAssign = 2, rerank = all),
+        "projectedTopK" -> Similarity.projectedTopK(qs, emb, k, outDim = 16, shortlist = 240),
+        "lshTopK" -> Similarity.lshTopK(qs, emb, k, dim = 64, bits = 0, tables = 1))
+      for ((name, df) <- tiers) assert(multiset(df) === brute, name)
+      brute
+    }
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      Similarity.saveIvfIndex(emb, dir, nCentroids = 8, nAssign = 2)
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      val one = runs()
+      // the corpus has exact ties inside the top-k, and they rank by id
+      val byQuery = one.keys.groupBy(_._1).values.map(_.toSeq.sortBy(_._4))
+      assert(byQuery.exists(rs => rs.map(_._3).distinct.size < rs.size), "no exact tie to cut")
+      for (rs <- byQuery; (a, b) <- rs.zip(rs.tail)) {
+        val (ca, cb) = (java.lang.Double.longBitsToDouble(a._3), java.lang.Double.longBitsToDouble(b._3))
+        assert(ca > cb || ca == cb && a._2 < b._2, s"rank order broken: $a then $b")
+      }
+      spark.conf.set("spark.sql.shuffle.partitions", "7")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      assert(runs() === one)
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
+
   test("cosineDuplicates and lshTopK: a repeated call on 1,000 vectors runs at most 4 jobs and compiles nothing") {
     // perfbench's vectors op: a cached 1,000-vector 64-d clustered batch,
     // the default adaptive cosineDuplicates and an 8-bit 8-table probed

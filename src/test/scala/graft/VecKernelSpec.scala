@@ -6,18 +6,23 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, InterpretedUnsafeProjection, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Prop.propBoolean
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every native vector expression gives the same result, bit for bit
-  * (`doubleToLongBits`), on Spark's interpreted path (`expr.eval`) and on
-  * its generated path (an `UnsafeProjection` compiled under
-  * `spark.sql.codegen.factoryMode=CODEGEN_ONLY`), on dirty inputs: null
-  * arrays, null elements, NaN, ±Inf, −0.0, ragged and empty arrays, FLOAT
-  * and DOUBLE elements, each both as generic and as unsafe rows. Where a
-  * strict-length expression throws, both paths must throw the same
-  * exception. A plain-Scala fold pins [[VecKernel]]'s rule itself. */
+/** Every native expression with generated code gives the same result,
+  * bit for bit (`doubleToLongBits`), on Spark's interpreted path
+  * (`expr.eval`) and on its generated path (an `UnsafeProjection`
+  * compiled under `spark.sql.codegen.factoryMode=CODEGEN_ONLY`), on dirty
+  * inputs, each both as generic and as unsafe rows. Vector expressions
+  * get null arrays, null elements, NaN, ±Inf, −0.0, ragged and empty
+  * arrays, FLOAT and DOUBLE elements; text expressions get null, empty,
+  * whitespace-only and non-ASCII text (a lowercasing that changes the
+  * length, a combining mark, a surrogate pair); id-array expressions get
+  * null arrays, null elements, empty, unsorted and repeated ids. Where an
+  * expression throws, both paths must throw the same exception. A
+  * plain-Scala fold pins [[VecKernel]]'s rule itself. */
 class VecKernelSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -63,6 +68,7 @@ class VecKernelSpec extends AnyFunSuite {
   private def canon(v: Any, dt: DataType): Any = (v, dt) match {
     case (null, _) => null
     case (d: Double, DoubleType) => java.lang.Double.doubleToLongBits(d)
+    case (u: UTF8String, StringType) => u.toString
     case (a: ArrayData, ArrayType(et, _)) =>
       (0 until a.numElements()).map(i => if (a.isNullAt(i)) null else canon(a.get(i, et), et))
     case (r: InternalRow, st: StructType) => st.fields.indices.map(i =>
@@ -150,6 +156,24 @@ class VecKernelSpec extends AnyFunSuite {
       Gen.frequency(1 -> Gen.const(null), 6 -> genBuckets)))
   } yield if (isNull) null else new GenericArrayData(lists.toArray[Any])
 
+  private val genText: Gen[Any] = Gen.frequency(1 -> Gen.const(null),
+    9 -> Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.oneOf("a", "B", "z", "ab", " ", "  ",
+      "\t", "\n", "\u0130", "e\u0301", "\u00df", "\ud83d\ude00", "Foo bar")))
+      .map(cs => UTF8String.fromString(cs.mkString)))
+  /** An id array: null, null elements, empty, or ids from a small range
+    * (so two arrays overlap), half the time sorted and distinct. */
+  private def genIds(t: DataType): Gen[(DataType, Any)] = for {
+    isNull <- Gen.frequency(1 -> true, 9 -> false)
+    n <- Gen.frequency(1 -> Gen.const(0), 6 -> Gen.choose(1, 8))
+    ids <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(None),
+      12 -> Gen.oneOf(Gen.choose(-3L, 6L), Gen.oneOf(Long.MinValue, Long.MaxValue)).map(Some(_))))
+    sorted <- Gen.oneOf(true, false)
+  } yield {
+    val kept = if (sorted) ids.flatten.distinct.sorted.map(Some(_)) else ids
+    val boxed = kept.map(_.map(l => if (t == IntegerType) Int.box(l.toInt) else Long.box(l)).orNull)
+    (ArrayType(t), if (isNull) null else new GenericArrayData(boxed.toArray[Any]))
+  }
+
   private val cases: Seq[(String, Gen[Case])] = Seq(
     "DotProduct" -> (for { a <- genVec(); b <- genVec() } yield
       caseOf(Seq(a.dt -> a.data, b.dt -> b.data))(c => DotProduct(c(0), c(1)))),
@@ -194,7 +218,26 @@ class VecKernelSpec extends AnyFunSuite {
       ScoreBucketBlock(c, spark.sparkContext.broadcast(index), threshold, k, mode))),
     "MmrGreedy" -> (for {
       short <- genMmrShortlist; k <- Gen.choose(1, 4); lambda <- Gen.oneOf(0.0, 0.3, 0.7, 1.0)
-    } yield caseOf(Seq(short))(c => MmrGreedy(c.head, k, lambda))))
+    } yield caseOf(Seq(short))(c => MmrGreedy(c.head, k, lambda))),
+    "MinHashSignature" -> (for {
+      t <- genText; k <- Gen.choose(1, 4); h <- Gen.choose(1, 4)
+    } yield caseOf(Seq(StringType -> t))(c => MinHashSignature(c.head, k, h))),
+    "ShingleHashes" -> (for { t <- genText; k <- Gen.choose(1, 4) } yield
+      caseOf(Seq(StringType -> t))(c => ShingleHashes(c.head, k))),
+    "NgramHashes" -> (for { t <- genText; n <- Gen.choose(1, 3) } yield
+      caseOf(Seq(StringType -> t))(c => NgramHashes(c.head, n))),
+    "MinHashFromLongs" -> (for { ids <- genIds(LongType); h <- Gen.choose(1, 4) } yield
+      caseOf(Seq(ids))(c => MinHashFromLongs(c.head, h))),
+    "InterSortedGe" -> (for {
+      a <- genIds(LongType); b <- genIds(LongType); t <- Gen.oneOf(0.0, 0.3, 0.5, 1.0)
+    } yield caseOf(Seq(a, b))(c => InterSortedGe(c(0), c(1), t))),
+    "InterSortedGeInt" -> (for {
+      a <- genIds(IntegerType); b <- genIds(IntegerType); t <- Gen.oneOf(0.0, 0.3, 0.5, 1.0)
+    } yield caseOf(Seq(a, b))(c => InterSortedGeInt(c(0), c(1), t))),
+    "PairsOfSorted" -> genIds(LongType).map(ids => caseOf(Seq(ids))(c => PairsOfSorted(c.head))),
+    "SimHash64" -> genText.map(t => caseOf(Seq(StringType -> t))(c => SimHash64(c.head))),
+    "TopGramFracs" -> genText.map(t => caseOf(Seq(StringType -> t))(c => TopGramFracs(c.head))),
+    "NfcNormalize" -> genText.map(t => caseOf(Seq(StringType -> t))(c => NfcNormalize(c.head))))
 
   for ((name, gen) <- cases)
     test(s"$name: interpreted eval ≡ generated code, bit for bit") {
