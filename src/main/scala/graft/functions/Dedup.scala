@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.ColumnOf
 
 /** Document deduplication for large-scale training-data pipelines.
   * Every variant is expressed with codegen'd `functions._` / lambda
@@ -203,7 +204,7 @@ object Dedup {
     // shingle hashed all null docs into one shared LSH bucket per band
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        call_function("graft_minhash", col(textCol), lit(shingleK), lit(numHashes)).as("sig"))
+        sigOf(col(textCol), shingleK, numHashes).as("sig"))
   }
 
   // ---- MinHash + LSH -------------------------------------------------------
@@ -233,10 +234,14 @@ object Dedup {
 
   /** (id, band, bucket) band-bucket rows of a (id, sig) signature table. */
   private def bandBuckets(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
-    sigs.select(col("id"), posexplode(
-        array((0 until bands).map(b =>
-          xxhash64(concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, rowsPerBand)), lit(b))): _*)))
+    sigs.select(col("id"), posexplode(bandHashes(col("sig"), bands, rowsPerBand)))
       .toDF("id", "band", "bucket")
+
+  /** A signature's band buckets, band b at index b: the one bucket
+    * expression of every MinHash banding in this object. */
+  private def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map(b =>
+      xxhash64(concat_ws(",", slice(sig, b * rowsPerBand + 1, rowsPerBand)), lit(b))): _*)
 
   // ---- banded signature index (streaming store acceleration) --------------
   // The stream's per-batch corpus read must be O(touched), not O(|store|):
@@ -435,12 +440,21 @@ object Dedup {
       maxBucketSize: Int): DataFrame = {
     graft.functions.expressions.GraftFunctions.init(sigs.sparkSession)
     val banded = bandBuckets(sigs, bands, rowsPerBand)
+    // graft_pairs_of pairs BIGINT ids: other integral ids are widened
+    // and cast back; any other id type takes the lambda form it replaced
+    val idType = sigs.schema("id").dataType
+    val integral = graft.functions.expressions.PackedVectors.integral(idType)
     val bucketed = banded.groupBy("band", "bucket")
-      .agg(collect_list(col("id")).as("ids"))
+      .agg(collect_list(if (integral) col("id").cast("long") else col("id")).as("ids"))
       .filter(size(col("ids")) between (2, maxBucketSize))
     // pair generation inside each bucket (ids sorted → a < b)
-    bucketed.select(explode(pairsOf(sort_array(col("ids")))).as("p"))
-      .select(col("p._1").as("doc_a"), col("p._2").as("doc_b"))
+    val sorted = sort_array(col("ids"))
+    val pairs =
+      if (integral) pairsOf(sorted)
+      else flatten(transform(sorted, (a, i) => transform(slice(sorted, i + 2, size(sorted)),
+        b => struct(a.as("_1"), b.as("_2")))))
+    bucketed.select(explode(pairs).as("p"))
+      .select(col("p._1").cast(idType).as("doc_a"), col("p._2").cast(idType).as("doc_b"))
   }
 
   /** All ordered pairs (a<b) of a sorted array — the fused
@@ -454,29 +468,51 @@ object Dedup {
     call_function("graft_pairs_of", sorted)
 
   /** MinHash LSH candidates verified by exact shingle Jaccard ≥ threshold.
+    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, ids in the
+    * input's type.
     *
     * Three stages, each shrinking the pair set before the next pays per-pair
-    * cost — the shape that keeps this linear-ish at 10^9 docs:
-    *  1. banded LSH candidates (pairs sharing ≥1 band);
+    * cost:
+    *  1. banded LSH candidates (pairs sharing ≥1 band bucket; a bucket of
+    *     more than maxBucketSize docs, boilerplate, pairs nothing);
     *  2. signature-estimate prefilter: est-Jaccard = fraction of agreeing
     *     minhashes (64 long compares/pair), keep est ≥ threshold − margin.
     *     At H=64 the estimate's σ is ≈ sqrt(t(1−t)/64) ≤ 0.063, so the
     *     default margin 0.15 is ≈ 2.4σ — recall loss ≪ the LSH banding's own;
-    *  3. exact verify: shingle-array intersection only on survivors.
-    * Signatures are computed once (cached) and reused by stages 1–2. */
-  /* Cache lifecycle: the signature relation is materialized EAGERLY via
-   * localCheckpoint(true) (stages 1-2 both read it; recomputing the
-   * shingle→minhash pass twice is the largest cost in the call). Unlike
-   * .cache() — whose CacheManager registration pins the blocks until
-   * session end, accumulating one leaked relation per shard on a session
-   * calling this API in a loop — checkpoint blocks are released by the
-   * ContextCleaner as soon as the returned plan is dereferenced: no
-   * unpersist handle needed, no permanent residue. Tradeoff, stated
-   * plainly: the signature pass runs at CALL time (the API is eager in
-   * its first stage), and a lost executor loses its blocks (no lineage
-   * to recompute — rerun the call), vs .cache()'s lazy-but-leaky
-   * MEMORY_AND_DISK recompute. For a bounded dedup job the deterministic
-   * lifecycle wins; the streaming sibling already uses the same idiom. */
+    *  3. exact verify: shingle-hash intersection only on survivors.
+    *
+    * Two tiers, the same candidates and the same arithmetic, so the same
+    * rows bit for bit (pinned in PipelineSpec by zeroing the budget):
+    *
+    *  1. FUSED, while the batch fits `spark.graft.lsh.broadcastBudgetBytes`
+    *     and its ids pack (integral, non-null, distinct). ONE collect
+    *     job brings back each non-null text's signature, band buckets and
+    *     sorted shingle hashes, all computed on the executors by the
+    *     expressions the fallback uses, and sizes them exactly as it
+    *     packs them (never from plan stats): nothing past the budget
+    *     reaches the driver. The driver groups the `(band, bucket)`
+    *     blocks ([[graft.functions.expressions.BucketBlocks]], the layout
+    *     the fused LSH core shares) into a
+    *     [[graft.functions.expressions.MinHashIndex]], ONE broadcast, then
+    *     ONE narrow projection over the index's row positions
+    *     (`spark.range(n)`): [[graft.functions.expressions.VerifyBandBlock]]
+    *     takes the distinct union of a row's blocks, keeps the larger ids
+    *     and estimates and verifies each candidate once. No candidate row,
+    *     join or dedup crosses an exchange.
+    *  2. RELATIONAL past the budget or when the ids cannot pack (one log
+    *     line says which): a band-bucket `groupBy`, a candidate
+    *     `distinct`, two signature joins, then two shingle-hash joins.
+    *     Correct for any input.
+    *
+    * Cache lifecycle: the fused tier caches nothing and checkpoints
+    * nothing. Its result reads only the docs (once, at call time, for the
+    * collect) and the broadcast, which the driver holds, so a lost
+    * executor costs no rows. The fallback materializes its signature
+    * relation EAGERLY via localCheckpoint(true) (stages 1 and 2 both read
+    * it). Unlike .cache(), whose CacheManager registration pins the blocks
+    * until session end, checkpoint blocks are released by the
+    * ContextCleaner once the returned plan is dereferenced; the tradeoff
+    * is that a lost executor loses them (rerun the call). */
   def minHashDuplicates(
       docs: DataFrame,
       threshold: Double,
@@ -487,6 +523,42 @@ object Dedup {
       rowsPerBand: Int = 4,
       estimateMargin: Double = 0.15,
       maxBucketSize: Int = 1000): DataFrame = {
+    graft.functions.expressions.GraftFunctions.init(docs.sparkSession)
+    val numHashes = bands * rowsPerBand
+    val spark = docs.sparkSession
+    val budget = FusedTier.budget(spark)
+    val perDoc = docs.filter(col(textCol).isNotNull)
+      .select(col(idCol), sigOf(col(textCol), shingleK, numHashes).as("sig"),
+        shingleHashes(col(textCol), shingleK).as("sh"))
+      .select(col(idCol), col("sig"), bandHashes(col("sig"), bands, rowsPerBand), col("sh"))
+    graft.functions.expressions.MinHashIndex.collect(perDoc, numHashes, bands, maxBucketSize,
+        budget) match {
+      case Right(ix) =>
+        val bc = spark.sparkContext.broadcast(ix)
+        val idType = docs.schema(idCol).dataType
+        val pairs = ColumnOf(graft.functions.expressions.VerifyBandBlock(
+          ColumnOf.expr(col("id")), bc, threshold - estimateMargin, threshold))
+        spark.range(ix.n).select(explode(pairs).as("p"))
+          .select(col("p.doc_a").cast(idType).as("doc_a"), col("p.doc_b").cast(idType).as("doc_b"),
+            col("p.jaccard").as("jaccard"))
+      case Left(over) =>
+        FusedTier.fallback("minHashDuplicates",
+          over.fold(FusedTier.unpackable)(FusedTier.overBudget(_, budget)))
+        relationalDuplicates(docs, threshold, textCol, idCol, shingleK, bands, rowsPerBand,
+          estimateMargin, maxBucketSize)
+    }
+  }
+
+  private def sigOf(text: Column, shingleK: Int, numHashes: Int): Column =
+    call_function("graft_minhash", text, lit(shingleK), lit(numHashes))
+
+  private def shingleHashes(text: Column, shingleK: Int): Column =
+    call_function("graft_shingle_hashes", text, lit(shingleK))
+
+  /** [[minHashDuplicates]]' relational tier (see there). */
+  private def relationalDuplicates(docs: DataFrame, threshold: Double, textCol: String,
+      idCol: String, shingleK: Int, bands: Int, rowsPerBand: Int, estimateMargin: Double,
+      maxBucketSize: Int): DataFrame = {
     val numHashes = bands * rowsPerBand
     val sigs = minHashSignaturesNative(docs, textCol, idCol, shingleK, numHashes)
       .localCheckpoint(true)
@@ -500,11 +572,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
     // exact verify on HASHED shingles: same Jaccard (collision odds ~n²/2^64),
     // and long-array intersection is several× cheaper than string arrays.
-    // Native one-pass expression (parity-pinned vs the lambda form) — the
-    // interpreted transform/array_distinct chain was the next-largest d1
-    // cost after signatures.
-    val sh = docs.select(col(idCol).as("id"),
-      call_function("graft_shingle_hashes", col(textCol), lit(shingleK)).as("sh"))
+    val sh = docs.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleK).as("sh"))
     estimated
       .join(sh.select(col("id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(sh.select(col("id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
@@ -526,8 +594,9 @@ object Dedup {
     * applied (a numeric id appearing on both sides names two different
     * documents).
     *
-    * Scale shape, stage by stage (the same three-tier funnel as
-    * [[minHashDuplicates]], specialized to the asymmetric join):
+    * Scale shape, stage by stage (the three stages of
+    * [[minHashDuplicates]]' relational tier, specialized to the
+    * asymmetric join; this call has no fused tier):
     *  1. signatures: one narrow codegen'd pass per side, no shuffle.
     *     This IS an O(|reference|) scan per call — unavoidable when the
     *     reference arrives as text; callers running many batches against
@@ -602,11 +671,11 @@ object Dedup {
     val shNew = docs
       .join(estimated.select(col("doc_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol).as("doc_id"),
-        call_function("graft_shingle_hashes", col(textCol), lit(shingleK)).as("sh_a"))
+        shingleHashes(col(textCol), shingleK).as("sh_a"))
     val shRef = reference
       .join(estimated.select(col("ref_id").as(idCol)).distinct(), Seq(idCol), "left_semi")
       .select(col(idCol).as("ref_id"),
-        call_function("graft_shingle_hashes", col(textCol), lit(shingleK)).as("sh_b"))
+        shingleHashes(col(textCol), shingleK).as("sh_b"))
     estimated
       .join(shNew, "doc_id").join(shRef, "ref_id")
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))

@@ -565,8 +565,7 @@ object Similarity {
     import ScoreBucketBlock.{Cross, SelfProbed, SelfUnprobed, TopK}
     val probes = array(planes.map(p => probeBuckets(col("av"), p, p1, p2n)): _*)
     val sigs = array(planes.map(p => nativeSignature(col(vecCol), p)): _*)
-    val budget = build.sparkSession.conf
-      .get("spark.graft.lsh.broadcastBudgetBytes", (512L << 20).toString).toLong
+    val budget = FusedTier.budget(build.sparkSession)
     val n = corpusCount(build)
     val bytes = 20L * planes.size * n +
       (PackedVectors.elemBytes(build.schema(vecCol).dataType) * dim + 48L) * n
@@ -597,6 +596,12 @@ object Similarity {
           case _ => out.drop("rank")
         }
       case None =>
+        FusedTier.fallback(mode match {
+            case TopK => "lshTopK"
+            case Cross => "semanticDecontam"
+            case _ => "cosineDuplicates"
+          },
+          if (bytes > budget) FusedTier.overBudget(bytes, budget) else FusedTier.unpackable)
         val aB = a.select(col(aId), col("av"), col("an"), posexplode(probes))
           .select(col(aId), col("av"), col("an"), col("pos").as("tbl"),
             explode(col("col")).as("bucket"))

@@ -110,16 +110,15 @@ object PackedVectors {
   }
 }
 
-/** The fused LSH core's one broadcast: the build side's vectors
-  * ([[PackedVectors]]) and, per hash table, its buckets as blocks of
-  * packed-row indices, ascending. Table `t`'s distinct bucket keys sit
-  * sorted in `keys[tblOff(t), tblOff(t + 1))`; block `j`'s members are
-  * `members[memOff(j), memOff(j + 1))`. Primitive arrays only, so a
-  * copy deserializes fast and a lookup is one binary search. */
-final class LshIndex private (val vectors: PackedVectors, val tables: Int,
-    keys: Array[Long], tblOff: Array[Int], memOff: Array[Int], members: Array[Int])
-    extends Serializable {
-  /** Block index of `bucket` in table `t`, or -1 when it is empty. */
+/** Rows grouped by bucket, per hash table: the block layout both fused
+  * candidate cores broadcast ([[LshIndex]], [[MinHashIndex]]). Table
+  * `t`'s kept bucket keys sit sorted in `keys[tblOff(t), tblOff(t + 1))`;
+  * block `j`'s members are the row indices `members[memOff(j),
+  * memOff(j + 1))`, ascending. Primitive arrays only, so a copy
+  * deserializes fast and a lookup is one binary search. */
+final class BucketBlocks private (keys: Array[Long], tblOff: Array[Int],
+    memOff: Array[Int], members: Array[Int]) extends Serializable {
+  /** Block index of `bucket` in table `t`, or -1 when it has none. */
   def block(t: Int, bucket: Long): Int = {
     val j = java.util.Arrays.binarySearch(keys, tblOff(t), tblOff(t + 1), bucket)
     if (j >= 0) j else -1
@@ -129,36 +128,60 @@ final class LshIndex private (val vectors: PackedVectors, val tables: Int,
   def member(r: Int): Int = members(r)
 }
 
-object LshIndex {
-  /** `sigs(t)(i)` is table `t`'s bucket of packed row `i`. */
-  def apply(vectors: PackedVectors, sigs: Array[Array[Long]]): LshIndex = {
-    val n = vectors.n
+object BucketBlocks {
+  /** `sigs(t)(i)` is table `t`'s bucket of row `i`. A bucket holding
+    * more than `maxBlock` rows gets no block (its lookup reads -1). */
+  def apply(sigs: Array[Array[Long]], maxBlock: Int = Int.MaxValue): BucketBlocks = {
+    val n = if (sigs.isEmpty) 0 else sigs(0).length
     val keys = new Array[Long](sigs.length * n)
     val tblOff = new Array[Int](sigs.length + 1)
     val memOff = new Array[Int](sigs.length * n + 1)
     val members = new Array[Int](sigs.length * n)
     var nk = 0
+    var at = 0
     for ((s, t) <- sigs.zipWithIndex) {
       tblOff(t) = nk
       val sorted = s.clone()
       java.util.Arrays.sort(sorted)
-      val first = nk
-      for (b <- sorted) if (nk == first || keys(nk - 1) != b) { keys(nk) = b; nk += 1 }
+      val distinct = new Array[Long](n)
+      var nd = 0
+      for (b <- sorted) if (nd == 0 || distinct(nd - 1) != b) { distinct(nd) = b; nd += 1 }
+      val slot = s.map(b => java.util.Arrays.binarySearch(distinct, 0, nd, b))
+      val count = new Array[Int](nd)
+      slot.foreach(j => count(j) += 1)
+      // kept buckets take the next block indices; a dropped one maps to -1
+      val blockOf = new Array[Int](nd)
+      for (j <- 0 until nd) {
+        if (count(j) <= maxBlock) {
+          keys(nk) = distinct(j); memOff(nk) = at; at += count(j); blockOf(j) = nk; nk += 1
+        } else blockOf(j) = -1
+      }
       // counting sort of the rows into their blocks; rows go in ascending
       // index order, so every block is sorted
-      val count = new Array[Int](nk - first)
-      val slot = s.map(b => java.util.Arrays.binarySearch(keys, first, nk, b) - first)
-      slot.foreach(j => count(j) += 1)
-      var at = t * n
-      for (j <- count.indices) { memOff(first + j) = at; at += count(j) }
-      val fill = count.indices.map(j => memOff(first + j)).toArray
-      for (i <- 0 until n) { members(fill(slot(i))) = i; fill(slot(i)) += 1 }
+      val first = tblOff(t)
+      val fill = java.util.Arrays.copyOfRange(memOff, first, nk)
+      for (i <- 0 until n) {
+        val j = blockOf(slot(i))
+        if (j >= 0) { members(fill(j - first)) = i; fill(j - first) += 1 }
+      }
     }
     tblOff(sigs.length) = nk
-    memOff(nk) = sigs.length * n
-    new LshIndex(vectors, sigs.length, java.util.Arrays.copyOf(keys, nk), tblOff,
-      java.util.Arrays.copyOf(memOff, nk + 1), members)
+    memOff(nk) = at
+    new BucketBlocks(java.util.Arrays.copyOf(keys, nk), tblOff,
+      java.util.Arrays.copyOf(memOff, nk + 1), java.util.Arrays.copyOf(members, at))
   }
+}
+
+/** The fused LSH core's one broadcast: the build side's vectors
+  * ([[PackedVectors]]) and, per hash table, its buckets as
+  * [[BucketBlocks]] of packed-row indices. */
+final class LshIndex private (val vectors: PackedVectors, val tables: Int,
+    val blocks: BucketBlocks) extends Serializable
+
+object LshIndex {
+  /** `sigs(t)(i)` is table `t`'s bucket of packed row `i`. */
+  def apply(vectors: PackedVectors, sigs: Array[Array[Long]]): LshIndex =
+    new LshIndex(vectors, sigs.length, BucketBlocks(sigs))
 
   /** The build side's one collect: each `(idCol, vecCol)` row with its
     * per-table signatures `sigs` (an ARRAY<BIGINT> of `tables` buckets,
@@ -253,6 +276,7 @@ case class ScoreBucketBlock(children: Seq[Expression], index: Broadcast[LshIndex
   def score(aKey: Long, av: ArrayData, an: Double, probes: ArrayData): ArrayData = {
     val ix = index.value
     val p = ix.vectors
+    val bl = ix.blocks
     val a = VecKernel.widen(av, probeIsFloat)
     if (stamp == Int.MaxValue) { java.util.Arrays.fill(seen, 0); stamp = 0 }
     stamp += 1
@@ -265,11 +289,11 @@ case class ScoreBucketBlock(children: Seq[Expression], index: Broadcast[LshIndex
       val bs = if (probes.isNullAt(t)) null else probes.getArray(t)
       var q = 0
       while (bs != null && q < bs.numElements()) {
-        val j = if (bs.isNullAt(q)) -1 else ix.block(t, bs.getLong(q))
-        var r = if (j < 0) 0 else ix.blockStart(j)
-        val end = if (j < 0) 0 else ix.blockEnd(j)
+        val j = if (bs.isNullAt(q)) -1 else bl.block(t, bs.getLong(q))
+        var r = if (j < 0) 0 else bl.blockStart(j)
+        val end = if (j < 0) 0 else bl.blockEnd(j)
         while (r < end) {
-          val i = ix.member(r)
+          val i = bl.member(r)
           val id = p.ids(i)
           if (seen(i) != stamp && (mode match {
               case SelfUnprobed => id > aKey

@@ -1760,17 +1760,13 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("minHashDuplicates: equal rows at 1 and 7 shuffle partitions with broadcast joins off") {
-    // candidatesFromSigs gathers each band bucket's ids with an UNSORTED
-    // collect_list, whose order follows the shuffle. With broadcast
-    // joins off and 7 partitions the lists really arrive in another
-    // order; the pair set and its Jaccards must not move.
-    // 400 docs of 40 words from a 300-word vocabulary; every 7th has a
-    // copy with one word changed
-    val rnd = new scala.util.Random(5)
-    val texts = (0 until 400).map(i => i.toLong -> Seq.fill(40)(s"w${rnd.nextInt(300)}"))
-    val withDups = docsDF((texts.map { case (i, ws) => i -> ws.mkString(" ") } ++
-      texts.filter(_._1 % 7 == 0).map { case (i, ws) =>
-        (i + 1000L) -> ws.updated(20, "x").mkString(" ") }): _*)
+    // The relational tier (forced by a zero budget; the fused tier sorts
+    // its blocks on the driver) gathers each band bucket's ids in
+    // candidatesFromSigs with an UNSORTED collect_list, whose order
+    // follows the shuffle. With broadcast joins off and 7 partitions the
+    // lists really arrive in another order; the pair set and its
+    // Jaccards must not move.
+    val withDups = plantedDocs()
     def multiset() = Dedup.minHashDuplicates(withDups, threshold = 0.7).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
       .groupBy(identity).map { case (r, rs) => r -> rs.size }
@@ -1780,6 +1776,7 @@ class PipelineSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       spark.conf.set("spark.sql.shuffle.partitions", "1")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "0")
       val one = multiset()
       spark.conf.set("spark.sql.shuffle.partitions", "7")
       val seven = multiset()
@@ -1788,7 +1785,142 @@ class PipelineSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
       spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+      spark.conf.unset("spark.graft.lsh.broadcastBudgetBytes")
     }
+  }
+
+  /** 400 docs of 40 words from a 300-word vocabulary, every 7th with a
+    * copy that has one word changed: perfbench's text batch in shape. */
+  private def plantedDocs(): org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(5)
+    val texts = (0 until 400).map(i => i.toLong -> Seq.fill(40)(s"w${rnd.nextInt(300)}"))
+    docsDF((texts.map { case (i, ws) => i -> ws.mkString(" ") } ++
+      texts.filter(_._1 % 7 == 0).map { case (i, ws) =>
+        (i + 1000L) -> ws.updated(20, "x").mkString(" ") }): _*)
+  }
+
+  test("minHashDuplicates: the fused tier ≡ the relational fallback, bit for bit, at 1 and 7 partitions") {
+    // The corpus: planted near-dups (1–3 of 40 words changed); a graded
+    // family (m of 40 words changed, m = 1..24) whose pairs spread through
+    // the threshold and the estimate floor; a boilerplate family of 12
+    // equal docs and one of 6 near-equal docs against maxBucketSize 8;
+    // null, empty and shorter-than-k texts, two of each kind equal.
+    val rnd = new scala.util.Random(17)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(200)}")
+    def changed(ws: Seq[String], m: Int) =
+      (0 until m).foldLeft(ws)((acc, j) => acc.updated((j * 7) % ws.size, s"x$j"))
+    val planted = (0 until 30).flatMap { i =>
+      val ws = words(40)
+      Seq(ws, changed(ws, 1 + i % 3))
+    }
+    val graded = { val ws = words(40); ws +: (1 to 24).map(changed(ws, _)) }
+    val boiler = Seq.fill(12)("terms of service apply to every page of this site")
+    val nearBoiler = (0 until 6).map(i => s"subscribe to our newsletter for weekly updates $i")
+    val odd = Seq(null, null, "", "", "abc", "abc", "ab")
+    val texts = (planted ++ graded).map(_.mkString(" ")) ++ boiler ++ nearBoiler ++ odd
+    val docs = texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("doc_id", "text")
+    val (threshold, margin, cap) = (0.7, 0.15, 8)
+    // the graded family has candidate pairs just under the estimate floor
+    val sigs = Dedup.minHashSignaturesNative(docs).collect()
+      .map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+    val gradedIds = planted.size until planted.size + graded.size
+    val underFloor = for (a <- gradedIds; b <- gradedIds if a < b;
+      sa = sigs(a); sb = sigs(b);
+      if (0 until 16).exists(band => sa.slice(4 * band, 4 * band + 4) == sb.slice(4 * band, 4 * band + 4));
+      est = sa.zip(sb).count(p => p._1 == p._2) / 64.0
+      if est < threshold - margin && est >= threshold - margin - 0.1) yield (a, b)
+    assert(underFloor.nonEmpty, "no candidate pair just under the estimate floor")
+    def run(d: org.apache.spark.sql.DataFrame) =
+      Dedup.minHashDuplicates(d, threshold, estimateMargin = margin, maxBucketSize = cap)
+    def bits(d: org.apache.spark.sql.DataFrame) = { val out = run(d)
+      out.schema -> out.collect().toSeq
+        .map(r => (r.get(0), r.get(1), java.lang.Double.doubleToLongBits(r.getDouble(2))))
+        .groupBy(identity).map { case (r, rs) => r -> rs.size } }
+    def plan(d: org.apache.spark.sql.DataFrame) = run(d).queryExecution.executedPlan.toString.toLowerCase
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val results = for (parts <- Seq("1", "7")) yield {
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
+        if (parts == "7") spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        val fused = bits(docs)
+        spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", "0")
+        val fallback = try bits(docs) finally spark.conf.unset("spark.graft.lsh.broadcastBudgetBytes")
+        assert(fused === fallback, s"at $parts partitions") // schemas too
+        fused._2
+      }
+      assert(results.head === results.last)
+      val pairs = results.head.keySet.map(r => (r._1.asInstanceOf[Int], r._2.asInstanceOf[Int]))
+      assert(pairs.exists { case (a, b) => a < planted.size && b < planted.size })
+      assert(pairs.exists { case (a, b) => gradedIds.contains(a) && gradedIds.contains(b) })
+      val boilerIds = (planted ++ graded).size until (planted ++ graded).size + boiler.size
+      assert(!pairs.exists { case (a, b) => boilerIds.contains(a) }, "capped buckets pair nothing")
+      assert(pairs.contains((texts.size - 5, texts.size - 4)) && pairs.contains((texts.size - 3, texts.size - 2)),
+        "equal empty and equal short texts are near-duplicates")
+      // plan shapes: INT ids take the kernel; STRING or repeated ids, and a
+      // zero budget, take the joins
+      val fusedPlan = plan(docs)
+      assert(fusedPlan.contains("verifybandblock") && !fusedPlan.contains("join"))
+      val stringIds = docs.select(col("doc_id").cast("string").as("doc_id"), col("text"))
+      val repeated = docs.unionByName(docs.filter(col("doc_id") === 0).withColumn("text", lit("zzz")))
+      for (d <- Seq(stringIds, repeated)) {
+        val p = plan(d)
+        assert(p.contains("join") && !p.contains("verifybandblock"))
+      }
+      val asInts = run(stringIds).collect()
+        .map(r => Set(r.getString(0).toInt, r.getString(1).toInt)).toSet
+      assert(asInts === pairs.map { case (a, b) => Set(a, b) })
+      // the budget is exact: all rows in one of 4 partitions, so that one
+      // outgrows its share and ships in a second pass at a budget of
+      // exactly the batch's bytes; one byte less takes the fallback
+      val skewed = docs.repartition(4, lit(0))
+      val total = docs.filter(col("text").isNotNull)
+        .select(size(call_function("graft_shingle_hashes", col("text"), lit(5)))).collect()
+        .map(r => 8L * (1 + 64 + 16 + r.getInt(0)) + 20L * 16 + 64L).sum
+      try {
+        spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", total.toString)
+        assert(plan(skewed).contains("verifybandblock"))
+        assert(bits(skewed)._2 === results.head)
+        spark.conf.set("spark.graft.lsh.broadcastBudgetBytes", (total - 1).toString)
+        assert(!plan(skewed).contains("verifybandblock"))
+      } finally spark.conf.unset("spark.graft.lsh.broadcastBudgetBytes")
+    } finally {
+      spark.conf.set("spark.sql.shuffle.partitions", prev)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
+      spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    }
+  }
+
+  test("minHashDuplicates: a repeated call on a cached 400-doc batch runs at most 3 jobs and compiles nothing") {
+    // perfbench's text op in shape. The fused tier is one collect job,
+    // which also sizes the batch, plus the result's job; the relational
+    // funnel it replaced ran 10 jobs per call.
+    val docs = plantedDocs().cache()
+    try {
+      assert(docs.count() === 458L)
+      def call() = Dedup.minHashDuplicates(docs, threshold = 0.7).collect().length
+      call() // warm-up: the sizing job, the first compiles
+      val (rows, prof) = graft.obs.GateProfiler.of(spark).profile("minHashDuplicates")(call())
+      info(s"$rows rows, ${prof.jobs} jobs, ${prof.codegenCompiles} compiles")
+      assert(rows > 0)
+      assert(prof.jobs <= 3, s"ran ${prof.jobs} Spark jobs")
+      assert(prof.codegenCompiles === 0, s"compiled ${prof.codegenCompiles} classes")
+    } finally docs.unpersist()
+  }
+
+  test("minHashDuplicates: the result reads back after the local-checkpoint blocks are gone") {
+    // Dropping the blocks of every local-checkpoint RDD stands in for a
+    // lost executor: the fused tier's result depends on none.
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = Dedup.minHashDuplicates(plantedDocs(), threshold = 0.7)
+    def rows() = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val first = rows()
+    assert(first.nonEmpty)
+    sc.getPersistentRDDs.filter { case (id, rdd) => !before(id) && rdd.isCheckpointed }
+      .values.foreach(_.unpersist(blocking = true))
+    assert(rows() === first)
   }
 
   test("semanticDecontam: bucketed tier recalls the exhaustive pair set; removal flow") {
@@ -2795,9 +2927,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(p.offs.toSeq === Seq(0, 4, 7, 10)) // true ragged lengths
     // the fused core's blocks: packed rows grouped by bucket, ascending
     val ix = LshIndex(p, Array(Array(5L, 9L, 5L)))
-    def members(b: Long) = { val j = ix.block(0, b)
-      if (j < 0) Nil else (ix.blockStart(j) until ix.blockEnd(j)).map(r => p.ids(ix.member(r))) }
-    assert(members(5L) === Seq(3L, 11L) && members(9L) === Seq(7L) && members(4L) === Nil)
+    def members(bl: graft.functions.expressions.BucketBlocks, b: Long) = { val j = bl.block(0, b)
+      if (j < 0) Nil else (bl.blockStart(j) until bl.blockEnd(j)).map(r => p.ids(bl.member(r))) }
+    assert(members(ix.blocks, 5L) === Seq(3L, 11L) && members(ix.blocks, 9L) === Seq(7L) &&
+      members(ix.blocks, 4L) === Nil)
+    // the MinHash core's cap: a bucket of more rows than maxBlock gets no block
+    val capped = graft.functions.expressions.BucketBlocks(Array(Array(5L, 9L, 5L)), maxBlock = 1)
+    assert(members(capped, 5L) === Nil && members(capped, 9L) === Seq(7L))
     val norms = df.select(col("vec_id"),
       sqrt(call_function("graft_dot", col("embedding"), col("embedding"))))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * arrays, FLOAT and DOUBLE elements; text expressions get null, empty,
   * whitespace-only and non-ASCII text (a lowercasing that changes the
   * length, a combining mark, a surrogate pair); id-array expressions get
-  * null arrays, null elements, empty, unsorted and repeated ids. Where an
+  * null arrays, null elements, empty, unsorted and repeated ids; the
+  * MinHash kernel gets empty shingle arrays, repeated hashes, ids at
+  * Long.MinValue and Long.MaxValue and positions outside its index. Where an
   * expression throws, both paths must throw the same exception. A
   * plain-Scala fold pins [[VecKernel]]'s rule itself. */
 class VecKernelSpec extends AnyFunSuite {
@@ -156,6 +158,24 @@ class VecKernelSpec extends AnyFunSuite {
       Gen.frequency(1 -> Gen.const(null), 6 -> genBuckets)))
   } yield if (isNull) null else new GenericArrayData(lists.toArray[Any])
 
+  /** What the fused MinHash core broadcasts: distinct sorted ids that
+    * reach Long.MinValue and Long.MaxValue, small-range signature slots
+    * and band buckets (so slots agree and blocks hold several rows),
+    * sorted shingle arrays that may be empty or repeat a hash, and a
+    * block cap that drops some blocks. */
+  private val genMinHashIndex: Gen[MinHashIndex] = for {
+    n <- Gen.choose(0, 6)
+    ids <- Gen.pick(n, Seq(Long.MinValue, Long.MinValue + 1, -1L, 0L, 3L, Long.MaxValue - 1,
+      Long.MaxValue)).map(_.toSeq.sorted)
+    h <- Gen.choose(1, 4)
+    bands <- Gen.choose(1, 3)
+    sigs <- Gen.listOfN(n, Gen.listOfN(h, Gen.choose(0L, 2L)))
+    buckets <- Gen.listOfN(n, Gen.listOfN(bands, Gen.choose(0L, 2L)))
+    shingles <- Gen.listOfN(n, Gen.choose(0, 5).flatMap(Gen.listOfN(_, Gen.choose(-2L, 3L))))
+    cap <- Gen.choose(1, 7)
+  } yield MinHashIndex(ids.toArray, h, sigs.map(_.toArray).toArray, buckets.map(_.toArray).toArray,
+    shingles.map(_.sorted.toArray).toArray, bands, cap)
+
   private val genText: Gen[Any] = Gen.frequency(1 -> Gen.const(null),
     9 -> Gen.choose(0, 8).flatMap(Gen.listOfN(_, Gen.oneOf("a", "B", "z", "ab", " ", "  ",
       "\t", "\n", "\u0130", "e\u0301", "\u00df", "\ud83d\ude00", "Foo bar")))
@@ -216,6 +236,15 @@ class VecKernelSpec extends AnyFunSuite {
     } yield caseOf(Seq(LongType -> aKey, av.dt -> av.data, DoubleType -> an,
         ArrayType(ArrayType(LongType)) -> probes))(c =>
       ScoreBucketBlock(c, spark.sparkContext.broadcast(index), threshold, k, mode))),
+    "VerifyBandBlock" -> (for {
+      index <- genMinHashIndex
+      pos <- Gen.frequency(1 -> Gen.const(null),
+        6 -> Gen.choose(0L, math.max(0, index.n - 1).toLong).map(Long.box),
+        2 -> Gen.oneOf(-1L, index.n.toLong, Long.MinValue, Long.MaxValue).map(Long.box))
+      estFloor <- Gen.oneOf(-1.0, 0.0, 0.25, 0.5, 1.0, Double.NaN)
+      threshold <- Gen.oneOf(-1.0, 0.0, 0.25, 0.5, 1.0, Double.NaN)
+    } yield caseOf(Seq(LongType -> pos))(c =>
+      VerifyBandBlock(c.head, spark.sparkContext.broadcast(index), estFloor, threshold))),
     "MmrGreedy" -> (for {
       short <- genMmrShortlist; k <- Gen.choose(1, 4); lambda <- Gen.oneOf(0.0, 0.3, 0.7, 1.0)
     } yield caseOf(Seq(short))(c => MmrGreedy(c.head, k, lambda))),
